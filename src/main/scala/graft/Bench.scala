@@ -49,24 +49,31 @@ object Bench {
     // r13 (ADVICE): deny ONLY that message instead of pinning the whole
     // logger to FATAL — real scheduler errors (task-set aborts, listener
     // failures) stay visible in captured logs.
-    locally {
+    // A different logging backend (the cast) or any other setup failure
+    // falls back to the known-safe pin of the whole logger to FATAL:
+    // spam on stdout would null the driver's parsed result line.
+    val dagScheduler = "org.apache.spark.scheduler.DAGScheduler"
+    try {
       import org.apache.logging.log4j.LogManager
       import org.apache.logging.log4j.core.{Filter, LoggerContext}
       import org.apache.logging.log4j.core.config.LoggerConfig
       import org.apache.logging.log4j.core.filter.RegexFilter
-      val name = "org.apache.spark.scheduler.DAGScheduler"
       val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
       val cfg = ctx.getConfiguration
-      val lc = cfg.getLoggerConfig(name) match {
-        case exact if exact.getName == name => exact
+      val lc = cfg.getLoggerConfig(dagScheduler) match {
+        case exact if exact.getName == dagScheduler => exact
         case parent =>
-          val fresh = new LoggerConfig(name, parent.getLevel, true)
-          cfg.addLogger(name, fresh); fresh
+          val fresh = new LoggerConfig(dagScheduler, parent.getLevel, true)
+          cfg.addLogger(dagScheduler, fresh); fresh
       }
       lc.addFilter(RegexFilter.createFilter(
         "(?s)Failed to update accumulator.*", null, false,
         Filter.Result.DENY, Filter.Result.NEUTRAL))
       ctx.updateLoggers()
+    } catch {
+      case _: Exception =>
+        org.apache.logging.log4j.core.config.Configurator.setLevel(
+          dagScheduler, org.apache.logging.log4j.Level.FATAL)
     }
 
     // warm-up: touch every table + exercise codegen/shuffle machinery once
@@ -80,12 +87,6 @@ object Bench {
 
     // Failures are REPORTED, not swallowed: a failed query must never
     // masquerade as a fast success in the round's bench JSON.
-    def esc(s: String): String =
-      s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-        case '\r' => "\\r"; case '\t' => "\\t"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-      }
     // Optional args = query-name filter (local iteration on a hot query;
     // the round driver passes none and gets the full catalog).
     val selected =
@@ -116,7 +117,7 @@ object Bench {
       val stats = ok.map { case (k, mn, md) =>
         "\"" + k + "\":{\"min\":" + mn + ",\"median\":" + md + "}" }.mkString("{", ",", "}")
       val errs = results.collect { case (k, _, _, Some(e)) =>
-        "\"" + k + "\":\"" + esc(e) + "\"" }.mkString("{", ",", "}")
+        "\"" + k + "\":\"" + Json.escape(e) + "\"" }.mkString("{", ",", "}")
       val ctl = controlSeries
         .map { case (i, s) => s"[$i,$s]" }.mkString("[", ",", "]")
       val total = ok.map(_._2).sum
@@ -136,17 +137,17 @@ object Bench {
       val ok = results.collect { case (k, mn, _, None) => (k, mn) }
       val qs = ok.map { case (k, mn) => "\"" + k + "\":" + mn }.mkString("{", ",", "}")
       val errs = results.collect { case (k, _, _, Some(e)) =>
-        // truncate the RAW message, then escape: esc(..).take(..) can
+        // truncate the RAW message, then escape: escape(..).take(..) can
         // cut mid-escape-sequence, leaving a lone trailing backslash
         // that escapes the closing quote and corrupts the JSON line.
-        "\"" + k + "\":\"" + esc(e.take(120)) + "\"" }.mkString("{", ",", "}")
+        "\"" + k + "\":\"" + Json.escape(e.take(120)) + "\"" }.mkString("{", ",", "}")
       val total = ok.map(_._2).sum
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"repeats":$repeats,"sf":"$sfDir"}"""
     }
     def renderCompact(results: Seq[(String, Double, Double, Option[String])]): String = {
       val ok = results.collect { case (k, mn, _, None) => (k, mn) }
       val errs = results.collect { case (k, _, _, Some(e)) =>
-        "\"" + k + "\":\"" + esc(e.take(120)) + "\"" }.mkString("{", ",", "}")
+        "\"" + k + "\":\"" + Json.escape(e.take(120)) + "\"" }.mkString("{", ",", "}")
       val total = ok.map(_._2).sum
       s"""{"metric":"total","value":$total,"unit":"sec","errors":$errs,"repeats":$repeats,"sf":"$sfDir"}"""
     }

@@ -1807,21 +1807,16 @@ object Dedup {
     // block manager's per-partition compute lock makes one job compute
     // a partition and the other wait on the cached block).
     val nBands = (0 until blocks).combinations(blocks - maxHamming).size
-    locally {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val writes = Seq(
-        Future { fp.write.mode(mode).parquet(s"$dir/fp") },
-        Future {
-          fp.select(col(idCol),
-            posexplode(blockedKeyArray("__fp", bits, blocks, maxHamming))
-              .as(Seq("__band", "__key")))
-            .repartition(nBands, col("__band"))
-            .write.mode(mode).partitionBy("__band").parquet(s"$dir/bands")
-        })
-      Await.result(Future.sequence(writes), Duration.Inf): Unit
-    }
+    // a failed write rethrows only after its sibling settled
+    // (graft.Concurrent) — no job left writing into the index dir
+    graft.Concurrent.runAll(
+      () => fp.write.mode(mode).parquet(s"$dir/fp"),
+      () =>
+        fp.select(col(idCol),
+          posexplode(blockedKeyArray("__fp", bits, blocks, maxHamming))
+            .as(Seq("__band", "__key")))
+          .repartition(nBands, col("__band"))
+          .write.mode(mode).partitionBy("__band").parquet(s"$dir/bands"))
     if (mode != "append") {
       val p = paramsPath(dir)
       val fs = p.getFileSystem(

@@ -486,13 +486,14 @@ object PageRank {
       var frontier = dist.select(col("node"))
       var hop = 1
       var done = false
-      // r13 (guide §2 — job latency): ONE job per hop instead of three.
-      // The hop frame checkpoints LAZILY with a STATIC (AQE-off) capture
-      // and the termination probe is a count() on it — the static
-      // captured plan runs as one RDD lineage inside the count's single
-      // job (an AQE capture would launch a separate stage-job per
-      // exchange at materialization), and the count doubles as the
-      // materialization (was: eager checkpoint job + isEmpty job). The
+      // r13 (guide §2 — job latency): fewer jobs per hop. The hop frame
+      // checkpoints LAZILY with `stable = false` — the plain AQE-on
+      // capture, the round-state choice (see CheckpointScope.checkpoint):
+      // the frame is small and re-keyed next hop — and the termination
+      // probe is a count() on it, so the count doubles as the
+      // materialization (was: eager checkpoint job + isEmpty job). Under
+      // AQE each exchange of the hop still runs as its own stage-job
+      // inside that materialization. The
       // visited set stays a lazy UNION of the already-cached hop frames
       // — correct because every constituent is checkpointed before it
       // joins the union, and K ≤ maxHops keeps the plan bounded — where

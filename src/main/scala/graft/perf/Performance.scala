@@ -1,8 +1,6 @@
 package graft.perf
 
-import graft.StableCheckpoint._
-
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -19,6 +17,28 @@ import org.apache.spark.sql.functions._
   * ALREADY-AGGREGATED series (≤ one row per trading date by
   * construction, like the benchmark ffill in Backtest — the unpartitioned
   * window is bounded, not a data-volume sort).
+  *
+  * The per-date series is SHARED: every measure that reads the return
+  * or benchmark series (everything except [[attribution]],
+  * [[roundTrips]], [[concentration]] and [[financingCosts]], which key
+  * the melt differently; [[riskContributions]] reuses it only once
+  * materialized) starts from one frame (date, return, benchmark
+  * value, #Return rows, #Benchmark rows), computed once per
+  * (results frame, dateCol) by [[perDateQuery]] — one job over the
+  * melt's whole lineage, with the session's AQE setting — and held on
+  * the driver as a one-partition local relation (≤ one row per trading
+  * date). A tear sheet of n measures over one backtest therefore runs
+  * the backtest once, not n times; the measures themselves plan over
+  * local rows.
+  * The rows live in a weak identity map keyed by the results frame, so
+  * they are freed once the caller drops that frame, and they hold no
+  * block-manager state (an `unpersist`/`clearCache` sweep between
+  * measures cannot invalidate them). Like Spark's cache, the series is
+  * a SNAPSHOT: it shows the results frame's inputs as they were at the
+  * first measure over it — rebuild the frame to see changed inputs.
+  * The snapshot is taken when a measure is BUILT, so an input error the
+  * aggregation raises (the [[MaxAbsReturn]] guard) surfaces at that
+  * call, not at the measure's collect.
   */
 object Performance {
 
@@ -27,17 +47,9 @@ object Performance {
     * return; anything near it is corrupted input, not a return). */
   private[graft] val MaxAbsReturn: Double = 9.0e6
 
-  /** Per-date portfolio return: the cross-sid sum of the melt's `Return`
-    * rows. Summed as integer picos (×1e12, exact in a long for |r| ≤
-    * ~10⁶) so the unordered distributed sum is deterministic — a plain
-    * double sum differs in the last ulp run-to-run and engine-to-engine.
-    * Rows beyond [[MaxAbsReturn]] fail loudly (a corrupted melt should
-    * never silently flip sign), and the CROSS-ROW accumulator is
-    * decimal(38,0) — several near-bound rows on one date would wrap a
-    * long sum even though each row passes the per-row check. */
   /** The per-row pico-scaled Return value with the loud corrupted-input
-    * guard — shared by [[dailyReturns]] and the [[vsBenchmark]] one-pass
-    * aggregation. */
+    * guard — shared by the per-date series ([[perDateQuery]]),
+    * [[attribution]] and [[roundTrips]]. */
   private def picoReturn: Column = when(
     abs(col("value")) > MaxAbsReturn,
     raise_error(format_string(
@@ -51,11 +63,86 @@ object Performance {
     (sum(pico.cast(org.apache.spark.sql.types.DecimalType(38, 0)))
       .cast("double") / 1e12)
 
+  /** Per-date portfolio return: the cross-sid sum of the melt's `Return`
+    * rows. Summed as integer picos (×1e12, exact in a long for |r| ≤
+    * ~10⁶) so the unordered distributed sum is deterministic — a plain
+    * double sum differs in the last ulp run-to-run and engine-to-engine.
+    * Rows beyond [[MaxAbsReturn]] fail loudly (a corrupted melt should
+    * never silently flip sign), and the CROSS-ROW accumulator is
+    * decimal(38,0) — several near-bound rows on one date would wrap a
+    * long sum even though each row passes the per-row check. */
   def dailyReturns(results: DataFrame, dateCol: String = "date"): DataFrame =
+    returnsOf(perDate(results, dateCol), dateCol)
+
+  /** The (date, return) rows of a [[perDate]] frame: the dates carrying
+    * at least one Return row. */
+  private def returnsOf(series: DataFrame, dateCol: String): DataFrame =
+    series.where(col("__nr") > 0).select(col(dateCol), col("return"))
+
+  /** The single-pass joint per-date aggregation behind the shared
+    * series: Return rows fold into the exact pico sum, Benchmark rows
+    * into their value (`max` — [[benchmarkJoined]] rejects dates with
+    * several), and both row counts ride along so [[dailyReturns]] and
+    * [[benchmarkJoined]] select their dates from the same rows. Lazy;
+    * [[perDate]] materializes it. */
+  private[graft] def perDateQuery(results: DataFrame, dateCol: String): DataFrame = {
+    val isRet = col("field") === "Return"
+    val isBench = col("field") === "Benchmark"
     results
-      .where(col("field") === "Return")
+      .where(isRet || isBench)
       .groupBy(col(dateCol))
-      .agg(picoSum(picoReturn).as("return"))
+      .agg(
+        picoSum(when(isRet, picoReturn)).as("return"),
+        max(when(isBench, col("value"))).as("__b"),
+        sum(when(isRet, 1L).otherwise(0L)).as("__nr"),
+        sum(when(isBench, 1L).otherwise(0L)).as("__nb"))
+  }
+
+  /** results frame → (dateCol → its materialized [[perDateQuery]]).
+    * `Dataset` keeps `Object` identity for equals/hashCode, so this is
+    * a weak IDENTITY map: an entry lives exactly as long as its results
+    * frame is reachable (the values never reference their key). */
+  private val shared =
+    new java.util.WeakHashMap[DataFrame, Map[String, DataFrame]]()
+
+  private def cached(results: DataFrame, dateCol: String): Option[DataFrame] =
+    shared.synchronized(Option(shared.get(results)).flatMap(_.get(dateCol)))
+
+  /** The shared per-date series of each results frame, materializing
+    * the ones not yet held in ONE batched job per schema: the union of
+    * their [[perDateQuery]] aggregations, tagged by position and
+    * collected together (a k-book combination runs its k backtest
+    * lineages side by side in one job, never as k sequential passes).
+    * The segment's plan goes to [[graft.StableCheckpoint.planProbe]]
+    * first, so the catalog plan audits still see what runs here. */
+  private def perDates(frames: Seq[DataFrame], dateCol: String): Seq[DataFrame] = {
+    val missing = frames.distinct.filter(cached(_, dateCol).isEmpty)
+      .map(f => f -> perDateQuery(f, dateCol))
+    missing.groupBy(_._2.schema).foreach { case (schema, batch) =>
+      val tagged = batch.zipWithIndex
+        .map { case ((_, q), i) => q.withColumn("__k", lit(i)) }
+        .reduce(_ unionByName _)
+      graft.StableCheckpoint.planProbe(tagged.queryExecution.executedPlan)
+      val rows = tagged.collect().groupBy(_.getInt(schema.length))
+      val spark = tagged.sparkSession
+      batch.zipWithIndex.foreach { case ((f, _), i) =>
+        // ONE partition (coalesce, no shuffle): the measures' date-ordered
+        // windows and global aggregates then need no exchange at all
+        val local = spark.createDataFrame(
+          java.util.Arrays.asList(rows.getOrElse(i, Array.empty[Row])
+            .map(r => Row.fromSeq(r.toSeq.init)): _*),
+          schema).coalesce(1)
+        shared.synchronized {
+          val byCol = Option(shared.get(f)).getOrElse(Map.empty)
+          shared.put(f, byCol + (dateCol -> local))
+        }
+      }
+    }
+    frames.map(f => cached(f, dateCol).get)
+  }
+
+  private def perDate(results: DataFrame, dateCol: String): DataFrame =
+    perDates(Seq(results), dateCol).head
 
   /** Running product of (1 + return) over the date-ordered window —
     * cumprod semantics without a product aggregate: exp∘Σln over |1+r|,
@@ -117,29 +204,22 @@ object Performance {
   }
 
   /** Per-date (return, bench_return) joint series — shared by
-    * [[vsBenchmark]] and [[rollingBeta]]. The melt's `Benchmark` rows
-    * carry per-date benchmark RETURNS (D19: pct_change of the ffilled
-    * benchmark closes), one row per date, combined with the per-date
-    * portfolio return in ONE pass over the melt: both series come out
-    * of a SINGLE `groupBy(date)` with conditional aggregates — a
-    * `dailyReturns ⋈ filter(Benchmark)` join would run the whole
-    * upstream backtest lineage once per differently-aliased join input
-    * (the planner does not reuse exchanges across them — measured 3.7×
-    * on the bench harness). Dates lacking either field drop out,
-    * matching the inner join this replaces. Requires ≤ 1 Benchmark row
-    * per date (daily results — the D19 contract); several rows per
-    * date (an intraday melt) raise rather than silently averaging. */
-  private def benchmarkJoined(results: DataFrame, dateCol: String): DataFrame = {
-    val isRet = col("field") === "Return"
-    val isBench = col("field") === "Benchmark"
-    results
-      .where(isRet || isBench)
-      .groupBy(col(dateCol))
-      .agg(
-        picoSum(when(isRet, picoReturn)).as("return"),
-        max(when(isBench, col("value"))).as("__b"),
-        sum(when(isRet, 1L).otherwise(0L)).as("__nr"),
-        sum(when(isBench, 1L).otherwise(0L)).as("__nb"))
+    * [[vsBenchmark]], [[rollingBeta]], [[captureRatios]],
+    * [[activeStats]] and [[crossCorrelation]]. The melt's `Benchmark`
+    * rows carry per-date benchmark RETURNS (D19: pct_change of the
+    * ffilled benchmark closes), one row per date, and come out of the
+    * SAME single-pass conditional aggregation as the portfolio return
+    * ([[perDateQuery]]) — a `dailyReturns ⋈ filter(Benchmark)` join
+    * would run the whole upstream backtest lineage once per
+    * differently-aliased join input (the planner does not reuse
+    * exchanges across them — measured 3.7× on the bench harness). Dates
+    * lacking either field drop out, matching the inner join this
+    * replaces. Requires ≤ 1 Benchmark row per date (daily results — the
+    * D19 contract); several rows per date (an intraday melt) raise when
+    * the measure runs rather than silently averaging — only here, so
+    * return-only measures over the same frame are unaffected. */
+  private def benchmarkJoined(results: DataFrame, dateCol: String): DataFrame =
+    perDate(results, dateCol)
       .where(col("__nr") > 0 && col("__nb") > 0)
       .withColumn("bench_return",
         when(col("__nb") > 1,
@@ -149,7 +229,6 @@ object Performance {
               "results to daily first", col("__nb"), col(dateCol).cast("string")))
             .cast("double"))
           .otherwise(col("__b")))
-  }
 
   /** Benchmark-relative one-row summary over [[benchmarkJoined]]'s
     * joint series: sample beta (cov/var), alpha as the per-period
@@ -608,11 +687,20 @@ object Performance {
           .as("down_capture"))
   }
 
+  /** The union of each book's (date, __k = position, return) rows —
+    * every book's shared series, materialized in one batched job. */
+  private def taggedReturns(books: Seq[DataFrame], dateCol: String): DataFrame =
+    perDates(books, dateCol).zipWithIndex.map { case (series, i) =>
+      returnsOf(series, dateCol)
+        .select(col(dateCol), lit(i).as("__k"), col("return"))
+    }.reduce(_ unionByName _)
+
   /** Multi-strategy portfolio combination: the per-date weighted sum of
     * each strategy's portfolio return — allocating a book across
     * backtests the way the reference's Moonchart notebooks combine
-    * results CSVs. Each melt collapses through [[dailyReturns]] (exact
-    * pico sums), the tagged union groups by date ONCE, and the k
+    * results CSVs. Each melt collapses to its shared per-date series
+    * (exact pico sums; the books not yet materialized run together in
+    * one job), the tagged union groups by date ONCE, and the k
     * per-strategy returns combine in FIXED column order (k is the
     * strategy count — a handful — so the fold is per-row arithmetic,
     * deterministic in any engine). A date missing from a strategy
@@ -622,10 +710,7 @@ object Performance {
       strategies: Seq[(DataFrame, Double)],
       dateCol: String = "date"): DataFrame = {
     require(strategies.nonEmpty, "need at least one strategy")
-    val tagged = strategies.zipWithIndex.map { case ((melt, _), i) =>
-      dailyReturns(melt, dateCol)
-        .select(col(dateCol), lit(i).as("__k"), col("return"))
-    }.reduce(_ unionByName _)
+    val tagged = taggedReturns(strategies.map(_._1), dateCol)
     val perStrat = strategies.indices.map(i =>
       max(when(col("__k") === i, col("return"))).as(s"ret_$i"))
     val combined = strategies.zipWithIndex
@@ -653,21 +738,12 @@ object Performance {
       strategies: Seq[DataFrame],
       dateCol: String = "date"): DataFrame = {
     require(strategies.size >= 2, "need at least two strategy books")
-    // the tagged union of every book's per-date series feeds BOTH the
-    // vol probe and the blend — ONE lazy checkpoint, so all k backtest
-    // melt pipelines materialize together in the probe job (per-book
-    // sequential `.head` probes serialized k melt materializations on
-    // the driver: measured 4.0 → ~1.7 s on the bench, the port1 shape
-    // plus one bounded k-row probe)
-    // plain (AQE-on) capture, the pagerank stable=false rationale: the
-    // frame is tiny (dates × k rows), both consumers re-key it (groupBy
-    // __k / groupBy date), and the k-backtest segment benefits from
-    // AQE's runtime coalescing far more than from a declared
-    // partitioning nobody downstream consumes
-    val tagged = strategies.zipWithIndex.map { case (m, i) =>
-      dailyReturns(m, dateCol)
-        .select(col(dateCol), lit(i).as("__k"), col("return"))
-    }.reduce(_ unionByName _).localCheckpoint(false)
+    // the tagged union of every book's shared per-date series feeds
+    // BOTH the vol probe and the blend; all k backtest lineages
+    // materialize together in ONE job (per-book sequential probes
+    // serialized k melt materializations on the driver: measured 4.0 →
+    // ~1.7 s on the bench, the port1 shape plus one bounded k-row probe)
+    val tagged = taggedReturns(strategies, dateCol)
     // bounded driver action: k rows, one grouped stddev job
     val volMap = tagged.groupBy(col("__k"))
       .agg(round(stddev_samp(col("return")), 6).as("v"))
@@ -840,12 +916,19 @@ object Performance {
     * only formulation both engines mirror exactly); population
     * moments, so the shares telescope exactly. Null share/corr when
     * the portfolio (or the sid) is flat. Output
-    * (sid, n_days, risk_share, corr_port), 6dp. */
+    * (sid, n_days, risk_share, corr_port), 6dp.
+    *
+    * The per-sid side re-reads the melt itself, so the per-date side
+    * uses the shared series only when another measure already
+    * materialized it; otherwise both sides stay in this one lazy plan
+    * (materializing first would run the backtest lineage twice). */
   def riskContributions(results: DataFrame, dateCol: String = "date"): DataFrame = {
     val rs = results
       .where(col("field") === "Return")
       .select(col("sid"), col(dateCol), col("value").as("__r"))
-    val daily = dailyReturns(results, dateCol)
+    val series = cached(results, dateCol)
+      .getOrElse(perDateQuery(results, dateCol))
+    val daily = returnsOf(series, dateCol)
       .select(col(dateCol), col("return").as("__p"))
     rs
       .join(broadcast(daily), Seq(dateCol))

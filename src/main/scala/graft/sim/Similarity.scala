@@ -485,13 +485,10 @@ object Similarity {
     // r13 (guide §2.6): the three writes are independent — submit them
     // from a small thread pool so the two dimension-table writes
     // back-fill executors freed by the codes write's tail instead of
-    // serializing three jobs. Spark's scheduler runs concurrent jobs
-    // from one application natively; job descriptions are thread-local.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val writes = Seq(
-      Future {
+    // serializing three jobs (graft.Concurrent: a failed write rethrows
+    // only after the others settled).
+    graft.Concurrent.runAll(
+      () => {
         // repartition by the write's partition column so each cell dir
         // gets one file per holding task instead of one per upstream
         // partition (r12 dd29 lesson) — the search-side scan then opens
@@ -505,9 +502,8 @@ object Similarity {
           .repartition(col("cell_id"))
           .write.mode("overwrite").partitionBy("cell_id").parquet(s"$dir/codes")
       },
-      Future { centroids.write.mode("overwrite").parquet(s"$dir/centroids") },
-      Future { codebooks.write.mode("overwrite").parquet(s"$dir/codebooks") })
-    Await.result(Future.sequence(writes), Duration.Inf): Unit
+      () => centroids.write.mode("overwrite").parquet(s"$dir/centroids"),
+      () => codebooks.write.mode("overwrite").parquet(s"$dir/codebooks"))
   }
 
   /** Search a [[writeIvfadcIndex]]-published index. Result-identical to

@@ -223,10 +223,14 @@ object PlanBudgets {
     "ic5_bootstrap" -> 3, // resample re-key + two reduction aggs
     "mb1_frequent_pairs" -> 2, // ONE basket repartition + pair agg (the r6 fix)
     "backtest_pipeline" -> 3, // panel pivot, returns melt, summary agg
-    "perf_ccf" -> 6, // per-lag cross-correlations over the shifted
+    "perf_ccf" -> 0, // per-lag cross-correlations over the shifted
     // panel; 8 → 6 in r13: the benchmarked prices fixture lazily
     // checkpoints, so the three panel instances (chain + grid + closes)
-    // no longer each carry their own scan→aggregate exchange
+    // no longer each carry their own scan→aggregate exchange; 6 → 0 in
+    // r14: the backtest runs into Performance's shared per-date series
+    // before planning, and the published plan reads its one-partition
+    // local rows — the window and the per-lag aggregation need no
+    // exchange
     // r7 additions worth pinning (harvested from the static plans)
     "sim15_mmr" -> 0, // greedy over checkpointed bounded frames
     "gr9_bfs_layers" -> 0, // CheckpointScope'd frontier rounds

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.perf.Performance
@@ -335,9 +336,13 @@ class PerfSpec extends SparkSpec {
     spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
     spark.conf.set("spark.sql.codegen.fallback", "false")
     try {
-      val daily = Performance.dailyReturns(m).orderBy("date")
+      // the guard and accumulator run in the shared per-date aggregation
+      // (dailyReturns itself plans over its local rows) — check THAT query
+      val daily = Performance.perDateQuery(m, "date").orderBy("date")
       val rows = daily.collect()
       assert(rows.map(_.getAs[Double]("return")).toSeq == Seq(0.1, -0.05))
+      assert(Performance.dailyReturns(m).orderBy("date").collect()
+        .map(_.getAs[Double]("return")).toSeq == Seq(0.1, -0.05))
       // the aggregates carrying the decimal(38,0) accumulator must sit
       // inside a codegen span (starred operators), not fall back to
       // interpreted row processing — read the plan AFTER executing this
@@ -783,5 +788,120 @@ class PerfSpec extends SparkSpec {
     assert(f.getAs[Double]("mean") == 0.01)
     assert(f.isNullAt(f.fieldIndex("skewness")))
     assert(f.isNullAt(f.fieldIndex("excess_kurtosis")))
+  }
+
+  // ---- the shared per-date series: one materialization per results
+  // frame, read by every measure
+
+  /** A 40-date melt: two sids' Return rows plus one Benchmark row per
+    * date. Every call builds a NEW results frame. */
+  private def tearSheetMelt(): DataFrame =
+    (0 until 40).flatMap { d =>
+      val date = java.time.LocalDate.of(2024, 1, 1).plusDays(d).toString
+      val b = math.rint(math.sin(d * 0.7) * 1e6) / 1e8
+      Seq(("A", date, "Return", b * 1.5 + 0.001 * (d % 3)),
+        ("B", date, "Return", 0.003 - 0.002 * (d % 5)),
+        ("1", date, "Benchmark", b))
+    }.toDF("sid", "date", "field", "value")
+      .withColumn("date", to_date($"date"))
+
+  private val tearSheet: Seq[(String, DataFrame => DataFrame)] = Seq(
+    "summary" -> (Performance.summary(_)),
+    "dailySeries" -> (Performance.dailySeries(_)),
+    "drawdowns" -> (Performance.drawdowns(_)),
+    "vsBenchmark" -> (Performance.vsBenchmark(_)),
+    "rollingBeta" -> (Performance.rollingBeta(_, 5)),
+    "activeStats" -> (Performance.activeStats(_)))
+
+  private def rowsOf(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  test("shared series: every measure returns the same rows whether the " +
+    "calls share one results frame or each gets a fresh one") {
+    val shared = tearSheetMelt()
+    for ((name, measure) <- tearSheet) {
+      val viaShared = rowsOf(measure(shared))
+      assert(viaShared.nonEmpty, name)
+      assert(viaShared == rowsOf(measure(tearSheetMelt())), name)
+    }
+  }
+
+  test("shared series: after the first measure, further measures on the " +
+    "same results frame start no job that scans the price panel") {
+    val dir = java.nio.file.Files.createTempDirectory("perf_shared").toString
+    Seq(("A", "2024-01-01", 10.0), ("A", "2024-01-02", 11.0),
+      ("A", "2024-01-03", 9.0), ("A", "2024-01-04", 10.0),
+      ("B", "2024-01-01", 20.0), ("B", "2024-01-02", 19.0),
+      ("B", "2024-01-03", 21.0), ("B", "2024-01-04", 20.0))
+      .toDF("sid", "date", "close").withColumn("date", to_date($"date"))
+      .write.mode("overwrite").parquet(s"$dir/panel")
+    object S extends graft.pipeline.Strategy {
+      val code = "perf-shared"
+      def pricesToSignals(p: DataFrame) =
+        p.withColumn("signal", (col("close") < 20).cast("int"))
+    }
+    val results = graft.pipeline.Backtest.run(S,
+      spark.read.parquet(s"$dir/panel"))
+    val sc = spark.sparkContext
+    val recordsRead = new java.util.concurrent.atomic.AtomicLong
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(
+          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m =>
+          recordsRead.addAndGet(m.inputMetrics.recordsRead))
+    }
+    sc.addSparkListener(listener)
+    try {
+      Performance.summary(results).collect()
+      org.apache.spark.TestBus.drain(sc)
+      assert(recordsRead.get > 0, "the first measure should scan the panel")
+      recordsRead.set(0)
+      Performance.dailySeries(results).collect()
+      Performance.drawdowns(results).collect()
+      Performance.ratios(results).collect()
+      org.apache.spark.TestBus.drain(sc)
+      assert(recordsRead.get == 0,
+        s"later measures re-read ${recordsRead.get} panel records")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("shared series: an unpersist-everything + clearCache sweep between " +
+    "two measures on one frame changes no rows") {
+    val frame = tearSheetMelt()
+    val before = rowsOf(Performance.summary(frame))
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+    spark.catalog.clearCache()
+    assert(rowsOf(Performance.vsBenchmark(frame)) ==
+      rowsOf(Performance.vsBenchmark(tearSheetMelt())))
+    assert(rowsOf(Performance.summary(frame)) == before)
+  }
+
+  test("shared series: the MaxAbsReturn guard fires when the measure is " +
+    "BUILT; several Benchmark rows per date raise in vsBenchmark, not in " +
+    "summary") {
+    def messages(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(x => x.getMessage +: messages(x.getCause))
+    val corrupted = Seq(
+      ("A", "2024-01-01", "Return", 0.06),
+      ("B", "2024-01-02", "Return", 1.0e7))
+      .toDF("sid", "date", "field", "value")
+      .withColumn("date", to_date($"date"))
+    // no action: building the measure materializes the series
+    val e = intercept[Exception](Performance.summary(corrupted))
+    assert(messages(e).filter(_ != null).mkString
+      .contains("pico-summation bound"))
+    // a failed materialization caches nothing — it raises again
+    intercept[Exception](Performance.dailySeries(corrupted))
+
+    val intradayish = Seq(
+      ("A", "2024-01-01", "Return", 0.02),
+      ("1", "2024-01-01", "Benchmark", 0.01),
+      ("1", "2024-01-01", "Benchmark", 0.02))
+      .toDF("sid", "date", "field", "value")
+      .withColumn("date", to_date($"date"))
+    assert(Performance.summary(intradayish).head.getAs[Long]("n_days") == 1L)
+    val built = Performance.vsBenchmark(intradayish) // builds fine …
+    val e2 = intercept[Exception](built.head) // … and raises when run
+    assert(messages(e2).filter(_ != null).mkString.contains("needs daily"))
   }
 }
