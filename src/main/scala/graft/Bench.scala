@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every catalog query against
   * SPARK_GRAFT_SF_DIR, prints one JSON line with per-query seconds.
   * A warm-up action first (session init, codegen JIT, file-footer reads)
@@ -10,29 +8,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // Explicit ÷0 policy: expressions guard via Panel.safeDiv (null,
-      // matching DuckDB's plain division); ansi=false so any unguarded
-      // site degrades to null instead of aborting a cluster-wide job.
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-    // r12 shuffle-scratch I/O (guide §2.1/§6: local disk can be the
-    // tighter limit): on this virtualized host the per-map-task shuffle
-    // concat was the dominant fixed cost of EVERY stage — jstack showed
-    // map tasks inside FileChannel.map/unmap0 (transferTo's mmap path;
-    // unmap triggers cross-vCPU TLB shootdowns) and FileOutputStream.open
-    // on the slow root FS. Streamed copies + RAM-backed local dirs cut a
-    // trivial 32-task shuffle stage from ~250 ms/task to ~23 ms/task.
-    // Both knobs stay env-overridable: on bare metal with NVMe scratch
-    // and large shuffle files, transferTo's zero-copy wins — set
-    // SPARK_GRAFT_TRANSFER_TO=true / SPARK_GRAFT_LOCAL_DIR=<nvme path>.
-    graft.tools.LocalIo.tune(builder)
-    val spark = builder.getOrCreate()
+    val spark = graft.tools.LocalIo.session(cpus).getOrCreate()
     // ERROR, not WARN: releaseState()'s unpersist of localCheckpointed
     // RDDs emits one WARN per RDD; over a 428-query run that floods the
     // driver's stdout capture window and has truncated the round bench

@@ -89,23 +89,11 @@ object Queries {
 
   /** Supplier × ship-day price panel (close = max extendedprice: order-free). */
   private def supplierPanel(s: SparkSession, dir: String): DataFrame = {
-    // r13 (guide §2): the sf-tier lineitem is ONE parquet split (single
-    // row group), so the date parse + partial aggregation of the whole
-    // fact table ran in one task under ~95 panel queries (measured
-    // 0.52 s of every backtest chain). When the scan carries fewer
-    // splits than cores, hash-spread the 3-column projection by sid
-    // FIRST: HashPartitioning(sid) satisfies the groupBy(sid, date)
-    // clustering, so the shuffle MOVES (raw rows instead of partials),
-    // never doubles — and parse+aggregate run core-wide (0.52 → 0.38 s
-    // measured). At 100 TB the gate never fires (splits ≫ cores) and
-    // the classic scan → partial-agg → exchange shape is untouched.
+    // HashPartitioning(sid) satisfies the groupBy(sid, date) clustering,
+    // so a spread moves the shuffle instead of adding one
     val li = t(s, dir, "lineitem")
       .select(col("l_suppkey"), col("l_shipdate"), col("l_extendedprice"))
-    val spread =
-      if (li.rdd.getNumPartitions < s.sparkContext.defaultParallelism)
-        li.repartition(s.sparkContext.defaultParallelism, col("l_suppkey"))
-      else li
-    spread
+    Parallelism.spread(li, col("l_suppkey"))
       .groupBy(col("l_suppkey").as("sid"), to_date(col("l_shipdate")).as("date"))
       .agg(max(col("l_extendedprice")).as("close"))
   }

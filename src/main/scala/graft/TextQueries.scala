@@ -25,19 +25,6 @@ object TextQueries {
     * [[Queries.tempDir]] (removed recursively at JVM exit). */
   private def tempDir(prefix: String): String = Queries.tempDir(prefix)
 
-  /** r13 (guide §2): gated core-width spread for CPU-dense passes over
-    * a scan. The sf-tier documents table is ONE parquet split, so every
-    * operator that evaluates the composite quality score (≈0.1 ms/doc:
-    * ~20 stopword-marker replaces per row) directly over the scan ran
-    * it in a single task (sp5's two budget passes measured ~0.6 s/task
-    * each). Gated on the scan's split count — known statically, no
-    * probe job — so at 100 TB (splits ≫ cores) no shuffle is added and
-    * the operator sees the raw scan partitioning unchanged. */
-  private def spreadIfNarrow(s: SparkSession, df: DataFrame, key: Column): DataFrame =
-    if (df.rdd.getNumPartitions < s.sparkContext.defaultParallelism)
-      df.repartition(s.sparkContext.defaultParallelism, key)
-    else df
-
   /** The sim7/sim8 shared index fixture: label-seeded centroids and the
     * 8×8-dim sub-codebook from the 8 lowest-id embeddings — ONE recipe,
     * so the "sim8 is result-identical to sim7" invariant (they share an
@@ -225,7 +212,7 @@ object TextQueries {
     // the ≤ 10-row band-size frame, never a global rank window ----
     "sp16_curriculum" -> ((s, dir) =>
       graft.text.Sampling.curriculumOrder(
-        spreadIfNarrow(s, t(s, dir, "documents"), col("doc_id")), "doc_id",
+        Parallelism.spread(t(s, dir, "documents"), col("doc_id")), "doc_id",
         graft.text.TextAnalysis.qualityScore(col("text")), bands = 10)),
 
     // sparse tf-idf document vectors, hapax tail pruned at df >= 2
@@ -237,7 +224,7 @@ object TextQueries {
     // window + boundary-bin hash sampling, never a global sort
     "sp5_token_budget" -> ((s, dir) =>
       Sampling.selectByTokenBudget(
-        spreadIfNarrow(s, t(s, dir, "documents"), col("doc_id")), "doc_id",
+        Parallelism.spread(t(s, dir, "documents"), col("doc_id")), "doc_id",
         TextAnalysis.qualityScore(col("text")),
         TextAnalysis.tokenCount(col("text")),
         budget = 10000)
@@ -247,7 +234,7 @@ object TextQueries {
     // tokens with its own best docs (no crawl eats the global budget)
     "sp13_budget_per_source" -> ((s, dir) =>
       Sampling.selectByTokenBudgetPerGroup(
-        spreadIfNarrow(s, t(s, dir, "documents"), col("doc_id")),
+        Parallelism.spread(t(s, dir, "documents"), col("doc_id")),
         "doc_id", "source",
         TextAnalysis.qualityScore(col("text")),
         TextAnalysis.tokenCount(col("text")),
@@ -480,7 +467,7 @@ object TextQueries {
     // mean so the aggregate hash-compares exactly
     "tx12_corpus_report" -> ((s, dir) => {
       val g = TextAnalysis.gopherSignals(col("text"))
-      spreadIfNarrow(s, t(s, dir, "documents"), col("doc_id"))
+      Parallelism.spread(t(s, dir, "documents"), col("doc_id"))
         .select(
           TextAnalysis.langId(col("text")).as("lang_id"),
           col("source"),
@@ -734,24 +721,10 @@ object TextQueries {
         docs.where(col("doc_id") >= 50), docs.where(col("doc_id") < 50), n = 5)
       // checkpoint: the budget selector makes two passes (histogram +
       // keep-filter) — without this the decontamination chain runs twice.
-      // Spread to core-width (r12): the join's output is byte-tiny at
-      // small SF, so AQE coalesces it to ~1 partition and BOTH downstream
-      // passes compute the CPU-dense quality score over that single task
-      // (measured 1.06 s of the pipeline wall). r13 de-risks the spread
-      // for scale: the repartition moves the TEXT column, so it is GATED
-      // on the documents SCAN's split count (known statically, no probe
-      // job) — at 100 TB the scan carries ≥ core-width splits, the join
-      // output keeps ≥ core-width partitions under AQE's advisory size,
-      // and no extra full-corpus shuffle happens; only the
-      // under-parallelized small-scan case pays it, where the frame is
-      // tiny by construction. One checkpoint either way (the r12 cost
-      // shape), pinning the spread for both budget passes.
-      val cores = s.sparkContext.defaultParallelism
-      val needSpread = docs.rdd.getNumPartitions < cores
-      val scoredBase = clean.join(weights, Seq("doc_id"))
+      // Both passes compute the CPU-dense quality score.
       val scored = scope.checkpoint(
-        if (needSpread) scoredBase.repartition(cores, col("doc_id"))
-        else scoredBase,
+        Parallelism.spreadWhenNarrow(docs)(
+          clean.join(weights, Seq("doc_id")), col("doc_id")),
         eager = true)
       val kept = Sampling.selectByTokenBudget(scored, "doc_id",
         TextAnalysis.qualityScore(col("text")) * col("weight"),

@@ -1,8 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. Queries run
   * SEQUENTIALLY on purpose: a 4-thread pool variant was measured 5×
@@ -22,17 +20,7 @@ object Verify {
       require(unknown.isEmpty, s"unknown query names: ${unknown.mkString(", ")}")
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-    // shuffle-scratch I/O (see graft.tools.LocalIo): same tuning as
-    // Bench so the correctness run doesn't pay the mmap/slow-FS tax
-    graft.tools.LocalIo.tune(builder)
-    val spark = builder.getOrCreate()
+    val spark = graft.tools.LocalIo.session(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.toSeq.sortBy(_._1)

@@ -3,7 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.ParameterError
+import graft.{ParameterError, sketch}
 
 /** Bloom-filter n-gram membership — the industrial decontamination
   * shape for reference sets too large to broadcast as grams (Brown 2020
@@ -50,7 +50,7 @@ object Bloom {
 
   /** All k probe positions as an array column (codegen'd; the md5
     * subexpressions collapse to one evaluation per slice). */
-  private[dedup] def probePositions(gram: Column, k: Int, mBits: Int): Column =
+  private def probePositions(gram: Column, k: Int, mBits: Int): Column =
     array((0 until k).map(i => probePos(gram, i, mBits)): _*)
 
   private def validate(mBits: Int, k: Int): Unit = {
@@ -70,9 +70,8 @@ object Bloom {
       mBits: Int = 1 << 20,
       k: Int = 4): DataFrame = {
     validate(mBits, k)
-    Dedup.shingleRows(ref, idCol, textCol, n)
-      .select(explode(probePositions(col("__s"), k, mBits)).as("pos"))
-      .distinct()
+    sketch.Bloom.setBits(Dedup.shingleRows(ref, idCol, textCol, n),
+      probePositions(col("__s"), k, mBits), "pos")
   }
 
   /** Probe the corpus against a built filter: per doc, the number of
@@ -100,17 +99,12 @@ object Bloom {
     if (minHits <= 0) throw new ParameterError(s"minHits must be positive: $minHits")
     val grams = Dedup.shingleRows(corpus, idCol, textCol, n)
       .select(col(idCol), col("__s")).distinct()
-    val hits = grams
-      .select(col(idCol), col("__s"),
-        explode(probePositions(col("__s"), k, mBits)).as("pos"))
-      .join(broadcast(filter.select(col("pos").as("__set"))),
-        col("pos") === col("__set"), "left")
-      .groupBy(col(idCol), col("__s"))
-      .agg(sum(when(col("__set").isNotNull, 1L).otherwise(0L)).as("__nset"))
+    val hits = sketch.Bloom.allSet(grams, Seq(idCol, "__s"),
+        probePositions(col("__s"), k, mBits), filter, "pos", k, "__hit")
       .groupBy(col(idCol))
       .agg(
         count(lit(1)).as("n_grams"),
-        sum(when(col("__nset") === k, 1L).otherwise(0L)).as("n_hits"))
+        sum(when(col("__hit"), 1L).otherwise(0L)).as("n_hits"))
     // left join back so gram-less docs (< n words) appear with 0 grams
     corpus.select(col(idCol))
       .join(hits, Seq(idCol), "left")

@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.Parallelism
 import graft.StableCheckpoint._
 
 import org.apache.spark.sql.{Column, DataFrame}
@@ -23,28 +24,6 @@ import graft.text.TextAnalysis
   *    no dependence on Spark's internal Murmur3 seeds).
   */
 object Dedup {
-
-  /** Hash-repartition on the id before CPU-heavy per-row work. Source
-    * layout (e.g. one small parquet file locally, or a few dense splits
-    * on a cluster) otherwise serializes the hashing onto few tasks; the
-    * groupBy(id) that follows reuses this partitioning, so the shuffle
-    * is moved, not added.
-    *
-    * r13: when the input carries fewer splits than cores, the width is
-    * PINNED to defaultParallelism — the bare keyed repartition lets AQE
-    * byte-coalesce the tiny exchange (64k floor ⇒ ~10 tasks for the
-    * sf-tier corpus) and the CPU-dense shingle/minhash pass runs below
-    * core width. Above core width the unpinned form stays: pinning a
-    * 100 TB corpus to |cores| partitions would build giant spill-prone
-    * tasks (§5), while AQE's byte-based sizing is the right scaler.
-    * Callers pass scan-shaped frames (scan/filter/project/union), so
-    * the split probe reads statically-known leaf partitioning — no job. */
-  private def spread(df: DataFrame, idCol: String): DataFrame = {
-    val cores = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < cores)
-      df.repartition(cores, col(idCol))
-    else df.repartition(col(idCol))
-  }
 
   /** Exact duplicate groups: md5 over normalized text, keep the lowest id
     * as canonical. Returns (content_key, canonical_id, dup_count). */
@@ -94,7 +73,7 @@ object Dedup {
     * then a single Generate explodes it — byte-identical output to the
     * previous posexplode→`lead()`-window chain WITHOUT the per-doc sort
     * of the word stream (the window rode a hash exchange; now the only
-    * shuffle left is [[spread]]'s parallelism repartition, which
+    * shuffle left is the [[graft.Parallelism.keyed]] repartition, which
     * coarse-partitioned local inputs still need before the CPU-heavy
     * md5 work downstream). The array-lambda formulation ([[shingles]])
     * remains the reference semantics; it evaluates interpreted (~2.4
@@ -104,7 +83,7 @@ object Dedup {
       idCol: String = "doc_id",
       textCol: String = "text",
       n: Int = 3): DataFrame =
-    spread(docs, idCol).select(
+    Parallelism.keyed(docs, col(idCol)).select(
       col(idCol),
       explode(graft.functions.MinHashShingles.shingleArrayNative(col(textCol), n))
         .as("__s"))
@@ -161,8 +140,9 @@ object Dedup {
     * to `withMinhashBands` + posexplode (spec-asserted) with NO shingle
     * window and NO signature aggregation. Shingle-less docs return a
     * null band array, which Generate drops — same docs the old
-    * aggregation never emitted. [[spread]] stays: the md5 folding is the
-    * CPU-heavy stage and a coarse-partitioned source would serialize it. */
+    * aggregation never emitted. [[graft.Parallelism.keyed]] stays: the
+    * md5 folding is the CPU-heavy stage and a coarse-partitioned source
+    * would serialize it. */
   private def minhashMelted(
       docs: DataFrame,
       idCol: String,
@@ -170,7 +150,7 @@ object Dedup {
       shingleSize: Int,
       bands: Int,
       rowsPerBand: Int): DataFrame =
-    spread(docs, idCol).select(
+    Parallelism.keyed(docs, col(idCol)).select(
       col(idCol),
       posexplode(graft.functions.MinHashShingles.minhashBandsNative(
         col(textCol), shingleSize, bands, rowsPerBand)).as(Seq("__band", "__bk")))
@@ -414,17 +394,8 @@ object Dedup {
     val paired = candidates
       .join(docs.select(col(idCol).as("id_a"), col(textCol).as("__ta")), "id_a")
       .join(docs.select(col(idCol).as("id_b"), col(textCol).as("__tb")), "id_b")
-    // r13 (guide §2): levenshtein is O(|a|·|b|) per pair — CPU-dense on
-    // byte-small rows. When the docs scan is narrower than core width
-    // (small-SF single split → broadcast joins keep its partitioning →
-    // the verify ran in ONE ~0.9 s task), spread the paired frame first;
-    // at scale the join exchanges already spread it and the gate is off.
-    val cores = docs.sparkSession.sparkContext.defaultParallelism
-    val spread =
-      if (docs.rdd.getNumPartitions < cores)
-        paired.repartition(cores, col("id_a"), col("id_b"))
-      else paired
-    spread
+    // levenshtein is O(|a|·|b|) per pair
+    Parallelism.spreadWhenNarrow(docs)(paired, col("id_a"), col("id_b"))
       .withColumn("edit_distance",
         levenshtein(col("__ta"), col("__tb")).cast("long"))
       .withColumn("similarity", sim)
@@ -1261,19 +1232,9 @@ object Dedup {
       idCol: String = "doc_id"): DataFrame = {
     val joined = docs
       .join(clusters.select(col("id").as(idCol), col("cluster")), Seq(idCol))
-    // r13 (guide §2): when the docs scan is narrower than core width,
-    // the broadcast join keeps its partitioning and the (potentially
-    // expensive) quality expression evaluates in ONE task. The gated
-    // spread keys on the WINDOW's own partition column, so the ranking
-    // window reuses the exchange — the static plan gains no shuffle —
-    // and the quality Project lands post-exchange at core width. At
-    // scale (splits ≥ cores) the gate is off and the shape is r12's.
-    val cores = docs.sparkSession.sparkContext.defaultParallelism
-    val spread =
-      if (docs.rdd.getNumPartitions < cores)
-        joined.repartition(cores, col("cluster"))
-      else joined
-    val clustered = spread
+    // keyed on the window's partition column, so the ranking window
+    // reuses the spread's exchange
+    val clustered = Parallelism.spreadWhenNarrow(docs)(joined, col("cluster"))
       .select(col(idCol), col("cluster"), quality.as("__q"))
     val losers = clustered
       .withColumn("__rn", row_number().over(
@@ -1477,7 +1438,7 @@ object Dedup {
       idCol: String = "doc_id",
       textCol: String = "text",
       bits: Int = 64): DataFrame = {
-    val words = spread(docs, idCol)
+    val words = Parallelism.keyed(docs, col(idCol))
       .select(col(idCol),
         explode(array_distinct(
           split(trim(regexp_replace(lower(col(textCol)), "[^a-z0-9 ]", " ")), "\\s+")))
@@ -1509,8 +1470,8 @@ object Dedup {
     * popcount. Same shape as [[minhashCandidates]]: the fingerprint is
     * the native one-pass [[graft.functions.SimHash]] expression (round
     * 5 — the exploded ±1-vote aggregation [[simhashDf]] stays as the
-    * reference form and spec anchor), so the only exchanges are
-    * [[spread]]'s parallelism repartition and the band-bucket shuffle.
+    * reference form and spec anchor), so the only exchanges are the
+    * [[graft.Parallelism.keyed]] repartition and the band-bucket shuffle.
     * Null-text docs are filtered first: the aggregation never emitted a
     * row for them, while the native expression would carry a null
     * fingerprint into the banding.
@@ -1537,7 +1498,7 @@ object Dedup {
       bands: Int = 8,
       maxBucket: Int = 10000,
       dropOversized: Boolean = false): DataFrame = {
-    val fp = spread(docs.where(col(textCol).isNotNull), idCol)
+    val fp = Parallelism.keyed(docs.where(col(textCol).isNotNull), col(idCol))
       .select(col(idCol),
         graft.functions.SimHash.simhashNative(col(textCol), bits).as("__fp"))
     fingerprintNearPairs(fp, idCol, "__fp", maxHamming, bits, bands,
@@ -1558,7 +1519,7 @@ object Dedup {
       blocks: Int = 8,
       maxBucket: Int = 10000,
       dropOversized: Boolean = false): DataFrame = {
-    val fp = spread(docs.where(col(textCol).isNotNull), idCol)
+    val fp = Parallelism.keyed(docs.where(col(textCol).isNotNull), col(idCol))
       .select(col(idCol),
         graft.functions.SimHash.simhashNative(col(textCol), bits).as("__fp"))
     fingerprintNearPairsBlocked(fp, idCol, "__fp", maxHamming, bits, blocks,
@@ -1787,7 +1748,7 @@ object Dedup {
         "appendToSimhashIndex")
     // the fingerprint frame feeds BOTH writes — lazy checkpoint so the
     // text pass runs once (the dd4 aliased-recompute policy)
-    val fp = spread(docs.where(col(textCol).isNotNull), idCol)
+    val fp = Parallelism.keyed(docs.where(col(textCol).isNotNull), col(idCol))
       .select(col(idCol),
         graft.functions.SimHash.simhashNative(col(textCol), bits).as("__fp"))
       .stableCheckpoint(eager = false)
@@ -1858,7 +1819,7 @@ object Dedup {
     checkSimhashParams(spark, dir, maxHamming, bits, blocks,
       "incrementalSimhashPairs")
     // batch fingerprints feed the band melt AND the verify join
-    val fpNew = spread(batch.where(col(textCol).isNotNull), idCol)
+    val fpNew = Parallelism.keyed(batch.where(col(textCol).isNotNull), col(idCol))
       .select(col(idCol),
         graft.functions.SimHash.simhashNative(col(textCol), bits).as("__fp"))
       .stableCheckpoint(eager = false)

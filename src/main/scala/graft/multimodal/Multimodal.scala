@@ -136,30 +136,15 @@ object Multimodal {
     * channel values are closed-form in (x, y, id) — so a SQL oracle
     * verifies real decoded content analytically, without a decoder of
     * its own. Same typed-mapPartitions contract as every codec op. */
-  /** Partition width for codec fan-out: the cluster's scheduling
-    * parallelism (local[n] → n; on a cluster, executor slots), never a
-    * constant — fixture/codec stages are CPU-bound per ROW, so the
-    * right width is the core count, not a byte target. */
-  private def codecParallelism(df: DataFrame): Int =
-    df.sparkSession.sparkContext.defaultParallelism
-
   def imageFixture(df: DataFrame, idCol: String = "media_id"): DataFrame = {
     import org.apache.spark.sql.Encoders
     val outSchema = StructType(Seq(
       StructField(idCol, LongType, nullable = false),
       StructField("payload", BinaryType, nullable = true)))
     val idIdx = df.schema.fieldIndex(idCol)
-    // hash-spread the id-only frame BEFORE the CPU-heavy encode (the
-    // Dedup.spread pattern): the ids usually arrive on a handful of
-    // scan partitions, which would serialize the PNG encode — and every
-    // decode chained on this frame — onto as few tasks (measured at
-    // sf0.1: the whole mm2 decode ran as ONE 3.5 s task). The shuffle
-    // moves 8-byte ids; the payloads are born wide. The partition count
-    // is pinned to the session's parallelism because AQE's BYTE-based
-    // coalescing is the wrong model here: rows are 8 bytes in and
-    // codec-seconds of CPU out, so coalescing the id shuffle back to
-    // one ~KB partition re-serializes the decode.
-    df.repartition(codecParallelism(df), col(idCol)).mapPartitions { rows =>
+    // spread the 8-byte ids before the encode: the payloads are born
+    // wide, and every decode chained on this frame keeps its width
+    graft.Parallelism.coreWide(df, col(idCol)).mapPartitions { rows =>
       rows.map { r =>
         val id = r.getLong(idIdx)
         Row(id, MediaCodec.gradientPng(id))

@@ -30,15 +30,15 @@ object Bloom {
     pmod(conv(substring(md5(concat_ws("|", lit(s"bloom$i"), key)), 1, 8),
       16, 10).cast("long"), lit(mBits.toLong))
 
+  private def bitPositions(key: Column, k: Int, mBits: Int): Column =
+    array((0 until k).map(i => bitPos(key, i, mBits)): _*)
+
   /** Build the set-bit frame from raw rows: per-key distinct, k-way
     * fan-out, one distinct — ≤ mBits rows. */
   def build(df: DataFrame, keyCol: String, k: Int, mBits: Int): DataFrame = {
     require(k >= 1 && k <= 16, s"k in [1,16]: $k")
     require(mBits >= 2, s"mBits >= 2: $mBits")
-    df.select(col(keyCol)).distinct()
-      .select(explode(array((0 until k).map(i =>
-        bitPos(col(keyCol), i, mBits)): _*)).as("bit"))
-      .distinct()
+    setBits(df.select(col(keyCol)).distinct(), bitPositions(col(keyCol), k, mBits), "bit")
   }
 
   /** Membership probes for a key frame: `(keyCol, maybe_present)`.
@@ -47,18 +47,24 @@ object Bloom {
     * on a k-bit collision (the false-positive rate the sizing
     * controls). The bit frame is bounded and broadcast; a LEFT join
     * keeps never-matching keys in the output as definite negatives. */
-  def probe(
-      keys: DataFrame,
-      bloom: DataFrame,
-      keyCol: String,
-      k: Int,
-      mBits: Int): DataFrame = {
-    val fanned = keys
-      .select(col(keyCol), explode(array((0 until k).map(i =>
-        bitPos(col(keyCol), i, mBits)): _*)).as("bit"))
-    fanned
-      .join(broadcast(bloom.withColumn("__set", lit(1L))), Seq("bit"), "left")
-      .groupBy(col(keyCol))
-      .agg((sum(coalesce(col("__set"), lit(0L))) === k).as("maybe_present"))
-  }
+  def probe(keys: DataFrame, bloom: DataFrame, keyCol: String, k: Int, mBits: Int): DataFrame =
+    allSet(keys, Seq(keyCol), bitPositions(col(keyCol), k, mBits), bloom, "bit", k,
+      "maybe_present")
+
+  /** The relational filter core, shared with [[graft.dedup.Bloom]]:
+    * each caller passes its own hash recipe as `positions` (an array of
+    * k bit positions per row). The set-bit frame is the distinct
+    * positions over `rows`, in column `bitCol`. */
+  private[graft] def setBits(rows: DataFrame, positions: Column, bitCol: String): DataFrame =
+    rows.select(explode(positions).as(bitCol)).distinct()
+
+  /** Per distinct `keys` group of `rows`: whether all k `positions` are
+    * set in `bits` (a broadcast left join, then set count == k). */
+  private[graft] def allSet(rows: DataFrame, keys: Seq[String], positions: Column,
+      bits: DataFrame, bitCol: String, k: Int, outCol: String): DataFrame =
+    rows.select(keys.map(col) :+ explode(positions).as("__pos"): _*)
+      .join(broadcast(bits.select(col(bitCol).as("__set"))),
+        col("__pos") === col("__set"), "left")
+      .groupBy(keys.map(col): _*)
+      .agg((count(col("__set")) === k).as(outCol))
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.ParameterError
+import graft.{ParameterError, Parallelism}
 
 /** Hashed n-gram text classification — the fastText-shaped quality /
   * domain classifier of LLM curation pipelines (Joulin et al. 2016
@@ -133,12 +133,8 @@ object Classifier {
         collect_list(struct(col("__bk").as("b"), col("__x").as("x")))
           .as("__fs"),
         sum(col("__x")).as("__n"))
-      // core-wide spread (r12): the per-doc frame is byte-tiny, so AQE
-      // coalesces it to ~1 partition and the docs × labels in-row
-      // scoring aggregate — the CPU of this chain — runs single-task
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism,
-        col(idCol))
-    val scored = perDoc
+    // the docs × labels in-row scoring aggregate is the CPU of this chain
+    val scored = Parallelism.coreWide(perDoc, col(idCol))
       .crossJoin(broadcast(statsm)) // ≤ labels rows — bounded
       .withColumn("__S", aggregate(col("__fs"), lit(0L), (acc, f) =>
         acc + f.getField("x") *
@@ -361,11 +357,8 @@ object Classifier {
         collect_list(struct(col("__bk").as("b"), col("__x").as("x")))
           .as("__fs"),
         sum(col("__x")).as("__n"))
-      // core-wide spread (r12) — see nbClassify: the scoring aggregate
-      // is CPU-dense over a byte-tiny frame
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism,
-        col(idCol))
-    val scored = perDoc
+    // the docs × labels in-row scoring aggregate is the CPU of this chain
+    val scored = Parallelism.coreWide(perDoc, col(idCol))
       .crossJoin(broadcast(statsm)) // tags × labels rows — bounded
       .withColumn("__S", aggregate(col("__fs"), lit(0L), (acc, f) =>
         acc + f.getField("x") *

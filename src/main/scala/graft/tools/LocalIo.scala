@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-/** Session tuning shared by the harness mains (Bench / Verify /
+/** Session setup shared by the harness mains (Bench / Verify /
   * profiling tools): shuffle-scratch I/O + the AQE coalescing floor.
   * Guide §2.1/§6: shuffle throughput is bounded by the node's LOCAL
   * storage as often as by the network.
@@ -23,6 +23,22 @@ import org.apache.spark.sql.SparkSession
   *    SPARK_GRAFT_LOCAL_DIR at the NVMe scratch array instead.
   */
 object LocalIo {
+
+  /** The harness session builder (Bench, Verify): local[cpus], one
+    * shuffle partition per core, UTC, nanosecond parquet timestamps read
+    * as longs, no UI, then [[tune]]. ANSI is off as an explicit ÷0
+    * policy: expressions guard via Panel.safeDiv (null, matching
+    * DuckDB's plain division), so an unguarded site degrades to null
+    * instead of aborting a cluster-wide job. Callers set the log level. */
+  def session(cpus: String): SparkSession.Builder =
+    tune(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.ansi.enabled", "false")
+      .config("spark.ui.enabled", "false"))
+
   def tune(builder: SparkSession.Builder): SparkSession.Builder = {
     builder.config("spark.file.transferTo",
       sys.env.getOrElse("SPARK_GRAFT_TRANSFER_TO", "false"))
