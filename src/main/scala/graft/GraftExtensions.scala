@@ -73,6 +73,19 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         SimHash(args(0), intArg(args(1), "bits", "graft_simhash"))
       }))
 
+    ext.injectFunction((FunctionIdentifier("graft_blocked_keys"),
+      info("graft_blocked_keys",
+        "graft_blocked_keys(fp, bits, blocks, maxHamming) - the Manku " +
+          "block-permutation table keys of a bigint fingerprint"),
+      (args: Seq[Expression]) => {
+        require(args.length == 4,
+          "graft_blocked_keys(fp, bits, blocks, maxHamming) takes 4 arguments")
+        BlockedKeys(args(0),
+          intArg(args(1), "bits", "graft_blocked_keys"),
+          intArg(args(2), "blocks", "graft_blocked_keys"),
+          intArg(args(3), "maxHamming", "graft_blocked_keys"))
+      }))
+
     ext.injectFunction((FunctionIdentifier("graft_shingles"),
       info("graft_shingles",
         "graft_shingles(text, n) - normalized word n-gram shingle array"),

@@ -6,6 +6,7 @@ import graft.StableCheckpoint._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 import graft.text.TextAnalysis
 
@@ -1600,7 +1601,10 @@ object Dedup {
     * block-permutation construction — shared by
     * [[fingerprintNearPairsBlocked]] and the simhash index family
     * (build and search must derive keys identically, or index lookups
-    * silently find nothing — the appendToMinhashIndex contract). */
+    * silently find nothing — the appendToMinhashIndex contract). One
+    * native [[graft.functions.BlockedKeys]] node: each key the kept
+    * blocks packed little-endian into one long, 56 tables for the
+    * 8-block/hamming-3 default. */
   private def blockedKeyArray(
       fpCol: String, bits: Int, blocks: Int, maxHamming: Int): Column = {
     require(maxHamming >= 0 && maxHamming < blocks,
@@ -1610,17 +1614,7 @@ object Dedup {
     val keep = blocks - maxHamming
     require(keep * width <= 63,
       s"packed key must fit a signed long: $keep blocks x $width bits")
-    val mask = (1L << width) - 1
-    def block(b: Int): Column =
-      shiftright(col(fpCol), b * width).bitwiseAND(mask)
-    // C(blocks, keep) keyed tables — a bounded driver-side combination
-    // list (56 for the 8-block/hamming-3 default), each key the kept
-    // blocks packed little-endian into one long
-    val combos = (0 until blocks).combinations(keep).toSeq
-    array(combos.map(c =>
-      c.zipWithIndex
-        .map { case (b, j) => shiftleft(block(b), j * width) }
-        .reduce(_.bitwiseOR(_))): _*)
+    graft.functions.BlockedKeys.blockedKeysNative(col(fpCol), bits, blocks, maxHamming)
   }
 
   /** Shared verify stage of the two hamming-LSH candidate generators:
@@ -1663,11 +1657,12 @@ object Dedup {
     * (cf. [[writeMinhashIndex]]), with a stronger property: verify
     * needs only the 8-byte fingerprints, so an ingest batch NEVER
     * re-reads indexed TEXT at all (the minhash path still re-shingles
-    * candidate docs). Layout: `dir/fp` holds (id, __fp); `dir/bands`
-    * holds (id, __band, __key) partitioned by table position. At
-    * 100 TB of text the index is ~10⁻⁴ of the corpus bytes (8 B + 56
-    * keyed rows per doc), and per-batch cost is the batch fingerprint
-    * pass + a key-pruned narrow band scan.
+    * candidate docs). Layout (see [[publishSimhashIndex]]): `dir/fp`
+    * holds (id, __fp), `dir/bands` holds flat (id, __band, __key)
+    * files, `dir/_params` the key parameters. At 100 TB of text the
+    * index is ~10⁻⁴ of the corpus bytes (8 B + 56 keyed rows per doc),
+    * and per-batch cost is the batch fingerprint pass + a key-pruned
+    * narrow band scan.
     *
     * Caller contract (the [[appendToMinhashIndex]] stance): search
     * parameters (bits, blocks, maxHamming) must MATCH the build —
@@ -1685,7 +1680,9 @@ object Dedup {
 
   /** Append an admitted batch to a [[writeSimhashIndex]] index (after
     * it passed [[incrementalSimhashPairs]]). Batch ids must be
-    * disjoint from indexed ids; parameters must match the build. */
+    * disjoint from indexed ids; parameters must match the build; the
+    * index must exist (an append to an empty dir would publish an
+    * index without `_params`, which every later search accepts). */
   def appendToSimhashIndex(
       dir: String,
       docs: DataFrame,
@@ -1712,11 +1709,15 @@ object Dedup {
   private def paramsPath(dir: String) =
     new org.apache.hadoop.fs.Path(dir, "_params")
 
+  private def indexFs(spark: org.apache.spark.sql.SparkSession, dir: String) =
+    new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+
   private def checkSimhashParams(
       spark: org.apache.spark.sql.SparkSession,
       dir: String, maxHamming: Int, bits: Int, blocks: Int, site: String): Unit = {
     val p = paramsPath(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = indexFs(spark, dir)
     if (fs.exists(p)) {
       val in = fs.open(p)
       val buf = new java.io.ByteArrayOutputStream()
@@ -1734,6 +1735,17 @@ object Dedup {
     }
   }
 
+  /** Writes or extends the index. Layout: `dir/fp` (id, __fp) and
+    * `dir/bands` (id, __band, __key) are flat parquet tables, one file
+    * per write task, both fed by one lazily checkpointed fingerprint
+    * frame; `dir/_params` holds the key parameters. A probe lists each
+    * table as one directory and reads it with a pinned schema, so it
+    * launches neither a file-listing nor a footer-inference job.
+    *
+    * Legacy layout: an index written with `bands` partitioned into one
+    * `__band=k` dir per table stays searchable, and an append keeps
+    * that layout (detected by one driver-side glob for
+    * `bands/__band=*`, no Spark job), so no index mixes the two. */
   private def publishSimhashIndex(
       dir: String,
       docs: DataFrame,
@@ -1743,46 +1755,46 @@ object Dedup {
       bits: Int,
       blocks: Int,
       mode: String): Unit = {
-    if (mode == "append")
+    val fs = indexFs(docs.sparkSession, dir)
+    val partitionedBands = mode == "append" && {
+      if (!fs.exists(new org.apache.hadoop.fs.Path(dir, "fp")))
+        throw new graft.GraftError(
+          s"appendToSimhashIndex: no index at $dir — an append would " +
+            "publish one without _params, which every later search " +
+            "accepts unchecked; build it with writeSimhashIndex first")
       checkSimhashParams(docs.sparkSession, dir, maxHamming, bits, blocks,
         "appendToSimhashIndex")
+      Option(fs.globStatus(new org.apache.hadoop.fs.Path(dir, "bands/__band=*")))
+        .exists(_.nonEmpty)
+    }
     // the fingerprint frame feeds BOTH writes — lazy checkpoint so the
     // text pass runs once (the dd4 aliased-recompute policy)
     val fp = Parallelism.keyed(docs.where(col(textCol).isNotNull), col(idCol))
       .select(col(idCol),
         graft.functions.SimHash.simhashNative(col(textCol), bits).as("__fp"))
       .stableCheckpoint(eager = false)
-    // repartition on the table position before the partitioned write:
-    // without it every task writes into every __band dir (tasks ×
-    // C(blocks, keep) small files — ~1,800 for the 56-table default,
-    // and file creation dominated the write at catalog SF). One
-    // shuffle → ≤ one file per (task, band); at volume
-    // maxRecordsPerFile splits naturally. The partition count is
-    // PINNED to the band-table count (r12): a bare repartition(col)
-    // lets AQE byte-coalesce the small shuffle back to ONE task that
-    // then writes all 56 band dirs sequentially (measured 0.93 s of
-    // the dd29 wall); nBands tasks is the write layout by definition.
+    val bands = fp.select(col(idCol),
+      posexplode(blockedKeyArray("__fp", bits, blocks, maxHamming))
+        .as(Seq("__band", "__key")))
     // r13 (guide §2.6): the fp and bands writes are independent given
     // the checkpointed fingerprint frame — submit both from a thread
     // pool; concurrent first-touch of the lazy checkpoint is safe (the
     // block manager's per-partition compute lock makes one job compute
     // a partition and the other wait on the cached block).
-    val nBands = (0 until blocks).combinations(blocks - maxHamming).size
-    // a failed write rethrows only after its sibling settled
-    // (graft.Concurrent) — no job left writing into the index dir
+    // A failed write rethrows only after its sibling settled
+    // (graft.Concurrent) — no job left writing into the index dir.
     graft.Concurrent.runAll(
       () => fp.write.mode(mode).parquet(s"$dir/fp"),
       () =>
-        fp.select(col(idCol),
-          posexplode(blockedKeyArray("__fp", bits, blocks, maxHamming))
-            .as(Seq("__band", "__key")))
-          .repartition(nBands, col("__band"))
-          .write.mode(mode).partitionBy("__band").parquet(s"$dir/bands"))
+        if (partitionedBands) {
+          // legacy layout: one shuffle on the table position, pinned to
+          // the table count, so each task writes one band dir
+          val nBands = (0 until blocks).combinations(blocks - maxHamming).size
+          bands.repartition(nBands, col("__band"))
+            .write.mode(mode).partitionBy("__band").parquet(s"$dir/bands")
+        } else bands.write.mode(mode).parquet(s"$dir/bands"))
     if (mode != "append") {
-      val p = paramsPath(dir)
-      val fs = p.getFileSystem(
-        docs.sparkSession.sparkContext.hadoopConfiguration)
-      val out = fs.create(p, true)
+      val out = fs.create(paramsPath(dir), true)
       try out.write((simhashParamsLine(maxHamming, bits, blocks) + "\n")
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
       finally out.close()
@@ -1830,9 +1842,23 @@ object Dedup {
       .withColumn("__new", lit(true))
       .stableCheckpoint(eager = false) // feeds the union + the key prune
     val newKeys = neu.select("__band", "__key").distinct()
-    val idx = spark.read.parquet(s"$dir/bands")
-      .select(col(idCol), col("__band").cast("int").as("__band"),
-        col("__key"), lit(false).as("__new"))
+    // both index tables are read with a pinned schema (the batch's id
+    // type), so no probe infers one from parquet footers — a Spark job
+    // per table. A stored id type the batch's cannot read raises in
+    // the scan; a stored id column of another name reads as null, and
+    // a null indexed id raises (it could never pair, so the probe
+    // would silently return fewer pairs).
+    val idField = StructField(idCol, fpNew.schema.head.dataType)
+    def indexTable(name: String, cols: StructField*): DataFrame =
+      spark.read.schema(StructType(idField +: cols)).parquet(s"$dir/$name")
+        .withColumn(idCol, when(col(idCol).isNull, raise_error(lit(
+          s"incrementalSimhashPairs: an indexed row at $dir/$name has no " +
+            s"$idCol — the index was built with another id column or " +
+            "with null ids")))
+          .otherwise(col(idCol)))
+    val idx = indexTable("bands",
+      StructField("__band", IntegerType), StructField("__key", LongType))
+      .withColumn("__new", lit(false))
     val sized = idx.unionByName(neu)
       .join(newKeys.hint("broadcast"), Seq("__band", "__key"), "left_semi")
       .withColumn("__n", count(lit(1)).over(Window.partitionBy("__band", "__key")))
@@ -1858,8 +1884,7 @@ object Dedup {
     // verify reads 8-byte fingerprints only — indexed text is never
     // touched; the fp scan is pruned to candidate ids (∝ dup mass).
     // Referenced by both verify-join sides → lazy checkpoint.
-    val fps = spark.read.parquet(s"$dir/fp")
-      .select(col(idCol), col("__fp"))
+    val fps = indexTable("fp", StructField("__fp", LongType))
       .unionByName(fpNew)
       .join(candIds, Seq(idCol), "left_semi")
       .stableCheckpoint(eager = false)

@@ -195,4 +195,100 @@ class DedupIndexSpec extends SparkSpec {
     assert(pairs.forall { case (a, b) => a >= 10L || b >= 10L })
     assert(!pairs.exists { case (a, b) => a < 6L && b < 6L })
   }
+
+  private def messages(t: Throwable): Seq[String] =
+    Option(t).toSeq.flatMap(x =>
+      Option(x.getMessage).toSeq ++ messages(x.getCause))
+
+  /** Entries of an index dir, less `_SUCCESS` and hidden files. */
+  private def entries(dir: String): Seq[java.io.File] =
+    new java.io.File(dir).listFiles.toSeq
+      .filterNot(f => f.getName == "_SUCCESS" || f.getName.startsWith("."))
+
+  test("simhash index bands are flat files, and an append keeps them flat") {
+    val ix = tmp()
+    Dedup.writeSimhashIndex(ix, docs.where($"doc_id" < 30L))
+    Dedup.appendToSimhashIndex(ix, docs.where($"doc_id" >= 30L && $"doc_id" < cut))
+    val bands = entries(s"$ix/bands")
+    assert(bands.nonEmpty && bands.forall(f => f.isFile && f.getName.endsWith(".parquet")),
+      bands.map(_.getName))
+  }
+
+  test("an index in the legacy partitioned bands layout stays searchable, " +
+    "and an append keeps its __band dirs") {
+    val ix = tmp()
+    val c1 = 30L
+    val c2 = 40L
+    // the layout writeSimhashIndex used to write: bands partitioned into
+    // one __band=k dir per table, plus fp and _params
+    val fp = docs.where($"doc_id" < c1 && $"text".isNotNull)
+      .select($"doc_id",
+        graft.functions.SimHash.simhashNative($"text", 64).as("__fp"))
+    fp.write.parquet(s"$ix/fp")
+    fp.select($"doc_id",
+      posexplode(graft.functions.BlockedKeys.blockedKeysNative($"__fp", 64, 8, 3))
+        .as(Seq("__band", "__key")))
+      .write.partitionBy("__band").parquet(s"$ix/bands")
+    java.nio.file.Files.write(java.nio.file.Paths.get(ix, "_params"),
+      "{\"bits\":64,\"blocks\":8,\"maxHamming\":3}\n".getBytes("UTF-8"))
+    def bandDirs = entries(s"$ix/bands")
+    assert(bandDirs.size == 56)
+
+    val batch1 = docs.where($"doc_id" >= c1 && $"doc_id" < c2)
+    val incr1 = Dedup.incrementalSimhashPairs(spark, ix, batch1, maxHamming = 3)
+    val full1 = Dedup.simhashNearPairsBlocked(docs.where($"doc_id" < c2), maxHamming = 3)
+      .where($"id_a" >= c1 || $"id_b" >= c1)
+    assert(hammingSet(incr1) == hammingSet(full1))
+
+    Dedup.appendToSimhashIndex(ix, batch1)
+    assert(bandDirs.size == 56 &&
+      bandDirs.forall(f => f.isDirectory && f.getName.startsWith("__band=")),
+      bandDirs.map(_.getName))
+
+    val incr2 = Dedup.incrementalSimhashPairs(
+      spark, ix, docs.where($"doc_id" >= c2), maxHamming = 3)
+    val full2 = Dedup.simhashNearPairsBlocked(docs, maxHamming = 3)
+      .where($"id_a" >= c2 || $"id_b" >= c2)
+    assert(hammingSet(incr2) == hammingSet(full2))
+    assert(hammingSet(incr2).nonEmpty, "fixture produced no cross-batch pairs")
+  }
+
+  test("appendToSimhashIndex on a dir without an index raises and writes nothing") {
+    val ix = tmp()
+    val e = intercept[graft.GraftError] {
+      Dedup.appendToSimhashIndex(ix, docs.where($"doc_id" < cut))
+    }
+    assert(e.getMessage.contains("no index at"))
+    assert(entries(ix).isEmpty && !new java.io.File(s"$ix/_params").exists)
+  }
+
+  test("index reads pin the batch's id type: a stored id the batch cannot " +
+    "read raises, a widening read is exact") {
+    val ix = tmp()
+    Dedup.writeSimhashIndex(ix, docs.where($"doc_id" < cut)) // bigint ids
+    val batch = docs.where($"doc_id" >= cut)
+    val expected = hammingSet(Dedup.incrementalSimhashPairs(spark, ix, batch))
+    assert(expected.nonEmpty)
+    // bigint stored, int or string asked: the scan cannot convert, so
+    // it raises
+    for (t <- Seq("int", "string")) {
+      val e = intercept[Exception] {
+        Dedup.incrementalSimhashPairs(
+          spark, ix, batch.withColumn("doc_id", $"doc_id".cast(t))).collect()
+      }
+      assert(messages(e).exists(_.contains("PARQUET_COLUMN_DATA_TYPE_MISMATCH")),
+        e.toString)
+    }
+    // another id column name reads the stored ids as null: raises too
+    val e = intercept[Exception] {
+      Dedup.incrementalSimhashPairs(
+        spark, ix, batch.withColumnRenamed("doc_id", "id"), idCol = "id").collect()
+    }
+    assert(messages(e).exists(_.contains("another id column")), e.toString)
+    // int stored, bigint asked: widened, same pairs
+    val ixInt = tmp()
+    Dedup.writeSimhashIndex(ixInt,
+      docs.where($"doc_id" < cut).withColumn("doc_id", $"doc_id".cast("int")))
+    assert(hammingSet(Dedup.incrementalSimhashPairs(spark, ixInt, batch)) == expected)
+  }
 }
