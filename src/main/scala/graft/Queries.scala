@@ -1,6 +1,6 @@
 package graft
 
-import graft.StableCheckpoint._
+import graft.Checkpoint._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -168,7 +168,7 @@ object Queries {
     // hashpartitioning(l_suppkey) exchanges → one)
     Backtest.run(BenchmarkedDemo,
       supplierPanel(s, dir).withColumn("sid", col("sid").cast("string"))
-        .stableCheckpoint(eager = false))
+        .checkpointed(eager = false))
       .withColumn("value",
         when(col("field") === "Return", col("value") * 0.001)
           .otherwise(col("value")))
@@ -681,7 +681,7 @@ object Queries {
       // policy; profiled as two duplicate ~300 ms/task stages)
       val panel = supplierPanel(s, dir)
         .withColumn("ret", Panel.pctChange(col("close")))
-        .stableCheckpoint(eager = false)
+        .checkpointed(eager = false)
       val events = panel.where(col("ret") < -0.5).select(col("sid"), col("date"))
       graft.panel.EventStudy.align(panel, events, 3, 3, Seq("ret"))
         .groupBy(col("offset").cast("long").as("offset"))
@@ -958,7 +958,7 @@ object Queries {
 
     // ---- risk-parity blend of the same two books: weights derived
     // ∝ 1/σ (exact micro-int normalizer, bounded driver vol probe)
-    "port2_riskparity" -> ((s, dir) => graft.CheckpointScope.scoped(s) { _ =>
+    "port2_riskparity" -> ((s, dir) => graft.Checkpoint.scoped(s) {
       object Demo15b extends Strategy {
         val code = "demo15b"
         override def keys: Keys = liKeys
@@ -2616,7 +2616,7 @@ object Queries {
       val sk = ev.groupBy(col("event_type"))
         .agg(hll_sketch_agg(col("user_id")).as("sk"),
           count_distinct(col("user_id")).as("n"))
-        .stableCheckpoint(eager = false) // both sides of the pair join
+        .checkpointed(eager = false) // both sides of the pair join
       val ut = ev.select(col("user_id").as("u"), col("event_type").as("t"))
         .distinct()
       val exact = ut.as("x")
@@ -2670,7 +2670,7 @@ object Queries {
       val sk = graft.sketch.Kmv.sketch(li, "l_orderkey", Seq("l_returnflag"), k)
       val ut = li.select(col("l_returnflag").as("f"), col("l_orderkey").as("o"))
         .distinct()
-        .stableCheckpoint(eager = false) // both sides of the pair join
+        .checkpointed(eager = false) // both sides of the pair join
       val exact = ut.as("x")
         .join(ut.as("y"), col("x.o") === col("y.o") && col("x.f") < col("y.f"))
         .groupBy(col("x.f").as("group_a"), col("y.f").as("group_b"))

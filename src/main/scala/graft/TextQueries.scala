@@ -1,6 +1,6 @@
 package graft
 
-import graft.StableCheckpoint._
+import graft.Checkpoint._
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -40,14 +40,14 @@ object TextQueries {
       .join(embs.select(col("vec_id").as("__cid"), col("embedding").as("centroid")),
         "__cid")
       .select(col("label").as("cell_id"), col("centroid"))
-      .stableCheckpoint(eager = false)
+      .checkpointed(eager = false)
     val cb = embs.where(col("vec_id") < 8)
       .select(col("vec_id").cast("int").as("code"),
         posexplode(transform(sequence(lit(0), lit(7)),
           sub => slice(col("embedding"), sub * 8 + 1, lit(8))))
           .as(Seq("subspace", "subcentroid")))
       .select(col("subspace"), col("code"), col("subcentroid"))
-      .stableCheckpoint(eager = false)
+      .checkpointed(eager = false)
     (centroids, cb)
   }
 
@@ -311,12 +311,12 @@ object TextQueries {
     // distinct (source, shingle) pass feeds both the per-shingle source
     // census and the per-source totals (checkpointed — two consumers). ----
     "tx31_source_novelty" -> ((s, dir) => {
-      import graft.StableCheckpoint._
+      import graft.Checkpoint._
       val docs = t(s, dir, "documents")
       val ss = docs.select(col("doc_id"), col("source"))
         .join(Dedup.shingleRows(docs), "doc_id")
         .select(col("source"), col("__s")).distinct()
-        .stableCheckpoint(eager = false)
+        .checkpointed(eager = false)
       val bySh = ss.groupBy("__s").agg(count(lit(1)).as("__nsrc"))
       ss.join(bySh, "__s")
         .groupBy("source")
@@ -516,7 +516,7 @@ object TextQueries {
     "tx13_ppl_buckets" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       val scored = LangModel.crossEntropy(docs, docs.where(col("doc_id") < 250))
-        .stableCheckpoint(eager = false)
+        .checkpointed(eager = false)
       val cuts = Sampling.hashSampleQuantiles(
         scored, "doc_id", "cross_entropy", Seq(1.0 / 3, 2.0 / 3),
         rate = 0.5, seed = "tx13")
@@ -592,7 +592,7 @@ object TextQueries {
     // (minimum-id) cluster labels; survivors = docs minus non-canonicals
     // (scoped: nearDuplicates' lazy melt/candidate checkpoints register
     // inside the body and release once the labels are materialized)
-    "dd7_dup_clusters" -> ((s, dir) => graft.CheckpointScope.scoped(s) { _ =>
+    "dd7_dup_clusters" -> ((s, dir) => graft.Checkpoint.scoped(s) {
       Dedup.duplicateClusters(
         Dedup.nearDuplicates(t(s, dir, "documents"), threshold = 0.5))
         .select(col("id").as("doc_id"), col("cluster"))
@@ -659,7 +659,7 @@ object TextQueries {
 
     // ---- DD23: soft dedup — 1/|cluster| sampling weights instead of
     // dropping (repetition-aware curation; feeds sp10 weightedSample)
-    "dd23_soft_weights" -> ((s, dir) => graft.CheckpointScope.scoped(s) { _ =>
+    "dd23_soft_weights" -> ((s, dir) => graft.Checkpoint.scoped(s) {
       val docs = t(s, dir, "documents")
       Dedup.softDedupWeights(docs,
         Dedup.duplicateClusters(Dedup.nearDuplicates(docs, threshold = 0.5)))
@@ -684,10 +684,10 @@ object TextQueries {
     // and derives the survivor flag from the same labels, instead of
     // re-running LSH end-to-end per projection like the two standalone
     // queries must
-    // (wrapped in a CheckpointScope: the clustering run's checkpointed
+    // (wrapped in `Checkpoint.scoped`: the clustering run's checkpointed
     // edge/cluster intermediates are released once the labeled frame
     // is materialized — the long-lived-session composition contract)
-    "pipeline_dedup" -> ((s, dir) => graft.CheckpointScope.scoped(s) { _ =>
+    "pipeline_dedup" -> ((s, dir) => graft.Checkpoint.scoped(s) {
       val docs = t(s, dir, "documents")
       val clusters = Dedup.duplicateClusters(
         Dedup.nearDuplicates(docs, threshold = 0.5))
@@ -704,11 +704,11 @@ object TextQueries {
     // weights (dd23); the training half is exact-5-gram decontaminated
     // against the eval half (dd11); a quality × soft-weight token
     // budget picks the docs (sp5 with the dd23 prior); and the keepers
-    // are packed into 512-token training sequences (pk1). All under one
-    // CheckpointScope: each stage's checkpointed intermediates release
+    // are packed into 512-token training sequences (pk1). All in one
+    // `Checkpoint.scoped` body: each stage's checkpointed intermediates release
     // the moment the packed frame materializes — the long-lived-session
     // composition contract, proven at the pipeline level.
-    "pipeline_curate" -> ((s, dir) => graft.CheckpointScope.scoped(s) { scope =>
+    "pipeline_curate" -> ((s, dir) => graft.Checkpoint.scoped(s) {
       val docs = t(s, dir, "documents")
       // dd7: one candidate+verify+propagation run labels every doc
       val clusters = Dedup.duplicateClusters(
@@ -722,10 +722,9 @@ object TextQueries {
       // checkpoint: the budget selector makes two passes (histogram +
       // keep-filter) — without this the decontamination chain runs twice.
       // Both passes compute the CPU-dense quality score.
-      val scored = scope.checkpoint(
-        Parallelism.spreadWhenNarrow(docs)(
-          clean.join(weights, Seq("doc_id")), col("doc_id")),
-        eager = true)
+      val scored = Parallelism.spreadWhenNarrow(docs)(
+        clean.join(weights, Seq("doc_id")), col("doc_id"))
+        .checkpointed(eager = true)
       val kept = Sampling.selectByTokenBudget(scored, "doc_id",
         TextAnalysis.qualityScore(col("text")) * col("weight"),
         TextAnalysis.tokenCount(col("text")), budget = 5000)
@@ -1067,7 +1066,7 @@ object TextQueries {
       val bridges = d.where(pmod(col("doc_id"), lit(10)) === 9)
         .select(col("doc_id").as("src"), (col("doc_id") + 1).as("dst"))
       val edges = cliques.unionByName(bridges)
-        .stableCheckpoint(eager = false) // LP rounds + modularity share it
+        .checkpointed(eager = false) // LP rounds + modularity share it
       graft.graph.PageRank.modularity(
         edges, graft.graph.PageRank.labelPropagation(edges, iterations = 3))
     }),
@@ -1601,7 +1600,7 @@ object TextQueries {
     // (ppj1's lossless prefix-filter join) → min-label connected
     // components → survivorship (canonical record = longest text, tie
     // smallest id). Singletons resolve to themselves via the left join.
-    "er1_entities" -> ((s, dir) => graft.CheckpointScope.scoped(s) { _ =>
+    "er1_entities" -> ((s, dir) => graft.Checkpoint.scoped(s) {
       val docs = t(s, dir, "documents")
       val pairs = graft.dedup.SetJoin.prefixFilterJoin(docs, theta = 0.5)
         .select(col("doc_a").as("id_a"), col("doc_b").as("id_b"))

@@ -1,7 +1,7 @@
 package graft.dedup
 
 import graft.Parallelism
-import graft.StableCheckpoint._
+import graft.Checkpoint._
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -303,7 +303,7 @@ object Dedup {
     val mins = (0 until numHashes).map(i =>
       min(md5(concat(lit(s"$i|"), col("__s")))).as(s"__mh$i"))
     val sig = exploded.groupBy(col(idCol)).agg(mins.head, mins.tail: _*)
-      .stableCheckpoint(eager = false)
+      .checkpointed(eager = false)
     val bandCols = (0 until bands).map { b =>
       val slice = (0 until rowsPerBand).map(r => col(s"__mh${b * rowsPerBand + r}"))
       md5(concat_ws("|", slice: _*))
@@ -427,7 +427,7 @@ object Dedup {
     val cands =
       minhashCandidates(docs, idCol, textCol, shingleSize, bands, rowsPerBand,
         maxBucket, dropOversized)
-        .stableCheckpoint(eager = false)
+        .checkpointed(eager = false)
     val candIds = cands.select(col("id_a").as(idCol))
       .union(cands.select(col("id_b").as(idCol)))
       .distinct()
@@ -444,7 +444,7 @@ object Dedup {
     // so the metric reports one row per shingled doc either way.
     val sh = shingleArrays(pruned, idCol, textCol, shingleSize)
       .repartition(col(idCol))
-      .stableCheckpoint(eager = false)
+      .checkpointed(eager = false)
       .observe("neardup_verify", count(lit(1)).as("docs_shingled"))
     cands
       .join(sh.select(col(idCol).as("id_a"), col("__sh").as("__sha")), "id_a")
@@ -524,7 +524,7 @@ object Dedup {
     val neu =
       minhashMelted(batch, idCol, textCol, shingleSize, bands, rowsPerBand)
         .withColumn("__new", lit(true))
-        .stableCheckpoint(eager = false)
+        .checkpointed(eager = false)
     val newKeys = neu.select("__band", "__bk").distinct()
     val sized = idx.unionByName(neu)
       .join(newKeys.hint("broadcast"), Seq("__band", "__bk"), "left_semi")
@@ -568,7 +568,7 @@ object Dedup {
       dropOversized: Boolean = false): DataFrame = {
     val cands = incrementalCandidates(spark, dir, batch, idCol, textCol,
       shingleSize, bands, rowsPerBand, maxBucket, dropOversized)
-      .stableCheckpoint(eager = false)
+      .checkpointed(eager = false)
     val candIds = cands.select(col("id_a").as(idCol))
       .union(cands.select(col("id_b").as(idCol)))
       .distinct()
@@ -577,7 +577,7 @@ object Dedup {
       .join(candIds, Seq(idCol), "left_semi")
     val sh = shingleArrays(texts, idCol, textCol, shingleSize)
       .repartition(col(idCol))
-      .stableCheckpoint(eager = false)
+      .checkpointed(eager = false)
     cands
       .join(sh.select(col(idCol).as("id_a"), col("__sh").as("__sha")), "id_a")
       .join(sh.select(col(idCol).as("id_b"), col("__sh").as("__shb")), "id_b")
@@ -619,7 +619,7 @@ object Dedup {
     def melted(docs: DataFrame, as: String) =
       minhashMelted(docs, idCol, textCol, shingleSize, bands, rowsPerBand)
         .withColumnRenamed(idCol, as)
-        .stableCheckpoint(eager = false)
+        .checkpointed(eager = false)
     val rm = melted(ref, "ref_id")
     val cm = melted(corpus, "corpus_id")
     // degenerate-bucket guard (same stance as minhashCandidates'
@@ -657,7 +657,7 @@ object Dedup {
     // construction stays job-free; the observe sits ABOVE it (metrics
     // below a checkpoint are invisible) and counts |hot| either way.
     val hot = hotKeys(cm).union(hotKeys(rm)).distinct()
-      .stableCheckpoint(eager = false)
+      .checkpointed(eager = false)
       .observe("cross_hot_buckets", count(lit(1)).as("dropped_buckets"))
     val cmOk = cm.join(broadcast(hot), Seq("__band", "__bk"), "left_anti")
     val rmOk = rm.join(broadcast(hot), Seq("__band", "__bk"), "left_anti")
@@ -671,7 +671,7 @@ object Dedup {
       .join(if (broadcastRef) broadcast(rmOk) else rmOk, Seq("__band", "__bk"))
       .select("corpus_id", "ref_id")
       .distinct()
-      .stableCheckpoint(eager = false)
+      .checkpointed(eager = false)
     def prunedShingles(docs: DataFrame, as: String, ids: DataFrame) =
       shingleArrays(docs.join(ids, docs(idCol) === ids(as), "left_semi"),
         idCol, textCol, shingleSize)
@@ -1085,27 +1085,26 @@ object Dedup {
     // the eagerly-checkpointed result — a long-lived session composing
     // dedup → soft-weights → sampling no longer accumulates per-round
     // block pressure from each clustering run it triggers
-    graft.CheckpointScope.scoped(pairs.sparkSession) { scope =>
+    graft.Checkpoint.scoped(pairs.sparkSession) {
     // materialize the edge list ONCE: every propagation round joins it,
     // and without the checkpoint each round would re-execute the entire
     // upstream candidate+verify pipeline (measured 10.4 s → 3.9 s on the
     // dd7 bench query). Edge mass ∝ true duplicates, so the checkpoint
     // is small relative to the corpus.
     // Two-step edge materialization (r8): the HEAVY upstream (candidate
-    // + verify pipelines feeding `pairs`) runs adaptively (stable =
-    // false — AQE coalescing matters inside that job), then the cheap
-    // second checkpoint re-keys the already-materialized edge list by
-    // SRC under STABLE capture. Per round, the dst-side labels join is
+    // + verify pipelines feeding `pairs`) runs adaptively (keepAqe —
+    // AQE coalescing matters inside that job), then the cheap second
+    // checkpoint re-keys the already-materialized edge list by SRC
+    // under an AQE-off capture. Per round, the dst-side labels join is
     // a broadcast whenever labels fit (AQE's call — node labels ∝
     // distinct dup nodes), so the join output KEEPS the src
     // partitioning and the min-label groupBy(src) — the per-round
     // shuffle of the whole edge mass, the biggest term — runs
     // exchange-free. When labels outgrow broadcast, AQE degrades to
     // the sort-merge baseline, never worse than the unpartitioned form.
-    val rawEdges = scope.checkpoint(
-      pairs.select(col(idA).as("src"), col(idB).as("dst"))
-        .union(pairs.select(col(idB).as("src"), col(idA).as("dst"))),
-      eager = true, stable = false)
+    val rawEdges = pairs.select(col(idA).as("src"), col(idB).as("dst"))
+      .union(pairs.select(col(idB).as("src"), col(idA).as("dst")))
+      .checkpointed(eager = true, keepAqe = true)
     // Size-adaptive execution (r8). Edge mass ∝ true duplicate mass —
     // in real curation runs a small fraction of the corpus, and at the
     // bench/gate tiers a few hundred rows, where the DISTRIBUTED loop's
@@ -1145,13 +1144,11 @@ object Dedup {
       import spark.implicits._
       out.toSeq.toDF("id", "cluster")
     } else {
-    val edges = scope.checkpoint(
-      rawEdges.repartition(col("src")), eager = true)
+    val edges = rawEdges.repartition(col("src")).checkpointed(eager = true)
     // both directions of every pair appear, so src alone covers all nodes
-    var labels = scope.checkpoint(
-      edges.select(col("src").as("id")).distinct()
-        .withColumn("cluster", col("id")),
-      eager = true, stable = false) // round state: keep AQE (see scope doc)
+    var labels = edges.select(col("src").as("id")).distinct()
+      .withColumn("cluster", col("id"))
+      .checkpointed(eager = true, keepAqe = true) // round state
     var iter = 0
     var changed = 1L
     while (changed > 0 && iter < maxIters) {
@@ -1161,12 +1158,12 @@ object Dedup {
         .agg(min("__dl").as("__nbrMin"))
         .withColumnRenamed("src", "id")
       // phase 1: min over self and neighbors (classic label propagation)
-      val cand = scope.checkpoint(labels
+      val cand = labels
         .join(nbrMin, Seq("id"), "left")
         .select(
           col("id"), col("cluster").as("__old"),
-          least(col("cluster"), coalesce(col("__nbrMin"), col("cluster"))).as("cluster")),
-        eager = true, stable = false)
+          least(col("cluster"), coalesce(col("__nbrMin"), col("cluster"))).as("cluster"))
+        .checkpointed(eager = true, keepAqe = true)
       // phase 2 (r8): POINTER JUMP — labels are node ids, so each row's
       // label row exists; adopting the label's own label halves the
       // remaining distance to the component minimum every round, so
@@ -1176,14 +1173,14 @@ object Dedup {
       // is ~19). Monotone: the jump target's label can only be ≤ ours,
       // so least() keeps every intermediate state a valid upper bound
       // and the fixpoint (no change incl. jumps) is the exact min-label.
-      val updated = scope.checkpoint(cand
+      val updated = cand
         .join(cand.select(col("id").as("cluster"), col("cluster").as("__j")),
           Seq("cluster"), "left")
         .select(col("id"),
           least(col("cluster"), coalesce(col("__j"), col("cluster"))).as("cluster"),
           (least(col("cluster"), coalesce(col("__j"), col("cluster"))) < col("__old"))
-            .cast("long").as("__chg")),
-        eager = true, stable = false)
+            .cast("long").as("__chg"))
+        .checkpointed(eager = true, keepAqe = true)
       changed = updated.agg(coalesce(sum("__chg"), lit(0L))).head.getLong(0)
       labels = updated.drop("__chg")
       iter += 1
@@ -1300,7 +1297,7 @@ object Dedup {
         .withColumnRenamed(idCol, "__id"), "__id")
       .select(col("__src"), md5(col("__s")).as("__h"))
       .distinct()
-      .stableCheckpoint(eager = false) // feeds per-source counts + pairs
+      .checkpointed(eager = false) // feeds per-source counts + pairs
     val perSource = ss.groupBy(col("__src"))
       .agg(count(lit(1)).as("__n"))
     val inter = ss
@@ -1772,7 +1769,7 @@ object Dedup {
     val fp = Parallelism.keyed(docs.where(col(textCol).isNotNull), col(idCol))
       .select(col(idCol),
         graft.functions.SimHash.simhashNative(col(textCol), bits).as("__fp"))
-      .stableCheckpoint(eager = false)
+      .checkpointed(eager = false)
     val bands = fp.select(col(idCol),
       posexplode(blockedKeyArray("__fp", bits, blocks, maxHamming))
         .as(Seq("__band", "__key")))
@@ -1834,13 +1831,13 @@ object Dedup {
     val fpNew = Parallelism.keyed(batch.where(col(textCol).isNotNull), col(idCol))
       .select(col(idCol),
         graft.functions.SimHash.simhashNative(col(textCol), bits).as("__fp"))
-      .stableCheckpoint(eager = false)
+      .checkpointed(eager = false)
     val neu = fpNew
       .select(col(idCol),
         posexplode(blockedKeyArray("__fp", bits, blocks, maxHamming))
           .as(Seq("__band", "__key")))
       .withColumn("__new", lit(true))
-      .stableCheckpoint(eager = false) // feeds the union + the key prune
+      .checkpointed(eager = false) // feeds the union + the key prune
     val newKeys = neu.select("__band", "__key").distinct()
     // both index tables are read with a pinned schema (the batch's id
     // type), so no probe infers one from parquet footers — a Spark job
@@ -1877,7 +1874,7 @@ object Dedup {
       .where(col("a.id") < col("b.id") && (col("a.__new") || col("b.__new")))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .distinct()
-      .stableCheckpoint(eager = false)
+      .checkpointed(eager = false)
     val candIds = cands.select(col("id_a").as(idCol))
       .union(cands.select(col("id_b").as(idCol)))
       .distinct()
@@ -1887,7 +1884,7 @@ object Dedup {
     val fps = indexTable("fp", StructField("__fp", LongType))
       .unionByName(fpNew)
       .join(candIds, Seq(idCol), "left_semi")
-      .stableCheckpoint(eager = false)
+      .checkpointed(eager = false)
     cands
       .join(fps.select(col(idCol).as("id_a"), col("__fp").as("__fa")), "id_a")
       .join(fps.select(col(idCol).as("id_b"), col("__fp").as("__fb")), "id_b")
@@ -2004,7 +2001,7 @@ object Dedup {
       .select(col("cell_id"), col(idCol).as("__id"), col(vecCol).as("__v"),
         Similarity.norm(col(vecCol)).as("__nm"),
         Similarity.cosine(col(vecCol), col("centroid")).as("__cc"))
-    if (checkpoint) prio.stableCheckpoint(eager = false) else prio
+    if (checkpoint) prio.checkpointed(eager = false) else prio
   }
 
   def semanticDeduplicate(

@@ -1,6 +1,6 @@
 package graft.dedup
 
-import graft.StableCheckpoint._
+import graft.Checkpoint._
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -83,7 +83,7 @@ object SetJoin {
     val tok = docs
       .select(col(idCol).as("__id"), split(lower(col(textCol)), " ").as("__ws"))
       .select(col("__id"), explode(shingles(col("__ws"), shingleWidth)).as("__t"))
-      .stableCheckpoint(eager = false)
+      .checkpointed(eager = false)
 
     // Dictionary-encode the vocabulary: every downstream join/groupBy
     // keys on a LONG token id instead of a ~30-char shingle string
@@ -96,7 +96,7 @@ object SetJoin {
       .withColumn("__tid", monotonically_increasing_id())
     val tokId = tok.join(vocab, "__t")
       .select(col("__id"), col("__tid"), col("__df"))
-      .stableCheckpoint(eager = false)
+      .checkpointed(eager = false)
 
     // Canonical AllPairs ordering: ascending corpus frequency, token id
     // as the total-order tiebreaker. Kept as a SORT KEY inside each
@@ -113,7 +113,7 @@ object SetJoin {
       .agg(sort_array(collect_list(struct(col("__df"), col("__tid")))).as("__st"),
         count(lit(1)).as("__s"))
       .withColumn("__ta", sort_array(col("__st.__tid")))
-      .stableCheckpoint(eager = false)
+      .checkpointed(eager = false)
     // p = s − ⌈θ·s⌉ + 1 rarest tokens are the doc's join keys
     val prefixed = perDoc.select(
       col("__id"), col("__s"),
@@ -145,7 +145,7 @@ object SetJoin {
           "guarantee cannot hold; raise theta or shingleWidth, or " +
           "raise maxBucket if the candidate mass is truly affordable"))))
         .otherwise(lit(true)))
-      .stableCheckpoint(eager = false)
+      .checkpointed(eager = false)
 
     // candidate pairs: share a prefix token + two-sided length filter +
     // PPJoin positional filter. The meeting positions (1-based, in the

@@ -1,6 +1,6 @@
 package graft.dedup
 
-import graft.StableCheckpoint._
+import graft.Checkpoint._
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -135,7 +135,7 @@ object Winnow {
         sum(when(col("__n") > maxBucket, 1L).otherwise(0L)).as("rows_in_overflow"),
         max(col("__n")).as("max_bucket"))
       .where(col("__n") <= maxBucket)
-      .stableCheckpoint(eager = false)
+      .checkpointed(eager = false)
     fps.select(col("fingerprint"), col(idCol).as("__a"))
       .join(fps.select(col("fingerprint"), col(idCol).as("__b")), Seq("fingerprint"))
       .where(col("__a") < col("__b"))

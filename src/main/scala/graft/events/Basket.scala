@@ -1,6 +1,6 @@
 package graft.events
 
-import graft.StableCheckpoint._
+import graft.Checkpoint._
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
@@ -56,7 +56,7 @@ object Basket {
           .as("rows_in_overflow"),
         max(col("__n")).as("max_basket"))
       .where(col("__n") <= maxBasket)
-      .stableCheckpoint(eager = false) // feeds N, item counts, and pairs
+      .checkpointed(eager = false) // feeds N, item counts, and pairs
     val n = bi.select(col("__b")).distinct()
       .agg(count(lit(1)).as("__N"))
     (bi, n)
@@ -118,7 +118,7 @@ object Basket {
     val (bi, n) = incidence(items, basketCol, itemCol, maxBasket)
     val itemCounts = bi.groupBy(col("__i")).agg(count(lit(1)).as("__ni"))
     val pairs = pairCounts(bi, minCount)
-      .stableCheckpoint(eager = false) // both rule directions reuse it
+      .checkpointed(eager = false) // both rule directions reuse it
     val rules = pairs
       .select(col("__x").as("antecedent"), col("__y").as("consequent"),
         col("n"))

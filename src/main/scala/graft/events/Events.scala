@@ -1,6 +1,6 @@
 package graft.events
 
-import graft.StableCheckpoint._
+import graft.Checkpoint._
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -449,7 +449,7 @@ object Events {
         when(col("__to") === conversionType, "CONV").otherwise(col("__to")))
       .groupBy(col("__from"), col("__to"))
       .agg(count(lit(1)).as("__cnt"))
-      .stableCheckpoint(eager = false) // bounded; reused per scenario
+      .checkpointed(eager = false) // bounded; reused per scenario
     val totals = edges.groupBy(col("__from"))
       .agg(sum(col("__cnt")).as("__out"))
 
@@ -471,7 +471,7 @@ object Events {
       // redirect preserves out-degree, so totals are scenario-free
       .join(totals, "__from")
       .withColumnRenamed("__from", "__state")
-      .stableCheckpoint(eager = false)
+      .checkpointed(eager = false)
     var v = scens.select(col("__scen"), lit("START").as("__state"),
       lit(1000000000000L).as("__mass"))
     for (_ <- 1 to steps) {
@@ -484,7 +484,7 @@ object Events {
       v = absorbed.unionByName(flowed)
         .groupBy(col("__scen"), col("__state"))
         .agg(sum(col("__mass")).as("__mass"))
-        .stableCheckpoint(eager = false) // truncate the growing lineage
+        .checkpointed(eager = false) // truncate the growing lineage
     }
     val masses = v.where(col("__state") === "CONV")
       .select(col("__scen"), col("__mass"))
@@ -531,7 +531,7 @@ object Events {
       .groupBy(col(userCol))
       .agg(min(day).as("__f"))
       .withColumn("__cohort", date_trunc("week", col("__f")).cast("date"))
-      .stableCheckpoint(eager = false) // feeds sizes AND the revenue join
+      .checkpointed(eager = false) // feeds sizes AND the revenue join
     val sizes = firsts.groupBy(col("__cohort"))
       .agg(count(lit(1)).as("n_users"))
     val rev = events
@@ -583,7 +583,7 @@ object Events {
     val perUser = events
       .groupBy(col(userCol))
       .agg(min(day).as("__f"), max(day).as("__l"))
-      .stableCheckpoint(eager = false) // feeds the max-day agg AND the curve
+      .checkpointed(eager = false) // feeds the max-day agg AND the curve
     val maxD = perUser.agg(max(col("__l")).as("__mx"))
     val obs = perUser
       .crossJoin(broadcast(maxD))
@@ -639,7 +639,7 @@ object Events {
     val perUser = events
       .groupBy(col(userCol))
       .agg(min(day).as("__f"), max(day).as("__l"))
-      .stableCheckpoint(eager = false) // feeds the max-day agg AND the curve
+      .checkpointed(eager = false) // feeds the max-day agg AND the curve
     val maxD = perUser.agg(max(col("__l")).as("__mx"))
     val obs = perUser
       .crossJoin(broadcast(maxD))
@@ -745,7 +745,7 @@ object Events {
         sum(round(col(valueCol) * 100).cast("long")).as("__s"))
       .withColumn("__t",
         graft.text.Sampling.hashUnit(col(userCol), seed) >= 0.5)
-      .stableCheckpoint(eager = false) // feeds histogram + rank join
+      .checkpointed(eager = false) // feeds histogram + rank join
     // two-level DESCENDING rank (r8 — the woeIv/PrefixSum shape): spend
     // cents are near-continuous, so the old distinct-score histogram
     // window + table-sized join was a single-task scan at scale. Rows
@@ -871,7 +871,7 @@ object Events {
       .select(col(userCol).as("__u"),
         to_date(col(tsCol).cast("timestamp")).as("__d"))
       .distinct()
-      .stableCheckpoint(eager = false) // feeds the max-date agg AND the sweep
+      .checkpointed(eager = false) // feeds the max-date agg AND the sweep
     val maxD = days.agg(max(col("__d")).as("__mx"))
     val w = Window.partitionBy(col("__u")).orderBy(col("__d"))
     days
@@ -911,7 +911,7 @@ object Events {
       throw new ParameterError(s"maxOffset must be >= 2: $maxOffset")
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     val rc = retentionCohorts(events, userCol, tsCol)
-      .stableCheckpoint(eager = false) // feeds sizes, maxday, and actives
+      .checkpointed(eager = false) // feeds sizes, maxday, and actives
     val sizes = rc.where(col("day_offset") === 0)
       .select(col("cohort_day"), col("n_users").as("__size"))
     val maxDay = rc.agg(max(
@@ -1008,7 +1008,7 @@ object Events {
       .select(col(userCol).as("__u"), col("session_idx").as("__sx"),
         col(typeCol).as("__t"))
       .distinct()
-      .stableCheckpoint(eager = false) // totals + per-type + pairs
+      .checkpointed(eager = false) // totals + per-type + pairs
     val nSess = st.select(col("__u"), col("__sx")).distinct().count() // bounded scalar
     val perType = st.groupBy(col("__t")).agg(count(lit(1)).as("__n"))
     val pairs = st
@@ -1165,7 +1165,7 @@ object Events {
         coalesce(sum(when(col(typeCol) === monetaryType,
           round(col(valueCol) * 100).cast("long")).otherwise(0L)), lit(0L))
           .as("__mon"))
-      .stableCheckpoint(eager = false) // feeds three histograms + the join
+      .checkpointed(eager = false) // feeds three histograms + the join
     // Guard the one non-dimension-bounded histogram. Happy path first:
     // ONE distinct-count at the requested quantum (the same bounded
     // driver scalar the loud-raise design always paid). On a breach the
@@ -1259,7 +1259,7 @@ object Events {
       // EAGER: the three slice joins below broadcast-build
       // CONCURRENTLY — a lazy checkpoint has no materialization lock
       // and they would race and triplicate the scan chain
-      .stableCheckpoint()
+      .checkpointed(eager = true)
     def bins(metric: String): DataFrame = allBins
       .where(col("__metric") === metric)
       .select(col("__v").as(metric), col("__bin").as(s"${metric}_bin"))
@@ -1640,7 +1640,7 @@ object Events {
       .agg(min(day).as("__f"), max(day).as("__l"))
       .withColumn("__a",
         graft.text.Sampling.hashUnit(col(userCol), seed) < 0.5)
-      .stableCheckpoint(eager = false) // feeds the max-day agg AND the curve
+      .checkpointed(eager = false) // feeds the max-day agg AND the curve
     val maxD = perUser.agg(max(col("__l")).as("__mx"))
     val obs = perUser
       .crossJoin(broadcast(maxD))
@@ -1822,7 +1822,7 @@ object Events {
       throw new ParameterError(s"tauDays must be >= 1: $tauDays")
     val km = kaplanMeier(events, censorDays, userCol, tsCol)
       .select(col("t"), col("survival"))
-      .stableCheckpoint(eager = false) // feeds the step sum AND the tail
+      .checkpointed(eager = false) // feeds the step sum AND the tail
     val wAsc = Window.orderBy(col("t")) // bounded: distinct event days
     val steps = km
       .withColumn("__pt", lag(col("t"), 1, 0L).over(wAsc))

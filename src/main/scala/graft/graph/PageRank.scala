@@ -1,6 +1,6 @@
 package graft.graph
 
-import graft.StableCheckpoint._
+import graft.Checkpoint._
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -44,17 +44,17 @@ object PageRank {
       throw new ParameterError(s"damping must be in (0, 1): $damping")
     // per-iteration intermediates are released at scope exit — a long
     // pipeline calling pagerank leaves only the (eager) result blocks
-    graft.CheckpointScope.scoped(edges.sparkSession) { scope =>
-    val nodes = scope.checkpoint(
-      edges.select(col(srcCol).as("node"))
-        .unionByName(edges.select(col(dstCol).as("node")))
-        .distinct())
+    graft.Checkpoint.scoped(edges.sparkSession) {
+    val nodes = edges.select(col(srcCol).as("node"))
+      .unionByName(edges.select(col(dstCol).as("node")))
+      .distinct().checkpointed(eager = false)
     // transition probability per edge: w / W_src, precomputed once
-    val probs = scope.checkpoint(edges
+    val probs = edges
       .join(edges.groupBy(col(srcCol)).agg(sum(col(weightCol)).as("__W")),
         srcCol)
       .select(col(srcCol).as("__s"), col(dstCol).as("__d"),
-        (col(weightCol).cast("double") / col("__W")).as("__p")))
+        (col(weightCol).cast("double") / col("__W")).as("__p"))
+      .checkpointed(eager = false)
     val n = nodes.count()
     if (n == 0) throw new ParameterError("pagerank: empty edge list")
     val basePico = math.round((1.0 - damping) / n * 1e12)
@@ -64,9 +64,10 @@ object PageRank {
     // iteration-invariant, so the per-round dangling probe is a
     // semi-join against this frame instead of a fresh distinct
     // shuffle of the edge list every round
-    val danglingNodes = scope.checkpoint(
-      nodes.join(probs.select(col("__s").as("node")).distinct(),
-        Seq("node"), "left_anti"))
+    val danglingNodes = nodes
+      .join(probs.select(col("__s").as("node")).distinct(),
+        Seq("node"), "left_anti")
+      .checkpointed(eager = false)
     // r12: probe the iteration-invariant dangling set ONCE. When it is
     // empty (most explicit-edge graphs — every node has out-edges) the
     // per-round dangling branch is algebraically zero: __dm = 0 ⇒
@@ -101,7 +102,7 @@ object PageRank {
             (lit(basePico) +
               round(lit(damping) * coalesce(col("__c"), lit(0L))
                 .cast("double"), 0).cast("long")).as("__r"))
-      ranks = scope.checkpoint(next, stable = false) // round state: keep AQE
+      ranks = next.checkpointed(eager = false, keepAqe = true) // round state
     }
     ranks.select(col("node"), (col("__r").cast("double") / 1e12).as("rank"))
     }
@@ -136,20 +137,21 @@ object PageRank {
       throw new ParameterError(s"iterations must be positive: $iterations")
     if (damping <= 0 || damping >= 1)
       throw new ParameterError(s"damping must be in (0, 1): $damping")
-    graft.CheckpointScope.scoped(edges.sparkSession) { scope =>
-    val nodes = scope.checkpoint(
-      edges.select(col(srcCol).as("node"))
-        .unionByName(edges.select(col(dstCol).as("node")))
-        .distinct())
-    val probs = scope.checkpoint(edges
+    graft.Checkpoint.scoped(edges.sparkSession) {
+    val nodes = edges.select(col(srcCol).as("node"))
+      .unionByName(edges.select(col(dstCol).as("node")))
+      .distinct().checkpointed(eager = false)
+    val probs = edges
       .join(edges.groupBy(col(srcCol)).agg(sum(col(weightCol)).as("__W")),
         srcCol)
       .select(col(srcCol).as("__s"), col(dstCol).as("__d"),
-        (col(weightCol).cast("double") / col("__W")).as("__p")))
-    val seedFlag = scope.checkpoint(seeds
+        (col(weightCol).cast("double") / col("__W")).as("__p"))
+      .checkpointed(eager = false)
+    val seedFlag = seeds
       .select(col(seedCol).as("node")).distinct()
       .join(nodes, Seq("node"), "left_semi")
-      .withColumn("__sd", lit(1L)))
+      .withColumn("__sd", lit(1L))
+      .checkpointed(eager = false)
     val nS = seedFlag.count()
     if (nS == 0)
       throw new ParameterError("personalizedPagerank: no seed is a graph node")
@@ -158,9 +160,10 @@ object PageRank {
 
     // iteration-invariant no-out-edge set, computed once (the
     // [[pagerank]] hoist): per round the dangling probe is a semi-join
-    val danglingNodes = scope.checkpoint(
-      nodes.join(probs.select(col("__s").as("node")).distinct(),
-        Seq("node"), "left_anti"))
+    val danglingNodes = nodes
+      .join(probs.select(col("__s").as("node")).distinct(),
+        Seq("node"), "left_anti")
+      .checkpointed(eager = false)
     // r12: one isEmpty probe hoists the per-round dangling branch when
     // the set is empty — __dm = 0 makes it algebraically inert (see
     // [[pagerank]]); bit-identical output, ≈3 fewer stages per round.
@@ -195,7 +198,7 @@ object PageRank {
             (when(col("__sd") === 1L, basePico).otherwise(0L) +
               round(lit(damping) * coalesce(col("__c"), lit(0L))
                 .cast("double"), 0).cast("long")).as("__r"))
-      ranks = scope.checkpoint(next, stable = false) // round state: keep AQE
+      ranks = next.checkpointed(eager = false, keepAqe = true) // round state
     }
     ranks.select(col("node"), (col("__r").cast("double") / 1e12).as("rank"))
     }
@@ -234,11 +237,11 @@ object PageRank {
       .where(col("__a") =!= col("__b") &&
         col("__a").isNotNull && col("__b").isNotNull)
       .distinct()
-      .stableCheckpoint(eager = false) // feeds degrees + orientation
+      .checkpointed(eager = false) // feeds degrees + orientation
     val deg = und
       .select(explode(array(col("__a"), col("__b"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("degree"))
-      .stableCheckpoint(eager = false) // feeds orientation + the output join
+      .checkpointed(eager = false) // feeds orientation + the output join
     val oriented = und
       .join(deg.select(col("node").as("__a"), col("degree").as("__da")), "__a")
       .join(deg.select(col("node").as("__b"), col("degree").as("__db")), "__b")
@@ -252,7 +255,7 @@ object PageRank {
           struct(col("__db").as("d"), col("__b").as("n")))
           .otherwise(struct(col("__da").as("d"), col("__a").as("n")))
           .as("__ov"))
-      .stableCheckpoint(eager = false) // wedge + closing joins reuse it
+      .checkpointed(eager = false) // wedge + closing joins reuse it
     val wedges = oriented.as("e1")
       .join(oriented.as("e2"),
         col("e1.__u") === col("e2.__u") &&
@@ -305,26 +308,26 @@ object PageRank {
       .where(col("__a") =!= col("__b") &&
         col("__a").isNotNull && col("__b").isNotNull)
       .distinct()
-    // round state (live edge set, weak frontier) checkpoints PLAIN
-    // (AQE-on capture, the pagerank stable=false rationale): every
+    // round state (live edge set, weak frontier) keeps AQE
+    // (`keepAqe = true`, the pagerank round-state rationale): every
     // consumer re-keys these frames (groupBy u / anti-joins on u and
     // v), so no declared partitioning is consumed downstream, and each
     // round's job benefits from AQE's runtime coalescing instead
     var live = und0.select(col("__a").as("u"), col("__b").as("v"))
       .union(und0.select(col("__b").as("u"), col("__a").as("v")))
-      .localCheckpoint(true)
+      .checkpointed(eager = true, keepAqe = true)
     var iter = 0
     var weakCount = 1L
     while (weakCount > 0 && iter < maxIters) {
       val deg = live.groupBy(col("u")).agg(count(lit(1)).as("__d"))
       val weak = deg.where(col("__d") < k).select(col("u"))
-        .localCheckpoint(true) // joined twice below
+        .checkpointed(eager = true, keepAqe = true) // joined twice below
       weakCount = weak.count()
       if (weakCount > 0) {
         live = live
           .join(weak, Seq("u"), "left_anti")
           .join(weak.select(col("u").as("v")), Seq("v"), "left_anti")
-          .localCheckpoint(true)
+          .checkpointed(eager = true, keepAqe = true)
       }
       iter += 1
     }
@@ -357,11 +360,11 @@ object PageRank {
       .where(col("__a") =!= col("__b") &&
         col("__a").isNotNull && col("__b").isNotNull)
       .distinct()
-      .stableCheckpoint(eager = false) // feeds degrees + the pair frame
+      .checkpointed(eager = false) // feeds degrees + the pair frame
     val deg = und
       .select(explode(array(col("__a"), col("__b"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("degree"))
-      .stableCheckpoint(eager = false) // feeds both endpoint joins
+      .checkpointed(eager = false) // feeds both endpoint joins
     val pairs = und
       .join(deg.select(col("node").as("__a"), col("degree").as("__da")), "__a")
       .join(deg.select(col("node").as("__b"), col("degree").as("__db")), "__b")
@@ -423,7 +426,7 @@ object PageRank {
       .where(col("__a") =!= col("__b") &&
         col("__a").isNotNull && col("__b").isNotNull)
       .distinct()
-      .stableCheckpoint(eager = false) // feeds neighbors AND the anti-join
+      .checkpointed(eager = false) // feeds neighbors AND the anti-join
     val nbrs = und.select(col("__a").as("__apex"), col("__b").as("__n"))
       .unionByName(und.select(col("__b").as("__apex"), col("__a").as("__n")))
     val wedges = nbrs
@@ -459,7 +462,7 @@ object PageRank {
     * rounds. Each round is one equi-join (frontier ⋈ edges) + distinct
     * + anti-join against the settled set: cost ∝ the frontier's edge
     * mass, the textbook Pregel round. Frontiers and the settled set
-    * are eagerly checkpointed inside a [[graft.CheckpointScope]] (the
+    * are eagerly checkpointed inside [[graft.Checkpoint.scoped]] (the
     * components/pagerank lifecycle); the early-exit probe is a bounded
     * driver scalar per round. Nodes unreachable within `maxHops` are
     * absent from the output — callers LEFT-join if they need nulls.
@@ -473,22 +476,20 @@ object PageRank {
       seedCol: String = "node"): DataFrame = {
     if (maxHops < 1)
       throw new ParameterError(s"maxHops must be >= 1: $maxHops")
-    graft.CheckpointScope.scoped(edges.sparkSession) { scope =>
-      val und = scope.checkpoint(
-        edges.select(col(srcCol).as("__s"), col(dstCol).as("__d"))
-          .union(edges.select(col(dstCol).as("__s"), col(srcCol).as("__d")))
-          .distinct().repartition(col("__s")),
-        eager = true) // __s-partitioned: per-hop joins read it exchange-free
-      var dist = scope.checkpoint(
-        seeds.select(col(seedCol).as("node")).distinct()
-          .withColumn("dist", lit(0L)),
-        eager = true, stable = false) // round state: keep AQE (scope doc)
+    graft.Checkpoint.scoped(edges.sparkSession) {
+      val und = edges.select(col(srcCol).as("__s"), col(dstCol).as("__d"))
+        .union(edges.select(col(dstCol).as("__s"), col(srcCol).as("__d")))
+        .distinct().repartition(col("__s"))
+        .checkpointed(eager = true) // __s-partitioned: per-hop joins read it exchange-free
+      var dist = seeds.select(col(seedCol).as("node")).distinct()
+        .withColumn("dist", lit(0L))
+        .checkpointed(eager = true, keepAqe = true) // round state
       var frontier = dist.select(col("node"))
       var hop = 1
       var done = false
       // r13 (guide §2 — job latency): fewer jobs per hop. The hop frame
-      // checkpoints LAZILY with `stable = false` — the plain AQE-on
-      // capture, the round-state choice (see CheckpointScope.checkpoint):
+      // checkpoints LAZILY with `keepAqe = true` — the plain AQE-on
+      // capture, the round-state choice (see graft.Checkpoint):
       // the frame is small and re-keyed next hop — and the termination
       // probe is a count() on it, so the count doubles as the
       // materialization (was: eager checkpoint job + isEmpty job). Under
@@ -500,12 +501,11 @@ object PageRank {
       // re-checkpointing the union each hop cost a third job per hop
       // for data already cached.
       while (hop <= maxHops && !done) {
-        val next = scope.checkpoint(
-          und.join(frontier.withColumnRenamed("node", "__s"), "__s")
-            .select(col("__d").as("node")).distinct()
-            .join(dist.select(col("node")), Seq("node"), "left_anti")
-            .withColumn("dist", lit(hop.toLong)),
-          eager = false, stable = false)
+        val next = und.join(frontier.withColumnRenamed("node", "__s"), "__s")
+          .select(col("__d").as("node")).distinct()
+          .join(dist.select(col("node")), Seq("node"), "left_anti")
+          .withColumn("dist", lit(hop.toLong))
+          .checkpointed(eager = false, keepAqe = true)
         if (next.count() == 0L) done = true
         else {
           dist = dist.unionByName(next)
@@ -535,13 +535,13 @@ object PageRank {
     * Per round: one equi-join (edges ⋈ labels on the neighbor key) +
     * one (node, label) count + one per-node argmax — all node-key
     * shuffles, no pair frames. Checkpoint style is BARE (no
-    * CheckpointScope, the kCore precedent): the loop has no
+    * `Checkpoint.scoped`, the kCore precedent): the loop has no
     * data-dependent driver probe, so round states checkpoint LAZILY
     * with AQE kept and everything materializes in the consumer's ONE
     * job — a scoped wrapper's exit re-checkpoint would rerun the
     * whole K-round chain under the AQE-off capture (measured: 2× the
-    * query at sf0.1). The doubled edge frame alone is
-    * stable-checkpointed `v`-partitioned, so each round's label join
+    * query at sf0.1). The doubled edge frame alone is checkpointed
+    * with AQE off, `v`-partitioned, so each round's label join
     * is exchange-free on the edge side. Output: (node, community). */
   def labelPropagation(
       edges: DataFrame,
@@ -559,10 +559,10 @@ object PageRank {
     val und = und0.select(col("__a").as("u"), col("__b").as("v"))
       .union(und0.select(col("__b").as("u"), col("__a").as("v")))
       .repartition(col("v"))
-      .stableCheckpoint(eager = false) // v-partitioned for the round joins
+      .checkpointed(eager = false) // v-partitioned for the round joins
     var labels = und.select(col("u").as("node")).distinct()
       .withColumn("__l", col("node"))
-      .localCheckpoint(false)
+      .checkpointed(eager = false, keepAqe = true)
     for (_ <- 1 to iterations) {
       val votes = und
         .join(labels.select(col("node").as("v"), col("__l")), "v")
@@ -574,7 +574,7 @@ object PageRank {
         .groupBy(col("u").as("node"))
         .agg(min_by(col("__l"), struct((-col("__c")).as("nc"),
           col("__l").as("l"))).as("__l"))
-      labels = next.localCheckpoint(false)
+      labels = next.checkpointed(eager = false, keepAqe = true)
     }
     labels.select(col("node"), col("__l").as("community"))
   }
@@ -611,7 +611,7 @@ object PageRank {
       .where(col("__a") =!= col("__b") &&
         col("__a").isNotNull && col("__b").isNotNull)
       .distinct()
-      .stableCheckpoint(eager = false) // degrees + argmin share it
+      .checkpointed(eager = false) // degrees + argmin share it
     val dbl = und0.select(col("__a").as("u"), col("__b").as("v"))
       .union(und0.select(col("__b").as("u"), col("__a").as("v")))
     val deg = dbl.groupBy(col("u").as("__n"))
@@ -653,7 +653,7 @@ object PageRank {
       .where(col("__a") =!= col("__b") &&
         col("__a").isNotNull && col("__b").isNotNull)
       .distinct()
-      .stableCheckpoint(eager = false) // degrees + labeled edges share it
+      .checkpointed(eager = false) // degrees + labeled edges share it
     val lab = labels.select(col(nodeCol).as("__n"),
       col(communityCol).as("__c"))
     // unlabeled endpoint = contract breach, loudly (the equi-join

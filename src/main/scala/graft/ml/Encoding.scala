@@ -1,6 +1,6 @@
 package graft.ml
 
-import graft.StableCheckpoint._
+import graft.Checkpoint._
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -54,7 +54,7 @@ object Encoding {
         cents.as("__v"))
       .groupBy(col("category"), col("fold"))
       .agg(count(lit(1)).as("n_rows"), sum(col("__v")).as("__s"))
-      .stableCheckpoint(eager = false) // feeds three marginals + output
+      .checkpointed(eager = false) // feeds three marginals + output
     val perCat = cells.groupBy(col("category"))
       .agg(sum(col("n_rows")).as("__nc"), sum(col("__s")).as("__sc"))
     val perFold = cells.groupBy(col("fold"))

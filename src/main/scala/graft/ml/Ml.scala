@@ -1,6 +1,6 @@
 package graft.ml
 
-import graft.StableCheckpoint._
+import graft.Checkpoint._
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -297,7 +297,7 @@ object Evaluation {
       .agg(sum(col("__y")).as("__p"), count(lit(1)).as("__c"))
       // r13: lazy checkpoint — the totals agg below otherwise re-runs
       // the histogram's ENTIRE upstream (the cohenKappa lesson)
-      .stableCheckpoint(eager = false)
+      .checkpointed(eager = false)
     // "__pt", NOT "__P": Spark resolves columns case-insensitively, so
     // "__P" next to "__p" is a silent collision
     val totals = perScore.agg(
@@ -352,7 +352,7 @@ object Evaluation {
       // r13: lazy checkpoint — totals then derive from the ≤|distinct|
       // histogram instead of re-running both input scans (cohenKappa
       // lesson); Σ per-value counts ≡ the input row counts exactly
-      .stableCheckpoint(eager = false)
+      .checkpointed(eager = false)
     val totals = histV.agg(
       sum(col("__ca0")).as("__na0"), sum(col("__cb0")).as("__nb0"))
     // range-probed bucket width (r9): a hardcoded [0,1]-score width
@@ -623,7 +623,7 @@ object Evaluation {
       .where(col(col1).isNotNull && col(col2).isNotNull)
       .select(col(col1).cast("string").as("__a"),
         col(col2).cast("string").as("__b"))
-      .stableCheckpoint(eager = false)
+      .checkpointed(eager = false)
     val tot = base.agg(
       count(lit(1)).as("n"),
       sum(when(col("__a") === col("__b"), 1L).otherwise(0L)).as("agree"))
@@ -729,7 +729,7 @@ object Evaluation {
     val cont = df
       .groupBy(col(clusterCol).as("__u"), col(labelCol).as("__v"))
       .agg(count(lit(1)).as("__n"))
-      .stableCheckpoint(eager = false) // feeds marginals AND the MI pass
+      .checkpointed(eager = false) // feeds marginals AND the MI pass
     val nf = cont.agg(sum(col("__n")).as("__tot"))
     def pairs2(c: org.apache.spark.sql.Column) =
       sum(c.cast(dec) * (c.cast(dec) - 1))
@@ -746,18 +746,18 @@ object Evaluation {
       .withColumn("__b",
         sum(col("__n")).over(Window.partitionBy("__v")))
       .crossJoin(broadcast(nf))
-      .stableCheckpoint(eager = false) // feeds all three reductions
+      .checkpointed(eager = false) // feeds all three reductions
     // each 1-row reduction is checkpointed into a leaf: the three of
     // them crossJoin below, and siblings sharing marg's LogicalRDD
     // attributes would otherwise trip AMBIGUOUS_REFERENCE
     val aAgg = marg.select(col("__u"), col("__a"), col("__tot")).distinct()
       .agg(count(lit(1)).as("n_clusters"), pairs2(col("__a")).as("__sa2"),
         entq(col("__a")).as("__huq"))
-      .stableCheckpoint(eager = false)
+      .checkpointed(eager = false)
     val bAgg = marg.select(col("__v"), col("__b"), col("__tot")).distinct()
       .agg(count(lit(1)).as("n_labels"), pairs2(col("__b")).as("__sb2"),
         entq(col("__b")).as("__hvq"))
-      .stableCheckpoint(eager = false)
+      .checkpointed(eager = false)
     val nd = col("__tot").cast("double")
     val cells = marg.agg(
       pairs2(col("__n")).as("__sij2"),
@@ -765,7 +765,7 @@ object Evaluation {
         log(col("__n").cast("double") * nd /
           (col("__a").cast("double") * col("__b").cast("double"))) * 1e12)
         .cast("long")).as("__miq"))
-      .stableCheckpoint(eager = false)
+      .checkpointed(eager = false)
     def d(c: String) = col(c).cast("double")
     val cn22 = (col("__tot2").cast(dec) * (col("__tot2").cast(dec) - 1))
       .cast("double")
@@ -821,7 +821,7 @@ object Evaluation {
     val rows = events
       .select(day.as("__d"), bin.as("bin"))
       .crossJoin(broadcast(events.agg(min(day).as("__d0"))))
-      .stableCheckpoint(eager = false) // feeds baseline AND the daily grid
+      .checkpointed(eager = false) // feeds baseline AND the daily grid
     val base = rows
       .where(datediff(col("__d"), col("__d0")) < baselineDays)
       .groupBy(col("bin")).agg(count(lit(1)).as("__nb"))
@@ -940,7 +940,7 @@ object Evaluation {
       .groupBy(t)
       .agg(sum(col("__y")).as("__pos"), count(lit(1)).as("__c"))
       // r13: lazy checkpoint — totals otherwise re-run the upstream
-      .stableCheckpoint(eager = false)
+      .checkpointed(eager = false)
     val totals = perT.agg(
       sum(col("__pos")).as("__P"), sum(col("__c")).as("__N"))
     graft.panel.PrefixSum.inclusiveAuto(
@@ -1055,7 +1055,7 @@ object Evaluation {
       .groupBy(col("__s"))
       .agg(count(lit(1)).as("__c"), sum(col("__y")).as("__p"))
       // r13: lazy checkpoint — totals otherwise re-run the upstream
-      .stableCheckpoint(eager = false)
+      .checkpointed(eager = false)
     val totals = hist0.agg(
       sum(col("__c")).as("__tot"), sum(col("__p")).as("__ptot"))
     val hist = graft.panel.PrefixSum.inclusiveAuto(
@@ -1152,7 +1152,7 @@ object Evaluation {
       .groupBy(t)
       .agg(sum(col("__y")).as("__pos"), count(lit(1)).as("__c"))
       // r13: lazy checkpoint — totals otherwise re-run the upstream
-      .stableCheckpoint(eager = false)
+      .checkpointed(eager = false)
     // "__ptot", NOT "__P" — the averagePrecision case-collision lesson
     val totals = perT.agg(
       sum(col("__pos")).as("__ptot"), sum(col("__c")).as("__ntot"))

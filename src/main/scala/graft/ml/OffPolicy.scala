@@ -1,6 +1,6 @@
 package graft.ml
 
-import graft.StableCheckpoint._
+import graft.Checkpoint._
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
@@ -53,7 +53,7 @@ object OffPolicy {
         first(col("__fs.t")).as("__a"),
         max(when(col(typeCol) === convType && m > col("__fm"), 1L)
           .otherwise(0L)).as("__r"))
-      .stableCheckpoint(eager = false) // feeds counts, K, and the match
+      .checkpointed(eager = false) // feeds counts, K, and the match
     val actions = perUser
       .groupBy(col("__a")).agg(count(lit(1)).as("__na"))
       .withColumn("__idx",

@@ -1,6 +1,6 @@
 package graft.panel
 
-import graft.StableCheckpoint._
+import graft.Checkpoint._
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
@@ -628,7 +628,7 @@ object Panel {
         sids.tail.zipWithIndex.map { case (s, i) =>
           max(when(col(k.sid).cast("string") === s, lp)).as(s"__v${i + 1}")
         }: _*)
-      .stableCheckpoint(eager = false)
+      .checkpointed(eager = false)
     val pairs = for (i <- 0 until n; j <- (i + 1) until n) yield (i, j)
     val aggs = pairs.flatMap { case (i, j) =>
       val y = col(s"__v$i"); val x = col(s"__v$j")

@@ -83,10 +83,10 @@ object PrefixSum {
       checkpoint: Boolean,
       partCols: Seq[String]): DataFrame = {
     require(sums.nonEmpty, "PrefixSum: need at least one (out, sum) pair")
-    import graft.StableCheckpoint._
+    import graft.Checkpoint._
     val pc = partCols.map(col)
     val withB0 = hist.withColumn("__psb", bucket)
-    val withB = if (checkpoint) withB0.stableCheckpoint(eager = false) else withB0
+    val withB = if (checkpoint) withB0.checkpointed(eager = false) else withB0
     // the guard multiplies into the offsets aggregation INPUT — the one
     // place every histogram row still flows (the final equi-join is
     // exactly where a null bucket would vanish, so a guard there never
@@ -153,8 +153,8 @@ object PrefixSum {
     // checkpoint BEFORE the probe: the range probe, the offsets build,
     // and the main path then all read one materialization of the
     // histogram instead of three recomputes of its upstream groupBy
-    import graft.StableCheckpoint._
-    val h = hist.stableCheckpoint(eager = false)
+    import graft.Checkpoint._
+    val h = hist.checkpointed(eager = false)
     val v = col(vCol).cast("double")
     // grouped form (partCols non-empty): ONE probe pass yields a
     // per-group width, and the whole multi-group family rides a single

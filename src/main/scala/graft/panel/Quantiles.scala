@@ -36,13 +36,13 @@ object Quantiles {
     }
     val g = groupCols.map(col)
     val hist = {
-      import graft.StableCheckpoint._
+      import graft.Checkpoint._
       df.select(g :+ vCol.cast("long").as("__v"): _*)
         .groupBy(g :+ col("__v"): _*)
         .agg(count(lit(1)).as("__c"))
         // r13: lazy checkpoint — the totals agg below otherwise
         // re-runs the histogram's entire upstream (cohenKappa lesson)
-        .stableCheckpoint(eager = false)
+        .checkpointed(eager = false)
     }
     val cum = PrefixSum.inclusiveAuto(
       hist, "__v", Seq("__cum" -> "__c"), partCols = groupCols)

@@ -1,6 +1,6 @@
 package graft.panel
 
-import graft.StableCheckpoint._
+import graft.Checkpoint._
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
@@ -53,7 +53,7 @@ object Seasonal {
       .withColumn("__k7", count(lit(1)).over(w7))
       .where(col("__k7") === 7)
       .withColumn("__dow", ((dayofweek(col("date")) + 5) % 7 + 1).cast("long"))
-      .stableCheckpoint(eager = false) // feeds the weekday cells AND the output
+      .checkpointed(eager = false) // feeds the weekday cells AND the output
     val cells = rows
       .groupBy(col("sid"), col("__dow"))
       .agg(sum(col("__c") * 7 - col("__s7")).as("__num"),
@@ -262,7 +262,7 @@ object Seasonal {
         (graft.text.Sampling.hashUnit(
           concat_ws("|", col("sid"), col("date")), seed) < calFraction)
           .as("__cal"))
-      .stableCheckpoint(eager = false) // feeds the histogram AND coverage
+      .checkpointed(eager = false) // feeds the histogram AND coverage
     val kq = rows.agg(
       sum(when(col("__cal"), 1L).otherwise(0L)).as("n_cal"),
       sum(when(!col("__cal"), 1L).otherwise(0L)).as("n_test"))

@@ -113,7 +113,7 @@ object Performance {
     * their [[perDateQuery]] aggregations, tagged by position and
     * collected together (a k-book combination runs its k backtest
     * lineages side by side in one job, never as k sequential passes).
-    * The segment's plan goes to [[graft.StableCheckpoint.planProbe]]
+    * The segment's plan goes to [[graft.Checkpoint.planProbe]]
     * first, so the catalog plan audits still see what runs here. */
   private def perDates(frames: Seq[DataFrame], dateCol: String): Seq[DataFrame] = {
     val missing = frames.distinct.filter(cached(_, dateCol).isEmpty)
@@ -122,7 +122,7 @@ object Performance {
       val tagged = batch.zipWithIndex
         .map { case ((_, q), i) => q.withColumn("__k", lit(i)) }
         .reduce(_ unionByName _)
-      graft.StableCheckpoint.planProbe(tagged.queryExecution.executedPlan)
+      graft.Checkpoint.planProbe(tagged.queryExecution.executedPlan)
       val rows = tagged.collect().groupBy(_.getInt(schema.length))
       val spark = tagged.sparkSession
       batch.zipWithIndex.foreach { case ((f, _), i) =>

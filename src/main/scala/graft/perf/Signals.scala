@@ -1,6 +1,6 @@
 package graft.perf
 
-import graft.StableCheckpoint._
+import graft.Checkpoint._
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -183,7 +183,7 @@ object Signals {
     val base = ic.where(col(icCol).isNotNull)
       .select(col(dateCol).as("__d"),
         round(col(icCol) * 1e6).cast("long").as("__m"))
-      .stableCheckpoint(eager = false) // feeds the resample AND the plain mean
+      .checkpointed(eager = false) // feeds the resample AND the plain mean
     val u = graft.text.Sampling.hashUnit(
       concat_ws("|", col("__b"), col("__d")), seed)
     val w = PoissonCdf.zipWithIndex.foldRight(lit(8)) {

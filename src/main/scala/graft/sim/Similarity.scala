@@ -1,6 +1,6 @@
 package graft.sim
 
-import graft.StableCheckpoint._
+import graft.Checkpoint._
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -292,7 +292,7 @@ object Similarity {
       .select(
         (row_number().over(seedW).cast("long") - 1).as("cell_id"),
         transform(col(vecCol), x => x.cast("double")).as("centroid"))
-      .stableCheckpoint()
+      .checkpointed(eager = true)
     var i = 0
     while (i < iters) {
       val means = assignCells(v, centroids, vecCol, idCol)
@@ -313,7 +313,7 @@ object Similarity {
         .join(means, Seq("cell_id"), "left")
         .select(col("cell_id"),
           coalesce(col("centroid"), col("__prev")).as("centroid"))
-        .stableCheckpoint()
+        .checkpointed(eager = true)
       i += 1
     }
     centroids
@@ -696,7 +696,7 @@ object Similarity {
     * Everything after the [[bruteForceTopK]] scan is DIMENSION-BOUNDED
     * (|queries|·k candidates, ·k² pairwise sims), so the greedy's
     * `select` rounds are joins over bounded checkpointed frames inside
-    * one CheckpointScope. Determinism: relevance and pair sims are the
+    * one `Checkpoint.scoped` body. Determinism: relevance and pair sims are the
     * 6dp-rounded cosines; the argmax tie-breaks to the smallest id —
     * the oracle unrolls the same greedy step by step. Output:
     * (query_id, cand_id, pick_order 1..select, mmr_score). */
@@ -710,23 +710,21 @@ object Similarity {
       lambda: Double = 0.5): DataFrame = {
     require(select >= 1 && select <= k, s"need 1 <= select <= k: $select, $k")
     require(lambda >= 0 && lambda <= 1, s"lambda in [0,1]: $lambda")
-    graft.CheckpointScope.scoped(queries.sparkSession) { scope =>
-      val top = scope.checkpoint(
-        bruteForceTopK(queries, corpus, idCol, vecCol, k)
-          .select(col("query_id"), col("neighbor_id").as("cand_id"),
-            col("cosine").as("rel")),
-        eager = true)
+    graft.Checkpoint.scoped(queries.sparkSession) {
+      val top = bruteForceTopK(queries, corpus, idCol, vecCol, k)
+        .select(col("query_id"), col("neighbor_id").as("cand_id"),
+          col("cosine").as("rel"))
+        .checkpointed(eager = true)
       val withVec = top.join(
         corpus.select(col(idCol).as("cand_id"), col(vecCol).as("__v")),
         "cand_id")
-      val sims = scope.checkpoint(
-        withVec.alias("a").join(withVec.alias("b"),
+      val sims = withVec.alias("a").join(withVec.alias("b"),
           col("a.query_id") === col("b.query_id") &&
             col("a.cand_id") =!= col("b.cand_id"))
-          .select(col("a.query_id").as("query_id"),
-            col("a.cand_id").as("ca"), col("b.cand_id").as("cb"),
-            round(cosine(col("a.__v"), col("b.__v")), 6).as("sim")),
-        eager = true)
+        .select(col("a.query_id").as("query_id"),
+          col("a.cand_id").as("ca"), col("b.cand_id").as("cb"),
+          round(cosine(col("a.__v"), col("b.__v")), 6).as("sim"))
+        .checkpointed(eager = true)
       var selected: DataFrame = null
       for (step <- 1 to select) {
         val avail =
@@ -753,9 +751,8 @@ object Similarity {
           .select(col("query_id"), col("__p.cand_id").as("cand_id"),
             lit(step.toLong).as("pick_order"),
             round(col("__p.__mmr"), 6).as("mmr_score"))
-        selected = scope.checkpoint(
-          if (selected == null) pick else selected.unionByName(pick),
-          eager = true, stable = false) // round state: keep AQE
+        selected = (if (selected == null) pick else selected.unionByName(pick))
+          .checkpointed(eager = true, keepAqe = true) // round state
       }
       selected
     }

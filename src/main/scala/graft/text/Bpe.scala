@@ -1,6 +1,6 @@
 package graft.text
 
-import graft.StableCheckpoint._
+import graft.Checkpoint._
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -139,7 +139,7 @@ object Bpe {
     // folds never stack in one expression tree.
     var vocab = wordFreqs(docs, idCol, textCol, minFreq)
       .select(charSeq(col("word")).as("__seq"), col("freq"))
-      .stableCheckpoint(eager = false)
+      .checkpointed(eager = false)
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
     var step = 1
     var exhausted = false
@@ -153,7 +153,7 @@ object Bpe {
         merges += ((step, l, r, f))
         vocab = vocab
           .select(mergePass(col("__seq"), l, r).as("__seq"), col("freq"))
-          .stableCheckpoint(eager = false)
+          .checkpointed(eager = false)
         step += 1
       }
     }

@@ -1,6 +1,6 @@
 package graft.text
 
-import graft.StableCheckpoint._
+import graft.Checkpoint._
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
@@ -93,7 +93,7 @@ object Classifier {
     val model = nbModel(labeled, labelCol, textCol, buckets)
       .withColumn("__m", round(log(col("cnt").cast("double") + 1.0) * 1e6, 0)
         .cast("long"))
-      .stableCheckpoint()
+      .checkpointed(eager = true)
     // per-label constants: feature total T_l (from the model — exact),
     // doc-count prior ln(n_l / N)
     val totals = model.groupBy("label").agg(sum(col("cnt")).as("__T"))
@@ -225,9 +225,9 @@ object Classifier {
     // corpus-sized, referenced 2× per iteration → non-eager checkpoint
     // (lineage cut without pinning the corpus in executor storage)
     val fx = featureCounts(labeled, idCol, textCol, buckets)
-      .stableCheckpoint(eager = false)
+      .checkpointed(eager = false)
     val labels = labeled.select(col(idCol), col(labelCol).cast("long").as("__y"))
-      .stableCheckpoint(eager = false)
+      .checkpointed(eager = false)
     val n = labels.count().toDouble
     if (n == 0) throw new ParameterError("logregTrain: empty labeled corpus")
 
@@ -267,7 +267,7 @@ object Classifier {
           .cast("long")).as("__wm"))
       // bounded (≤ buckets+1 rows): eager checkpoint truncates the
       // per-iteration lineage growth and feeds the next broadcast
-      w = Some(next.localCheckpoint()) // tiny round state: keep AQE
+      w = Some(next.checkpointed(eager = true, keepAqe = true)) // tiny round state
     }
     w.get.select(col("bucket"),
       (col("__wm").cast("double") / 1e6).as("weight"))
@@ -324,7 +324,7 @@ object Classifier {
     val m = model
       .withColumn("__m",
         round(log(col("cnt").cast("double") + 1.0) * 1e6, 0).cast("long"))
-      .stableCheckpoint() // bounded: tags × labels × buckets
+      .checkpointed(eager = true) // bounded: tags × labels × buckets
     val totals = m.groupBy("__tag", "label").agg(sum(col("cnt")).as("__T"))
     val stats = totals
       .join(priors, Seq("__tag", "label"))
@@ -432,7 +432,7 @@ object Classifier {
     require(holdoutFrac > 0 && holdoutFrac < 1, s"holdoutFrac: $holdoutFrac")
     val u = graft.text.Sampling.hashUnit(col(idCol), seed)
     val holdout = docs.where(u >= 1.0 - holdoutFrac)
-      .stableCheckpoint(eager = false) // feeds truth + the scoring pass
+      .checkpointed(eager = false) // feeds truth + the scoring pass
     val pool = docs.where(u < 1.0 - holdoutFrac)
     val truth = holdout.select(col(idCol), col(labelCol).as("__truth"))
     val fs = fractions.sorted
@@ -444,7 +444,7 @@ object Classifier {
     }
     val banded = pool.withColumn("__band", band)
       .where(col("__band").isNotNull)
-      .stableCheckpoint(eager = false) // feeds counts + priors
+      .checkpointed(eager = false) // feeds counts + priors
     // the doc id rides in the key struct so featureRows' pre-explode
     // repartition spreads by DOC (uniform), not by the few (band,
     // label) groups; the groupBy's partial aggregation absorbs the
@@ -464,7 +464,7 @@ object Classifier {
       .agg(count(lit(1)).as("__nl"))
       // EAGER: consumed by concurrent broadcast builds (the
       // nbSourceAblation race note); also warms the banded RDD
-      .stableCheckpoint() // bounded: bands × labels
+      .checkpointed(eager = true) // bounded: bands × labels
     // prefix models over the BOUNDED band tables via ONE literal
     // fraction-dimension fan-out (a per-fraction union would spawn one
     // plan branch + broadcast build per fraction — job-count, not
@@ -544,7 +544,7 @@ object Classifier {
       // materialization lock, so both would race and duplicate the
       // pool scan; the eager job also warms the pool RDD for the
       // model explode
-      .stableCheckpoint() // bounded: sources × labels
+      .checkpointed(eager = true) // bounded: sources × labels
     val keep = col("__tag") === noneTag ||
       !(col("__src") === col("__tag") || col("__src").isNull)
     val model = broadcast(tagsDf).crossJoin(bySrc).where(keep)
@@ -595,9 +595,9 @@ object Classifier {
     require(holdoutFrac > 0 && holdoutFrac < 1, s"holdoutFrac: $holdoutFrac")
     val u = graft.text.Sampling.hashUnit(col(idCol), seed)
     val holdout = docs.where(u >= 1.0 - holdoutFrac)
-      .stableCheckpoint(eager = false) // feeds truth + the scoring pass
+      .checkpointed(eager = false) // feeds truth + the scoring pass
     val pool = docs.where(u < 1.0 - holdoutFrac)
-      .stableCheckpoint(eager = false) // feeds counts + priors + n
+      .checkpointed(eager = false) // feeds counts + priors + n
     val truth = holdout.select(col(idCol), col(labelCol).as("__truth"))
     val NoneTag = "(none)"
     import docs.sparkSession.implicits._
@@ -616,7 +616,7 @@ object Classifier {
         coalesce(col("n_correct"), lit(0L)).as("n_correct"))
       .withColumn("accuracy",
         round(col("n_correct").cast("double") / col("n_holdout"), 6))
-      .stableCheckpoint() // bounded: |ablate|+1 rows — the delta baseline
+      .checkpointed(eager = true) // bounded: |ablate|+1 rows — the delta baseline
     out
       .crossJoin(broadcast(out.where(col("excluded_source") === NoneTag)
         .select(col("accuracy").as("__fa"))))
@@ -651,9 +651,9 @@ object Classifier {
     require(holdoutFrac > 0 && holdoutFrac < 1, s"holdoutFrac: $holdoutFrac")
     val u = graft.text.Sampling.hashUnit(col(idCol), seed)
     val holdout = docs.where(u >= 1.0 - holdoutFrac)
-      .stableCheckpoint(eager = false) // feeds truth + the scoring pass
+      .checkpointed(eager = false) // feeds truth + the scoring pass
     val pool = docs.where(u < 1.0 - holdoutFrac)
-      .stableCheckpoint(eager = false)
+      .checkpointed(eager = false)
     val truth = holdout.select(col(idCol), col(labelCol).as("__truth"))
     val NoneTag = "(none)"
     import docs.sparkSession.implicits._

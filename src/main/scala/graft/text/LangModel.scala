@@ -1,6 +1,6 @@
 package graft.text
 
-import graft.StableCheckpoint._
+import graft.Checkpoint._
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -71,7 +71,7 @@ object LangModel {
     // is open-ended, so the checkpoint is LAZY: no Spark job runs at
     // construction time, materialization happens on the caller's first
     // action and is reused from there.
-    val counts = unigramCounts(ref, textCol).stableCheckpoint(eager = false)
+    val counts = unigramCounts(ref, textCol).checkpointed(eager = false)
     // ONE integer scalar row: total token mass T and vocab size V
     val stats = counts.agg(
       sum(col("__cnt")).as("__T"), count(lit(1)).as("__V"))
@@ -164,9 +164,9 @@ object LangModel {
     // table and its totals agg — materialize instead of re-running the
     // corpus shingle pipelines (see crossEntropy's counts note)
     val tCnt = bucketRows(target).groupBy("__b").agg(count(lit(1)).as("__ct"))
-      .stableCheckpoint()
+      .checkpointed(eager = true)
     val rCnt = bucketRows(raw).groupBy("__b").agg(count(lit(1)).as("__cr"))
-      .stableCheckpoint()
+      .checkpointed(eager = true)
     // ≤ `buckets` rows: the full smoothed ratio table, broadcastable by
     // construction (buckets absent from both corpora never join anyway —
     // their micro term would be ln(1)−ln(1) = 0, matching the coalesce)
@@ -228,7 +228,7 @@ object LangModel {
       .select(
         coalesce(col("__ca"), lit(0L)).as("__ca"),
         coalesce(col("__cb"), lit(0L)).as("__cb"))
-      .stableCheckpoint(eager = false)
+      .checkpointed(eager = false)
     val stats = joined.agg(
       count(lit(1)).as("__V"),
       sum(col("__ca")).as("__Na"),

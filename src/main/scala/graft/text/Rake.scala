@@ -1,6 +1,6 @@
 package graft.text
 
-import graft.StableCheckpoint._
+import graft.Checkpoint._
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
@@ -70,7 +70,7 @@ object Rake {
       .withColumn("__len",
         count(lit(1)).over(Window.partitionBy(col("__d"), col("__isl"))))
       .where(col("__len") <= maxPhraseLen)
-      .stableCheckpoint(eager = false) // feeds word stats AND phrases
+      .checkpointed(eager = false) // feeds word stats AND phrases
     val wordScores = tokens
       .groupBy(col("__w"))
       .agg(count(lit(1)).as("__freq"), sum(col("__len")).as("__deg"))

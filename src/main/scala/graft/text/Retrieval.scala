@@ -1,6 +1,6 @@
 package graft.text
 
-import graft.StableCheckpoint._
+import graft.Checkpoint._
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -58,7 +58,7 @@ object Retrieval {
     tokenized.select(
       col(idCol) +: size(col("__w")).cast("long").as("__dl") +:
         queryTerms.zipWithIndex.map { case (t, i) => tf(t).as(s"__tf$i") }: _*)
-      .stableCheckpoint(eager = false)
+      .checkpointed(eager = false)
   }
 
   /** Top-k documents by BM25 score for `queryTerms` (matched against
@@ -227,7 +227,7 @@ object Retrieval {
       .where(col("term") =!= "")
       .groupBy(col(idCol), col("term"))
       .agg(count(lit(1)).as("tf"))
-      .stableCheckpoint(eager = false)
+      .checkpointed(eager = false)
     val df = tf.groupBy(col("term"))
       .agg(count(lit(1)).as("df"))
       .where(col("df") >= minDf)

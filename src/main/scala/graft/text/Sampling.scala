@@ -1,6 +1,6 @@
 package graft.text
 
-import graft.StableCheckpoint._
+import graft.Checkpoint._
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -436,7 +436,7 @@ object Sampling {
       .groupBy(col(rowDim).as("row_val"), col(colDim).as("col_val"))
       .agg(count(lit(1)).as("n"))
       .withColumn("__m", col("n") * 1000000L)
-      .stableCheckpoint(eager = false) // each pass re-reads the last
+      .checkpointed(eager = false) // each pass re-reads the last
     val dims = cells.agg(
       sum(col("n")).as("__N"),
       countDistinct(col("row_val")).as("__R"),
@@ -455,7 +455,7 @@ object Sampling {
     }
     for (_ <- 1 to iterations)
       cells = scaleTo(scaleTo(cells, "row_val", "__R"), "col_val", "__C")
-        .stableCheckpoint(eager = false)
+        .checkpointed(eager = false)
     cells
       .crossJoin(broadcast(dims))
       .select(
@@ -518,7 +518,7 @@ object Sampling {
         vocab, substring(col("word"), 1, 2), col("word"),
         Seq("__hi" -> "__wq"))
       .withColumn("__lo", col("__hi") - col("__wq"))
-      .stableCheckpoint(eager = false) // feeds the total AND the melt
+      .checkpointed(eager = false) // feeds the total AND the melt
     val tot = cum.agg(max(col("__hi")).as("__W"))
     val bw = greatest(lit(1L), call_function("div", col("__W"), lit(buckets.toLong)))
     val slotted = cum
@@ -579,7 +579,7 @@ object Sampling {
       .withColumn("pos_in_band", row_number()
         .over(Window.partitionBy(col("band")).orderBy(col(idCol)))
         .cast("long"))
-      .stableCheckpoint(eager = false) // sizes probe + rank join share it
+      .checkpointed(eager = false) // sizes probe + rank join share it
     val sizes = banded.groupBy(col("band").as("__b"))
       .agg(count(lit(1)).as("__s"))
     // per-doc fan-out to every band index, then a band-key EQUI-join

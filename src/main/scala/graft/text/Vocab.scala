@@ -1,6 +1,6 @@
 package graft.text
 
-import graft.StableCheckpoint._
+import graft.Checkpoint._
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -103,7 +103,7 @@ object Vocab {
       .select(split(col("__s"), " ").getItem(0).as("l"),
         split(col("__s"), " ").getItem(1).as("r"))
       .groupBy(col("l"), col("r")).agg(count(lit(1)).as("pair_cnt"))
-      .stableCheckpoint(eager = false)
+      .checkpointed(eager = false)
     val big = bigAll.where(col("pair_cnt") >= minCount)
     val totals = uni.agg(sum(col("__cu")).as("__Nu"))
       .crossJoin(bigAll.agg(sum(col("pair_cnt")).as("__Nb")))
@@ -167,7 +167,7 @@ object Vocab {
       throw new ParameterError(s"fractions must be in (0, 1]: $fractions")
     val u = Sampling.hashUnit(col(idCol), seed)
     val toks = words(docs, idCol, textCol).withColumn("__u", u)
-      .stableCheckpoint(eager = false) // feeds the type AND token aggs
+      .checkpointed(eager = false) // feeds the type AND token aggs
     // per word: the smallest doc-hash that carries it into a sample
     val perWord = toks.groupBy(col("__s"))
       .agg(min(col("__u")).as("__umin"))

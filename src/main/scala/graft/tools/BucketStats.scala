@@ -1,4 +1,5 @@
 package graft.tools
+import graft.Checkpoint._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 /** One-off diagnostic: band-bucket occupancy of the banded simhash path
@@ -15,7 +16,7 @@ object BucketStats {
     val fp = DedupBench.sparseCorpus(spark, n)
       .select(col("doc_id"),
         graft.functions.SimHash.simhashNative(col("text"), 64).as("fp"))
-      .localCheckpoint(true)
+      .checkpointed(eager = true, keepAqe = true)
     def stats(name: String, keys: Seq[org.apache.spark.sql.Column]): Unit = {
       val b = fp.select(col("doc_id"), posexplode(array(keys: _*)).as(Seq("band", "key")))
         .groupBy("band", "key").agg(count(lit(1)).as("c"))

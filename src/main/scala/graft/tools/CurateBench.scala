@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.Checkpoint._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -11,7 +12,7 @@ import graft.text.{Packing, Sampling, TextAnalysis}
   * 5-gram decontamination against an eval slice → quality × weight
   * token budget → 512-token sequence packing — over [[DedupBench]]'s
   * sparse corpus (10% of docs in true 10-doc dup clusters) at growing
-  * sizes, all under one CheckpointScope per run.
+  * sizes, all in one `Checkpoint.scoped` body per run.
   *
   * What the rows prove: the composed cost is the SUM of the stage
   * costs (no recompute across stages — each shared frame is
@@ -30,7 +31,7 @@ object CurateBench {
       val docs = DedupBench.sparseCorpus(spark, n)
       docs.count() // warm generation
       val t0 = System.nanoTime()
-      val packed = graft.CheckpointScope.scoped(spark) { scope =>
+      val packed = graft.Checkpoint.scoped(spark) {
         val clusters = Dedup.duplicateClusters(
           Dedup.nearDuplicates(docs, threshold = 0.5))
         val weights = Dedup.softDedupWeights(docs, clusters)
@@ -38,8 +39,7 @@ object CurateBench {
         val clean = Dedup.decontaminateExact(
           docs.where(col("doc_id") >= 1000),
           docs.where(col("doc_id") < 1000), n = 5)
-        val scored = scope.checkpoint(
-          clean.join(weights, Seq("doc_id")), eager = true)
+        val scored = clean.join(weights, Seq("doc_id")).checkpointed(eager = true)
         val kept = Sampling.selectByTokenBudget(scored, "doc_id",
           TextAnalysis.qualityScore(col("text")) * col("weight"),
           TextAnalysis.tokenCount(col("text")), budget = n * 10)

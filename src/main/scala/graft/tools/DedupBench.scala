@@ -115,7 +115,7 @@ object DedupBench {
       // r10 ladder found a wall-dominating single task at 1M docs and
       // this row pair attributes it (candidates+verify vs clustering)
       time(s"dup clusters sparse (CC stage)") {
-        graft.CheckpointScope.scoped(spark) { _ =>
+        graft.Checkpoint.scoped(spark) {
           Dedup.duplicateClusters(
             Dedup.nearDuplicates(sparseCorpus(spark, n), threshold = 0.5))
         }.count()
@@ -207,7 +207,7 @@ object DedupBench {
       time(s"er1 entities (pairs->CC->survivor)") {
         val d = sparseCorpus(spark, n)
           .withColumn("n_chars", length(col("text")))
-        graft.CheckpointScope.scoped(spark) { _ =>
+        graft.Checkpoint.scoped(spark) {
           val pairs = graft.dedup.SetJoin.prefixFilterJoin(d, theta = 0.5)
             .select(col("doc_a").as("id_a"), col("doc_b").as("id_b"))
           val labels = Dedup.duplicateClusters(pairs)

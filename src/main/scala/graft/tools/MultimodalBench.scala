@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.StableCheckpoint._
+import graft.Checkpoint._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -44,7 +44,7 @@ object MultimodalBench {
 
     val sizes = if (args.isEmpty) Seq(100000L, 500000L) else args.toSeq.map(_.toLong)
     sizes.foreach { n =>
-      val fx = fixtures(spark, n).stableCheckpoint() // encode once, time decode alone
+      val fx = fixtures(spark, n).checkpointed(eager = true) // encode once, time decode alone
       val (rows, tDecode) = time(Multimodal.imageContent(fx)
         .agg(sum(col("sum_r"))).collect()(0).getLong(0))
       val (_, tResize) = time(Multimodal.resizeImageContent(fx, 16, 8)
@@ -55,7 +55,7 @@ object MultimodalBench {
       // exact amplitude sums; the corrupt frame reuses the same junk
       // payloads (the decoder must reject them as nulls, not throw)
       val wav = Multimodal.wavFixture(
-        spark.range(n).select(col("id").as("media_id"))).stableCheckpoint()
+        spark.range(n).select(col("id").as("media_id"))).checkpointed(eager = true)
       val (wsum, tWav) = time(Multimodal.wavContent(wav)
         .agg(sum(col("sum_sq"))).collect()(0).getLong(0))
       val (wavNull, tWavCorrupt) = time(

@@ -32,7 +32,7 @@ object PlanTime {
       }
 
     import graft.dedup.Dedup
-    import graft.StableCheckpoint._
+    import graft.Checkpoint._
     def t(name: String)(body: => Any): Unit = (1 to 3).foreach { i =>
       val t0 = System.nanoTime()
       body
@@ -66,14 +66,14 @@ object PlanTime {
       println(f"[synth] rep$i ${(System.nanoTime() - t0) / 1e6}%8.1f ms ($c)")
     }
     t("cands construction") { Dedup.minhashCandidates(docs) }
-    t("cands stableCheckpoint(lazy)") {
-      Dedup.minhashCandidates(docs).stableCheckpoint(eager = false)
+    t("cands checkpointed(lazy)") {
+      Dedup.minhashCandidates(docs).checkpointed(eager = false)
     }
     t("nearDuplicates full construction") {
       Dedup.nearDuplicates(docs, threshold = 0.5)
     }
     // piecewise replication of nearDuplicates internals
-    val cands = Dedup.minhashCandidates(docs).stableCheckpoint(eager = false)
+    val cands = Dedup.minhashCandidates(docs).checkpointed(eager = false)
     t("candIds+pruned") {
       val candIds = cands.select(col("id_a").as("doc_id"))
         .union(cands.select(col("id_b").as("doc_id"))).distinct()
@@ -85,8 +85,8 @@ object PlanTime {
     val shPre = pruned.select(col("doc_id"),
       graft.functions.MinHashShingles.shingleArrayNative(col("text"), 3).as("__sh"))
       .repartition(col("doc_id"))
-    t("sh stableCheckpoint(lazy)") { shPre.stableCheckpoint(eager = false) }
-    val sh = shPre.stableCheckpoint(eager = false)
+    t("sh checkpointed(lazy)") { shPre.checkpointed(eager = false) }
+    val sh = shPre.checkpointed(eager = false)
       .observe("neardup_verify_x", count(lit(1)).as("docs_shingled"))
     t("verify joins construction") {
       cands

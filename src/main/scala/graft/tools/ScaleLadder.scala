@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.Checkpoint._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -81,13 +82,13 @@ object ScaleLadder {
     def sparseDocs(n: Long): DataFrame =
       DedupBench.sparseCorpus(spark, n)
         .withColumn("n_chars", length(col("text")).cast("long"))
-        .localCheckpoint(true) // input generation off the clock
+        .checkpointed(eager = true, keepAqe = true) // input generation off the clock
 
     // -- pipeline_curate / pipeline_dedup over the sparse dup corpus --
     for (n <- Seq(100000L, 1000000L)) {
       if (wanted("pipeline_dedup", "pipeline_curate")) {
         val docs = sparseDocs(n)
-        run("pipeline_dedup", n, graft.CheckpointScope.scoped(spark) { _ =>
+        run("pipeline_dedup", n, graft.Checkpoint.scoped(spark) {
           val clusters = Dedup.duplicateClusters(
             Dedup.nearDuplicates(docs, threshold = 0.5))
           val label = coalesce(col("cluster"), col("doc_id"))
@@ -97,7 +98,7 @@ object ScaleLadder {
             .select(col("doc_id"), label.as("cluster"),
               (label === col("doc_id")).as("survivor"))
         })
-        run("pipeline_curate", n, graft.CheckpointScope.scoped(spark) { scope =>
+        run("pipeline_curate", n, graft.Checkpoint.scoped(spark) {
           val clusters = Dedup.duplicateClusters(
             Dedup.nearDuplicates(docs, threshold = 0.5))
           val weights = Dedup.softDedupWeights(docs, clusters)
@@ -105,8 +106,7 @@ object ScaleLadder {
           val clean = Dedup.decontaminateExact(
             docs.where(col("doc_id") >= 1000),
             docs.where(col("doc_id") < 1000), n = 5)
-          val scored = scope.checkpoint(
-            clean.join(weights, Seq("doc_id")), eager = true)
+          val scored = clean.join(weights, Seq("doc_id")).checkpointed(eager = true)
           val kept = Sampling.selectByTokenBudget(scored, "doc_id",
             TextAnalysis.qualityScore(col("text")) * col("weight"),
             TextAnalysis.tokenCount(col("text")), budget = n * 10)
@@ -119,7 +119,7 @@ object ScaleLadder {
       // min-label components → survivorship (the ppj1 join IS stage 1)
       if (wanted("er1_prefix_er")) {
         val half = sparseDocs(n / 2)
-        run("er1_prefix_er", n / 2, graft.CheckpointScope.scoped(spark) { _ =>
+        run("er1_prefix_er", n / 2, graft.Checkpoint.scoped(spark) {
           val pairs = graft.dedup.SetJoin
             .prefixFilterJoin(half, theta = 0.5)
             .select(col("doc_a").as("id_a"), col("doc_b").as("id_b"))
@@ -140,7 +140,7 @@ object ScaleLadder {
     // -- gr11: LPA(3) + modularity over the caveman graph --
     if (wanted("gr11_modularity")) {
       for (nodes <- Seq(50000L, 500000L)) {
-        val edges = cavemanEdges(spark, nodes).localCheckpoint(true)
+        val edges = cavemanEdges(spark, nodes).checkpointed(eager = true, keepAqe = true)
         run("gr11_modularity", nodes,
           graft.graph.PageRank.modularity(
             edges, graft.graph.PageRank.labelPropagation(edges, iterations = 3)))

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.Checkpoint._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -66,7 +67,7 @@ object ScoreBench {
     }
 
     sizes.foreach { n =>
-      val preds = scored(spark, n).localCheckpoint(true) // input off the clock
+      val preds = scored(spark, n).checkpointed(eager = true, keepAqe = true) // input off the clock
       implicit val keep: Set[Int] =
         spark.sparkContext.getPersistentRDDs.keySet.toSet
       println(s"[scorebench] n=$n distinct-scores≈" +

@@ -1,4 +1,5 @@
 package graft.tools
+import graft.Checkpoint._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.text.TextAnalysis
@@ -15,7 +16,7 @@ object TtrMicro {
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val n = if (args.nonEmpty) args(0).toLong else 50000L
-    val docs = DedupBench.corpus(spark, n).localCheckpoint(true)
+    val docs = DedupBench.corpus(spark, n).checkpointed(eager = true, keepAqe = true)
     def t(name: String)(c: org.apache.spark.sql.Column): Unit = {
       val t0 = System.nanoTime()
       docs.select(c.as("x")).agg(sum(col("x"))).head()

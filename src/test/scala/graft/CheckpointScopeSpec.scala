@@ -2,7 +2,9 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** CheckpointScope: composed pipelines release their intermediates'
+import graft.Checkpoint._
+
+/** Checkpoint.scoped: composed pipelines release their intermediates'
   * block-manager state at scope exit (the round-5 finding: 54
   * localCheckpoint sites and zero unpersists meant long sessions
   * accumulated blocks until GC + ContextCleaner caught up, inflating
@@ -16,9 +18,9 @@ class CheckpointScopeSpec extends SparkSpec {
   test("scoped releases scope-tracked AND bare library checkpoints, " +
     "keeps only the self-contained result, which stays readable") {
     val before = persistedIds
-    val out = CheckpointScope.scoped(spark) { scope =>
-      val base = scope.checkpoint(
-        Seq(1, 2, 3, 4).toDF("x").withColumn("y", col("x") * 2))
+    val out = Checkpoint.scoped(spark) {
+      val base = Seq(1, 2, 3, 4).toDF("x").withColumn("y", col("x") * 2)
+        .checkpointed(eager = false)
       // a bare localCheckpoint, as inside a library call the body composes
       val side = Seq(3, 4, 5).toDF("x").localCheckpoint(false)
       base.join(side, "x").agg(sum(col("y")).as("s"))
@@ -39,8 +41,8 @@ class CheckpointScopeSpec extends SparkSpec {
   test("a throwing body leaks nothing") {
     val before = persistedIds
     intercept[RuntimeException] {
-      CheckpointScope.scoped(spark) { scope =>
-        scope.checkpoint(Seq(1, 2).toDF("x")).count()
+      Checkpoint.scoped(spark) {
+        Seq(1, 2).toDF("x").checkpointed(eager = false).count()
         throw new RuntimeException("boom")
       }
     }

@@ -13,7 +13,7 @@ import org.apache.spark.sql.execution.window.WindowExecBase
   * every unpartitioned window — in the FINAL plan, in any SUBQUERY, or
   * in any CHECKPOINTED SEGMENT (checkpoints truncate published plans to
   * ExistingRDD scans, so segments are observed via
-  * [[StableCheckpoint.planProbe]]) — must be either:
+  * [[Checkpoint.planProbe]]) — must be either:
   *
   *  - the PrefixSum bucket-offsets scan itself (ordering on `__psb`:
   *    occupied buckets, ≤ targetBuckets by construction), recognized
@@ -127,7 +127,7 @@ class WindowPlanSpec extends SparkSpec {
     val aqeWas = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     val segmentHits = scala.collection.mutable.ArrayBuffer.empty[String]
-    StableCheckpoint.planProbe = p => segmentHits ++= unpartitioned(p)
+    Checkpoint.planProbe = p => segmentHits ++= unpartitioned(p)
     try {
       val findings = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
         case (name, fn) =>
@@ -151,7 +151,7 @@ class WindowPlanSpec extends SparkSpec {
       }
       assert(findings.isEmpty, s"\n${findings.mkString("\n")}")
     } finally {
-      StableCheckpoint.planProbe = _ => ()
+      Checkpoint.planProbe = _ => ()
       spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
     }
   }
@@ -161,7 +161,7 @@ class WindowPlanSpec extends SparkSpec {
     "checkpoint") {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
-    import graft.StableCheckpoint._
+    import graft.Checkpoint._
     val aqeWas = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
@@ -174,9 +174,9 @@ class WindowPlanSpec extends SparkSpec {
       // below a checkpoint: the published plan is an ExistingRDD scan,
       // only the segment probe can see the window
       val segmentHits = scala.collection.mutable.ArrayBuffer.empty[String]
-      StableCheckpoint.planProbe = p => segmentHits ++= unpartitioned(p)
-      val ck = try bad.stableCheckpoint(eager = false)
-      finally StableCheckpoint.planProbe = _ => ()
+      Checkpoint.planProbe = p => segmentHits ++= unpartitioned(p)
+      val ck = try bad.checkpointed(eager = false)
+      finally Checkpoint.planProbe = _ => ()
       assert(unpartitioned(ck.queryExecution.executedPlan).isEmpty,
         "the checkpoint should have truncated the published plan")
       assert(segmentHits.nonEmpty,
