@@ -234,8 +234,9 @@ object Intervals {
     val wB = ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     // the FORWARD carry as a prefix frame over the REVERSED sort:
     // Spark recomputes currentRow→unboundedFollowing frames from
-    // scratch per row — quadratic on a hot key (the EventsBench bot
-    // shape never finished); the reversed prefix is O(n)-incremental
+    // scratch per row — quadratic on a hot key (a 1M-event single-user
+    // log ran >17 min without finishing, BASELINE.md "Round-7
+    // EventsBench rows"); the reversed prefix is O(n)-incremental
     // and frame-identical (desc (__tm, __side) prefix excludes
     // equal-ts right rows exactly as the asc suffix did)
     val ordR = Window.partitionBy(keyCols.map(col): _*)

@@ -52,8 +52,9 @@ object Panel {
     /** [[bySid]] with the ordering REVERSED — a prefix frame over it is
       * the O(n)-incremental way to express a suffix carry (Spark
       * recomputes current-row→unbounded-FOLLOWING frames from scratch
-      * per row: quadratic on a hot partition — the EventsBench bot
-      * finding). */
+      * per row: quadratic on a hot partition — a 1M-event single-user
+      * log ran >17 min without finishing, BASELINE.md "Round-7
+      * EventsBench rows"). */
     def bySidDesc: WindowSpec =
       Window.partitionBy((group :+ sid).map(col): _*)
         .orderBy(order.map(c => col(c).desc): _*)

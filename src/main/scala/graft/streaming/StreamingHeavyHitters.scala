@@ -70,10 +70,11 @@ object StreamingHeavyHitters {
     * Uses the paper's Stream-Summary structure: entries grouped into
     * count buckets (a TreeMap over ≤ capacity+1 distinct counts, each
     * an insertion-ordered key set), so increment and eviction are
-    * O(log buckets) instead of the naive O(capacity) min scan — the
-    * StreamStateBench tail-churn workload (nearly every arrival
-    * evicting) measured 4.16 M arrivals/s vs 51 k/s (82×). Eviction takes the OLDEST entry at the minimum count —
-    * deterministic for a given arrival order. */
+    * O(log buckets) instead of the naive O(capacity) min scan — a
+    * tail-churn workload (nearly every arrival evicting) measured
+    * 4.16 M arrivals/s vs 51 k/s (82×), BASELINE.md "StreamStateBench
+    * heavy-hitters row". Eviction takes the OLDEST entry at the
+    * minimum count — deterministic for a given arrival order. */
   private[graft] def summarize(
       capacity: Int, minCount: Long, stateTtl: Option[String] = None)(
       shard: Int,

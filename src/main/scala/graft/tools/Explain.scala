@@ -1,21 +1,19 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection main: prints formatted physical plans for the
-  * headline queries so shuffle/pushdown regressions are visible. */
+  * headline queries so shuffle/pushdown regressions are visible.
+  *
+  * Usage: runMain graft.tools.Explain [--no-broadcast] [query ...]
+  * against the tables in SPARK_GRAFT_SF_DIR (default: the sf0.01 tier). */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = LocalIo.session("4").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // --no-broadcast simulates the at-scale plan where no side fits in a
     // broadcast (shuffled joins, exchange reuse) — plans differ at sf0.01.
     if (args.contains("--no-broadcast"))
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", -1)
-    val dir = "/root/testdata/sf0.01"
+    val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val names = if (args.filterNot(_.startsWith("--")).nonEmpty)
       args.filterNot(_.startsWith("--")).toSeq
       else Seq("s1_scan_pushdown", "backtest_pipeline", "j1_broadcast_join", "d1_equal_weights")

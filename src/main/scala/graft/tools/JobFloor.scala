@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scratch probe: the fixed per-JOB and per-STAGE overhead of local
@@ -10,11 +9,7 @@ import org.apache.spark.sql.functions._
 object JobFloor {
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-    LocalIo.tune(builder)
+    val builder = LocalIo.session(cpus)
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.contains("="))
       .foreach { kv => val Array(k, v) = kv.split("=", 2); builder.config(k, v) })
     val spark = builder.getOrCreate()

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.panel.Panel
@@ -13,15 +13,7 @@ import graft.pipeline.{Backtest, Strategy}
   * the sink never confounds (guide 1.4). */
 object MeltProbe {
   def main(args: Array[String]): Unit = {
-    val builder = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-    LocalIo.tune(builder)
-    val spark = builder.getOrCreate()
+    val spark = LocalIo.session("32").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 

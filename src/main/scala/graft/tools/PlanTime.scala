@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scratch diagnostic (not part of the library surface): times Catalyst
@@ -8,11 +8,7 @@ import org.apache.spark.sql.functions._
   * planning cost (the r12 finding: dd-family reps are planning-bound). */
 object PlanTime {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = LocalIo.session("32").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val docs = spark.read.parquet(s"$dir/documents.parquet")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 
 /** Scratch profiling main (not part of the library surface): times the
@@ -10,14 +9,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
   * counter is the first diagnostic for any slow row. */
 object Profile {
   def main(args: Array[String]): Unit = {
-    val builder = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-    LocalIo.tune(builder) // match Bench's shuffle-scratch tuning
+    val builder = LocalIo.session("32")
     // A/B conf overrides: SPARK_GRAFT_CONF="k=v;k2=v2"
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.contains("="))
       .foreach { kv =>

@@ -32,6 +32,8 @@ import org.apache.spark.sql.functions._
   *  - nation/region: bounded dims, copied as-is.
   *
   * Usage: runMain graft.tools.Sf1Tier [src] [dst] [only=substr]
+  * The driver heap is the forked JVM's -Xmx (SPARK_DRIVER_MEM, read by
+  * build.sbt's javaOptions).
   */
 object Sf1Tier {
 
@@ -132,14 +134,7 @@ object Sf1Tier {
     val only = args.collectFirst { case a if a.startsWith("only=") => a.drop(5) }
     val src = if (plain.length > 0) plain(0) else "/root/testdata/sf0.1"
     val dst = if (plain.length > 1) plain(1) else "/tmp/graft_sf1"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.driver.memory", "16g")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = LocalIo.session("32").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     synthesize(spark, src, dst)
 

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scratch probe: fixed per-stage overhead of tiny shuffles in local
@@ -8,10 +7,7 @@ import org.apache.spark.sql.functions._
 object SynthBench {
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
+    val builder = LocalIo.session(cpus)
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.contains("="))
       .foreach { kv => val Array(k, v) = kv.split("=", 2); builder.config(k, v) })
     val spark = builder.getOrCreate()

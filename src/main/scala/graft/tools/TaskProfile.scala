@@ -1,26 +1,21 @@
 package graft.tools
 
-import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
-
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
-/** Longest-single-task probe for the scale benches: at 100 TB the
+/** Longest-single-task probe for the profiling mains: at 100 TB the
   * failure mode row-level gates can't see is ONE task holding the whole
   * stage (a single-task window, a hot key, an unsplittable collect) —
-  * so every bench row reports, next to wall seconds, the longest task
-  * it ran and the stage it belonged to. A flat profile (max task ≪
-  * wall) is the scale evidence; one dominant task is exactly the bug
-  * (the ScoreBench discipline, shared here so every tool reports it
-  * the same way). */
+  * so a profiled run reports, per stage, the longest task next to the
+  * task count and mean. A flat profile (max task ≪ wall) is the scale
+  * evidence; one dominant task is exactly the bug (shared here so every
+  * tool reports it the same way). */
 final class TaskProfile private (spark: SparkSession) {
-  private val maxTaskMs = new AtomicLong(0)
-  private val maxStage = new AtomicReference[String]("")
   private val stageNames = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-  // per-stage (max task ms, task count, total task ms) — the
-  // attribution detail behind the headline max: a dominant task is only
-  // actionable once you know WHICH stage, and whether it was SKEW (one
-  // long task among short siblings) or a balanced-but-slow stage
+  // per-stage (max task ms, task count, total task ms): a dominant task
+  // is only actionable once you know WHICH stage, and whether it was
+  // SKEW (one long task among short siblings) or a balanced-but-slow
+  // stage
   private val stageStats =
     new java.util.concurrent.ConcurrentHashMap[Int, (Long, Long, Long)]()
 
@@ -31,16 +26,10 @@ final class TaskProfile private (spark: SparkSession) {
       val d = Option(te.taskInfo).map(_.duration).getOrElse(0L)
       stageStats.merge(te.stageId, (d, 1L, d), { case ((m, n, t), _) =>
         (math.max(m, d), n + 1, t + d) })
-      if (d > maxTaskMs.get) {
-        maxTaskMs.set(d)
-        maxStage.set(stageNames.getOrDefault(te.stageId, "?"))
-      }
     }
   })
 
-  def reset(): Unit = { maxTaskMs.set(0); stageStats.clear() }
-  /** (longest task ms, owning stage name) since the last [[reset]]. */
-  def snapshot: (Long, String) = (maxTaskMs.get, maxStage.get)
+  def reset(): Unit = stageStats.clear()
   /** The k stages with the longest single task since [[reset]],
     * `(stage name#id, max task ms, task count, mean task ms)`,
     * descending by max task — max ≫ mean with many tasks is skew; max ≈

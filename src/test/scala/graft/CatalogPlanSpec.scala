@@ -174,6 +174,18 @@ class CatalogPlanSpec extends SparkSpec {
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
     }
   }
+
+  test("the driver's entry smoke: SparkEntry.entry returns rows") {
+    try assert(SparkEntry.entry(spark).count() > 0)
+    finally spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+  }
+
+  test("every catalog query has an oracle and every oracle a query") {
+    val queries = SparkEntry.queries.keySet
+    val oracles = SparkEntry.oracleSql.keySet
+    assert((queries -- oracles).isEmpty, "queries missing an oracle")
+    assert((oracles -- queries).isEmpty, "oracles without a query")
+  }
 }
 
 /** Shuffle-exchange budgets for the hottest catalog pipelines. An

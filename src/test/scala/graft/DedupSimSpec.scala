@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.dedup.Dedup
@@ -187,7 +188,7 @@ class DedupSimSpec extends SparkSpec {
 
   test("simhashNearPairs at the 64-bit/8-band default equals the " +
     "brute-force hamming filter (pigeonhole completeness)") {
-    val corpus = graft.tools.DedupBench.corpus(spark, 100)
+    val corpus = DedupSimSpec.corpus(spark, 100)
     val fp = Dedup.simhashDf(corpus) // 64-bit default
     val brute = fp.as("a").crossJoin(fp.as("b"))
       .where($"a.doc_id" < $"b.doc_id" &&
@@ -203,7 +204,7 @@ class DedupSimSpec extends SparkSpec {
 
   test("simhashNearPairsBlocked (Manku 56-table, 40-bit keys) equals " +
     "the brute-force hamming filter AND the banded path at hamming 3") {
-    val corpus = graft.tools.DedupBench.corpus(spark, 100)
+    val corpus = DedupSimSpec.corpus(spark, 100)
     val fp = Dedup.simhashDf(corpus)
     val brute = fp.as("a").crossJoin(fp.as("b"))
       .where($"a.doc_id" < $"b.doc_id" &&
@@ -1097,5 +1098,28 @@ class DedupSimSpec extends SparkSpec {
     byCluster.foreach { case (c, members) =>
       assert(members.map(_._1).min == c, s"cluster $c is not the min id")
     }
+  }
+}
+
+object DedupSimSpec {
+
+  /** Group-seed vocabulary modulus. Must exceed any doc count used:
+    * two group seeds congruent mod the vocabulary share ALL 48 core
+    * words, so a modulus below n (the old 99991 at 1 M docs) welds
+    * "unique" docs into accidental clusters. */
+  private val Vocab = 2147483629L // prime
+
+  /** 50-word docs; doc groups of 10 share the first 48 words (derived
+    * from the group seed over a [[Vocab]]-word vocabulary, so distinct
+    * groups stay distinct), the last 2 words are per-doc perturbations.
+    * Every group is a true near-duplicate cluster of exactly 10. */
+  def corpus(spark: SparkSession, n: Long): DataFrame = {
+    val id = col("id")
+    val group = id - pmod(id, lit(10L))
+    val words =
+      (0 until 48).map(i =>
+        concat(lit("w"), pmod(group * 4099 + lit(i * i * 7 + i), lit(Vocab)))) ++
+        (48 until 50).map(i => concat(lit("w"), pmod(id * 17 + lit(i * 13), lit(997))))
+    spark.range(n).select(id.as("doc_id"), concat_ws(" ", words: _*).as("text"))
   }
 }
