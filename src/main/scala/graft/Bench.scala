@@ -9,7 +9,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = graft.tools.LocalIo.session(cpus).getOrCreate()
-    // ERROR, not WARN: releaseState()'s unpersist of localCheckpointed
+    // ERROR, not WARN: LocalIo.releaseState's unpersist of localCheckpointed
     // RDDs emits one WARN per RDD; over a 428-query run that floods the
     // driver's stdout capture window and has truncated the round bench
     // artifact four rounds running.
@@ -68,16 +68,6 @@ object Bench {
     val selected =
       if (args.isEmpty) SparkEntry.queries
       else SparkEntry.queries.filter { case (n, _) => args.contains(n) }
-    // Release session state accumulated by a query — localCheckpointed
-    // RDDs register in getPersistentRDDs and are otherwise freed only
-    // when the GC + async ContextCleaner catch up. Without this, block-
-    // manager pressure from a 289-query run inflated mid-run queries
-    // 4-9× vs their fresh-session cost (round-5 verdict): the bench was
-    // measuring leaked state, not plans.
-    def releaseState(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      spark.catalog.clearCache()
-    }
     // Per-query MIN over n repeats (median kept alongside): host-load
     // noise documented at 244-408 s on identical code otherwise
     // contaminates round-over-round comparisons. The min is the
@@ -156,7 +146,7 @@ object Bench {
             System.err.println(
               s"[bench] control sample failed at ${done.size}: ${e.getClass.getSimpleName}")
         }
-        releaseState()
+        graft.tools.LocalIo.releaseState(spark)
       }
     selected.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       if (done.size % controlEvery == 0) sampleControl()
@@ -169,7 +159,7 @@ object Bench {
         catch { case e: Throwable =>
           err = Some(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(200)}")
         }
-        releaseState()
+        graft.tools.LocalIo.releaseState(spark)
         rep += 1
       }
       val sortedT = times.sorted

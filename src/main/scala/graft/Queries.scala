@@ -482,12 +482,10 @@ object Queries {
       val flagStats = li.groupBy(col("l_returnflag"))
         .agg(sum(cents(col("l_extendedprice"))).as("flag_cents"),
           count(lit(1)).as("flag_n"))
-      graft.panel.Salted.saltedJoin(
+      graft.panel.Skew.saltedJoin(
         li.select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"),
-          cents(col("l_extendedprice")).as("price_cents"))
-          .withColumn("__rid",
-            col("l_orderkey") * 10 + col("l_linenumber")),
-        flagStats, key = "l_returnflag", rowIdCol = "__rid", salts = 32)
+          cents(col("l_extendedprice")).as("price_cents")),
+        flagStats, key = "l_returnflag", salts = 32)
         .groupBy(col("l_returnflag"))
         .agg(count(lit(1)).as("n"),
           sum(col("price_cents") * col("flag_n") - col("flag_cents"))

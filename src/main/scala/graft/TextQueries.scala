@@ -21,10 +21,6 @@ object TextQueries {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
 
-  /** Scratch dir for queries that publish-and-read-back — the shared
-    * [[Queries.tempDir]] (removed recursively at JVM exit). */
-  private def tempDir(prefix: String): String = Queries.tempDir(prefix)
-
   /** The sim7/sim8 shared index fixture: label-seeded centroids and the
     * 8×8-dim sub-codebook from the 8 lowest-id embeddings — ONE recipe,
     * so the "sim8 is result-identical to sim7" invariant (they share an
@@ -809,7 +805,7 @@ object TextQueries {
     "dd18_incremental" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       val indexed = docs.where(col("doc_id") < 400)
-      val ix = tempDir("graft_band_index")
+      val ix = Queries.tempDir("graft_band_index")
       Dedup.writeMinhashIndex(ix, indexed)
       Dedup.incrementalNearDuplicates(
         s, ix, docs.where(col("doc_id") >= 400), indexed, threshold = 0.5)
@@ -824,7 +820,7 @@ object TextQueries {
     // it to the same answer as running dd28 over the full corpus ----
     "dd29_incremental_simhash" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val ix = tempDir("graft_simhash_index")
+      val ix = Queries.tempDir("graft_simhash_index")
       Dedup.writeSimhashIndex(ix, docs.where(col("doc_id") < 400))
       Dedup.incrementalSimhashPairs(
         s, ix, docs.where(col("doc_id") >= 400), maxHamming = 3)
@@ -1474,7 +1470,7 @@ object TextQueries {
     "sim8_index_search" -> ((s, dir) => {
       val embs = t(s, dir, "embeddings")
       val (centroids, cb) = ivfFixture(embs)
-      val ix = tempDir("graft_ivf_index")
+      val ix = Queries.tempDir("graft_ivf_index")
       Similarity.writeIvfadcIndex(ix, embs, centroids, cb)
       Similarity.searchIvfadcIndex(s, ix, embs.where(col("vec_id") < 5), k = 5)
     }),
@@ -1530,7 +1526,7 @@ object TextQueries {
     // assignment + order-free content checksum
     "sh1_training_shards" -> ((s, dir) =>
       graft.text.Shards.writeTrainingShards(
-        t(s, dir, "documents"), tempDir("graft_shards"), shards = 16)),
+        t(s, dir, "documents"), Queries.tempDir("graft_shards"), shards = 16)),
 
     // ---- MM7: decompression-bomb adversarial — even doc_ids get their
     // IHDR width forged to 2^30 via binary overlay (a crafted crawl

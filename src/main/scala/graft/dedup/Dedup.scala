@@ -1,6 +1,6 @@
 package graft.dedup
 
-import graft.Parallelism
+import graft.{Buckets, Parallelism}
 import graft.Checkpoint._
 
 import org.apache.spark.sql.{Column, DataFrame}
@@ -187,36 +187,6 @@ object Dedup {
       (math.abs(p.crossover - threshold), -p.bands * p.rowsPerBand))
   }
 
-  /** Degenerate-bucket guard shared by the candidate generators. A
-    * bucket of m rows emits O(m²) pairs, so `maxBucket` bounds the
-    * in-bucket explosion — but a DROPPED bucket silently voids the
-    * generator's completeness claim: past the collision cliff (e.g.
-    * 8-bit banded simhash keys at 10M docs, where EVERY bucket
-    * overflows) the old drop returned a near-empty, correct-LOOKING
-    * pair set. Observe metrics proved to be dead letters for loudness
-    * (invisible unless the caller registers a listener, and erased
-    * outright by AQE empty-relation propagation in exactly the
-    * all-dropped case — the SetJoin r8 lesson), so the default is the
-    * house stance shared with prefixFilterJoin / hot-gram / ev17:
-    * RAISE on the first oversized bucket, riding the window count the
-    * filter already pays (zero extra jobs, nothing to forget to
-    * check). Callers that knowingly trade recall for fan-out opt in
-    * with `dropOversized = true`, which restores the lossy drop (still
-    * reported by each site's observe metric). */
-  private def guardBucket(
-      sized: DataFrame,
-      maxBucket: Int,
-      site: String,
-      hint: String,
-      dropOversized: Boolean): DataFrame =
-    if (dropOversized) sized.where(col("__n") <= maxBucket)
-    else sized.where(when(col("__n") > maxBucket, raise_error(concat(
-      lit(s"$site: a bucket of "), col("__n"),
-      lit(s" rows exceeds maxBucket=$maxBucket — dropping it would " +
-        s"silently lose candidate pairs; $hint, raise maxBucket, or " +
-        "pass dropOversized=true to accept the recall loss"))))
-      .otherwise(lit(true)))
-
   /** LSH candidate pairs: ids sharing any band bucket (deduplicated).
     *
     * Scale shape: the band signatures are melted to long
@@ -227,7 +197,7 @@ object Dedup {
     * O(m²) pairs, so one degenerate bucket (mass exact-duplicates fed in
     * without [[dropExactDuplicates]] first) concentrates the whole job in
     * one task. A bucket above the cap RAISES by default (see
-    * [[guardBucket]]); `dropOversized = true` drops it from candidate
+    * [[graft.Buckets]]); `dropOversized = true` drops it from candidate
     * generation instead — run exact dedup first if that loses recall
     * you need. The bucket-size check runs as a window count over the
     * same shuffle BEFORE collect_list, so an oversized bucket never
@@ -254,19 +224,27 @@ object Dedup {
     // Round 5: the melt comes straight from the native minhash_bands
     // expression — no shingle window, no signature aggregation.
     val melted = minhashMelted(docs, idCol, textCol, shingleSize, bands, rowsPerBand)
-    val sized = melted
-      .withColumn("__n", count(lit(1)).over(Window.partitionBy("__band", "__bk")))
-      .observe("minhash_buckets",
-        sum(when(col("__n") > maxBucket, 1L).otherwise(0L)).as("rows_in_overflow"),
-        max(col("__n")).as("max_bucket"))
-    guardBucket(sized, maxBucket, "minhashCandidates",
-      "run dropExactDuplicates first or widen rowsPerBand", dropOversized)
+    bandPairs(melted, idCol, maxBucket, Buckets.Metric("minhash_buckets"),
+      "minhashCandidates", dropOversized)
+  }
+
+  /** Candidate pairs (id_a < id_b) of a band melt (id, __band, __bk):
+    * the in-bucket pair generation shared by [[minhashCandidates]] and
+    * [[minhashJaccardEstimates]]. */
+  private def bandPairs(
+      melted: DataFrame,
+      idCol: String,
+      maxBucket: Int,
+      metric: Buckets.Metric,
+      site: String,
+      dropOversized: Boolean): DataFrame = {
+    val lists = Buckets.capped(melted, Seq("__band", "__bk"), maxBucket,
+      Buckets.Raise(site, "run dropExactDuplicates first or widen rowsPerBand")
+        .orDrop(dropOversized), Some(metric))
       .where(col("__n") > 1)
       .groupBy("__band", "__bk")
       .agg(collect_list(col(idCol)).as("__ids"))
-      .select(explode(col("__ids")).as("id_a"), col("__ids"))
-      .select(col("id_a"), explode(col("__ids")).as("id_b"))
-      .where(col("id_a") < col("id_b"))
+    Buckets.pairs(lists, "__ids", "id_a", "id_b")(_ < _)
       .select("id_a", "id_b")
       .distinct()
   }
@@ -310,21 +288,8 @@ object Dedup {
     }
     val melted = sig.select(
       col(idCol), posexplode(array(bandCols: _*)).as(Seq("__band", "__bk")))
-    val pairsSized = melted
-      .withColumn("__n", count(lit(1)).over(Window.partitionBy("__band", "__bk")))
-      .observe("minhash_est_buckets",
-        sum(when(col("__n") > maxBucket, 1L).otherwise(0L)).as("rows_in_overflow"),
-        max(col("__n")).as("max_bucket"))
-    val pairs = guardBucket(pairsSized, maxBucket, "minhashJaccardEstimates",
-      "run dropExactDuplicates first or widen rowsPerBand", dropOversized)
-      .where(col("__n") > 1)
-      .groupBy("__band", "__bk")
-      .agg(collect_list(col(idCol)).as("__ids"))
-      .select(explode(col("__ids")).as("id_a"), col("__ids"))
-      .select(col("id_a"), explode(col("__ids")).as("id_b"))
-      .where(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-      .distinct()
+    val pairs = bandPairs(melted, idCol, maxBucket,
+      Buckets.Metric("minhash_est_buckets"), "minhashJaccardEstimates", dropOversized)
     val a = sig.select(
       (col(idCol).as("id_a") +:
         (0 until numHashes).map(i => col(s"__mh$i").as(s"__a$i"))): _*)
@@ -526,21 +491,34 @@ object Dedup {
         .withColumn("__new", lit(true))
         .checkpointed(eager = false)
     val newKeys = neu.select("__band", "__bk").distinct()
-    val sized = idx.unionByName(neu)
+    val touched = idx.unionByName(neu)
       .join(newKeys.hint("broadcast"), Seq("__band", "__bk"), "left_semi")
-      .withColumn("__n", count(lit(1)).over(Window.partitionBy("__band", "__bk")))
-      .observe("incremental_buckets",
-        sum(when(col("__n") > maxBucket, 1L).otherwise(0L)).as("rows_in_overflow"),
-        max(col("__n")).as("max_bucket"))
-    guardBucket(sized, maxBucket, "incrementalCandidates",
-      "pre-dedup the batch or rebuild the index with wider rowsPerBand",
-      dropOversized)
+    batchPairs(touched, Seq("__band", "__bk"), idCol, maxBucket,
+      Buckets.Metric("incremental_buckets"),
+      Buckets.Raise("incrementalCandidates",
+        "pre-dedup the batch or rebuild the index with wider rowsPerBand")
+        .orDrop(dropOversized))
+  }
+
+  /** In-bucket pairs (id_a < id_b) of indexed ∪ batch rows (id, keys,
+    * __new) with at least one batch doc: the pair generation shared by
+    * [[incrementalCandidates]] and [[incrementalSimhashPairs]]. The
+    * predicate compares ids, never the (id, __new) structs, so a doc
+    * both indexed and in the batch never pairs with itself. */
+  private def batchPairs(
+      rows: DataFrame,
+      keys: Seq[String],
+      idCol: String,
+      maxBucket: Int,
+      metric: Buckets.Metric,
+      onOver: Buckets.OnOver): DataFrame = {
+    val lists = Buckets.capped(rows, keys, maxBucket, onOver, Some(metric))
       .where(col("__n") > 1)
-      .groupBy("__band", "__bk")
+      .groupBy(keys.map(col): _*)
       .agg(collect_list(struct(col(idCol).as("id"), col("__new"))).as("__ids"))
-      .select(explode(col("__ids")).as("a"), col("__ids"))
-      .select(col("a"), explode(col("__ids")).as("b"))
-      .where(col("a.id") < col("b.id") && (col("a.__new") || col("b.__new")))
+    Buckets.pairs(lists, "__ids", "a", "b") { (a, b) =>
+      a("id") < b("id") && (a("__new") || b("__new"))
+    }
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .distinct()
   }
@@ -622,34 +600,18 @@ object Dedup {
         .checkpointed(eager = false)
     val rm = melted(ref, "ref_id")
     val cm = melted(corpus, "corpus_id")
-    // degenerate-bucket guard (same stance as minhashCandidates'
-    // maxBucket): shared boilerplate can put m corpus × n ref docs into
-    // ONE (band, key) bucket, and the equi-join would emit m·n rows in
-    // a single task — a bucket exceeding maxBucket on EITHER side
-    // RAISES by default (a pruned bucket silently loses every
-    // contamination match that sat in it — the guardBucket stance);
-    // dropOversized=true prunes it instead (hot keys are observably
-    // few by definition, so the anti-join broadcasts) and candidate
-    // cost stays ∝ true cross-duplicate mass. In drop mode the
-    // `cross_hot_buckets` observe metric reports how many (band, key)
-    // buckets were pruned — docs whose only collisions sat in pruned
-    // buckets get no candidates, so a non-zero count is the signal to
-    // raise maxBucket or pre-dedup.
-    def hotKeys(df: DataFrame) = {
-      val census = df
-        .groupBy("__band", "__bk").agg(count(lit(1)).as("__n"))
-        .where(col("__n") > maxBucket)
-      val loud =
-        if (dropOversized) census
-        else census.where(when(col("__n") > maxBucket, raise_error(concat(
-          lit("crossNearDuplicates: a band bucket of "), col("__n"),
-          lit(s" rows exceeds maxBucket=$maxBucket — pruning it would " +
-            "silently lose every cross-match in the bucket; pre-dedup " +
-            "the corpora, raise maxBucket, or pass dropOversized=true " +
-            "to accept the recall loss"))))
-          .otherwise(lit(true)))
-      loud.select("__band", "__bk")
-    }
+    // degenerate-bucket guard (graft.Buckets): shared boilerplate can
+    // put m corpus × n ref docs into ONE (band, key) bucket, and the
+    // equi-join would emit m·n rows in a single task — a bucket over
+    // maxBucket on EITHER side raises by default; dropOversized=true
+    // prunes it (hot keys are few by definition, so the anti-join
+    // broadcasts), reported by `cross_hot_buckets`.
+    val onOver = Buckets.Raise("crossNearDuplicates", "pre-dedup the corpora",
+      group = "band bucket",
+      loss = "pruning it would silently lose every cross-match in the bucket")
+      .orDrop(dropOversized)
+    def hotKeys(df: DataFrame) =
+      Buckets.oversized(df, Seq("__band", "__bk"), maxBucket, onOver)
     // referenced twice (both anti-joins) and aliased reuse doesn't
     // bridge that (the nearDuplicates 1M lesson) — without the
     // checkpoint the census pass over each melt runs twice. Bounded
@@ -1300,12 +1262,10 @@ object Dedup {
       .checkpointed(eager = false) // feeds per-source counts + pairs
     val perSource = ss.groupBy(col("__src"))
       .agg(count(lit(1)).as("__n"))
-    val inter = ss
+    val sets = ss
       .groupBy(col("__h"))
       .agg(sort_array(collect_set(col("__src"))).as("__set"))
-      .select(explode(col("__set")).as("a"), col("__set"))
-      .select(col("a"), explode(col("__set")).as("b"))
-      .where(col("a") < col("b"))
+    val inter = Buckets.pairs(sets, "__set", "a", "b")(_ < _)
       .groupBy(col("a"), col("b"))
       .agg(count(lit(1)).as("n_common"))
     inter
@@ -1481,7 +1441,7 @@ object Dedup {
     * configuration remains supported (and is what the dd5 oracle pins).
     * `maxBucket` guards degenerate buckets before the in-bucket pair
     * explosion, like [[minhashCandidates]]: an oversized bucket RAISES
-    * by default ([[guardBucket]] — at the banded collision cliff,
+    * by default ([[graft.Buckets]] — at the banded collision cliff,
     * n ≳ 2^(bits/bands), EVERY bucket overflows and a silent drop
     * returned a near-empty, correct-looking pair set; use
     * [[simhashNearPairsBlocked]] past the cliff). `dropOversized =
@@ -1627,22 +1587,17 @@ object Dedup {
       maxBucket: Int,
       metricName: String,
       dropOversized: Boolean): DataFrame = {
-    val sized = banded
-      .withColumn("__n", count(lit(1)).over(Window.partitionBy("__band", "__key")))
-      .observe(metricName,
-        sum(when(col("__n") > maxBucket, 1L).otherwise(0L)).as("rows_in_overflow"),
-        max(col("__n")).as("max_bucket"))
-    guardBucket(sized, maxBucket, metricName,
-      "route to the blocked generator (fingerprintNearPairsBlocked, " +
-        "whose wide keys keep random collisions negligible)",
-      dropOversized)
+    val lists = Buckets.capped(banded, Seq("__band", "__key"), maxBucket,
+      Buckets.Raise(metricName,
+        "route to the blocked generator (fingerprintNearPairsBlocked, " +
+          "whose wide keys keep random collisions negligible)")
+        .orDrop(dropOversized),
+      Some(Buckets.Metric(metricName)))
       .where(col("__n") > 1)
       .groupBy("__band", "__key")
       .agg(collect_list(struct(col(idCol).as("id"), col(fpCol).as("sh")))
         .as("__m"))
-      .select(explode(col("__m")).as("a"), col("__m"))
-      .select(col("a"), explode(col("__m")).as("b"))
-      .where(col("a.id") < col("b.id"))
+    Buckets.pairs(lists, "__m", "a", "b")((a, b) => a("id") < b("id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
         hammingDistance(col("a.sh"), col("b.sh"), bits).as("hamming"))
       .where(col("hamming") <= maxHamming) // popcount BEFORE the distinct:
@@ -1811,7 +1766,7 @@ object Dedup {
     * BEFORE the bucket shuffle, so index rows reaching the window ∝
     * the batch's collision mass, not |index|; verify joins the two
     * fingerprint columns only, pruned to candidate ids. Same
-    * [[guardBucket]] default-raise + `incremental_simhash_buckets`
+    * [[graft.Buckets]] default-raise + `incremental_simhash_buckets`
     * observe metric as every pair generator. Returns
     * (id_a, id_b, hamming). */
   def incrementalSimhashPairs(
@@ -1856,24 +1811,14 @@ object Dedup {
     val idx = indexTable("bands",
       StructField("__band", IntegerType), StructField("__key", LongType))
       .withColumn("__new", lit(false))
-    val sized = idx.unionByName(neu)
+    val touched = idx.unionByName(neu)
       .join(newKeys.hint("broadcast"), Seq("__band", "__key"), "left_semi")
-      .withColumn("__n", count(lit(1)).over(Window.partitionBy("__band", "__key")))
-      .observe("incremental_simhash_buckets",
-        sum(when(col("__n") > maxBucket, 1L).otherwise(0L)).as("rows_in_overflow"),
-        max(col("__n")).as("max_bucket"))
     // candidate pairs referenced three times below (two id prunes +
     // the verify probe) — lazy checkpoint, the nearDuplicates policy
-    val cands = guardBucket(sized, maxBucket, "incrementalSimhashPairs",
-      "pre-dedup the batch exactly first", dropOversized)
-      .where(col("__n") > 1)
-      .groupBy("__band", "__key")
-      .agg(collect_list(struct(col(idCol).as("id"), col("__new"))).as("__ids"))
-      .select(explode(col("__ids")).as("a"), col("__ids"))
-      .select(col("a"), explode(col("__ids")).as("b"))
-      .where(col("a.id") < col("b.id") && (col("a.__new") || col("b.__new")))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
+    val cands = batchPairs(touched, Seq("__band", "__key"), idCol, maxBucket,
+      Buckets.Metric("incremental_simhash_buckets"),
+      Buckets.Raise("incrementalSimhashPairs", "pre-dedup the batch exactly first")
+        .orDrop(dropOversized))
       .checkpointed(eager = false)
     val candIds = cands.select(col("id_a").as(idCol))
       .union(cands.select(col("id_b").as(idCol)))
@@ -1903,7 +1848,7 @@ object Dedup {
     * bucket of m vectors emits O(m²) cosine pairs, so one degenerate
     * bucket (a zero vector, a default embedding) would concentrate the
     * whole job in one task. An oversized bucket RAISES by default
-    * ([[guardBucket]]); with `dropOversized = true` it is dropped
+    * ([[graft.Buckets]]); with `dropOversized = true` it is dropped
     * before the collect_list ever materializes it — observable via the
     * `embedding_buckets` observe metric. Unlike the id-only minhash
     * lists, a bucket list here carries the vectors (≤ maxBucket·dim
@@ -1918,21 +1863,17 @@ object Dedup {
       maxBucket: Int = 1000,
       dropOversized: Boolean = false): DataFrame = {
     import graft.sim.Similarity
-    val sized = embs
+    val rows = embs
       .select(col(idCol).as("__id"), col(vecCol).as("__v"),
         Similarity.norm(col(vecCol)).as("__nm"), col(bucketCol).as("__bk"))
-      .withColumn("__n", count(lit(1)).over(Window.partitionBy("__bk")))
-      .observe("embedding_buckets",
-        sum(when(col("__n") > maxBucket, 1L).otherwise(0L)).as("rows_in_overflow"),
-        max(col("__n")).as("max_bucket"))
-    guardBucket(sized, maxBucket, "embeddingNearDuplicates",
-      "refine the blocking column", dropOversized)
+    val lists = Buckets.capped(rows, Seq("__bk"), maxBucket,
+      Buckets.Raise("embeddingNearDuplicates", "refine the blocking column")
+        .orDrop(dropOversized),
+      Some(Buckets.Metric("embedding_buckets")))
       .where(col("__n") > 1)
       .groupBy("__bk")
       .agg(collect_list(struct(col("__id"), col("__v"), col("__nm"))).as("__m"))
-      .select(explode(col("__m")).as("a"), col("__m"))
-      .select(col("a"), explode(col("__m")).as("b"))
-      .where(col("a.__id") < col("b.__id"))
+    Buckets.pairs(lists, "__m", "a", "b")((a, b) => a("__id") < b("__id"))
       .select(col("a.__id").as("id_a"), col("b.__id").as("id_b"),
         Similarity.cosinePrenormed(
           col("a.__v"), col("b.__v"), col("a.__nm"), col("b.__nm")).as("cosine"))
@@ -2013,18 +1954,13 @@ object Dedup {
       maxBucket: Int = 1000): DataFrame = {
     import graft.sim.Similarity
     val prio = cellPriorities(embs, centroids, idCol, vecCol, checkpoint = true)
-    val losers = prio
-      .withColumn("__n", count(lit(1)).over(Window.partitionBy("cell_id")))
-      .observe("semdedup_cells",
-        sum(when(col("__n") > maxBucket, 1L).otherwise(0L)).as("rows_in_overflow"),
-        max(col("__n")).as("max_cell"))
-      .where(col("__n") > 1 && col("__n") <= maxBucket)
+    val cells = Buckets.capped(prio, Seq("cell_id"), maxBucket, Buckets.Drop,
+      Some(Buckets.Metric("semdedup_cells", maxField = "max_cell")))
+      .where(col("__n") > 1)
       .groupBy("cell_id")
       .agg(collect_list(struct(col("__id"), col("__v"), col("__nm"), col("__cc")))
         .as("__m"))
-      .select(explode(col("__m")).as("a"), col("__m"))
-      .select(col("a"), explode(col("__m")).as("b"))
-      .where(col("a.__id") < col("b.__id"))
+    val losers = Buckets.pairs(cells, "__m", "a", "b")((a, b) => a("__id") < b("__id"))
       .where(Similarity.cosinePrenormed(
         col("a.__v"), col("b.__v"), col("a.__nm"), col("b.__nm")) >= threshold)
       // drop the pair member CLOSER to the centroid (higher cent_cos)
@@ -2052,7 +1988,7 @@ object Dedup {
     * once with no shuffle beyond its assignment and comparisons cost
     * |corpus ∩ occupied cells| × cell's eval members — never
     * corpus × eval. An eval cell beyond `maxBucket` RAISES by default
-    * ([[guardBucket]] — a dropped hot cell silently loses every
+    * ([[graft.Buckets]] — a dropped hot cell silently loses every
     * contamination match in it); `dropOversized = true` drops it
     * instead (observable via the `semdecon_cells` observe metric):
     * raise the cap or refine the quantizer. Returns one row
@@ -2071,13 +2007,10 @@ object Dedup {
     import graft.sim.Similarity
     val c = cellPriorities(corpus, centroids, idCol, vecCol, checkpoint = false)
     val e = cellPriorities(evalSet, centroids, idCol, vecCol, checkpoint = false)
-    val eSized = e
-      .withColumn("__n", count(lit(1)).over(Window.partitionBy("cell_id")))
-      .observe("semdecon_cells",
-        sum(when(col("__n") > maxBucket, 1L).otherwise(0L)).as("rows_in_overflow"),
-        max(col("__n")).as("max_cell"))
-    val evalCells = guardBucket(eSized, maxBucket, "semanticContamination",
-      "refine the quantizer (more centroids)", dropOversized)
+    val evalCells = Buckets.capped(e, Seq("cell_id"), maxBucket,
+      Buckets.Raise("semanticContamination", "refine the quantizer (more centroids)")
+        .orDrop(dropOversized),
+      Some(Buckets.Metric("semdecon_cells", maxField = "max_cell")))
       .groupBy("cell_id")
       .agg(collect_list(struct(col("__id"), col("__v"), col("__nm"))).as("__em"))
     c.join(broadcast(evalCells), Seq("cell_id"))

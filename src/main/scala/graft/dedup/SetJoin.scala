@@ -1,9 +1,9 @@
 package graft.dedup
 
+import graft.Buckets
 import graft.Checkpoint._
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** EXACT set-similarity self-join via prefix filtering (AllPairs,
@@ -32,15 +32,11 @@ import org.apache.spark.sql.functions._
   * Degenerate-data guard: a token that is simultaneously globally
   * frequent AND in many docs' prefixes (only possible when θ is low or
   * docs are tiny) would concentrate O(m²) candidate pairs in one task.
-  * A prefix bucket above `maxBucket` RAISES (a `raise_error` filter on
-  * the prefix frame, firing at first materialization; r8 — the former
-  * drop-plus-observe-metric was unobservable in practice: the
-  * checkpoint swallowed it, and AQE's empty-relation propagation
-  * erases CollectMetrics in the all-dropped case): an overflow voids
-  * the exact-join guarantee, and this operator's whole reason to exist
-  * over the probabilistic paths is that guarantee, so it fails loudly
-  * instead of passing lossily. Raise θ or the shingle width — or
-  * `maxBucket` when the candidate mass is truly affordable.
+  * A prefix bucket above `maxBucket` RAISES, never drops
+  * ([[graft.Buckets]]): an overflow voids the exact-join guarantee,
+  * this operator's reason to exist over the probabilistic paths. Raise
+  * θ or the shingle width — or `maxBucket` when the candidate mass is
+  * truly affordable.
   *
   * Cross-engine determinism: the θ comparisons are integer
   * (`inter·10⁶ ≥ round(θ·10⁶)·union`), so no float threshold sits in
@@ -123,28 +119,16 @@ object SetJoin {
     // checkpointed: the self-join below would otherwise recompute the
     // whole shingle→freq→sort→prefix pipeline once per aliased side
     // (the dd7 aliased-recompute lesson — measured 11.2 → 2.9 s here)
-    // Overflow guard (r8). The old observe-metric loudness was a dead
-    // letter: it sat below the checkpoint (swallowed), and moved above
-    // it AQE's empty-relation propagation erases the CollectMetrics
-    // node in exactly the all-dropped case the metric existed to
-    // report — caught by the hot-gram bench row reading 0. A non-zero
-    // overflow VOIDS the exactness guarantee, so the house-consistent
-    // behavior is a hard error, not a silent lossy drop — and the
-    // raise_error FILTER makes it zero-cost: it rides the one
-    // materialization of this frame (an eager driver-side count here
-    // instead measured +0.6 s on ppj1 / +3.4 s on er1 — a whole extra
-    // sequential job for a check the hot path evaluates for free).
-    val prefixTok = prefixed
+    // overflow raises inside the one materialization of this frame
+    // (graft.Buckets: why not a metric, why not an eager count)
+    val prefixRows = prefixed
       .select(col("__id"), col("__s"),
         posexplode(col("__pfx")).as(Seq("__p0", "__tid")))
       .withColumn("__p", col("__p0").cast("long") + 1L).drop("__p0")
-      .withColumn("__n", count(lit(1)).over(Window.partitionBy("__tid")))
-      .where(when(col("__n") > maxBucket, raise_error(concat(
-        lit("prefixFilterJoin: a prefix bucket of "), col("__n"),
-        lit(s" rows exceeds maxBucket=$maxBucket — the exact-join " +
-          "guarantee cannot hold; raise theta or shingleWidth, or " +
-          "raise maxBucket if the candidate mass is truly affordable"))))
-        .otherwise(lit(true)))
+    val prefixTok = Buckets.capped(prefixRows, Seq("__tid"), maxBucket,
+      Buckets.Raise("prefixFilterJoin", "raise theta or shingleWidth",
+        group = "prefix bucket", loss = "the exact-join guarantee cannot hold",
+        droppable = false))
       .checkpointed(eager = false)
 
     // candidate pairs: share a prefix token + two-sided length filter +

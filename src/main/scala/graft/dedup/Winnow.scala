@@ -1,9 +1,9 @@
 package graft.dedup
 
+import graft.Buckets
 import graft.Checkpoint._
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Document fingerprinting by winnowing (Schleimer, Wilkerson, Aiken,
@@ -129,12 +129,8 @@ object Winnow {
       w: Int = 4,
       minShared: Int = 2,
       maxBucket: Int = 10000): DataFrame = {
-    val fps = fingerprints(docs, idCol, textCol, k, w)
-      .withColumn("__n", count(lit(1)).over(Window.partitionBy("fingerprint")))
-      .observe("winnow_buckets",
-        sum(when(col("__n") > maxBucket, 1L).otherwise(0L)).as("rows_in_overflow"),
-        max(col("__n")).as("max_bucket"))
-      .where(col("__n") <= maxBucket)
+    val fps = Buckets.capped(fingerprints(docs, idCol, textCol, k, w),
+      Seq("fingerprint"), maxBucket, Buckets.Drop, Some(Buckets.Metric("winnow_buckets")))
       .checkpointed(eager = false)
     fps.select(col("fingerprint"), col(idCol).as("__a"))
       .join(fps.select(col("fingerprint"), col(idCol).as("__b")), Seq("fingerprint"))

@@ -1,9 +1,9 @@
 package graft.events
 
+import graft.Buckets
 import graft.Checkpoint._
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.ParameterError
@@ -45,17 +45,13 @@ object Basket {
       maxBasket: Int): (DataFrame, DataFrame) = {
     if (maxBasket < 2)
       throw new ParameterError(s"maxBasket must be >= 2: $maxBasket")
-    val bi = items
+    val incid = items
       .select(col(basketCol).as("__b"), col(itemCol).as("__i"))
       .where(col("__b").isNotNull && col("__i").isNotNull)
       .repartition(col("__b"))
       .distinct()
-      .withColumn("__n", count(lit(1)).over(Window.partitionBy("__b")))
-      .observe("basket_sizes",
-        sum(when(col("__n") > maxBasket, 1L).otherwise(0L))
-          .as("rows_in_overflow"),
-        max(col("__n")).as("max_basket"))
-      .where(col("__n") <= maxBasket)
+    val bi = Buckets.capped(incid, Seq("__b"), maxBasket, Buckets.Drop,
+      Some(Buckets.Metric("basket_sizes", maxField = "max_basket")))
       .checkpointed(eager = false) // feeds N, item counts, and pairs
     val n = bi.select(col("__b")).distinct()
       .agg(count(lit(1)).as("__N"))
@@ -66,13 +62,11 @@ object Basket {
   private def pairCounts(bi: DataFrame, minCount: Long): DataFrame = {
     if (minCount < 1)
       throw new ParameterError(s"minCount must be >= 1: $minCount")
-    bi
+    val lists = bi
       .where(col("__n") > 1) // singleton baskets make no pairs
       .groupBy(col("__b"))
       .agg(collect_list(col("__i")).as("__m"))
-      .select(explode(col("__m")).as("__x"), col("__m"))
-      .select(col("__x"), explode(col("__m")).as("__y"))
-      .where(col("__x") < col("__y"))
+    Buckets.pairs(lists, "__m", "__x", "__y")(_ < _)
       .groupBy(col("__x"), col("__y"))
       .agg(count(lit(1)).as("n"))
       .where(col("n") >= minCount)

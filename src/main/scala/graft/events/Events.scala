@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.ParameterError
+import graft.{Buckets, ParameterError}
 
 /** Event-stream analytics over an append-only (user, ts, type) log —
   * the session/funnel/retention/path views every product-analytics
@@ -1011,12 +1011,10 @@ object Events {
       .checkpointed(eager = false) // totals + per-type + pairs
     val nSess = st.select(col("__u"), col("__sx")).distinct().count() // bounded scalar
     val perType = st.groupBy(col("__t")).agg(count(lit(1)).as("__n"))
-    val pairs = st
+    val sets = st
       .groupBy(col("__u"), col("__sx"))
       .agg(sort_array(collect_set(col("__t"))).as("__set"))
-      .select(explode(col("__set")).as("type_a"), col("__set"))
-      .select(col("type_a"), explode(col("__set")).as("type_b"))
-      .where(col("type_a") < col("type_b"))
+    val pairs = Buckets.pairs(sets, "__set", "type_a", "type_b")(_ < _)
       .groupBy(col("type_a"), col("type_b"))
       .agg(count(lit(1)).as("n_sessions"))
     pairs

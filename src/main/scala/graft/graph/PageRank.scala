@@ -5,7 +5,7 @@ import graft.Checkpoint._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.ParameterError
+import graft.{Buckets, ParameterError}
 
 /** Weighted PageRank by power iteration — link analysis for
   * web-corpus curation (domain authority as a quality prior: a
@@ -429,24 +429,15 @@ object PageRank {
       .checkpointed(eager = false) // feeds neighbors AND the anti-join
     val nbrs = und.select(col("__a").as("__apex"), col("__b").as("__n"))
       .unionByName(und.select(col("__b").as("__apex"), col("__a").as("__n")))
-    val wedges = nbrs
-      .withColumn("__deg",
-        count(lit(1)).over(org.apache.spark.sql.expressions.Window
-          .partitionBy("__apex")))
-      .observe("aa_apexes",
-        sum(when(col("__deg") > maxApexDegree, 1L).otherwise(0L))
-          .as("rows_in_overflow"),
-        max(col("__deg")).as("max_degree"))
-      .where(col("__deg") >= 2 && col("__deg") <= maxApexDegree)
+    val apexes = Buckets.capped(nbrs, Seq("__apex"), maxApexDegree, Buckets.Drop,
+      Some(Buckets.Metric("aa_apexes", maxField = "max_degree")), n = "__deg")
+      .where(col("__deg") >= 2)
       .withColumn("__wq",
         round(lit(1.0) / log(col("__deg").cast("double")) * 1e12)
           .cast("long"))
       .groupBy(col("__apex"), col("__wq"))
       .agg(collect_list(col("__n")).as("__m"))
-      .select(col("__wq"), explode(col("__m")).as("__x"), col("__m"))
-      .select(col("__wq"), col("__x"), explode(col("__m")).as("__y"))
-      .where(col("__x") < col("__y"))
-    wedges
+    Buckets.pairs(apexes, "__m", "__x", "__y", carry = Seq("__wq"))(_ < _)
       .groupBy(col("__x"), col("__y"))
       .agg(count(lit(1)).as("common_neighbors"), sum(col("__wq")).as("__aaq"))
       .where(col("common_neighbors") >= minCommon)

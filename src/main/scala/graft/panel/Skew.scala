@@ -3,33 +3,51 @@ package graft.panel
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.ParameterError
+
 /** Skew handling for shuffled equi-joins (SURVEY scale rules; the
   * technique the engine reaches for when AQE's runtime skew-split is not
-  * available — e.g. a deliberately partitioned write, or a skew so hot a
-  * single post-split partition still dominates).
+  * available — e.g. a deliberately partitioned write, static plans,
+  * strategies pinned by hints, or a skew so hot a single post-split
+  * partition still dominates).
   *
-  * `saltedJoin` appends a salt ∈ [0, salts) to the big (fact) side's join
-  * key and replicates the small-but-unbroadcastable (dim) side once per
-  * salt value, so one hot key's rows spread over `salts` reducers instead
-  * of melting one. Join semantics are unchanged: every fact row still
-  * meets every dim row of its key exactly once (the dim replica with the
-  * matching salt). Cost: dim side ×salts — use for dims too big to
+  * The problem shape: a fact table joining on a LOW-CARDINALITY or
+  * heavy-tailed key (3 returnflags, one bot user, one giant domain)
+  * sort-merges into as many tasks as there are distinct hot keys — a
+  * 1000-executor cluster idles behind 3 stragglers.
+  *
+  * `saltedJoin` re-keys the join on (key, salt): each fact row takes ONE
+  * salt ∈ [0, salts) from a hash of the whole row — deterministic, so
+  * it does not depend on input row order — and the
+  * small-but-unbroadcastable (dim) side replicates every row once per
+  * salt value, so one hot key's rows spread over `salts` reducers
+  * instead of melting one. Join cost |fact| + |dim|·salts, parallelism
+  * min(distinct keys · salts, partitions) — use for dims too big to
   * broadcast but far smaller than the fact side.
+  *
+  * Result-identical to the plain equi-join BY CONSTRUCTION: every fact
+  * row meets every dim row of its key exactly once (the dim replica
+  * with the matching salt), for any `joinType` the fact side leads.
+  * The catalog oracles therefore run the PLAIN join — the
+  * hash-equality proof that salting changed the plan, not the answer.
   */
 object Skew {
 
+  /** `fact` ⋈ `dim` on `key` (`joinType`, default inner), spread over
+    * `salts` sub-keys. Fact columns must be hashable by `xxhash64`
+    * (no map columns). */
   def saltedJoin(
       fact: DataFrame,
       dim: DataFrame,
       key: String,
       salts: Int,
       joinType: String = "inner"): DataFrame = {
-    require(salts > 0, "salts must be positive")
-    // any per-row spread works — salt values never reach the output
-    val saltedFact = fact.withColumn(
-      "__salt", pmod(monotonically_increasing_id(), lit(salts.toLong)).cast("int"))
+    if (salts < 1) throw new ParameterError(s"salts must be >= 1: $salts")
+    // salt values never reach the output
+    val saltedFact = fact.withColumn("__salt",
+      pmod(xxhash64(fact.columns.map(c => fact(c)): _*), lit(salts.toLong)))
     val saltedDim = dim.withColumn(
-      "__salt", explode(sequence(lit(0), lit(salts - 1))))
+      "__salt", explode(sequence(lit(0L), lit(salts - 1L))))
     saltedFact
       .join(saltedDim, Seq(key, "__salt"), joinType)
       .drop("__salt")

@@ -1,9 +1,9 @@
 package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Buckets
 import graft.functions.JaroWinklerSimilarity.jaroWinklerNative
 
 /** Blocked fuzzy matching — the record-linkage join: candidate pairs
@@ -12,16 +12,14 @@ import graft.functions.JaroWinklerSimilarity.jaroWinklerNative
   * Jaro–Winkler scan. All-pairs similarity is never materialized; cost
   * is Σ |block_L|·|block_R|, the standard linkage-economics shape.
   *
-  * Guard discipline (the dd6/embeddingNearDuplicates contract): a
-  * degenerate blocking key ("", a boilerplate token) concentrates the
-  * whole join in one task, so a block beyond `maxBlock` rows on
-  * EITHER side RAISES by default (r11 — a dropped block silently
-  * loses every match in it, and the fz1 oracle scores ALL blocked
-  * pairs: a silent drop would diverge from it exactly at the tier
-  * where it first matters). `dropOversized = true` opts into the old
-  * drop, observable via the `fuzzy_blocks` observe metrics. Never a
-  * silent 10⁹-pair stage either way. Null/empty block keys never
-  * match anything.
+  * Guard discipline ([[graft.Buckets]]): a degenerate blocking key
+  * ("", a boilerplate token) concentrates the whole join in one task,
+  * so a block beyond `maxBlock` rows on EITHER side RAISES by default
+  * (the fz1 oracle scores ALL blocked pairs: a silent drop would
+  * diverge from it exactly at the tier where it first matters).
+  * `dropOversized = true` drops it instead, observable via the
+  * `fuzzy_blocks` observe metrics. Null/empty block keys never match
+  * anything.
   */
 object Fuzzy {
 
@@ -38,31 +36,21 @@ object Fuzzy {
       dropOversized: Boolean = false): DataFrame = {
     require(minSim > 0 && minSim <= 1, s"minSim in (0,1]: $minSim")
     require(maxBlock >= 1, s"maxBlock >= 1: $maxBlock")
-    def side(df: DataFrame, id: String, name: String, tag: String): DataFrame =
-      df.select(col(id).as(s"${tag}_id"), col(name).as(s"${tag}_name"))
+    def side(df: DataFrame, id: String, name: String, tag: String,
+        metric: Buckets.Metric): DataFrame = {
+      val keyed = df.select(col(id).as(s"${tag}_id"), col(name).as(s"${tag}_name"))
         .withColumn("__bk", blockKey(col(s"${tag}_name")))
         .where(col("__bk").isNotNull && col("__bk") =!= "")
-        .withColumn(s"__n_$tag",
-          count(lit(1)).over(Window.partitionBy("__bk")))
-    def guard(df: DataFrame, tag: String): DataFrame =
-      if (dropOversized) df.where(col(s"__n_$tag") <= maxBlock)
-      else df.where(when(col(s"__n_$tag") > maxBlock, raise_error(concat(
-        lit(s"fuzzyJoin: a $tag-side block of "), col(s"__n_$tag"),
-        lit(s" rows exceeds maxBlock=$maxBlock — dropping it would " +
-          "silently lose every match in the block; refine blockKey, " +
-          "raise maxBlock, or pass dropOversized=true to accept the " +
-          "recall loss"))))
-        .otherwise(lit(true)))
-    val l = guard(side(left, leftId, leftName, "l")
-      .observe("fuzzy_blocks",
-        max(col("__n_l")).as("max_left_block"),
-        sum(when(col("__n_l") > maxBlock, 1L).otherwise(0L))
-          .as("left_rows_in_overflow")), "l")
-    val r = guard(side(right, rightId, rightName, "r")
-      .observe("fuzzy_blocks_right",
-        max(col("__n_r")).as("max_right_block"),
-        sum(when(col("__n_r") > maxBlock, 1L).otherwise(0L))
-          .as("right_rows_in_overflow")), "r")
+      Buckets.capped(keyed, Seq("__bk"), maxBlock,
+        Buckets.Raise("fuzzyJoin", "refine blockKey", group = s"$tag-side block",
+          param = "maxBlock", loss = "dropping it would silently lose every match in the block")
+          .orDrop(dropOversized),
+        Some(metric), n = s"__n_$tag")
+    }
+    val l = side(left, leftId, leftName, "l", Buckets.Metric("fuzzy_blocks",
+      maxField = "max_left_block", overflowPrefix = "left_", maxFirst = true))
+    val r = side(right, rightId, rightName, "r", Buckets.Metric("fuzzy_blocks_right",
+      maxField = "max_right_block", overflowPrefix = "right_", maxFirst = true))
     l.join(r, Seq("__bk"))
       .select(col("l_id"), col("r_id"),
         round(jaroWinklerNative(col("l_name"), col("r_name")), 6).as("jw"))

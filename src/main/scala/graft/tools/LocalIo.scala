@@ -24,6 +24,18 @@ import org.apache.spark.sql.SparkSession
   */
 object LocalIo {
 
+  /** The per-query state sweep between timed queries: release session
+    * state a query accumulated. localCheckpointed RDDs register in
+    * getPersistentRDDs and are otherwise freed only when the GC + async
+    * ContextCleaner catch up. Without this, block-manager pressure from
+    * a 289-query run inflated mid-run queries 4-9× vs their
+    * fresh-session cost (round-5 verdict): the bench was measuring
+    * leaked state, not plans. */
+  def releaseState(spark: SparkSession): Unit = {
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+    spark.catalog.clearCache()
+  }
+
   /** The harness session builder (Bench, Verify): local[cpus], one
     * shuffle partition per core, UTC, nanosecond parquet timestamps read
     * as longs, no UI, then [[tune]]. ANSI is off as an explicit ÷0

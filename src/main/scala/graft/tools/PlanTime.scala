@@ -34,13 +34,9 @@ object PlanTime {
       body
       println(f"[step] $name%-40s rep$i ${(System.nanoTime() - t0) / 1e6}%8.1f ms")
     }
-    def releaseState(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      spark.catalog.clearCache()
-    }
     val cgCount = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
     (1 to sys.env.getOrElse("SPARK_GRAFT_ND_REPS", "6").toInt).foreach { i =>
-      releaseState()
+      LocalIo.releaseState(spark)
       val n0 = cgCount.getCount
       val t0 = System.nanoTime()
       val nd = Dedup.nearDuplicates(docs, threshold = 0.5)

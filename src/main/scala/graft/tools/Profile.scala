@@ -17,11 +17,6 @@ object Profile {
       })
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // mirror Bench's per-query state sweep so timings are comparable
-    def releaseState(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      spark.catalog.clearCache()
-    }
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val stages = new java.util.concurrent.atomic.AtomicInteger
     val tasks = new java.util.concurrent.atomic.AtomicInteger
@@ -57,7 +52,8 @@ object Profile {
           tp.topStages(8).foreach { case (nm, mx, cnt, mean) =>
             println(f"[stages]   $nm%-60s max ${mx}%6d ms  n=$cnt%4d  mean ${mean}%5d ms")
           }
-        releaseState()
+        // Bench's per-query state sweep, so timings are comparable
+        LocalIo.releaseState(spark)
       }
     }
     spark.stop()

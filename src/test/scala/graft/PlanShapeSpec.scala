@@ -227,13 +227,12 @@ class PlanShapeSpec extends SparkSpec {
 
   test("saltedJoin: result-identical to the plain join on a 2-hot-key " +
     "fact; the join re-keys on (key, salt) so the shuffle spreads") {
-    import graft.panel.Salted
+    import graft.panel.Skew
     val fact = (1L to 5000L)
       .map(i => (i, if (i % 5 == 0) "A" else "B", i % 97))
       .toDF("rid", "k", "v")
     val dim = Seq(("A", 10L), ("B", 20L)).toDF("k", "mult")
-    val salted = Salted.saltedJoin(fact, dim, key = "k",
-      rowIdCol = "rid", salts = 8)
+    val salted = Skew.saltedJoin(fact, dim, key = "k", salts = 8)
       .select(col("rid"), col("v") * col("mult"))
     val plain = fact.join(dim, "k").select(col("rid"), col("v") * col("mult"))
     assert(salted.except(plain).isEmpty && plain.except(salted).isEmpty)
@@ -247,7 +246,7 @@ class PlanShapeSpec extends SparkSpec {
       val bcWas = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       try {
-        val p = Salted.saltedJoin(fact, dim, "k", "rid", salts = 8)
+        val p = Skew.saltedJoin(fact, dim, "k", salts = 8)
           .queryExecution.executedPlan.toString
         assert(p.contains("__salt"), p.take(2000))
         assert(p.contains("hashpartitioning(k"), p.take(2000))
