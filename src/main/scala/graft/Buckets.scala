@@ -82,13 +82,11 @@ object Buckets {
 
   /** A site's overflow metric: one `Dataset.observe` named `name` with
     * the rows in groups over the cap (`<overflowPrefix>rows_in_overflow`)
-    * and the largest group (`maxField`), in that order unless
-    * `maxFirst`. */
+    * and the largest group (`maxField`), in that order. */
   final case class Metric(
       name: String,
       maxField: String = "max_bucket",
-      overflowPrefix: String = "",
-      maxFirst: Boolean = false)
+      overflowPrefix: String = "")
 
   /** `df` with each row's group size in column `n` (a window count over
     * `keys`), observed by `metric`, and every group over `cap` handled
@@ -102,11 +100,9 @@ object Buckets {
       n: String = "__n"): DataFrame = {
     val sized = df.withColumn(n, count(lit(1)).over(Window.partitionBy(keys.map(col): _*)))
     val seen = metric.fold(sized) { m =>
-      val over = sum(when(col(n) > cap, 1L).otherwise(0L))
-        .as(s"${m.overflowPrefix}rows_in_overflow")
-      val most = max(col(n)).as(m.maxField)
-      if (m.maxFirst) sized.observe(m.name, most, over)
-      else sized.observe(m.name, over, most)
+      sized.observe(m.name,
+        sum(when(col(n) > cap, 1L).otherwise(0L)).as(s"${m.overflowPrefix}rows_in_overflow"),
+        max(col(n)).as(m.maxField))
     }
     onOver match {
       case Drop => seen.where(col(n) <= cap)

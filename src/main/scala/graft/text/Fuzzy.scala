@@ -48,9 +48,9 @@ object Fuzzy {
         Some(metric), n = s"__n_$tag")
     }
     val l = side(left, leftId, leftName, "l", Buckets.Metric("fuzzy_blocks",
-      maxField = "max_left_block", overflowPrefix = "left_", maxFirst = true))
+      maxField = "max_left_block", overflowPrefix = "left_"))
     val r = side(right, rightId, rightName, "r", Buckets.Metric("fuzzy_blocks_right",
-      maxField = "max_right_block", overflowPrefix = "right_", maxFirst = true))
+      maxField = "max_right_block", overflowPrefix = "right_"))
     l.join(r, Seq("__bk"))
       .select(col("l_id"), col("r_id"),
         round(jaroWinklerNative(col("l_name"), col("r_name")), 6).as("jw"))

@@ -33,6 +33,13 @@ class OversizedGroupSpec extends SparkSpec {
     ids.map(i => (i, if (i >= 100L) other else twin)).toDF("doc_id", "text")
   private lazy val corpus = docs((0L until hot) ++ Seq(100L, 101L))
 
+  /** A metric field whose name is checked but not its value. The
+    * `incremental_simhash_buckets`, `winnow_buckets` and `basket_sizes`
+    * metrics are observed below a lazy checkpoint and reach a listener
+    * with null fields, a known defect (the `FOUND:` line on them in
+    * CHANGES.md); once they carry values, assert those here. */
+  private case object Unread
+
   private def tmp(): String =
     Files.createTempDirectory("graft_cap").resolve("ix").toString
 
@@ -66,9 +73,7 @@ class OversizedGroupSpec extends SparkSpec {
     * must contain every `says` string, and mention `dropOversized`
     * exactly when the site has that option); `drop` runs it in its
     * dropping mode, where `keyCols` of the result must equal `left`
-    * and `metric` must read `fields` (Long group sizes, or null where
-    * the observe sits below a lazy checkpoint: the query that reads the
-    * checkpoint reports the metric, but none sees its rows). */
+    * and `metric` must read `fields` (Long group sizes, or [[Unread]]). */
   private case class Site(
       name: String,
       raise: Option[() => DataFrame],
@@ -160,9 +165,8 @@ class OversizedGroupSpec extends SparkSpec {
       Some(() => Dedup.incrementalSimhashPairs(spark, simhashIx, batch, maxBucket = cap,
         dropOversized = true)),
       Seq("id_a", "id_b"), Set(Seq(100L, 101L)),
-      // observed below a lazy checkpoint: the metric reports nulls
       Some("incremental_simhash_buckets"),
-      Map("rows_in_overflow" -> null, "max_bucket" -> null)),
+      Map("rows_in_overflow" -> Unread, "max_bucket" -> Unread)),
     Site("Dedup.embeddingNearDuplicates",
       Some(() => Dedup.embeddingNearDuplicates(blocked, "vec_id", "embedding",
         "bucket", threshold = 0.9, maxBucket = cap)),
@@ -189,8 +193,7 @@ class OversizedGroupSpec extends SparkSpec {
     Site("Winnow.fingerprintPairs", None, Nil, false,
       Some(() => Winnow.fingerprintPairs(corpus, maxBucket = cap)),
       Seq("doc_a", "doc_b"), Set(Seq(100L, 101L)),
-      // observed below a lazy checkpoint: the metric reports nulls
-      Some("winnow_buckets"), Map("rows_in_overflow" -> null, "max_bucket" -> null)),
+      Some("winnow_buckets"), Map("rows_in_overflow" -> Unread, "max_bucket" -> Unread)),
     Site("Fuzzy.fuzzyJoin left side",
       Some(() => fuzzy("l", drop = false)),
       Seq("fuzzyJoin: a l-side block of 12 rows exceeds maxBlock=10"), true,
@@ -210,8 +213,7 @@ class OversizedGroupSpec extends SparkSpec {
         ((0L until hot).map(i => (1L, i)) ++ Seq((2L, 100L), (2L, 101L)))
           .toDF("basket", "item"), "basket", "item", minCount = 1, maxBasket = cap)),
       Seq("item1", "item2"), Set(Seq(100L, 101L)),
-      // observed below a lazy checkpoint: the metric reports nulls
-      Some("basket_sizes"), Map("rows_in_overflow" -> null, "max_basket" -> null)),
+      Some("basket_sizes"), Map("rows_in_overflow" -> Unread, "max_basket" -> Unread)),
     Site("PageRank.adamicAdar", None, Nil, false,
       Some(() => PageRank.adamicAdar(
         ((1L to hot).map(i => (0L, i)) ++ Seq((20L, 21L), (21L, 22L)))
@@ -254,7 +256,8 @@ class OversizedGroupSpec extends SparkSpec {
         val m = metrics.getOrElse(name, fail(s"${s.name}: no metric $name in " +
           metrics.keys.toSeq.sorted.mkString(", ")))
         assert(m.schema.fieldNames.toSet == s.fields.keySet, s"${s.name}: ${m.schema}")
-        for ((f, v) <- s.fields) assert(m.get(m.fieldIndex(f)) == v, s"${s.name}.$f: $m")
+        for ((f, v) <- s.fields if v != Unread)
+          assert(m.get(m.fieldIndex(f)) == v, s"${s.name}.$f: $m")
       }
     }
   }

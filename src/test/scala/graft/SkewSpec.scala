@@ -39,4 +39,23 @@ class SkewSpec extends SparkSpec {
       .collect().map(r => r.getAs[String]("v") -> Option(r.getAs[String]("symbol"))).toMap
     assert(out == Map("a" -> Some("S1"), "b" -> Some("S2"), "zz" -> None))
   }
+
+  test("saltedJoin: a hot key made of identical fact rows still spreads " +
+    "over several reducers") {
+    val fact = Seq.fill(400)((7L, 1L)).toDF("sid", "v")
+    val dim = Seq((7L, "S7")).toDF("sid", "symbol")
+    // AQE off and no broadcast: the join runs on the (sid, __salt) shuffle
+    val aqeWas = spark.conf.get("spark.sql.adaptive.enabled", "true")
+    val bcWas = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val joined = Skew.saltedJoin(fact, dim, "sid", salts = 8)
+      assert(joined.count() == 400)
+      assert(joined.select(spark_partition_id()).distinct().count() > 1)
+    } finally {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bcWas)
+      spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
+    }
+  }
 }
