@@ -1,14 +1,82 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.tools.{LocalIo, QueryMetrics}
+
 /** Benchmark main: runs every catalog query against
   * SPARK_GRAFT_SF_DIR, prints one JSON line with per-query seconds.
   * A warm-up action first (session init, codegen JIT, file-footer reads)
-  * so per-query numbers measure the query, not the JVM. */
+  * so per-query numbers measure the query, not the JVM. The
+  * SPARK_GRAFT_BENCH_OUT file also holds each query's costs, recorded
+  * by [[graft.tools.QueryMetrics]], and the session settings. */
 object Bench {
+
+  /** A query's min and median seconds over its reps, the error that
+    * stopped it, and the costs of its fastest rep. */
+  final case class Timed(
+      min: Double, median: Double, err: Option[String], record: Option[QueryMetrics.Record])
+
+  // Per-query MIN over n repeats (median kept alongside): host-load
+  // noise documented at 244-408 s on identical code otherwise
+  // contaminates round-over-round comparisons. The min is the
+  // steady-state cost of the plan; the median is the honesty check.
+  def repeats: Int = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEATS", "3").toInt.max(1)
+
+  /** Touches every table of each tier in `dirs` and runs q1_agg on the
+    * first, so the first timed query does not pay session init, codegen
+    * JIT or first footer reads. */
+  def warmUp(spark: SparkSession, dirs: String*): Unit = {
+    for (d <- dirs; t <- Seq("lineitem", "orders", "customer", "supplier", "part",
+        "nation", "region", "events", "documents", "embeddings"))
+      try spark.read.parquet(s"$d/$t.parquet").limit(1).count()
+      catch { case _: Throwable => }
+    try SparkEntry.queries("q1_agg")(spark, dirs.head).count()
+    catch { case _: Throwable => }
+  }
+
+  /** Times `fn` over `dir` `reps` times, each build + `count()`, with
+    * the session state released after each rep. Nothing runs inside the
+    * timed interval but the query: `metrics` is read after it. */
+  def timeQuery(
+      spark: SparkSession,
+      metrics: QueryMetrics,
+      fn: (SparkSession, String) => DataFrame,
+      dir: String,
+      reps: Int): Timed = {
+    val runs = scala.collection.mutable.ArrayBuffer.empty[(Double, QueryMetrics.Record)]
+    var err: Option[String] = None
+    var rep = 0
+    while (rep < reps && err.isEmpty) {
+      metrics.begin()
+      val w0 = System.currentTimeMillis()
+      val t0 = System.nanoTime()
+      val ends = try {
+        val df = fn(spark, dir)
+        val (t1, w1) = (System.nanoTime(), System.currentTimeMillis())
+        df.count()
+        Some((t1, w1, System.nanoTime(), System.currentTimeMillis()))
+      } catch { case e: Throwable =>
+        err = Some(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(200)}")
+        None
+      }
+      ends.foreach { case (t1, w1, t2, w2) =>
+        runs += (((t2 - t0) / 1e9,
+          metrics.record((t1 - t0) / 1e9, (t2 - t1) / 1e9, w0, w1, w2)))
+      }
+      LocalIo.releaseState(spark)
+      rep += 1
+    }
+    val sortedT = runs.map(_._1).sorted
+    val min = if (sortedT.isEmpty) 0.0 else sortedT.head
+    val median = if (sortedT.isEmpty) 0.0 else sortedT(sortedT.size / 2)
+    Timed(min, median, err, runs.minByOption(_._1).map(_._2))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.tools.LocalIo.session(cpus).getOrCreate()
+    val spark = LocalIo.session(cpus).getOrCreate()
     // ERROR, not WARN: LocalIo.releaseState's unpersist of localCheckpointed
     // RDDs emits one WARN per RDD; over a 428-query run that floods the
     // driver's stdout capture window and has truncated the round bench
@@ -52,14 +120,9 @@ object Bench {
           dagScheduler, org.apache.logging.log4j.Level.FATAL)
     }
 
-    // warm-up: touch every table + exercise codegen/shuffle machinery once
-    Seq("lineitem", "orders", "customer", "supplier", "part", "nation",
-      "region", "events", "documents", "embeddings").foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet").limit(1).count()
-      catch { case _: Throwable => }
-    }
-    try SparkEntry.queries("q1_agg")(spark, sfDir).count()
-    catch { case _: Throwable => }
+    warmUp(spark, sfDir)
+    val metrics = QueryMetrics.attach(spark)
+    val session = QueryMetrics.sessionJson(spark)
 
     // Failures are REPORTED, not swallowed: a failed query must never
     // masquerade as a fast success in the round's bench JSON.
@@ -68,26 +131,24 @@ object Bench {
     val selected =
       if (args.isEmpty) SparkEntry.queries
       else SparkEntry.queries.filter { case (n, _) => args.contains(n) }
-    // Per-query MIN over n repeats (median kept alongside): host-load
-    // noise documented at 244-408 s on identical code otherwise
-    // contaminates round-over-round comparisons. The min is the
-    // steady-state cost of the plan; the median is the honesty check.
-    val repeats = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEATS", "3").toInt.max(1)
+    val repeats = Bench.repeats
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LATEST.json")
     // (declared before render, which serializes it — see the sampling
     // comment at the run loop)
     val controlSeries = scala.collection.mutable.ArrayBuffer.empty[(Int, Double)]
-    def render(results: Seq[(String, Double, Double, Option[String])]): String = {
-      val ok = results.collect { case (k, mn, md, None) => (k, mn, md) }
-      val qs = ok.map { case (k, mn, _) => "\"" + k + "\":" + mn }.mkString("{", ",", "}")
-      val stats = ok.map { case (k, mn, md) =>
-        "\"" + k + "\":{\"min\":" + mn + ",\"median\":" + md + "}" }.mkString("{", ",", "}")
-      val errs = results.collect { case (k, _, _, Some(e)) =>
+    def render(results: Seq[(String, Timed)]): String = {
+      val ok = results.filter(_._2.err.isEmpty)
+      val qs = ok.map { case (k, t) => "\"" + k + "\":" + t.min }.mkString("{", ",", "}")
+      val stats = ok.map { case (k, t) =>
+        "\"" + k + "\":{\"min\":" + t.min + ",\"median\":" + t.median + "}" }.mkString("{", ",", "}")
+      val recs = ok.collect { case (k, Timed(_, _, _, Some(r))) =>
+        "\"" + k + "\":" + r.json }.mkString("{", ",\n", "}")
+      val errs = results.collect { case (k, Timed(_, _, Some(e), _)) =>
         "\"" + k + "\":\"" + Json.escape(e) + "\"" }.mkString("{", ",", "}")
       val ctl = controlSeries
         .map { case (i, s) => s"[$i,$s]" }.mkString("[", ",", "]")
-      val total = ok.map(_._2).sum
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"stats":$stats,"errors":$errs,"control":$ctl,"repeats":$repeats,"sf":"$sfDir"}"""
+      val total = ok.map(_._2.min).sum
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"stats":$stats,"errors":$errs,"control":$ctl,"repeats":$repeats,"sf":"$sfDir","session":$session,"records":$recs}"""
     }
     // r13: the final stdout line carries the full per-query map again
     // (mins only, ~13 KB). The r7-r9 stdout truncation that forced the
@@ -99,10 +160,10 @@ object Bench {
     // per_query: {}). The compact totals line moves to STDERR and the
     // SPARK_GRAFT_BENCH_OUT file (with medians + control series) stays
     // as belt-and-braces.
-    def renderDriver(results: Seq[(String, Double, Double, Option[String])]): String = {
-      val ok = results.collect { case (k, mn, _, None) => (k, mn) }
+    def renderDriver(results: Seq[(String, Timed)]): String = {
+      val ok = results.collect { case (k, Timed(mn, _, None, _)) => (k, mn) }
       val qs = ok.map { case (k, mn) => "\"" + k + "\":" + mn }.mkString("{", ",", "}")
-      val errs = results.collect { case (k, _, _, Some(e)) =>
+      val errs = results.collect { case (k, Timed(_, _, Some(e), _)) =>
         // truncate the RAW message, then escape: escape(..).take(..) can
         // cut mid-escape-sequence, leaving a lone trailing backslash
         // that escapes the closing quote and corrupts the JSON line.
@@ -110,9 +171,9 @@ object Bench {
       val total = ok.map(_._2).sum
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"repeats":$repeats,"sf":"$sfDir"}"""
     }
-    def renderCompact(results: Seq[(String, Double, Double, Option[String])]): String = {
-      val ok = results.collect { case (k, mn, _, None) => (k, mn) }
-      val errs = results.collect { case (k, _, _, Some(e)) =>
+    def renderCompact(results: Seq[(String, Timed)]): String = {
+      val ok = results.collect { case (k, Timed(mn, _, None, _)) => (k, mn) }
+      val errs = results.collect { case (k, Timed(_, _, Some(e), _)) =>
         "\"" + k + "\":\"" + Json.escape(e.take(120)) + "\"" }.mkString("{", ",", "}")
       val total = ok.map(_._2).sum
       s"""{"metric":"total","value":$total,"unit":"sec","errors":$errs,"repeats":$repeats,"sf":"$sfDir"}"""
@@ -122,8 +183,7 @@ object Bench {
       catch { case e: Throwable =>
         System.err.println(s"[bench] could not write $out: ${e.getMessage}")
       }
-    val done = scala.collection.mutable.ArrayBuffer
-      .empty[(String, Double, Double, Option[String])]
+    val done = scala.collection.mutable.ArrayBuffer.empty[(String, Timed)]
     // Periodic control samples: host load drifts WITHIN a 25-minute
     // full-catalog run (r11 A/B: sw1_param_sweep tracks concurrent
     // load monotonically — control 0.12 s → sw1 1.54 s, 0.35 s →
@@ -146,26 +206,11 @@ object Bench {
             System.err.println(
               s"[bench] control sample failed at ${done.size}: ${e.getClass.getSimpleName}")
         }
-        graft.tools.LocalIo.releaseState(spark)
+        LocalIo.releaseState(spark)
       }
     selected.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       if (done.size % controlEvery == 0) sampleControl()
-      val times = scala.collection.mutable.ArrayBuffer.empty[Double]
-      var err: Option[String] = None
-      var rep = 0
-      while (rep < repeats && err.isEmpty) {
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count(); times += (System.nanoTime() - t0) / 1e9 }
-        catch { case e: Throwable =>
-          err = Some(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(200)}")
-        }
-        graft.tools.LocalIo.releaseState(spark)
-        rep += 1
-      }
-      val sortedT = times.sorted
-      val min = if (sortedT.isEmpty) 0.0 else sortedT.head
-      val median = if (sortedT.isEmpty) 0.0 else sortedT(sortedT.size / 2)
-      done += ((name, min, median, err))
+      done += ((name, timeQuery(spark, metrics, fn, sfDir, repeats)))
       // incremental checkpoint: an externally-killed run still leaves a
       // parseable artifact covering every completed query
       writeOut(render(done.toSeq))

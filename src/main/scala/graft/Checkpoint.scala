@@ -66,7 +66,8 @@ object Checkpoint {
     * captured). Checkpoints truncate published plans to ExistingRDD
     * scans, so a plan audit walking only final plans is blind to
     * everything above a checkpoint — this hook is how WindowPlanSpec
-    * sees those segments. No-op in production. */
+    * sees those segments, and how `tools.Explain` prints them. No-op
+    * in production. */
   @volatile var planProbe: SparkPlan => Unit = _ => ()
 
   private val captureLock = new Object

@@ -8,16 +8,7 @@ package graft
 object Oracles {
   import OracleCtes._
 
-  /** `++` would let a query id duplicated across the split halves
-    * silently shadow the earlier SQL — the 4+2 file split makes an
-    * accidental re-add in the wrong half easy. Fail at object init. */
-  private def disjoint(a: Map[String, String], b: Map[String, String]) = {
-    val dup = a.keySet.intersect(b.keySet)
-    require(dup.isEmpty, s"oracle id duplicated across split files: $dup")
-    a ++ b
-  }
-
-  val all: Map[String, String] = disjoint(OraclesB.all, Map(
+  val all: Map[String, String] = SparkEntry.disjoint(OraclesB.all, Map(
     "s1_scan_pushdown" ->
       """SELECT l_orderkey, l_linenumber, l_quantity, CAST(l_shipdate AS DATE) AS ship_date
         |FROM lineitem

@@ -29,7 +29,8 @@ import graft.trade.{AsOf, Trade}
   */
 object Queries {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
+  /** The one catalog table reader: table `name` of the tier in `dir`. */
+  private[graft] def t(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
 
   /** Scratch parquet dir for queries that exercise the scan planner over

@@ -14,15 +14,7 @@ package graft
 object TextOracles {
   import TextOracleCtes._
 
-  /** Duplicate-id guard across the split halves (the Oracles note):
-    * a re-added id must fail at object init, not silently shadow. */
-  private def disjoint(a: Map[String, String], b: Map[String, String]) = {
-    val dup = a.keySet.intersect(b.keySet)
-    require(dup.isEmpty, s"oracle id duplicated across split files: $dup")
-    a ++ b
-  }
-
-  val all: Map[String, String] = disjoint(TextOraclesB.all, Map(
+  val all: Map[String, String] = SparkEntry.disjoint(TextOraclesB.all, Map(
     "gr1_pagerank" ->
       s"""WITH $pagerankCtes
          |SELECT node, round(r::DOUBLE / 1e12, 6) AS rank FROM r3""".stripMargin,

@@ -17,9 +17,7 @@ import graft.text.{LangModel, Packing, Pii, Retrieval, Sampling, TextAnalysis}
   * mapPartitions feature extractor are not SQL-expressible → rows-only).
   */
 object TextQueries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+  import Queries.t
 
   /** The sim7/sim8 shared index fixture: label-seeded centroids and the
     * 8×8-dim sub-codebook from the 8 lowest-id embeddings — ONE recipe,

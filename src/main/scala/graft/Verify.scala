@@ -31,10 +31,7 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // free localCheckpoint blocks the query registered — otherwise a
-      // 289-query run accumulates block-manager state (round-5 verdict)
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      spark.catalog.clearCache()
+      graft.tools.LocalIo.releaseState(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

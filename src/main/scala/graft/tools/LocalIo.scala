@@ -60,11 +60,8 @@ object LocalIo {
     // device" that reads as a disk problem rather than memory pressure.
     // Below 8 GiB free the default falls back to Spark's own /tmp; the
     // explicit env override is always honored.
-    val shm = new java.io.File("/dev/shm")
-    val shmOk = shm.isDirectory && shm.canWrite &&
-      shm.getUsableSpace >= 8L * 1024 * 1024 * 1024
     val localDir = sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR",
-      if (shmOk) "/dev/shm/graft-spark-local" else "")
+      if (shmUsable) "/dev/shm/graft-spark-local" else "")
     if (localDir.nonEmpty) builder.config("spark.local.dir", localDir)
     // AQE partition-coalescing floor. parallelismFirst (default on)
     // coalesces down to totalBytes/defaultParallelism but never below
@@ -80,5 +77,11 @@ object LocalIo {
     builder.config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
       sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCE", "64k"))
     builder
+  }
+
+  /** The /dev/shm gate of [[tune]]: a writable tmpfs with 8 GiB free. */
+  def shmUsable: Boolean = {
+    val shm = new java.io.File("/dev/shm")
+    shm.isDirectory && shm.canWrite && shm.getUsableSpace >= 8L * 1024 * 1024 * 1024
   }
 }

@@ -7,8 +7,10 @@ import org.apache.spark.sql.functions._
 
 /** sf1 sanity tier: a 10× replica of the sf0.1 testdata, synthesized
   * CHARACTER-PRESERVINGLY (each copy is internally identical to the
-  * original; copies never collide with each other), plus a one-shot run
-  * of every shuffle-budgeted pipeline at both tiers. Superlinear growth
+  * original; copies never collide with each other), plus a timed run
+  * of every shuffle-budgeted pipeline at both tiers, through
+  * `graft.Bench`'s warm-up and per-query routine (min of
+  * SPARK_GRAFT_BENCH_REPEATS, default 3). Superlinear growth
   * between sf0.1 and sf1 is the cheapest tripwire for the next
   * O(n²)-class bug that row-level correctness gates can't see — the
   * ratios land in BASELINE.md and should all stay ≲ 12× (10× data, some
@@ -138,33 +140,18 @@ object Sf1Tier {
     spark.sparkContext.setLogLevel("WARN")
     synthesize(spark, src, dst)
 
-    def runOnce(name: String, dir: String): Double = {
-      val t0 = System.nanoTime()
-      graft.SparkEntry.queries(name)(spark, dir).count()
-      val secs = (System.nanoTime() - t0) / 1e9
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      secs
+    // Min-of-N repeats per (query, tier) after a warm-up of BOTH tiers:
+    // one-shot rows read sf0.1 COLD (fresh JVM, first parquet footers)
+    // while sf1 ran warm — sub-1× "ratios" that were ordering
+    // artifacts, not scale facts (r9 verdict item 1).
+    graft.Bench.warmUp(spark, src, dst)
+    val metrics = QueryMetrics.attach(spark)
+    def runMin(name: String, dir: String): Double = {
+      val t = graft.Bench.timeQuery(spark, metrics, graft.SparkEntry.queries(name), dir,
+        graft.Bench.repeats)
+      t.err.foreach(e => sys.error(s"$name at $dir: $e"))
+      t.min
     }
-    // Min-of-N repeats per (query, tier): the session-3 wave-2 rows
-    // were measured one-shot, so sf0.1 read COLD (fresh JVM, first
-    // parquet footers) while sf1 ran warm — sub-1× "ratios" that were
-    // ordering artifacts, not scale facts (r9 verdict item 1). The min
-    // is the steady-state plan cost, same policy as graft.Bench.
-    val repeats =
-      sys.env.getOrElse("SPARK_GRAFT_TIER_REPEATS", "1").toInt.max(1)
-    def runMin(name: String, dir: String): Double =
-      (1 to repeats).map(_ => runOnce(name, dir)).min
-    // warm-up: touch every table at BOTH tiers + one codegen-heavy
-    // query, so the first measured row isn't paying session init
-    Seq("lineitem", "orders", "customer", "supplier", "part", "nation",
-      "region", "events", "documents", "embeddings").foreach { tb =>
-      Seq(src, dst).foreach { d =>
-        try spark.read.parquet(s"$d/$tb.parquet").limit(1).count()
-        catch { case _: Throwable => }
-      }
-    }
-    try graft.SparkEntry.queries("q1_agg")(spark, src).count()
-    catch { case _: Throwable => }
     val rows = (budgetedQueries ++ rewiredQueries ++ roundAdditions)
       .filter(n => only.forall(n.contains))
       .map { name =>

@@ -29,7 +29,7 @@ class ConcurrentSpec extends SparkSpec {
           () => slow.count(): Unit)
       }
       assert(e.getMessage == "injected write failure")
-      org.apache.spark.TestBus.drain(sc)
+      org.apache.spark.sql.graftbridge.Bridge.drain(sc)
       assert(sc.statusTracker.getActiveJobIds.isEmpty)
     } finally sc.removeSparkListener(listener)
   }

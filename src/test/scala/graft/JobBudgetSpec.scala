@@ -22,11 +22,11 @@ class JobBudgetSpec extends SparkSpec {
           .getOrElse(""), e.stageInfos.map(_.name).headOption.getOrElse("")))
       }
     }
-    org.apache.spark.TestBus.drain(sc)
+    org.apache.spark.sql.graftbridge.Bridge.drain(sc)
     sc.addSparkListener(listener)
     try {
       body
-      org.apache.spark.TestBus.drain(sc)
+      org.apache.spark.sql.graftbridge.Bridge.drain(sc)
       jobs.synchronized(jobs.toList)
     } finally sc.removeSparkListener(listener)
   }

@@ -61,7 +61,7 @@ class OversizedGroupSpec extends SparkSpec {
     spark.listenerManager.register(listener)
     try {
       body
-      org.apache.spark.TestBus.drain(spark.sparkContext)
+      org.apache.spark.sql.graftbridge.Bridge.drain(spark.sparkContext)
     } finally spark.listenerManager.unregister(listener)
     seen.asScala.toMap
   }

@@ -37,11 +37,11 @@ class ParallelismSpec extends SparkSpec {
         if (!e.properties.getProperty("spark.job.tags", "").contains("broadcast exchange"))
           jobs.incrementAndGet()
     }
-    org.apache.spark.TestBus.drain(sc)
+    org.apache.spark.sql.graftbridge.Bridge.drain(sc)
     sc.addSparkListener(listener)
     try {
       body
-      org.apache.spark.TestBus.drain(sc)
+      org.apache.spark.sql.graftbridge.Bridge.drain(sc)
       jobs.get
     } finally sc.removeSparkListener(listener)
   }

@@ -853,13 +853,13 @@ class PerfSpec extends SparkSpec {
     sc.addSparkListener(listener)
     try {
       Performance.summary(results).collect()
-      org.apache.spark.TestBus.drain(sc)
+      org.apache.spark.sql.graftbridge.Bridge.drain(sc)
       assert(recordsRead.get > 0, "the first measure should scan the panel")
       recordsRead.set(0)
       Performance.dailySeries(results).collect()
       Performance.drawdowns(results).collect()
       Performance.ratios(results).collect()
-      org.apache.spark.TestBus.drain(sc)
+      org.apache.spark.sql.graftbridge.Bridge.drain(sc)
       assert(recordsRead.get == 0,
         s"later measures re-read ${recordsRead.get} panel records")
     } finally sc.removeSparkListener(listener)
