@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.tools.{LocalIo, QueryMetrics}
@@ -29,10 +31,10 @@ object Bench {
   def warmUp(spark: SparkSession, dirs: String*): Unit = {
     for (d <- dirs; t <- Seq("lineitem", "orders", "customer", "supplier", "part",
         "nation", "region", "events", "documents", "embeddings"))
-      try spark.read.parquet(s"$d/$t.parquet").limit(1).count()
-      catch { case _: Throwable => }
+      try Queries.t(spark, d, t).limit(1).count()
+      catch { case NonFatal(_) => }
     try SparkEntry.queries("q1_agg")(spark, dirs.head).count()
-    catch { case _: Throwable => }
+    catch { case NonFatal(_) => }
   }
 
   /** Times `fn` over `dir` `reps` times, each build + `count()`, with

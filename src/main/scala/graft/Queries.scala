@@ -12,6 +12,7 @@ import graft.panel.Panel
 import graft.panel.Panel.Keys
 import graft.pipeline.{Backtest, Strategy}
 import graft.trade.{AsOf, Trade}
+import graft.Exact.{Micro, Pico, decSum}
 
 /** The operator catalog: one driver-checkable query per implemented
   * operator from SURVEY §2 (+ the LLM-pipeline extensions). Each entry has
@@ -20,7 +21,8 @@ import graft.trade.{AsOf, Trade}
   * Cross-engine determinism rules used throughout (so result hashes match
   * the oracle bit-for-bit):
   *  - unordered SUM/AVG over doubles is order-dependent in the last ulp →
-  *    sum integer cents (`sum(cast(round(x*100) as bigint))`) instead;
+  *    sum integer cents (`sum(cast(round(x*100) as bigint))`) or
+  *    [[Exact]] fixed-point integers instead;
   *  - panel "close" uses max() (order-free), never avg();
   *  - per-row IEEE arithmetic (ratios, lags, window means over ordered
   *    frames) is bit-deterministic and needs no rounding;
@@ -662,9 +664,7 @@ object Queries {
         .groupBy("variant")
         .agg(
           count(lit(1)).as("n_rows"),
-          (sum(round(col("value") * 1e12).cast("long")
-            .cast(org.apache.spark.sql.types.DecimalType(38, 0)))
-            .cast("double") / 1e12).as("sum_return"))
+          Pico.back(decSum(Pico.long(col("value")))).as("sum_return"))
     }),
 
     // ---- ES1: event study — align returns around crash events by
@@ -686,9 +686,7 @@ object Queries {
         .groupBy(col("offset").cast("long").as("offset"))
         .agg(
           count(lit(1)).as("n_obs"),
-          (sum(round(col("ret") * 1e12).cast("long")
-            .cast(org.apache.spark.sql.types.DecimalType(38, 0)))
-            .cast("double") / 1e12).as("sum_return"))
+          Pico.back(decSum(Pico.long(col("ret")))).as("sum_return"))
     }),
 
     // ---- A3: first-per-group (ordered) ----
@@ -1487,7 +1485,7 @@ object Queries {
     "ev12_stickiness" -> ((s, dir) =>
       graft.events.Events.activeUsers(events(s, dir), window = 28)
         .withColumn("stickiness",
-          round(col("dau").cast("double") * 1e6 / col("active_28")) / 1e6)),
+          Micro.ratio(col("dau"), col("active_28")) / Micro.factor)),
 
     // ---- ML14: PSI drift between the same early/late score halves as
     // ml13 — 10 equal-width bins, exact counts, micro-nat-exact total
@@ -2994,8 +2992,8 @@ object Queries {
     "port3_kelly" -> ((s, dir) => {
       val w = Window.partitionBy("sid").orderBy("date")
       val prev = lag(cents(col("close")), 1).over(w)
-      val retMicro = round((cents(col("close")).cast("double")
-        / prev.cast("double") - 1.0) * 1e6).cast("long")
+      val retMicro = Micro.long(cents(col("close")).cast("double")
+        / prev.cast("double") - 1.0)
       supplierPanel(s, dir)
         .withColumn("__r", when(prev.isNotNull && prev =!= 0L, retMicro))
         .where(col("__r").isNotNull)
@@ -3005,14 +3003,14 @@ object Queries {
           sum(col("__r") * col("__r")).as("__s2"))
         .withColumn("mean_ret",
           round(col("__s").cast("double") / col("n_days").cast("double")
-            / 1e6, 6))
+            / Micro.factor, 6))
         .withColumn("__varq",
           col("n_days").cast("double") * col("__s2").cast("double")
             - col("__s").cast("double") * col("__s").cast("double"))
         .select(col("sid"), col("n_days"), col("mean_ret"),
           round(when(col("__varq") =!= 0.0,
             col("__s").cast("double") * col("n_days").cast("double")
-              / col("__varq") * 1e6), 6).as("kelly"))
+              / col("__varq") * Micro.factor), 6).as("kelly"))
     }),
 
     // ---- W33: Hampel despike filter — centered rolling-median ±
@@ -3321,20 +3319,20 @@ object Queries {
         when(col("l_returnflag") === "R", 1L).otherwise(0L).as("y"))
         .withColumn("z", (lit(25L) - col("q")).cast("double") / 4.0)
         .withColumn("p6",
-          round(lit(1e6) / (lit(1.0) + exp(-col("z")))).cast("long"))
+          Micro.inv(lit(1.0) + exp(-col("z"))).cast("long"))
       rows.withColumn("bin",
         call_function("div", col("q") - 1L, lit(5L))) // integer division
         .groupBy("bin")
         .agg(count(lit(1)).as("n"), sum(col("y")).as("n_pos"),
           sum(col("p6")).as("__sp"),
-          sum((col("p6") - col("y") * 1000000L) *
-            (col("p6") - col("y") * 1000000L)).as("__sq"))
+          sum((col("p6") - col("y") * Micro.unit) *
+            (col("p6") - col("y") * Micro.unit)).as("__sq"))
         .select(col("bin"), col("n"), col("n_pos"),
-          round(col("__sp").cast("double") / col("n").cast("double") / 1e6, 6)
+          round(col("__sp").cast("double") / col("n").cast("double") / Micro.factor, 6)
             .as("mean_pred"),
           round(col("n_pos").cast("double") / col("n").cast("double"), 6)
             .as("emp_rate"),
-          round(col("__sq").cast("double") / col("n").cast("double") / 1e12, 6)
+          round(col("__sq").cast("double") / col("n").cast("double") / Pico.factor, 6)
             .as("brier"))
     }),
 

@@ -10,6 +10,7 @@ import graft.dedup.Dedup
 import graft.multimodal.Multimodal
 import graft.sim.Similarity
 import graft.text.{LangModel, Packing, Pii, Retrieval, Sampling, TextAnalysis}
+import graft.Exact.Micro
 
 /** LLM-training-data-pipeline operator queries: text analysis, dedup,
   * similarity search, multimodal plumbing — over the `documents` and
@@ -283,8 +284,8 @@ object TextQueries {
         .withColumn("r",
           row_number().over(Window.orderBy(col("n").desc, col("w"))))
         .select(
-          round(log(col("r").cast("double")) * 1e6).cast("long").as("x"),
-          round(log(col("n").cast("double")) * 1e6).cast("long").as("y"))
+          Micro.long(log(col("r").cast("double"))).as("x"),
+          Micro.long(log(col("n").cast("double"))).as("y"))
       ranked.agg(
         count(lit(1)).as("k"), sum(col("x")).as("sx"), sum(col("y")).as("sy"),
         sum(col("x") * col("x")).as("sxx"), sum(col("x") * col("y")).as("sxy"))
@@ -467,15 +468,14 @@ object TextQueries {
           col("source"),
           TextAnalysis.tokenCount(col("text")).cast("long").as("__tok"),
           g.getField("keep").cast("long").as("__keep"),
-          round(TextAnalysis.qualityScore(col("text")) * 1e6, 0)
-            .cast("long").as("__qm"))
+          Micro.long(TextAnalysis.qualityScore(col("text"))).as("__qm"))
         .groupBy(col("lang_id"), col("source"))
         .agg(
           count(lit(1)).as("docs"),
           sum(col("__tok")).as("tokens"),
           round(sum(col("__keep")).cast("double") / count(lit(1)), 6)
             .as("keep_rate"),
-          round(sum(col("__qm")).cast("double") / count(lit(1)) / 1e6, 6)
+          round(sum(col("__qm")).cast("double") / count(lit(1)) / Micro.factor, 6)
             .as("mean_quality"))
     }),
 

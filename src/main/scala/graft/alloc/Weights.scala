@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.panel.Panel
 import graft.panel.Panel.Keys
+import graft.Exact.{Micro, Pico, decSum}
 
 /** Weight-allocation algorithms (reference mixins/weight.py:22-113, D1-D5).
   *
@@ -88,7 +89,7 @@ object Weights {
     * D1-D5. */
   def inverseVolWeights(signal: Column, vol: Column)(implicit k: Keys): Column = {
     val ivq = when(signal =!= 0 && signal.isNotNull && vol > 0,
-      round(abs(signal) / vol * 1e6).cast("long")).otherwise(0L)
+      Micro.long(abs(signal) / vol)).otherwise(0L)
     val tot = sum(ivq).over(k.byDate)
     when(tot =!= 0, signum(signal) * ivq.cast("double") / tot).otherwise(0.0) +
       lit(0.0) // −0.0 → +0.0 (a zero-quantized short row)
@@ -115,17 +116,14 @@ object Weights {
       betaCol: String = "beta",
       sidCol: String = "sid",
       dateCol: String = "date"): DataFrame = {
-    val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     weights
       .join(broadcast(betas.select(col(sidCol), col(betaCol))),
         Seq(sidCol), "left")
       .groupBy(col(dateCol))
-      .agg(sum(
-        round(col(weightCol) * coalesce(col(betaCol), lit(0.0)) * 1e12)
-          .cast("long").cast(dec)).as("__e"))
+      .agg(decSum(Pico.long(col(weightCol) * coalesce(col(betaCol), lit(0.0)))).as("__e"))
       .select(
         col(dateCol), lit(hedgeSid).as(sidCol),
-        (-(col("__e").cast("double") / 1e12) + 0.0).as("hedge_weight"))
+        (-Pico.back(col("__e")) + 0.0).as("hedge_weight"))
   }
 
   /** D33: short-sale locate constraint — clamp each SHORT weight at the

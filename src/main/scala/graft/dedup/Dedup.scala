@@ -9,6 +9,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 import graft.text.TextAnalysis
+import graft.Exact.Micro
 
 /** Deduplication operators for training-data pipelines: exact, MinHash+LSH,
   * SimHash, n-gram Jaccard, embedding-cosine near-dup.
@@ -2103,9 +2104,9 @@ object Dedup {
       }: _*)).as("__g"))
       .select(col("__g.bands"), col("__g.rows_per_band"))
     val s = (col(binCol) * 2 + 1).cast("double") / 20.0
-    val pq = round((lit(1.0) -
+    val pq = Micro.long(lit(1.0) -
       pow(lit(1.0) - pow(s, col("rows_per_band").cast("double")),
-        col("bands").cast("double"))) * 1e6).cast("long")
+        col("bands").cast("double")))
     val scored = jaccardHist
       .select(col(binCol), col(nCol))
       .crossJoin(broadcast(g)) // ≤10 bins × a literal grid — bounded
@@ -2113,7 +2114,7 @@ object Dedup {
         (col(nCol) * pq).as("__cq"),
         when(col(binCol) < thresholdBin, col(nCol) * pq)
           .otherwise(0L).as("__fpq"),
-        when(col(binCol) >= thresholdBin, col(nCol) * (lit(1000000L) - pq))
+        when(col(binCol) >= thresholdBin, col(nCol) * (lit(Micro.unit) - pq))
           .otherwise(0L).as("__fnq"))
       .groupBy(col("bands"), col("rows_per_band"))
       .agg(sum(col("__cq")).as("__cq"), sum(col("__fpq")).as("__fpq"),
@@ -2125,9 +2126,9 @@ object Dedup {
       .withColumn("__rk", row_number().over(wBest))
       .select(
         col("bands"), col("rows_per_band"),
-        round(col("__cq").cast("double") / 1e6, 6).as("exp_candidates"),
-        round(col("__fpq").cast("double") / 1e6, 6).as("fp_mass"),
-        round(col("__fnq").cast("double") / 1e6, 6).as("fn_mass"),
+        round(Micro.back(col("__cq")), 6).as("exp_candidates"),
+        round(Micro.back(col("__fpq")), 6).as("fp_mass"),
+        round(Micro.back(col("__fnq")), 6).as("fn_mass"),
         when(col("__rk") === 1, 1).otherwise(0).as("is_best"))
   }
 }

@@ -2,6 +2,7 @@ package graft.dedup
 
 import graft.Buckets
 import graft.Checkpoint._
+import graft.Exact.Micro
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -72,7 +73,7 @@ object SetJoin {
       shingleWidth: Int = 3,
       maxBucket: Int = 100000): DataFrame = {
     require(theta > 0 && theta <= 1, s"theta must be in (0, 1], got $theta")
-    val thetaMicro = math.round(theta * 1e6)
+    val thetaMicro = Micro.of(theta)
 
     // (doc, token) pairs — evaluated by three consumers (doc freq,
     // prefix, verify sets), so truncate the shingling work once.
@@ -146,10 +147,10 @@ object SetJoin {
       col("__s").as("__sb"), col("__p").as("__pb"))
     val cands = a.join(b, Seq("__tid"))
       .where(col("__ida") < col("__idb") &&
-        least(col("__sa"), col("__sb")) * lit(1000000L) >= lit(thetaMicro) * greatest(col("__sa"), col("__sb")) &&
+        least(col("__sa"), col("__sb")) * lit(Micro.unit) >= lit(thetaMicro) * greatest(col("__sa"), col("__sb")) &&
         (least(col("__pa"), col("__pb")) +
           least(col("__sa") - col("__pa"), col("__sb") - col("__pb"))) *
-          lit(1000000L + thetaMicro) >= lit(thetaMicro) * (col("__sa") + col("__sb")))
+          lit(Micro.unit + thetaMicro) >= lit(thetaMicro) * (col("__sa") + col("__sb")))
       .select("__ida", "__idb").distinct()
 
     // exact verify on candidates only: each doc's ASCENDING-sorted
@@ -175,7 +176,7 @@ object SetJoin {
           col("__taa"), col("__tab")).as("inter_size"),
         (size(col("__taa")) + size(col("__tab"))).cast("long").as("__ss"))
       .withColumn("union_size", col("__ss") - col("inter_size"))
-      .where(col("inter_size") * lit(1000000L) >= lit(thetaMicro) * col("union_size"))
+      .where(col("inter_size") * lit(Micro.unit) >= lit(thetaMicro) * col("union_size"))
       .select(col("doc_a"), col("doc_b"), col("inter_size"), col("union_size"),
         (col("inter_size").cast("double") / col("union_size")).as("jaccard"))
   }

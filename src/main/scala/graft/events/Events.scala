@@ -7,6 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{Buckets, ParameterError}
+import graft.Exact.{Basis, Dec, Micro, Nano, Pico, decSum}
 
 /** Event-stream analytics over an append-only (user, ts, type) log —
   * the session/funnel/retention/path views every product-analytics
@@ -352,7 +353,6 @@ object Events {
       tsCol: String = "ts",
       eventIdCol: String = "event_id"): DataFrame = {
     if (minGaps < 1) throw new ParameterError(s"minGaps must be >= 1: $minGaps")
-    val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     val w = Window.partitionBy(col(userCol)).orderBy(col(tsCol), col(eventIdCol))
     val gaps = events
       .withColumn("__m", micros(col(tsCol)))
@@ -362,8 +362,8 @@ object Events {
       .groupBy(col(userCol))
       .agg(
         count(lit(1)).as("__n"),
-        sum(col("__g").cast(dec)).as("__s"),
-        sum((col("__g").cast(dec) * col("__g").cast(dec))).as("__ss"))
+        decSum(col("__g")).as("__s"),
+        sum((col("__g").cast(Dec) * col("__g").cast(Dec))).as("__ss"))
       .where(col("__n") >= minGaps)
       .withColumn("__mu", col("__s").cast("double") / col("__n"))
       .withColumn("__sg",
@@ -376,13 +376,13 @@ object Events {
     perUser
       .agg(
         count(lit(1)).as("n_users"),
-        sum(round(col("__b") * 1e6).cast("long")).as("__bs"),
+        sum(Micro.long(col("__b"))).as("__bs"),
         sum(when(col("__b") > 0, 1L).otherwise(0L)).as("__pos"))
       .select(
         col("n_users"),
-        (round(col("__bs").cast("double") / col("n_users")) / 1e6 + 0.0)
+        (Micro.mean(col("__bs"), col("n_users")) + 0.0)
           .as("mean_burstiness"),
-        (round(col("__pos").cast("double") * 1e6 / col("n_users")) / 1e6)
+        (Micro.ratio(col("__pos"), col("n_users")) / Micro.factor)
           .as("frac_bursty"))
   }
 
@@ -473,7 +473,7 @@ object Events {
       .withColumnRenamed("__from", "__state")
       .checkpointed(eager = false)
     var v = scens.select(col("__scen"), lit("START").as("__state"),
-      lit(1000000000000L).as("__mass"))
+      lit(Pico.unit).as("__mass"))
     for (_ <- 1 to steps) {
       val absorbed = v.where(col("__state").isin("CONV", "NULL"))
       val flowed = v.join(probs, Seq("__scen", "__state"))
@@ -500,12 +500,12 @@ object Events {
     }
     val totalEff = effects.map(_._3).sum
     effects.map { case (c, m, e) =>
-      val effect = ((e + 500000L) / 1000000L) / 1e6
+      val effect = ((e + 500000L) / Micro.unit) / Micro.factor
       val share =
         if (totalEff > 0)
-          ((2L * e * 1000000L + totalEff) / (2L * totalEff)) / 1e6
+          ((2L * e * Micro.unit + totalEff) / (2L * totalEff)) / Micro.factor
         else 0.0
-      (c, base / 1e12, m / 1e12, effect, share)
+      (c, base / Pico.factor, m / Pico.factor, effect, share)
     }.toDF("channel", "base_p", "removed_p", "removal_effect", "share")
   }
 
@@ -551,7 +551,7 @@ object Events {
         col("__cohort").as("cohort"),
         col("age_days"),
         col("n_users"),
-        (round(col("__cum").cast("double") * 1e4 / col("n_users")) / 1e6)
+        (Basis.ratio(col("__cum"), col("n_users")) / Micro.factor)
           .as("cum_value_per_user"))
   }
 
@@ -602,8 +602,8 @@ object Events {
       .where(col("__d") > 0)
       .withColumn("__lnm",
         when(col("__d") < col("__n"),
-          round(log((col("__n") - col("__d")).cast("double") /
-            col("__n")) * 1e12).cast("long")))
+          Pico.long(log((col("__n") - col("__d")).cast("double") /
+            col("__n")))))
       .withColumn("__gone",
         sum(when(col("__d") === col("__n"), 1L).otherwise(0L)).over(wAsc))
       .select(
@@ -611,7 +611,7 @@ object Events {
         col("__n").as("n_risk"),
         col("__d").as("n_events"),
         round(when(col("__gone") > 0, 0.0).otherwise(
-          exp(sum(col("__lnm")).over(wAsc).cast("double") / 1e12)), 6)
+          exp(Pico.back(sum(col("__lnm")).over(wAsc)))), 6)
           .as("survival"))
   }
 
@@ -657,14 +657,14 @@ object Events {
       .withColumn("__n", sum(col("__c")).over(wDesc))
       .where(col("__d") > 0)
       .withColumn("__hq",
-        round(col("__d").cast("double") / col("__n") * 1e12).cast("long"))
+        Pico.long(col("__d").cast("double") / col("__n")))
       .withColumn("__cum", sum(col("__hq")).over(wAsc))
       .select(
         col("__dur").as("t"),
         col("__n").as("n_risk"),
         col("__d").as("n_events"),
-        round(col("__cum").cast("double") / 1e12, 6).as("cum_hazard"),
-        round(exp(-col("__cum").cast("double") / 1e12), 6).as("fh_survival"))
+        round(Pico.back(col("__cum")), 6).as("cum_hazard"),
+        round(exp(-col("__cum").cast("double") / Pico.factor), 6).as("fh_survival"))
   }
 
   /** Two-proportion A/B conversion test with DETERMINISTIC hash
@@ -701,9 +701,9 @@ object Events {
         sum(when(!col("__a"), col("__c")).otherwise(0L)).as("conv_b"))
       .select(
         col("n_a"), col("n_b"), col("conv_a"), col("conv_b"),
-        (round(col("conv_a").cast("double") * 1e6 / col("n_a")) / 1e6)
+        (Micro.ratio(col("conv_a"), col("n_a")) / Micro.factor)
           .as("rate_a"),
-        (round(col("conv_b").cast("double") * 1e6 / col("n_b")) / 1e6)
+        (Micro.ratio(col("conv_b"), col("n_b")) / Micro.factor)
           .as("rate_b"),
         (round(when(col("n_a") > 0 && col("n_b") > 0 &&
           pool > 0 && pool < 1,
@@ -754,7 +754,7 @@ object Events {
     // unpartitioned window, over occupied buckets — range-bounded)
     // shift local numbers to global ranks.
     val bucketed = perUser.withColumn("__bk",
-      floor(col("__s").cast("double") / lit(1e6)).cast("long"))
+      floor(Micro.back(col("__s"))).cast("long"))
     val offsets = bucketed.groupBy(col("__bk"))
       .agg(count(lit(1)).as("__bc"))
       .select(col("__bk"),
@@ -909,7 +909,6 @@ object Events {
       tsCol: String = "ts"): DataFrame = {
     if (maxOffset < 2)
       throw new ParameterError(s"maxOffset must be >= 2: $maxOffset")
-    val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     val rc = retentionCohorts(events, userCol, tsCol)
       .checkpointed(eager = false) // feeds sizes, maxday, and actives
     val sizes = rc.where(col("day_offset") === 0)
@@ -930,21 +929,20 @@ object Events {
     val pts = denom.join(act, Seq("day_offset"), "left")
       .where(col("__cap") > 0 && coalesce(col("__act"), lit(0L)) > 0)
       .select(col("day_offset").as("__x"),
-        round(log(col("__act").cast("double") / col("__cap").cast("double"))
-          * 1e9).cast("long").as("__y"))
+        Nano.long(log(col("__act").cast("double") / col("__cap").cast("double"))).as("__y"))
     pts
       .agg(
         count(lit(1)).as("n_points"),
         sum(col("__x")).as("__sx"),
         sum(col("__y")).as("__sy"),
-        sum((col("__x").cast(dec) * col("__x").cast(dec))).as("__sxx"),
-        sum((col("__x").cast(dec) * col("__y").cast(dec))).as("__sxy"))
+        sum((col("__x").cast(Dec) * col("__x").cast(Dec))).as("__sxx"),
+        sum((col("__x").cast(Dec) * col("__y").cast(Dec))).as("__sxy"))
       .select(Seq(col("n_points")) ++ {
-        val nd = col("n_points").cast(dec)
-        val det = nd * col("__sxx") - col("__sx").cast(dec) * col("__sx").cast(dec)
+        val nd = col("n_points").cast(Dec)
+        val det = nd * col("__sxx") - col("__sx").cast(Dec) * col("__sx").cast(Dec)
         val slope = when(col("n_points") >= 2 && det =!= 0,
-          (nd * col("__sxy") - col("__sx").cast(dec) * col("__sy").cast(dec))
-            .cast("double") / det.cast("double") / 1e9)
+          (nd * col("__sxy") - col("__sx").cast(Dec) * col("__sy").cast(Dec))
+            .cast("double") / det.cast("double") / Nano.factor)
         val lambda = -slope
         Seq(
           (round(lambda, 6) + 0.0).as("lambda"),
@@ -1068,7 +1066,6 @@ object Events {
       events: DataFrame,
       userCol: String = "user_id",
       typeCol: String = "event_type"): DataFrame = {
-    val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     val perUser = events
       .groupBy(col(typeCol), col(userCol))
       .agg(count(lit(1)).as("__n"))
@@ -1084,23 +1081,22 @@ object Events {
       // long holds it up to ~3e9 users sharing one count value)
       .withColumn("__half", expr("__c * (__c - 1) DIV 2"))
       .withColumn("__w", // block Lorenz mass: n·Σ_{i=r}^{r+c−1} i
-        col("__n").cast(dec) *
-          (col("__c").cast(dec) * col("__r").cast(dec) +
-            col("__half").cast(dec)))
+        col("__n").cast(Dec) *
+          (col("__c").cast(Dec) * col("__r").cast(Dec) +
+            col("__half").cast(Dec)))
       .groupBy(col(typeCol))
       .agg(
         sum(col("__c")).as("n_users"),
-        sum(col("__n").cast(dec) * col("__c").cast(dec)).as("__s"),
+        sum(col("__n").cast(Dec) * col("__c").cast(Dec)).as("__s"),
         sum(col("__w")).as("__wsum"))
       .select(
         col(typeCol),
         col("n_users"),
         col("__s").cast("long").as("total_events"),
-        (round(
-          (lit(2.0) * col("__wsum").cast("double") /
+        (Micro(lit(2.0) * col("__wsum").cast("double") /
             (col("n_users").cast("double") * col("__s").cast("double")) -
-            (col("n_users") + 1).cast("double") / col("n_users")) * 1e6)
-          / 1e6 + 0.0).as("gini"))
+            (col("n_users") + 1).cast("double") / col("n_users"))
+          / Micro.factor + 0.0).as("gini"))
   }
 
   /** EV17: RFM segmentation (recency / frequency / monetary quintiles)
@@ -1299,9 +1295,9 @@ object Events {
       .withColumn("expected",
         rowT.cast("double") * colT.cast("double") / tot.cast("double"))
       .withColumn("chi2_term_micro",
-        round((col("o").cast("double") - col("expected"))
+        Micro.long((col("o").cast("double") - col("expected"))
           * (col("o").cast("double") - col("expected"))
-          / col("expected") * 1e6).cast("long"))
+          / col("expected")))
   }
 
   /** Two-proportion z-test on user-level conversion between variants:
@@ -1402,10 +1398,10 @@ object Events {
       throw new ParameterError(s"need 0 < p0 < p1 < 1: $p0, $p1")
     if (!(alpha > 0 && alpha < 1 && beta > 0 && beta < 1))
       throw new ParameterError(s"alpha/beta in (0,1): $alpha, $beta")
-    (math.round(math.log(p1 / p0) * 1e6),
-      math.round(math.log((1 - p1) / (1 - p0)) * 1e6),
-      math.round(math.log((1 - beta) / alpha) * 1e6),
-      math.round(math.log(beta / (1 - alpha)) * 1e6))
+    (Micro.of(math.log(p1 / p0)),
+      Micro.of(math.log((1 - p1) / (1 - p0))),
+      Micro.of(math.log((1 - beta) / alpha)),
+      Micro.of(math.log(beta / (1 - alpha))))
   }
 
   /** Time-window funnel (ClickHouse `windowFunnel` semantics): the
@@ -1661,13 +1657,12 @@ object Events {
       .where(col("__d") > 0)
       .select(
         col("__d1"),
-        round(col("__n1").cast("double") * col("__d") / nD * 1e12)
-          .cast("long").as("__e1q"),
+        Pico.long(col("__n1").cast("double") * col("__d") / nD).as("__e1q"),
         when(col("__n") > 1,
-          round(col("__d").cast("double") * col("__n1") / nD *
+          Pico.long(col("__d").cast("double") * col("__n1") / nD *
             (col("__n") - col("__n1")) / nD *
             (col("__n") - col("__d")) /
-            (col("__n") - lit(1L)).cast("double") * 1e12).cast("long"))
+            (col("__n") - lit(1L)).cast("double")))
           .otherwise(0L).as("__vq"))
       .agg(
         count(lit(1)).as("n_times"),
@@ -1676,12 +1671,12 @@ object Events {
         sum(col("__vq")).as("__vs"))
       .select(
         col("n_times"), col("o1"),
-        round(col("__e1s").cast("double") / 1e12, 6).as("e1"),
-        round(col("__vs").cast("double") / 1e12, 6).as("var"),
+        round(Pico.back(col("__e1s")), 6).as("e1"),
+        round(Pico.back(col("__vs")), 6).as("var"),
         round(when(col("__vs") > 0,
-          ((col("o1") * lit(1000000000000L) - col("__e1s")).cast("double") / 1e12) *
-            ((col("o1") * lit(1000000000000L) - col("__e1s")).cast("double") / 1e12) /
-            (col("__vs").cast("double") / 1e12)), 6).as("chisq"))
+          Pico.back(col("o1") * lit(Pico.unit) - col("__e1s")) *
+            Pico.back(col("o1") * lit(Pico.unit) - col("__e1s")) /
+            Pico.back(col("__vs"))), 6).as("chisq"))
   }
 
   /** AB2: Mann–Whitney U (Wilcoxon rank-sum) — do per-event values
@@ -1795,7 +1790,7 @@ object Events {
       .agg(count(lit(1)).as("n_touches"),
         sum(credit).as("__cq"))
       .select(col("channel"), col("n_touches"),
-        round(col("__cq").cast("double") / 1e6, 6).as("credit"))
+        round(Micro.back(col("__cq")), 6).as("credit"))
   }
 
   /** EV31: restricted mean survival time — the area under the
@@ -1826,26 +1821,23 @@ object Events {
       .withColumn("__pt", lag(col("t"), 1, 0L).over(wAsc))
       .withColumn("__ps", lag(col("survival"), 1, 1.0).over(wAsc))
       .where(col("__pt") < tauDays)
-      .agg(sum(round(col("__ps") *
-        (least(col("t"), lit(tauDays)) - col("__pt")).cast("double") * 1e12)
-        .cast("long")).as("__stepq"))
+      .agg(sum(Pico.long(col("__ps") *
+        (least(col("t"), lit(tauDays)) - col("__pt")).cast("double"))).as("__stepq"))
     val tail = km
       .agg(max(col("t")).as("__tl"),
         max_by(col("survival"), col("t")).as("__sl"))
       .select(
         when(col("__tl").isNotNull && col("__tl") < tauDays,
-          round(col("__sl") * (lit(tauDays) - col("__tl")).cast("double")
-            * 1e12).cast("long"))
+          Pico.long(col("__sl") * (lit(tauDays) - col("__tl")).cast("double")))
           .otherwise(
             // empty curve: nobody churned — survival 1 throughout
-            when(col("__tl").isNull, lit(tauDays) * 1000000000000L)
+            when(col("__tl").isNull, lit(tauDays) * Pico.unit)
               .otherwise(0L)).as("__tailq"))
     steps
       .crossJoin(broadcast(tail)) // two 1-row aggregates — bounded
       .select(
         lit(tauDays).as("tau"),
-        round((coalesce(col("__stepq"), lit(0L)) + col("__tailq"))
-          .cast("double") / 1e12, 6).as("rmst"))
+        round(Pico.back(coalesce(col("__stepq"), lit(0L)) + col("__tailq")), 6).as("rmst"))
   }
 
   /** EV30: skip-gram sequential patterns — (from, to, gap) counts for

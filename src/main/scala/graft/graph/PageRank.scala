@@ -6,6 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{Buckets, ParameterError}
+import graft.Exact.{Micro, Pico}
 
 /** Weighted PageRank by power iteration — link analysis for
   * web-corpus curation (domain authority as a quality prior: a
@@ -57,8 +58,8 @@ object PageRank {
       .checkpointed(eager = false)
     val n = nodes.count()
     if (n == 0) throw new ParameterError("pagerank: empty edge list")
-    val basePico = math.round((1.0 - damping) / n * 1e12)
-    val initPico = math.round(1.0 / n * 1e12)
+    val basePico = Pico.of((1.0 - damping) / n)
+    val initPico = Pico.of(1.0 / n)
 
     // nodes with no out-edges, computed ONCE: the set is
     // iteration-invariant, so the per-round dangling probe is a
@@ -104,7 +105,7 @@ object PageRank {
                 .cast("double"), 0).cast("long")).as("__r"))
       ranks = next.checkpointed(eager = false, keepAqe = true) // round state
     }
-    ranks.select(col("node"), (col("__r").cast("double") / 1e12).as("rank"))
+    ranks.select(col("node"), Pico.back(col("__r")).as("rank"))
     }
   }
 
@@ -155,8 +156,8 @@ object PageRank {
     val nS = seedFlag.count()
     if (nS == 0)
       throw new ParameterError("personalizedPagerank: no seed is a graph node")
-    val basePico = math.round((1.0 - damping) / nS * 1e12)
-    val initPico = math.round(1.0 / nS * 1e12)
+    val basePico = Pico.of((1.0 - damping) / nS)
+    val initPico = Pico.of(1.0 / nS)
 
     // iteration-invariant no-out-edge set, computed once (the
     // [[pagerank]] hoist): per round the dangling probe is a semi-join
@@ -200,7 +201,7 @@ object PageRank {
                 .cast("double"), 0).cast("long")).as("__r"))
       ranks = next.checkpointed(eager = false, keepAqe = true) // round state
     }
-    ranks.select(col("node"), (col("__r").cast("double") / 1e12).as("rank"))
+    ranks.select(col("node"), Pico.back(col("__r")).as("rank"))
     }
   }
 
@@ -276,7 +277,7 @@ object PageRank {
         coalesce(col("triangles"), lit(0L)).as("triangles"),
         (round(when(col("degree") >= 2,
           coalesce(col("triangles"), lit(0L)).cast("double") * 2e6 /
-            (col("degree") * (col("degree") - 1)))) / 1e6)
+            (col("degree") * (col("degree") - 1)))) / Micro.factor)
           .as("clustering"))
   }
 
@@ -433,8 +434,7 @@ object PageRank {
       Some(Buckets.Metric("aa_apexes", maxField = "max_degree")), n = "__deg")
       .where(col("__deg") >= 2)
       .withColumn("__wq",
-        round(lit(1.0) / log(col("__deg").cast("double")) * 1e12)
-          .cast("long"))
+        Pico.long(lit(1.0) / log(col("__deg").cast("double"))))
       .groupBy(col("__apex"), col("__wq"))
       .agg(collect_list(col("__n")).as("__m"))
     Buckets.pairs(apexes, "__m", "__x", "__y", carry = Seq("__wq"))(_ < _)
@@ -445,7 +445,7 @@ object PageRank {
         Seq("__x", "__y"), "left_anti")
       .select(col("__x").as("node1"), col("__y").as("node2"),
         col("common_neighbors"),
-        round(col("__aaq").cast("double") / 1e12, 6).as("aa_score"))
+        round(Pico.back(col("__aaq")), 6).as("aa_score"))
   }
 
   /** GR9: multi-source BFS hop layers — `dist` = minimum hops from any

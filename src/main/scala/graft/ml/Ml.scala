@@ -9,6 +9,7 @@ import graft.panel.Panel
 import graft.panel.Panel.Keys
 import graft.pipeline.Strategy
 import graft.{GraftError, ParameterError}
+import graft.Exact.{Dec, Micro, Pico, decSum}
 
 /** ML-strategy surface — reference `MoonshotML` (ml.py:354-517, SURVEY
   * §2.9/§3.3).
@@ -58,9 +59,8 @@ object Features {
     * per-column (pairwise-complete). */
   def scalerFit(df: DataFrame, featureCols: Seq[String]): DataFrame = {
     require(featureCols.nonEmpty, "need at least one feature column")
-    val dec = "decimal(38,0)"
     val aggs = featureCols.flatMap { c =>
-      val m = round(col(c) * 1e6).cast(dec)
+      val m = Micro.dec(col(c))
       Seq(
         count(col(c)).as(s"__n_$c"),
         sum(m).as(s"__s_$c"),
@@ -72,9 +72,9 @@ object Features {
       val ss = col(s"__ss_$c").cast("double")
       Seq(
         col(s"__n_$c").as(s"n_$c"),
-        (round(when(col(s"__n_$c") > 0, s / n / 1e6), 6) + 0.0).as(s"mean_$c"),
+        (round(when(col(s"__n_$c") > 0, s / n / Micro.factor), 6) + 0.0).as(s"mean_$c"),
         round(when(col(s"__n_$c") >= 2,
-          sqrt((ss * n - s * s) / (n * (n - 1))) / 1e6), 6).as(s"std_$c"))
+          sqrt((ss * n - s * s) / (n * (n - 1))) / Micro.factor), 6).as(s"std_$c"))
     }
     df.agg(aggs.head, aggs.tail: _*).select(outs: _*)
   }
@@ -107,7 +107,13 @@ object Features {
   */
 object Evaluation {
   import org.apache.spark.sql.expressions.Window
-  import org.apache.spark.sql.types.DecimalType
+
+  /** `labelCol` as a long, raising on anything but 0 or 1. */
+  private def binaryLabel(labelCol: String): Column =
+    when(col(labelCol).isin(0, 1), col(labelCol).cast("long"))
+      .otherwise(raise_error(format_string(
+        "label must be 0 or 1, got %s", col(labelCol).cast("string")))
+        .cast("long"))
 
   /** One-row (n, positives, auc, accuracy, logloss, brier) for
     * probability scores against {0,1} labels (anything else raises).
@@ -136,13 +142,9 @@ object Evaluation {
       scoreCol: String = "prediction",
       labelCol: String = "label"): DataFrame = {
     val eps = 1e-15
-    val lbl = when(col(labelCol).isin(0, 1), col(labelCol).cast("long"))
-      .otherwise(raise_error(format_string(
-        s"label must be 0 or 1, got %s", col(labelCol).cast("string")))
-        .cast("long"))
+    val lbl = binaryLabel(labelCol)
     val s = col("__s")
     val clip = least(greatest(s, lit(eps)), lit(1 - eps))
-    val dec = DecimalType(38, 0)
     val perScore = preds
       .select(col(scoreCol).as("__s"), lbl.as("__y"))
       .groupBy(s)
@@ -152,11 +154,11 @@ object Evaluation {
       // per-score metric contributions, micro-quantized to integers
       // BEFORE the final distributed sum (exact; see scaladoc)
       .withColumn("__ll",
-        (col("__p") * round(-log(clip) * 1e12).cast(dec) +
-          col("__n") * round(-log(lit(1.0) - clip) * 1e12).cast(dec)).cast(dec))
+        (col("__p") * Pico.dec(-log(clip)) +
+          col("__n") * Pico.dec(-log(lit(1.0) - clip))).cast(Dec))
       .withColumn("__br",
-        (col("__p") * round(pow(lit(1.0) - s, 2) * 1e12).cast(dec) +
-          col("__n") * round(pow(s, 2) * 1e12).cast(dec)).cast(dec))
+        (col("__p") * Pico.dec(pow(lit(1.0) - s, 2)) +
+          col("__n") * Pico.dec(pow(s, 2))).cast(Dec))
       .withColumn("__acc",
         when(s >= 0.5, col("__p")).otherwise(col("__n")))
     // cumulative positives at-or-below each score via the two-level
@@ -172,8 +174,8 @@ object Evaluation {
       // complement term of the identity above; every factor integer,
       // decimal(38,0) accumulation
       .withColumn("__u2c",
-        col("__n").cast(dec) *
-          (lit(2) * col("__cp") - col("__p")).cast(dec))
+        col("__n").cast(Dec) *
+          (lit(2) * col("__cp") - col("__p")).cast(Dec))
     cum
       .agg(
         sum(col("__p") + col("__n")).as("__rows"),
@@ -187,12 +189,12 @@ object Evaluation {
         col("__rows").cast("long").as("n"),
         col("__P").cast("long").as("positives"),
         round(when(col("__P") > 0 && col("__N") > 0,
-          (lit(2).cast(dec) * col("__P").cast(dec) * col("__N").cast(dec) -
+          (lit(2).cast(Dec) * col("__P").cast(Dec) * col("__N").cast(Dec) -
             col("__u2c")).cast("double") /
             (lit(2.0) * col("__P") * col("__N"))), 6).as("auc"),
         round(col("__ok").cast("double") / col("__rows"), 6).as("accuracy"),
-        round(col("__lls").cast("double") / 1e12 / col("__rows"), 6).as("logloss"),
-        round(col("__brs").cast("double") / 1e12 / col("__rows"), 6).as("brier"))
+        round(Pico.back(col("__lls")) / col("__rows"), 6).as("logloss"),
+        round(Pico.back(col("__brs")) / col("__rows"), 6).as("brier"))
   }
 
   /** Calibration (reliability) bins: scores in [0,1] bucketed into
@@ -208,10 +210,7 @@ object Evaluation {
       labelCol: String = "label",
       bins: Int = 10): DataFrame = {
     if (bins < 1) throw new ParameterError(s"bins must be >= 1: $bins")
-    val lbl = when(col(labelCol).isin(0, 1), col(labelCol).cast("long"))
-      .otherwise(raise_error(format_string(
-        s"label must be 0 or 1, got %s", col(labelCol).cast("string")))
-        .cast("long"))
+    val lbl = binaryLabel(labelCol)
     preds
       .select(col(scoreCol).as("__s"), lbl.as("__y"))
       .groupBy(least(floor(col("__s") * bins), lit(bins - 1)).cast("long")
@@ -219,12 +218,11 @@ object Evaluation {
       .agg(
         count(lit(1)).as("n"),
         sum(col("__y")).as("__p"),
-        sum(round(col("__s") * 1e12).cast(
-          org.apache.spark.sql.types.DecimalType(38, 0))).as("__ssum"))
+        sum(Pico.dec(col("__s"))).as("__ssum"))
       .select(
         col("bin"),
         col("n"),
-        round(col("__ssum").cast("double") / 1e12 / col("n"), 6)
+        round(Pico.back(col("__ssum")) / col("n"), 6)
           .as("mean_predicted"),
         round(col("__p").cast("double") / col("n"), 6).as("event_rate"))
   }
@@ -241,15 +239,13 @@ object Evaluation {
       preds: DataFrame,
       scoreCol: String = "prediction",
       labelCol: String = "label"): DataFrame = {
-    val dec = DecimalType(38, 0)
-    def q(c: Column): Column = round(c * 1e12).cast(dec)
     val err = col(scoreCol) - col(labelCol)
     preds
       .select(
-        q(err * err).as("__se"),
-        q(abs(err)).as("__ae"),
-        q(col(labelCol)).as("__y"),
-        q(col(labelCol) * col(labelCol)).as("__y2"))
+        Pico.dec(err * err).as("__se"),
+        Pico.dec(abs(err)).as("__ae"),
+        Pico.dec(col(labelCol)).as("__y"),
+        Pico.dec(col(labelCol) * col(labelCol)).as("__y2"))
       .agg(
         count(lit(1)).as("__n"),
         sum(col("__se")).as("__sse"),
@@ -258,13 +254,13 @@ object Evaluation {
         sum(col("__y2")).as("__sy2"))
       .select(
         col("__n").cast("long").as("n"),
-        round(sqrt(col("__sse").cast("double") / 1e12 / col("__n")), 6).as("rmse"),
-        round(col("__sae").cast("double") / 1e12 / col("__n"), 6).as("mae"),
+        round(sqrt(Pico.back(col("__sse")) / col("__n")), 6).as("rmse"),
+        round(Pico.back(col("__sae")) / col("__n"), 6).as("mae"),
         round({
-          val sst = col("__sy2").cast("double") / 1e12 -
-            pow(col("__sy").cast("double") / 1e12, 2) / col("__n")
+          val sst = Pico.back(col("__sy2")) -
+            pow(Pico.back(col("__sy")), 2) / col("__n")
           when(sst > 0,
-            lit(1.0) - (col("__sse").cast("double") / 1e12) / sst)
+            lit(1.0) - Pico.back(col("__sse")) / sst)
         }, 6).as("r2"))
   }
 
@@ -281,10 +277,7 @@ object Evaluation {
       preds: DataFrame,
       scoreCol: String = "prediction",
       labelCol: String = "label"): DataFrame = {
-    val lbl = when(col(labelCol).isin(0, 1), col(labelCol).cast("long"))
-      .otherwise(raise_error(format_string(
-        s"label must be 0 or 1, got %s", col(labelCol).cast("string")))
-        .cast("long"))
+    val lbl = binaryLabel(labelCol)
     val s = col("__s")
     // descending cumulatives via the ASCENDING two-level bucket scan
     // (r9): desc-cum(x) = total − asc-cum(x) + x_at — exact integers.
@@ -311,15 +304,13 @@ object Evaluation {
         col("__ct") - col("__cac") + col("__c"))
       // ΔR·P per threshold, micro-quantized for the exact final sum
       .withColumn("__term",
-        round(col("__p").cast("double") / col("__pt") *
-          (col("__tp").cast("double") / col("__pp")) * 1e12).cast("long"))
+        Pico.long(col("__p").cast("double") / col("__pt") *
+          (col("__tp").cast("double") / col("__pp"))))
       .agg(
         sum(col("__c")).cast("long").as("n"),
         max(col("__pt")).cast("long").as("positives"),
         round(when(max(col("__pt")) > 0,
-          sum(col("__term").cast(
-            org.apache.spark.sql.types.DecimalType(38, 0))).cast("double")
-            / 1e12), 6).as("average_precision"))
+          Pico.back(decSum(col("__term")))), 6).as("average_precision"))
   }
 
   /** Two-sample Kolmogorov-Smirnov drift statistic: D = max |F_a − F_b|
@@ -338,7 +329,6 @@ object Evaluation {
       a: DataFrame,
       b: DataFrame,
       scoreCol: String = "prediction"): DataFrame = {
-    val dec = DecimalType(38, 0)
     val tagged = a.select(col(scoreCol).as("__v"), lit(1L).as("__a"), lit(0L).as("__b"))
       .unionByName(
         b.select(col(scoreCol).as("__v"), lit(0L).as("__a"), lit(1L).as("__b")))
@@ -362,10 +352,10 @@ object Evaluation {
     val perV = graft.panel.PrefixSum.inclusiveAuto(
       histV, "__v", Seq("__cai" -> "__ca0", "__cbi" -> "__cb0"))
       .crossJoin(broadcast(totals)) // one scalar row — bounded by design
-      .withColumn("__ca", col("__cai").cast(dec))
-      .withColumn("__cb", col("__cbi").cast(dec))
-      .withColumn("__na", coalesce(col("__na0"), lit(0L)).cast(dec))
-      .withColumn("__nb", coalesce(col("__nb0"), lit(0L)).cast(dec))
+      .withColumn("__ca", col("__cai").cast(Dec))
+      .withColumn("__cb", col("__cbi").cast(Dec))
+      .withColumn("__na", coalesce(col("__na0"), lit(0L)).cast(Dec))
+      .withColumn("__nb", coalesce(col("__nb0"), lit(0L)).cast(Dec))
       .withColumn("__num",
         abs(col("__ca") * col("__nb") - col("__cb") * col("__na")))
     perV
@@ -403,17 +393,15 @@ object Evaluation {
       scoreCol: String = "prediction",
       labelCol: String = "label",
       bins: Int = 10): DataFrame = {
-    val dec = DecimalType(38, 0)
-    val gapMicro = round(
-      abs(col("event_rate") - col("mean_predicted")) * 1e6).cast("long")
+    val gapMicro = Micro.long(abs(col("event_rate") - col("mean_predicted")))
     calibrationBins(preds, scoreCol, labelCol, bins)
       .agg(
         sum(col("n")).as("n"),
         count(lit(1)).as("n_bins"),
-        sum(gapMicro.cast(dec) * col("n").cast(dec)).as("__w"))
+        sum(gapMicro.cast(Dec) * col("n").cast(Dec)).as("__w"))
       .select(
         col("n"), col("n_bins"),
-        round(col("__w").cast("double") / col("n") / 1e6, 6).as("ece"))
+        round(col("__w").cast("double") / col("n") / Micro.factor, 6).as("ece"))
   }
 
   /** Murphy decomposition of the Brier score (Murphy 1973): raw Brier
@@ -438,11 +426,7 @@ object Evaluation {
       labelCol: String = "label",
       bins: Int = 10): DataFrame = {
     if (bins < 1) throw new ParameterError(s"bins must be >= 1: $bins")
-    val dec = DecimalType(38, 0)
-    val lbl = when(col(labelCol).isin(0, 1), col(labelCol).cast("long"))
-      .otherwise(raise_error(format_string(
-        s"label must be 0 or 1, got %s", col(labelCol).cast("string")))
-        .cast("long"))
+    val lbl = binaryLabel(labelCol)
     val perBin = preds
       .select(col(scoreCol).as("__s"), lbl.as("__y"))
       .groupBy(least(floor(col("__s") * bins), lit(bins - 1)).cast("long")
@@ -450,32 +434,31 @@ object Evaluation {
       .agg(
         count(lit(1)).as("__n"),
         sum(col("__y")).as("__p"),
-        sum(round(col("__s") * 1e12).cast(dec)).as("__ssum"),
-        sum(round((col("__s") - col("__y")) * (col("__s") - col("__y"))
-          * 1e12).cast(dec)).as("__sq"))
+        sum(Pico.dec(col("__s"))).as("__ssum"),
+        sum(Pico.dec((col("__s") - col("__y")) * (col("__s") - col("__y")))).as("__sq"))
       .withColumn("__rate", col("__p").cast("double") / col("__n"))
-      .withColumn("__mean", col("__ssum").cast("double") / 1e12 / col("__n"))
+      .withColumn("__mean", Pico.back(col("__ssum")) / col("__n"))
     perBin
       .agg(
         sum(col("__n")).as("n"),
         count(lit(1)).as("n_bins"),
         sum(col("__sq")).as("__b"),
         sum(col("__p")).as("__ptot"),
-        sum(round((col("__mean") - col("__rate")) *
-          (col("__mean") - col("__rate")) * 1e12).cast(dec)
-          * col("__n").cast(dec)).as("__rel"),
+        sum(Pico.dec((col("__mean") - col("__rate")) *
+          (col("__mean") - col("__rate")))
+          * col("__n").cast(Dec)).as("__rel"),
         // resolution needs the global base rate — exact integer ratio,
         // folded in below via Σ n_k·ȳ_k² − N·ȳ² (one-pass identity)
-        sum(round(col("__rate") * col("__rate") * 1e12).cast(dec)
-          * col("__n").cast(dec)).as("__r2"))
+        sum(Pico.dec(col("__rate") * col("__rate"))
+          * col("__n").cast(Dec)).as("__r2"))
       .withColumn("__base", col("__ptot").cast("double") / col("n"))
       .select(
         col("n"), col("n_bins"),
-        round(col("__b").cast("double") / 1e12 / col("n"), 6).as("brier"),
-        round(col("__rel").cast("double") / 1e12 / col("n"), 6)
+        round(Pico.back(col("__b")) / col("n"), 6).as("brier"),
+        round(Pico.back(col("__rel")) / col("n"), 6)
           .as("reliability"),
         round(greatest(
-          col("__r2").cast("double") / 1e12 / col("n") -
+          Pico.back(col("__r2")) / col("n") -
             col("__base") * col("__base"), lit(0.0)), 6).as("resolution"),
         round(col("__base") * (lit(1.0) - col("__base")), 6)
           .as("uncertainty"))
@@ -498,11 +481,7 @@ object Evaluation {
       preds: DataFrame,
       scoreCol: String = "prediction",
       labelCol: String = "label"): DataFrame = {
-    val dec = DecimalType(38, 0)
-    val lbl = when(col(labelCol).isin(0, 1), col(labelCol).cast("long"))
-      .otherwise(raise_error(format_string(
-        s"label must be 0 or 1, got %s", col(labelCol).cast("string")))
-        .cast("long"))
+    val lbl = binaryLabel(labelCol)
     val hist = preds
       // 6dp score quantization BOUNDS the histogram (≤ ~2M distinct
       // values) — "distinct scores" is unbounded for continuous
@@ -527,15 +506,15 @@ object Evaluation {
       .withColumn("__negBelow", col("__an") - col("__cn"))
       .withColumn("__posAbove", col("__np") - col("__ap"))
       // half-count placements: u10/(2N₋) = V₁₀, u01/(2N₊) = V₀₁
-      .withColumn("__u10", (col("__negBelow") * 2 + col("__cn")).cast(dec))
-      .withColumn("__u01", (col("__posAbove") * 2 + col("__cp")).cast(dec))
+      .withColumn("__u10", (col("__negBelow") * 2 + col("__cn")).cast(Dec))
+      .withColumn("__u01", (col("__posAbove") * 2 + col("__cp")).cast(Dec))
     placed
       .agg(
         max(col("__np")).as("n_pos"), max(col("__nn")).as("n_neg"),
-        sum(col("__cp").cast(dec) * col("__u10")).as("__s10"),
-        sum(col("__cp").cast(dec) * col("__u10") * col("__u10")).as("__ss10"),
-        sum(col("__cn").cast(dec) * col("__u01")).as("__s01"),
-        sum(col("__cn").cast(dec) * col("__u01") * col("__u01")).as("__ss01"))
+        sum(col("__cp").cast(Dec) * col("__u10")).as("__s10"),
+        sum(col("__cp").cast(Dec) * col("__u10") * col("__u10")).as("__ss10"),
+        sum(col("__cn").cast(Dec) * col("__u01")).as("__s01"),
+        sum(col("__cn").cast(Dec) * col("__u01") * col("__u01")).as("__ss01"))
       .select(Seq(col("n_pos"), col("n_neg")) ++ {
         val np = col("n_pos").cast("double"); val nn = col("n_neg").cast("double")
         val auc = col("__s10").cast("double") / (np * nn * 2.0)
@@ -572,11 +551,7 @@ object Evaluation {
       segmentCol: String,
       scoreCol: String = "prediction",
       labelCol: String = "label"): DataFrame = {
-    val dec = DecimalType(38, 0)
-    val lbl = when(col(labelCol).isin(0, 1), col(labelCol).cast("long"))
-      .otherwise(raise_error(format_string(
-        s"label must be 0 or 1, got %s", col(labelCol).cast("string")))
-        .cast("long"))
+    val lbl = binaryLabel(labelCol)
     val w = Window.partitionBy(col("segment")).orderBy(col("__s"))
     val whole = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     preds
@@ -587,12 +562,12 @@ object Evaluation {
       .agg(sum(col("__y")).as("__cp"), sum(lit(1L) - col("__y")).as("__cn"))
       .withColumn("__negBelow", coalesce(sum(col("__cn")).over(
         w.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("__u10", (col("__negBelow") * 2 + col("__cn")).cast(dec))
+      .withColumn("__u10", (col("__negBelow") * 2 + col("__cn")).cast(Dec))
       .groupBy(col("segment"))
       .agg(
         sum(col("__cp")).as("n_pos"),
         sum(col("__cn")).as("n_neg"),
-        sum(col("__cp").cast(dec) * col("__u10")).as("__s10"))
+        sum(col("__cp").cast(Dec) * col("__u10")).as("__s10"))
       .select(
         col("segment"), col("n_pos"), col("n_neg"),
         round(when(col("n_pos") > 0 && col("n_neg") > 0,
@@ -618,7 +593,6 @@ object Evaluation {
       df: DataFrame,
       col1: String = "label",
       col2: String = "label2"): DataFrame = {
-    val dec = DecimalType(38, 0)
     val base = df
       .where(col(col1).isNotNull && col(col2).isNotNull)
       .select(col(col1).cast("string").as("__a"),
@@ -631,15 +605,15 @@ object Evaluation {
       .agg(count(lit(1)).as("__n1"))
       .join(base.groupBy(col("__b").as("__k")).agg(count(lit(1)).as("__n2")),
         Seq("__k"), "inner")
-      .agg(coalesce(sum(col("__n1").cast(dec) * col("__n2").cast(dec)),
-        lit(0).cast(dec)).as("__pe2"))
+      .agg(coalesce(sum(col("__n1").cast(Dec) * col("__n2").cast(Dec)),
+        lit(0).cast(Dec)).as("__pe2"))
     tot.crossJoin(broadcast(pe2))
       .select(
         col("n"), col("agree"),
-        round(when(col("n").cast(dec) * col("n").cast(dec) =!= col("__pe2"),
-          (col("n").cast(dec) * col("agree").cast(dec) - col("__pe2"))
+        round(when(col("n").cast(Dec) * col("n").cast(Dec) =!= col("__pe2"),
+          (col("n").cast(Dec) * col("agree").cast(Dec) - col("__pe2"))
             .cast("double") /
-            (col("n").cast(dec) * col("n").cast(dec) - col("__pe2"))
+            (col("n").cast(Dec) * col("n").cast(Dec) - col("__pe2"))
               .cast("double")), 6).as("kappa"))
   }
 
@@ -691,8 +665,7 @@ object Evaluation {
     binned
       .withColumn("__c", (pa - pe) * log(pa / pe))
       .withColumn("psi",
-        round(sum(round(col("__c") * 1e12).cast("long")
-          .cast(DecimalType(38, 0))).over(wAll).cast("double") / 1e12, 6))
+        round(Pico.back(decSum(Pico.long(col("__c"))).over(wAll)), 6))
       .select(
         col("bin"), col("n_expected"), col("n_actual"),
         round(col("n_expected").cast("double") / col("__ne"), 6)
@@ -725,17 +698,16 @@ object Evaluation {
       df: DataFrame,
       clusterCol: String,
       labelCol: String): DataFrame = {
-    val dec = DecimalType(38, 0)
     val cont = df
       .groupBy(col(clusterCol).as("__u"), col(labelCol).as("__v"))
       .agg(count(lit(1)).as("__n"))
       .checkpointed(eager = false) // feeds marginals AND the MI pass
     val nf = cont.agg(sum(col("__n")).as("__tot"))
     def pairs2(c: org.apache.spark.sql.Column) =
-      sum(c.cast(dec) * (c.cast(dec) - 1))
+      sum(c.cast(Dec) * (c.cast(Dec) - 1))
     def entq(c: org.apache.spark.sql.Column) = {
       val p = c.cast("double") / col("__tot").cast("double")
-      sum(round(p * log(p) * 1e12).cast("long"))
+      sum(Pico.long(p * log(p)))
     }
     // marginals ride the bounded contingency grid as windows — no
     // self-join of cont with its own aggregates (ambiguous-attribute
@@ -761,18 +733,17 @@ object Evaluation {
     val nd = col("__tot").cast("double")
     val cells = marg.agg(
       pairs2(col("__n")).as("__sij2"),
-      sum(round(col("__n").cast("double") / nd *
+      sum(Pico.long(col("__n").cast("double") / nd *
         log(col("__n").cast("double") * nd /
-          (col("__a").cast("double") * col("__b").cast("double"))) * 1e12)
-        .cast("long")).as("__miq"))
+          (col("__a").cast("double") * col("__b").cast("double"))))).as("__miq"))
       .checkpointed(eager = false)
     def d(c: String) = col(c).cast("double")
-    val cn22 = (col("__tot2").cast(dec) * (col("__tot2").cast(dec) - 1))
+    val cn22 = (col("__tot2").cast(Dec) * (col("__tot2").cast(Dec) - 1))
       .cast("double")
     val e2 = d("__sa2") * d("__sb2") / cn22
     val ariDen = (d("__sa2") + d("__sb2")) / 2.0 - e2
-    val hu = -(d("__huq")) / 1e12
-    val hv = -(d("__hvq")) / 1e12
+    val hu = -(d("__huq")) / Pico.factor
+    val hv = -(d("__hvq")) / Pico.factor
     cells
       .crossJoin(broadcast(aAgg)).crossJoin(broadcast(bAgg))
       // a FRESH total frame: re-crossJoining nf would self-join its
@@ -783,7 +754,7 @@ object Evaluation {
         round(when(ariDen =!= 0.0, (d("__sij2") - e2) / ariDen), 6)
           .as("ari"),
         round(when(col("__huq") < 0 && col("__hvq") < 0,
-          d("__miq") / 1e12 / sqrt(hu * hv)), 6).as("nmi"))
+          d("__miq") / Pico.factor / sqrt(hu * hv)), 6).as("nmi"))
   }
 
   /** ML37: PSI drift TREND — [[psiDrift]]'s statistic re-evaluated per
@@ -847,10 +818,10 @@ object Evaluation {
     val pa = greatest(col("__na").cast("double") / col("__ta"), lit(eps))
     grid
       .withColumn("__cq",
-        round((pa - pe) * log(pa / pe) * 1e12).cast("long"))
+        Pico.long((pa - pe) * log(pa / pe)))
       .groupBy(col("__d").as("day"))
       .agg(sum(col("__na")).as("n_rows"),
-        round(sum(col("__cq")).cast("double") / 1e12, 6).as("psi"))
+        round(Pico.back(sum(col("__cq"))), 6).as("psi"))
   }
 
   /** Precision-recall curve points: one row per DISTINCT score,
@@ -877,10 +848,7 @@ object Evaluation {
       threshold: Double = 0.5,
       scoreCol: String = "prediction",
       labelCol: String = "label"): DataFrame = {
-    val lbl = when(col(labelCol).isin(0, 1), col(labelCol).cast("long"))
-      .otherwise(raise_error(format_string(
-        s"label must be 0 or 1, got %s", col(labelCol).cast("string")))
-        .cast("long"))
+    val lbl = binaryLabel(labelCol)
     val hit = col(scoreCol) >= threshold
     def d(c: Column) = c.cast("double")
     preds
@@ -926,10 +894,7 @@ object Evaluation {
       labelCol: String = "label"): DataFrame = {
     if (percent < 1 || percent > 100)
       throw new ParameterError(s"percent must be in [1, 100]: $percent")
-    val lbl = when(col(labelCol).isin(0, 1), col(labelCol).cast("long"))
-      .otherwise(raise_error(format_string(
-        s"label must be 0 or 1, got %s", col(labelCol).cast("string")))
-        .cast("long"))
+    val lbl = binaryLabel(labelCol)
     val t = col("threshold")
     val perT = preds
       // 6dp threshold quantization: bounded candidate set (aucDelong's
@@ -981,15 +946,14 @@ object Evaluation {
     if (taus.isEmpty) throw new ParameterError("need at least one tau")
     taus.foreach(t => if (t <= 0 || t >= 1)
       throw new ParameterError(s"tau must be in (0, 1): $t"))
-    val dec = DecimalType(38, 0)
     val d = col(labelCol).cast("double") - col(scoreCol).cast("double")
     def lossMicro(t: Double): Column =
-      round(greatest(d * t, d * (t - 1)) * 1e6).cast("long").cast(dec)
+      Micro.long(greatest(d * t, d * (t - 1))).cast(Dec)
     val aggs = taus.map(t =>
       sum(lossMicro(t)).as(s"__s${math.round(t * 100)}"))
     val outs = taus.map { t =>
       val tag = math.round(t * 100).toString
-      (round(col(s"__s$tag").cast("double") / col("n")) / 1e6)
+      Micro.mean(col(s"__s$tag"), col("n"))
         .as(s"pinball_$tag")
     }
     preds
@@ -1042,10 +1006,7 @@ object Evaluation {
       labelCol: String = "label",
       buckets: Int = 10): DataFrame = {
     if (buckets < 1) throw new ParameterError(s"buckets must be >= 1: $buckets")
-    val lbl = when(col(labelCol).isin(0, 1), col(labelCol).cast("long"))
-      .otherwise(raise_error(format_string(
-        s"label must be 0 or 1, got %s", col(labelCol).cast("string")))
-        .cast("long"))
+    val lbl = binaryLabel(labelCol)
     val hist0 = preds
       // 6dp score quantization bounds the candidate histogram
       // (aucDelong's rationale); the score-descending cumulative rides
@@ -1140,10 +1101,7 @@ object Evaluation {
       preds: DataFrame,
       scoreCol: String = "prediction",
       labelCol: String = "label"): DataFrame = {
-    val lbl = when(col(labelCol).isin(0, 1), col(labelCol).cast("long"))
-      .otherwise(raise_error(format_string(
-        s"label must be 0 or 1, got %s", col(labelCol).cast("string")))
-        .cast("long"))
+    val lbl = binaryLabel(labelCol)
     val t = col("threshold")
     val perT = preds
       // 6dp threshold quantization: bounded candidate set (aucDelong's

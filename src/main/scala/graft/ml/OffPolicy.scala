@@ -1,6 +1,7 @@
 package graft.ml
 
 import graft.Checkpoint._
+import graft.Exact.Pico
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
@@ -74,15 +75,13 @@ object OffPolicy {
       .join(broadcast(actions.select(col("__a"), col("__na"))), Seq("__a"))
       .agg(
         sum(col("__ma")).as("__nm"),
-        sum(round(col("__mra").cast("double") / col("__na").cast("double")
-          * 1e12).cast("long")).as("__ipsq"),
-        sum(round(col("__ma").cast("double") / col("__na").cast("double")
-          * 1e12).cast("long")).as("__wq"))
+        sum(Pico.long(col("__mra").cast("double") / col("__na").cast("double"))).as("__ipsq"),
+        sum(Pico.long(col("__ma").cast("double") / col("__na").cast("double"))).as("__wq"))
       .crossJoin(broadcast(kf.select(col("__Nu").as("n_users"))))
       .select(
         col("n_users"),
         coalesce(col("__nm"), lit(0L)).as("n_matched"),
-        round(coalesce(col("__ipsq"), lit(0L)).cast("double") / 1e12, 6)
+        round(Pico.back(coalesce(col("__ipsq"), lit(0L))), 6)
           .as("ips"),
         round(when(col("__wq") > 0,
           col("__ipsq").cast("double") / col("__wq").cast("double")), 6)

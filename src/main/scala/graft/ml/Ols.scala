@@ -1,5 +1,7 @@
 package graft.ml
 
+import graft.Exact.{Basis, Micro, decSum}
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -117,7 +119,6 @@ object Ols {
     val wf = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     def rot(c: String): Column =
       coalesce(lead(col(c), 1).over(w), first(col(c)).over(wf))
-    val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     // duplicate-id tripwire: equal ids share a hash (same bucket) and
     // sort adjacently, so one lag on the bucket window sees every dup.
     // The guard multiplies into the quantized residuals (×1 when clean)
@@ -130,7 +131,7 @@ object Ols {
       val r = col(yCol).cast("double") -
         (col("__b0") + col("__b1") * xa.cast("double") +
           col("__b2") * xb.cast("double"))
-      sum((round(r * r * 1e4) * col("__tie")).cast(dec))
+      decSum(Basis(r * r) * col("__tie"))
     }
     val sums = df
       .withColumn("__pb", floor(unit * buckets).cast("long"))
@@ -144,9 +145,9 @@ object Ols {
         ssq(col("__x1p"), col(x2Col)).as("__s1"),
         ssq(col(x1Col), col("__x2p")).as("__s2"))
     def mse(s: Column): Column =
-      round(s.cast("double") / 1e4 / col("__n"), 6)
+      round(Basis.back(s) / col("__n"), 6)
     def delta(s: Column): Column =
-      round((s - col("__sb")).cast("double") / 1e4 / col("__n"), 6) + 0.0
+      round(Basis.back(s - col("__sb")) / col("__n"), 6) + 0.0
     sums
       .select(explode(array(
         struct(lit("__base").as("feature"), mse(col("__sb")).as("mse"),
@@ -179,11 +180,10 @@ object Ols {
       x1Col: String,
       x2Col: String): DataFrame = {
     val betas = rawBetas(momentsOf(df, yCol, x1Col, x2Col))
-    val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     def madSum(c: String, s: String): Column = {
       val dev = col(c).cast("double") -
         col(s).cast("double") / col("__n").cast("double")
-      sum(round(abs(dev) * 1e6).cast(dec))
+      sum(Micro.dec(abs(dev)))
     }
     val sums = df
       .crossJoin(broadcast(betas)) // one row — bounded by design
@@ -193,7 +193,7 @@ object Ols {
         madSum(x1Col, "__s1").as("__m1"),
         madSum(x2Col, "__s2").as("__m2"))
     def mas(b: Column, m: Column): Column =
-      abs(b) * (m.cast("double") / 1e6 / col("__n"))
+      abs(b) * (Micro.back(m) / col("__n"))
     val (m1, m2) = (mas(col("__b1"), col("__m1")), mas(col("__b2"), col("__m2")))
     def share(m: Column): Column =
       round(when(m1 + m2 =!= 0.0, m / (m1 + m2)), 6) + 0.0

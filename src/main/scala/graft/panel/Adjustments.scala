@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.panel.Panel.Keys
+import graft.Exact.Pico
 
 /** Corporate-action price adjustment — the split/dividend back-adjustment
   * every continuous price series needs (the reference delegates it to its
@@ -38,13 +39,12 @@ object Adjustments {
       panel: DataFrame,
       actions: DataFrame,
       priceCol: String = "close")(implicit k: Keys): DataFrame = {
-    val pico = round(
-      when(col("factor") <= 0 || col("factor").isNull,
+    val pico = Pico.long(when(col("factor") <= 0 || col("factor").isNull,
         raise_error(format_string(
           "adjustment factor must be positive: sid %s date %s factor %s",
           col(k.sid).cast("string"), col(k.dateCol).cast("string"),
           col("factor").cast("string"))).cast("double"))
-        .otherwise(log(col("factor"))) * 1e12).cast("long")
+        .otherwise(log(col("factor"))))
     val evts = actions.select(
       (k.group.map(col) :+ col(k.sid) :+ col(k.dateCol) :+
         lit(1).as("__tag") :+ pico.as("__lq")): _*)
@@ -63,7 +63,7 @@ object Adjustments {
       .withColumn("__ls", sum(col("__lq")).over(w))
       .where(col("__tag") === 0)
       .withColumn("adj_factor",
-        round(exp(coalesce(col("__ls"), lit(0L)) / 1e12), 9))
+        round(exp(coalesce(col("__ls"), lit(0L)) / Pico.factor), 9))
       .withColumn(s"adj_$priceCol", round(col(priceCol) * col("adj_factor"), 6))
       .drop("__tag", "__lq", "__ls")
   }

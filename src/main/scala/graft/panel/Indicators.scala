@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.panel.Panel.Keys
+import graft.Exact.{Dec, Micro}
 
 /** Classic technical indicators over (sid, date) bars — the signal
   * vocabulary `prices_to_signals` strategies are written in. Each is
@@ -14,9 +15,6 @@ import graft.panel.Panel.Keys
   * indicator pays exactly one double division per row (6dp).
   */
 object Indicators {
-
-  private val Dec = "decimal(38,0)"
-  private def micro(c: Column): Column = round(c * 1e6).cast(Dec)
 
   /** Average True Range (Wilder 1978, SMA form): TR = max(high − low,
     * |high − prevClose|, |low − prevClose|) per bar (first bar: high −
@@ -39,10 +37,10 @@ object Indicators {
     val f = k.rollingFrame(window)
     bars
       .withColumn("tr", tr)
-      .withColumn("__trm", micro(col("tr")))
+      .withColumn("__trm", Micro.dec(col("tr")))
       .withColumn(s"atr_$window",
         round(when(count(col("__trm")).over(f) === window,
-          sum(col("__trm")).over(f).cast("double") / window / 1e6), 6))
+          sum(col("__trm")).over(f).cast("double") / window / Micro.factor), 6))
       .drop("__trm")
   }
 
@@ -77,7 +75,7 @@ object Indicators {
       bars: DataFrame,
       closeCol: String = "close",
       volumeCol: String = "volume")(implicit k: Keys): DataFrame = {
-    val diff = micro(col(closeCol)) - micro(lag(col(closeCol), 1).over(k.bySid))
+    val diff = Micro.dec(col(closeCol)) - Micro.dec(lag(col(closeCol), 1).over(k.bySid))
     val signed = when(diff.isNull || diff === 0, 0L)
       .when(diff > 0, col(volumeCol).cast("long"))
       .otherwise(-col(volumeCol).cast("long"))
@@ -98,7 +96,7 @@ object Indicators {
       window: Int,
       closeCol: String = "close")(implicit k: Keys): DataFrame = {
     require(window >= 1, s"window must be >= 1: $window")
-    val diff = micro(col(closeCol)) - micro(lag(col(closeCol), 1).over(k.bySid))
+    val diff = Micro.dec(col(closeCol)) - Micro.dec(lag(col(closeCol), 1).over(k.bySid))
     val f = k.rollingFrame(window)
     bars
       // null change (the first bar) stays null — it must not count as a
@@ -129,7 +127,7 @@ object Indicators {
       window: Int,
       closeCol: String = "close")(implicit k: Keys): DataFrame = {
     require(window >= 1, s"window must be >= 1: $window")
-    val diff = micro(col(closeCol)) - micro(lag(col(closeCol), 1).over(k.bySid))
+    val diff = Micro.dec(col(closeCol)) - Micro.dec(lag(col(closeCol), 1).over(k.bySid))
     val f = k.rollingFrame(window)
     bars
       .withColumn("__d", diff)
@@ -160,7 +158,7 @@ object Indicators {
     val f = k.rollingFrame(window)
     val full = count(col(closeCol)).over(f) === window
     val mid = round(when(full,
-      sum(micro(col(closeCol))).over(f).cast("double") / window / 1e6), 6)
+      sum(Micro.dec(col(closeCol))).over(f).cast("double") / window / Micro.factor), 6)
     val sd = round(when(full, stddev_samp(col(closeCol)).over(f)), 6)
     bars
       .withColumn(s"bb_mid_$window", mid)
@@ -184,7 +182,7 @@ object Indicators {
       volumeCol: String = "volume")(implicit k: Keys): DataFrame = {
     require(window >= 1, s"window must be >= 1: $window")
     val f = k.rollingFrame(window)
-    val notional = micro(col(closeCol) * col(volumeCol))
+    val notional = Micro.dec(col(closeCol) * col(volumeCol))
     val vol = sum(col(volumeCol).cast("long")).over(f)
     // round the micro-int quotient, THEN scale down: rounding the
     // already-divided double at 6dp can land exactly on a .5 decimal
@@ -193,6 +191,6 @@ object Indicators {
     // is correctly rounded in both
     bars.withColumn(s"vwap_$window",
       when(count(col(closeCol)).over(f) === window && vol =!= 0,
-        round(sum(notional).over(f).cast("double") / vol) / 1e6))
+        Micro.mean(sum(notional).over(f), vol)))
   }
 }

@@ -1,6 +1,7 @@
 package graft.panel
 
 import graft.Checkpoint._
+import graft.Exact.{Dec, Micro, Nano, Pico, decSum}
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
@@ -158,10 +159,10 @@ object Panel {
       val w = weight(col("__ewma_rn") - e.getField("rn"))
       struct(
         when(e.getField("x").isNotNull,
-          round(e.getField("x") * w * 1e6).cast("long")).otherwise(lit(0L))
+          Micro.long(e.getField("x") * w)).otherwise(lit(0L))
           .as("num"),
         when(e.getField("x").isNotNull,
-          round(w * 1e6).cast("long")).otherwise(lit(0L)).as("den"))
+          Micro.long(w)).otherwise(lit(0L)).as("den"))
     })
     // materialize `terms` in its own projection: referenced bare by both
     // folds it evaluates the window collect_list + per-element transform
@@ -273,21 +274,19 @@ object Panel {
   def sidMoments(
       df: DataFrame,
       closeCol: String = "close")(implicit k: Keys): DataFrame = {
-    val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    val r = round((col(closeCol) / lag(col(closeCol), 1).over(k.bySid) - 1)
-      * 1e6).cast("long")
+    val r = Micro.long(col(closeCol) / lag(col(closeCol), 1).over(k.bySid) - 1)
     df
       .withColumn("__r", r)
       .where(col("__r").isNotNull)
       .groupBy(col(k.sid).as("sid"))
       .agg(
         count(lit(1)).as("n_days"),
-        sum(col("__r").cast(dec)).as("__s1"),
-        sum((col("__r").cast(dec) * col("__r").cast(dec))).as("__s2"),
-        sum((col("__r").cast(dec) * col("__r").cast(dec) *
-          col("__r").cast(dec))).as("__s3"),
-        sum((col("__r").cast(dec) * col("__r").cast(dec) *
-          col("__r").cast(dec) * col("__r").cast(dec))).as("__s4"))
+        decSum(col("__r")).as("__s1"),
+        sum((col("__r").cast(Dec) * col("__r").cast(Dec))).as("__s2"),
+        sum((col("__r").cast(Dec) * col("__r").cast(Dec) *
+          col("__r").cast(Dec))).as("__s3"),
+        sum((col("__r").cast(Dec) * col("__r").cast(Dec) *
+          col("__r").cast(Dec) * col("__r").cast(Dec))).as("__s4"))
       .select(Seq(col("sid"), col("n_days")) ++ {
         val n = col("n_days").cast("double")
         val mu = col("__s1").cast("double") / n
@@ -324,20 +323,19 @@ object Panel {
       benchRet: Column,
       window: Int)(implicit k: Keys): DataFrame = {
     require(window >= 2, s"window must be >= 2: $window")
-    val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     val f = k.rollingFrame(window)
     val both = ret.isNotNull && benchRet.isNotNull
-    val x = when(both, round(ret * 1e6).cast("long"))
-    val y = when(both, round(benchRet * 1e6).cast("long"))
+    val x = when(both, Micro.long(ret))
+    val y = when(both, Micro.long(benchRet))
     val n = count(x).over(f)
-    val sx = sum(x.cast(dec)).over(f)
-    val sy = sum(y.cast(dec)).over(f)
-    val sxy = sum((x.cast(dec) * y.cast(dec))).over(f)
-    val syy = sum((y.cast(dec) * y.cast(dec))).over(f)
-    val varY = n.cast(dec) * syy - sy * sy
+    val sx = decSum(x).over(f)
+    val sy = decSum(y).over(f)
+    val sxy = sum((x.cast(Dec) * y.cast(Dec))).over(f)
+    val syy = sum((y.cast(Dec) * y.cast(Dec))).over(f)
+    val varY = n.cast(Dec) * syy - sy * sy
     df.withColumn(s"beta_$window",
       round(when(n === window && varY =!= 0,
-        (n.cast(dec) * sxy - sx * sy).cast("double") /
+        (n.cast(Dec) * sxy - sx * sy).cast("double") /
           varY.cast("double")), 6))
   }
 
@@ -441,15 +439,13 @@ object Panel {
     require(scales.size >= 2, s"need at least 2 scales: $scales")
     require(scales.forall(_ >= 1) && scales.distinct.size == scales.size,
       s"scales must be distinct positives: $scales")
-    val dec = "decimal(38,0)"
-    val r = round(log(col(closeCol) / lag(col(closeCol), 1).over(k.bySid))
-      * 1e6).cast("long")
+    val r = Micro.long(log(col(closeCol) / lag(col(closeCol), 1).over(k.bySid)))
     val rets = df
       .withColumn("__r", r)
       .where(col("__r").isNotNull)
       .withColumn("__rn",
         row_number().over(k.bySid) - 1)
-    val lkOf = scales.map(s => s -> math.rint(math.log(s.toDouble) * 1e9).toLong)
+    val lkOf = scales.map(s => s -> math.rint(math.log(s.toDouble) * Nano.factor).toLong)
     val blocks = rets
       .select(col(k.sid).as("sid"), col("__rn"), col("__r"),
         explode(lit(scales.toArray)).as("__k"))
@@ -461,15 +457,15 @@ object Panel {
       .groupBy(col("sid"), col("__k"))
       .agg(
         count(lit(1)).as("__nb"),
-        sum(col("__bs").cast(dec)).as("__s"),
-        sum((col("__bs").cast(dec) * col("__bs").cast(dec))).as("__ss"))
+        decSum(col("__bs")).as("__s"),
+        sum((col("__bs").cast(Dec) * col("__bs").cast(Dec))).as("__ss"))
       .where(col("__nb") >= 2)
       .withColumn("__var",
-        (col("__nb").cast(dec) * col("__ss") - col("__s") * col("__s"))
+        (col("__nb").cast(Dec) * col("__ss") - col("__s") * col("__s"))
           .cast("double") /
           (col("__nb").cast("double") * (col("__nb") - 1).cast("double")))
       .where(col("__var") > 0)
-      .withColumn("__lv", round(log(col("__var")) * 1e9).cast("long"))
+      .withColumn("__lv", Nano.long(log(col("__var"))))
       .withColumn("__lk",
         lkOf.tail.foldLeft(when(col("__k") === lkOf.head._1,
           lit(lkOf.head._2))) { case (acc, (s, v)) =>
@@ -481,18 +477,18 @@ object Panel {
         count(lit(1)).as("n_scales"),
         sum(col("__lk")).as("__slk"),
         sum(col("__lv")).as("__slv"),
-        sum((col("__lk").cast(dec) * col("__lk").cast(dec))).as("__slkk"),
-        sum((col("__lk").cast(dec) * col("__lv").cast(dec))).as("__slkv"))
+        sum((col("__lk").cast(Dec) * col("__lk").cast(Dec))).as("__slkk"),
+        sum((col("__lk").cast(Dec) * col("__lv").cast(Dec))).as("__slkv"))
       .select(
         col("sid"), col("n_scales"),
         (round(when(
           col("n_scales") >= 2 &&
-            col("n_scales").cast(dec) * col("__slkk") -
-              col("__slk").cast(dec) * col("__slk").cast(dec) =!= 0,
-          (col("n_scales").cast(dec) * col("__slkv") -
-            col("__slk").cast(dec) * col("__slv").cast(dec)).cast("double") /
-            (col("n_scales").cast(dec) * col("__slkk") -
-              col("__slk").cast(dec) * col("__slk").cast(dec)).cast("double")
+            col("n_scales").cast(Dec) * col("__slkk") -
+              col("__slk").cast(Dec) * col("__slk").cast(Dec) =!= 0,
+          (col("n_scales").cast(Dec) * col("__slkv") -
+            col("__slk").cast(Dec) * col("__slv").cast(Dec)).cast("double") /
+            (col("n_scales").cast(Dec) * col("__slkk") -
+              col("__slk").cast(Dec) * col("__slk").cast(Dec)).cast("double")
             / 2.0), 6) + 0.0).as("hurst"))
   }
 
@@ -544,23 +540,22 @@ object Panel {
       s"correlationMatrix is for a named book (<= 50 sids), got ${sids.size}; " +
         "use a blocked all-pairs algorithm for corpus-wide matrices")
     require(sids.distinct.size == sids.size, "duplicate sids")
-    val dec = "decimal(38,0)"
     val n = sids.length
     val grid = df
       .where(col(k.sid).cast("string").isin(sids: _*))
       .groupBy(k.slotCols.map(col): _*)
       .agg(
         max(when(col(k.sid).cast("string") === sids.head,
-          round(ret * 1e6).cast("long"))).as("__v0"),
+          Micro.long(ret))).as("__v0"),
         sids.tail.zipWithIndex.map { case (s, i) =>
           max(when(col(k.sid).cast("string") === s,
-            round(ret * 1e6).cast("long"))).as(s"__v${i + 1}")
+            Micro.long(ret))).as(s"__v${i + 1}")
         }: _*)
     val pairs = for (i <- 0 until n; j <- (i + 1) until n) yield (i, j)
     val aggs = pairs.flatMap { case (i, j) =>
       val vi = col(s"__v$i"); val vj = col(s"__v$j")
       val both = vi.isNotNull && vj.isNotNull
-      def m(c: Column) = when(both, c.cast(dec))
+      def m(c: Column) = when(both, c.cast(Dec))
       Seq(
         sum(when(both, 1L)).as(s"__n_${i}_$j"),
         sum(m(vi)).as(s"__sx_${i}_$j"),
@@ -572,7 +567,7 @@ object Panel {
     val one = grid.agg(aggs.head, aggs.tail: _*)
     val rows = pairs.map { case (i, j) =>
       val nn = coalesce(col(s"__n_${i}_$j"), lit(0L))
-      val nd = nn.cast(dec)
+      val nd = nn.cast(Dec)
       val covN = nd * col(s"__sxy_${i}_$j") -
         col(s"__sx_${i}_$j") * col(s"__sy_${i}_$j")
       val vxN = nd * col(s"__sxx_${i}_$j") -
@@ -618,9 +613,8 @@ object Panel {
     require(sids.size <= 50,
       s"cointegrationScreen is for a named book (<= 50 sids), got ${sids.size}")
     require(sids.distinct.size == sids.size, "duplicate sids")
-    val dec = "decimal(38,0)"
     val n = sids.length
-    val lp = round(log(price) * 1e6).cast("long")
+    val lp = Micro.long(log(price))
     val grid = df
       .where(col(k.sid).cast("string").isin(sids: _*) && price > 0)
       .groupBy(k.slotCols.map(col): _*)
@@ -634,7 +628,7 @@ object Panel {
     val aggs = pairs.flatMap { case (i, j) =>
       val y = col(s"__v$i"); val x = col(s"__v$j")
       val both = y.isNotNull && x.isNotNull
-      def m(c: Column) = when(both, c.cast(dec))
+      def m(c: Column) = when(both, c.cast(Dec))
       Seq(
         sum(when(both, 1L)).as(s"__n_${i}_$j"),
         sum(m(x)).as(s"__sx_${i}_$j"),
@@ -647,7 +641,7 @@ object Panel {
     val withE = grid.crossJoin(broadcast(stats))
     val eCols = pairs.map { case (i, j) =>
       val y = col(s"__v$i"); val x = col(s"__v$j")
-      val nn = col(s"__n_${i}_$j").cast(dec)
+      val nn = col(s"__n_${i}_$j").cast(Dec)
       val vx = nn * col(s"__sxx_${i}_$j") -
         col(s"__sx_${i}_$j") * col(s"__sx_${i}_$j")
       val beta = when(col(s"__n_${i}_$j") >= 3 && vx =!= 0,
@@ -677,16 +671,16 @@ object Panel {
       Seq(
         count(e).as(s"__cnt_${i}_$j"),
         count(d).as(s"__cnd_${i}_$j"),
-        sum((e.cast(dec) * e.cast(dec))).as(s"__see_${i}_$j"),
-        sum((d.cast(dec) * d.cast(dec))).as(s"__sdd_${i}_$j"),
-        sum((prev.cast(dec) * prev.cast(dec))).as(s"__spp_${i}_$j"),
-        sum((prev.cast(dec) * d.cast(dec))).as(s"__spd_${i}_$j"))
+        sum((e.cast(Dec) * e.cast(Dec))).as(s"__see_${i}_$j"),
+        sum((d.cast(Dec) * d.cast(Dec))).as(s"__sdd_${i}_$j"),
+        sum((prev.cast(Dec) * prev.cast(Dec))).as(s"__spp_${i}_$j"),
+        sum((prev.cast(Dec) * d.cast(Dec))).as(s"__spd_${i}_$j"))
     }
     val one2 = lagged.agg(aggs2.head, aggs2.tail: _*)
       .crossJoin(broadcast(stats))
     val rows = pairs.map { case (i, j) =>
       val nn = coalesce(col(s"__n_${i}_$j"), lit(0L))
-      val nd = nn.cast(dec)
+      val nd = nn.cast(Dec)
       val vx = nd * col(s"__sxx_${i}_$j") -
         col(s"__sx_${i}_$j") * col(s"__sx_${i}_$j")
       val beta = when(nn >= 3 && vx =!= 0,
@@ -714,10 +708,10 @@ object Panel {
       struct(
         lit(sids(i)).as("sid_a"), lit(sids(j)).as("sid_b"), nn.as("n"),
         (round(beta, 6) + 0.0).as("beta"),
-        (round(alpha / 1e6, 6) + 0.0).as("alpha"),
+        (round(alpha / Micro.factor, 6) + 0.0).as("alpha"),
         (round(crdw, 6) + 0.0).as("crdw"),
         (round(adfT, 6) + 0.0).as("adf_t"),
-        (round(sqrt(see / nn.cast("double")) / 1e6, 6) + 0.0)
+        (round(sqrt(see / nn.cast("double")) / Micro.factor, 6) + 0.0)
           .as("resid_std"))
     }
     one2.select(explode(array(rows: _*)).as("__r"))
@@ -748,8 +742,7 @@ object Panel {
       entryZ: Double = 2.0)(implicit k: Keys): DataFrame = {
     require(window >= 2, s"window must be >= 2: $window")
     require(entryZ > 0, s"entryZ must be positive: $entryZ")
-    val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    val lp = round(log(price) * 1e6).cast("long")
+    val lp = Micro.long(log(price))
     val grid = df
       .where(col(k.sid).cast("string").isin(sidA, sidB) && price > 0)
       .groupBy(k.slotCols.map(col): _*)
@@ -759,15 +752,15 @@ object Panel {
       .where(col("__la").isNotNull && col("__lb").isNotNull)
     val w = Window.orderBy(k.slotCols.map(col): _*)
       .rowsBetween(-(window - 1), Window.currentRow)
-    val sq = round(col("__la") - lit(beta) * col("__lb") - lit(alpha * 1e6))
+    val sq = round(col("__la") - lit(beta) * col("__lb") - lit(alpha * Micro.factor))
       .cast("long")
     val spread = grid.withColumn("__sq", sq)
     val n = count(col("__sq")).over(w)
-    val s1 = sum(col("__sq").cast(dec)).over(w)
-    val s2 = sum((col("__sq").cast(dec) * col("__sq").cast(dec))).over(w)
+    val s1 = decSum(col("__sq")).over(w)
+    val s2 = sum((col("__sq").cast(Dec) * col("__sq").cast(Dec))).over(w)
     val mean = s1.cast("double") / n.cast("double")
     val sd = round(sqrt(greatest(
-      (n.cast(dec) * s2 - s1 * s1).cast("double") /
+      (n.cast(Dec) * s2 - s1 * s1).cast("double") /
         (n.cast("double") * (n - 1).cast("double")), lit(0.0))), 6)
     val z = round(when(n === window && sd > 0,
       (col("__sq").cast("double") - mean) / sd), 6)
@@ -777,7 +770,7 @@ object Panel {
         when(col("z") > entryZ, -1).when(col("z") < -entryZ, 1)
           .when(col("z").isNotNull, 0).cast("int"))
       .select(k.slotCols.map(col) :+
-        (round(col("__sq").cast("double") / 1e6, 6) + 0.0).as("spread") :+
+        (round(Micro.back(col("__sq")), 6) + 0.0).as("spread") :+
         col("z") :+ col("signal"): _*)
   }
 
@@ -831,8 +824,8 @@ object Panel {
     val slot = k.byDate
     // null (not NaN) on a return-less date so covar pairs skip it
     val m = when(count(ret).over(slot) > 0,
-      sum(round(ret * 1e12).cast("decimal(38,0)")).over(slot)
-        .cast("double") / count(ret).over(slot) / 1e12)
+      sum(Pico.dec(ret)).over(slot)
+        .cast("double") / count(ret).over(slot) / Pico.factor)
     val f = k.rollingFrame(window)
     val full = count(ret).over(f) === window
     val beta = round(
@@ -886,13 +879,11 @@ object Panel {
   def autocorrelation(df: DataFrame, value: Column, lagK: Int)(
       implicit k: Keys): DataFrame = {
     require(lagK >= 1, s"lag must be >= 1: $lagK")
-    val dec = "decimal(38,0)"
-    def micro(c: Column) = round(c * 1e6).cast(dec)
     val keyCols = (k.group :+ k.sid).map(col)
     val paired = df
       .withColumn("__x", lag(value, lagK).over(k.bySid))
       .where(value.isNotNull && col("__x").isNotNull)
-      .select((keyCols :+ micro(value).as("__y") :+ micro(col("__x")).as("__x")): _*)
+      .select((keyCols :+ Micro.dec(value).as("__y") :+ Micro.dec(col("__x")).as("__x")): _*)
     val agg = paired
       .groupBy(keyCols: _*)
       .agg(
@@ -902,7 +893,7 @@ object Panel {
         sum(col("__x") * col("__x")).as("__sxx"),
         sum(col("__y") * col("__y")).as("__syy"),
         sum(col("__x") * col("__y")).as("__sxy"))
-    val n = col("n").cast(dec)
+    val n = col("n").cast(Dec)
     val covN = n * col("__sxy") - col("__sx") * col("__sy")
     val vxN = n * col("__sxx") - col("__sx") * col("__sx")
     val vyN = n * col("__syy") - col("__sy") * col("__sy")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.ParameterError
+import graft.Exact.Micro
 
 /** Exact per-group quantiles at scale — the "p50/p90/p99 per segment"
   * report a 100 TB pipeline wants EXACT (SLO attestation, billing
@@ -35,22 +36,16 @@ object Quantiles {
       if (q <= 0 || q > 1) throw new ParameterError(s"q must be in (0, 1]: $q")
     }
     val g = groupCols.map(col)
-    val hist = {
-      import graft.Checkpoint._
-      df.select(g :+ vCol.cast("long").as("__v"): _*)
-        .groupBy(g :+ col("__v"): _*)
-        .agg(count(lit(1)).as("__c"))
-        // r13: lazy checkpoint — the totals agg below otherwise
-        // re-runs the histogram's entire upstream (cohenKappa lesson)
-        .checkpointed(eager = false)
-    }
+    val hist = df.select(g :+ vCol.cast("long").as("__v"): _*)
+      .groupBy(g :+ col("__v"): _*)
+      .agg(count(lit(1)).as("__c"))
     val cum = PrefixSum.inclusiveAuto(
       hist, "__v", Seq("__cum" -> "__c"), partCols = groupCols)
     val totals = hist.groupBy(g: _*).agg(sum(col("__c")).as("n"))
     // one row per group × q, k in exact micro-integer arithmetic
     val targets = totals.select(
       g :+ col("n") :+ explode(array(qs.map(q =>
-        struct(lit(q).as("q"), lit(math.round(q * 1e6)).as("__qm"))): _*))
+        struct(lit(q).as("q"), lit(Micro.of(q)).as("__qm"))): _*))
         .as("__t"): _*)
       .select(g :+ col("n") :+ col("__t.q").as("q") :+
         expr("(__t.__qm * n + 999999) div 1000000").as("__k"): _*)

@@ -1,6 +1,7 @@
 package graft.panel
 
 import graft.Checkpoint._
+import graft.Exact.{Dec, Micro, Pico, decSum}
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
@@ -59,13 +60,13 @@ object Seasonal {
       .agg(sum(col("__c") * 7 - col("__s7")).as("__num"),
         count(lit(1)).as("__cnt"))
       .select(col("sid"), col("__dow"),
-        round(col("__num").cast("double")
-          / (col("__cnt") * 7).cast("double") * 1e12).cast("long").as("__sq"))
+        Pico.long(col("__num").cast("double")
+          / (col("__cnt") * 7).cast("double")).as("__sq"))
     val perSid = cells
       .groupBy(col("sid"))
       .agg(count(lit(1)).as("__K"), sum(col("__sq")).as("__S"))
     val seas = (col("__sq") * col("__K") - col("__S")).cast("double") /
-      col("__K").cast("double") / 1e12 / 100.0
+      col("__K").cast("double") / Pico.factor / 100.0
     rows
       .join(cells, Seq("sid", "__dow"))
       .join(perSid, Seq("sid"))
@@ -110,8 +111,8 @@ object Seasonal {
         count(col("__p")).as("__n1"),
         sum(abs(col("__c") - col("__p"))).as("__e1"),
         sum(when(col("__f").isNotNull,
-          round(lit(2.0) * abs(col("__c") - col("__f")).cast("double")
-            / (col("__c") + col("__f")).cast("double") * 1e12).cast("long"))
+          Pico.long(lit(2.0) * abs(col("__c") - col("__f")).cast("double")
+            / (col("__c") + col("__f")).cast("double")))
           .otherwise(0L)).as("__sm"))
       .where(col("n_eval") > 0)
       .select(
@@ -122,7 +123,7 @@ object Seasonal {
           (col("__e7").cast("double") / col("n_eval").cast("double"))
             / (col("__e1").cast("double") / col("__n1").cast("double"))), 6)
           .as("mase"),
-        round(col("__sm").cast("double") / 1e12
+        round(Pico.back(col("__sm"))
           / col("n_eval").cast("double"), 6).as("smape"))
   }
 
@@ -147,10 +148,9 @@ object Seasonal {
       sidCol: String = "sid",
       dateCol: String = "date",
       closeCol: String = "close"): DataFrame = {
-    val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    val rq = round(col("residual") * 1e6).cast("long")
-    val tq = round(col("trend") * 1e6).cast("long")
-    val sq = round(col("seasonal") * 1e6).cast("long")
+    val rq = Micro.long(col("residual"))
+    val tq = Micro.long(col("trend"))
+    val sq = Micro.long(col("seasonal"))
     def d(c: String) = col(c).cast("double")
     def variance(s1: String, s2: String) =
       d(s2) / d("n") - (d(s1) / d("n")) * (d(s1) / d("n"))
@@ -165,12 +165,12 @@ object Seasonal {
       .groupBy(col("sid"))
       .agg(
         count(lit(1)).as("n"),
-        sum(col("__rq").cast(dec)).as("__r1"),
-        sum(col("__rq").cast(dec) * col("__rq").cast(dec)).as("__r2"),
-        sum(col("__tv").cast(dec)).as("__t1"),
-        sum(col("__tv").cast(dec) * col("__tv").cast(dec)).as("__t2"),
-        sum(col("__sv").cast(dec)).as("__s1"),
-        sum(col("__sv").cast(dec) * col("__sv").cast(dec)).as("__s2"))
+        decSum(col("__rq")).as("__r1"),
+        sum(col("__rq").cast(Dec) * col("__rq").cast(Dec)).as("__r2"),
+        decSum(col("__tv")).as("__t1"),
+        sum(col("__tv").cast(Dec) * col("__tv").cast(Dec)).as("__t2"),
+        decSum(col("__sv")).as("__s1"),
+        sum(col("__sv").cast(Dec) * col("__sv").cast(Dec)).as("__s2"))
       .select(col("sid"), col("n"),
         f("__t1", "__t2").as("f_trend"),
         f("__s1", "__s2").as("f_seasonal"))
@@ -197,7 +197,6 @@ object Seasonal {
       sidCol: String = "sid",
       dateCol: String = "date",
       closeCol: String = "close"): DataFrame = {
-    val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     val c = round(col(closeCol) * 100).cast("long")
     val w = Window.partitionBy(col(sidCol)).orderBy(col(dateCol))
     def d(c0: org.apache.spark.sql.Column) = c0.cast("double")
@@ -211,10 +210,10 @@ object Seasonal {
       .groupBy(col("sid"))
       .agg(
         count(lit(1)).as("n"),
-        sum(col("__x").cast(dec)).as("__sx"),
-        sum(col("__y").cast(dec)).as("__sy"),
-        sum(col("__x").cast(dec) * col("__y").cast(dec)).as("__sxy"),
-        sum(col("__x").cast(dec) * col("__x").cast(dec)).as("__sxx"))
+        decSum(col("__x")).as("__sx"),
+        decSum(col("__y")).as("__sy"),
+        sum(col("__x").cast(Dec) * col("__y").cast(Dec)).as("__sxy"),
+        sum(col("__x").cast(Dec) * col("__x").cast(Dec)).as("__sxx"))
       .select(
         col("sid"), col("n"),
         round(when(den > 0, rho), 6).as("rho"),
@@ -336,12 +335,12 @@ object Seasonal {
     val n = daily.length
     val l = new Array[Long](n)
     val b = new Array[Long](n)
-    l(0) = daily(0)._2 * 1000000L
-    b(0) = (daily(1)._2 - daily(0)._2) * 1000000L
+    l(0) = daily(0)._2 * Micro.unit
+    b(0) = (daily(1)._2 - daily(0)._2) * Micro.unit
     var i = 1
     while (i < n) {
       val pred = l(i - 1) + b(i - 1)
-      l(i) = tdiv(alphaTenths * daily(i)._2 * 1000000L +
+      l(i) = tdiv(alphaTenths * daily(i)._2 * Micro.unit +
         (10L - alphaTenths) * pred, 10L)
       b(i) = tdiv(betaTenths * (l(i) - l(i - 1)) +
         (10L - betaTenths) * b(i - 1), 10L)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.panel.Panel.Keys
+import graft.Exact.Micro
 
 /** Fama-MacBeth two-pass factor analysis (Fama & MacBeth 1973): pass 1
   * runs an independent cross-sectional OLS of forward returns on factor
@@ -28,9 +29,6 @@ import graft.panel.Panel.Keys
   */
 object FactorModel {
 
-  private val Dec = "decimal(38,0)"
-  /** micro-quantized exact column: round(x·1e6) as decimal(38,0). */
-  private def micro(c: Column): Column = round(c * 1e6).cast(Dec)
   private def d(c: Column): Column = c.cast("double")
 
   /** PX9: per-row residuals from the [[crossSectionalRegression]] fit —
@@ -77,8 +75,8 @@ object FactorModel {
       f2: Column)(implicit k: Keys): DataFrame = {
     val rows = df.where(y.isNotNull && f1.isNotNull && f2.isNotNull)
       .select(
-        (k.slotCols.map(col) :+ micro(y).as("__y") :+ micro(f1).as("__x1") :+
-          micro(f2).as("__x2")): _*)
+        (k.slotCols.map(col) :+ Micro.dec(y).as("__y") :+ Micro.dec(f1).as("__x1") :+
+          Micro.dec(f2).as("__x2")): _*)
     val agg = rows
       .groupBy(k.slotCols.map(col): _*)
       .agg(
@@ -124,7 +122,7 @@ object FactorModel {
     val ok = col("n") >= 3 && mag > 0.0 && abs(det) > mag * 1e-9
     agg.select(
       (k.slotCols.map(col) :+ col("n") :+
-        (round(when(ok, detA / det / 1e6), 6) + 0.0).as("alpha") :+
+        (round(when(ok, detA / det / Micro.factor), 6) + 0.0).as("alpha") :+
         (round(when(ok, detB1 / det), 6) + 0.0).as("beta1") :+
         (round(when(ok, detB2 / det), 6) + 0.0).as("beta2")): _*)
   }
@@ -138,7 +136,7 @@ object FactorModel {
     * mean/std division is the only double site (6dp). */
   def riskPremia(coeffs: DataFrame, cols: Seq[String] = Seq("alpha", "beta1", "beta2")): DataFrame = {
     val aggs = cols.flatMap { c =>
-      val m = micro(col(c))
+      val m = Micro.dec(col(c))
       Seq(
         count(col(c)).as(s"__n_$c"),
         sum(m).as(s"__s_$c"),
@@ -147,10 +145,10 @@ object FactorModel {
     val out = cols.flatMap { c =>
       val n = d(col(s"__n_$c"))
       val s = d(col(s"__s_$c")); val ss = d(col(s"__ss_$c"))
-      val mean = s / n / 1e6
+      val mean = s / n / Micro.factor
       // sample std over the micro series: √((Σx²·n − (Σx)²)/(n(n−1)))
       val varN = (ss * n - s * s) / (n * (n - 1))
-      val std = sqrt(varN) / 1e6
+      val std = sqrt(varN) / Micro.factor
       Seq(
         col(s"__n_$c").as(s"n_$c"),
         (round(when(col(s"__n_$c") > 0, mean), 6) + 0.0).as(s"mean_$c"),

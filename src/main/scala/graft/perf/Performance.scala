@@ -1,5 +1,7 @@
 package graft.perf
 
+import graft.Exact.{Dec, Micro, Pico, decSum}
+
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -42,9 +44,8 @@ import org.apache.spark.sql.functions._
   */
 object Performance {
 
-  /** Largest |per-row return| whose pico-scaling stays exact in a long
-    * (Long.MaxValue / 1e12 ≈ 9.22e6 — i.e. a 922,000,000% single-day
-    * return; anything near it is corrupted input, not a return). */
+  /** Largest |per-row return| accepted: under the `graft.Exact` Pico
+    * long bound (a 900,000,000% single-day return is corrupted input). */
   private[graft] val MaxAbsReturn: Double = 9.0e6
 
   /** The per-row pico-scaled Return value with the loud corrupted-input
@@ -55,13 +56,10 @@ object Performance {
     raise_error(format_string(
       "Return magnitude %s exceeds the exact pico-summation bound " +
         s"$MaxAbsReturn — corrupted results melt?", col("value"))).cast("long"))
-    .otherwise(round(col("value") * 1e12).cast("long"))
+    .otherwise(Pico.long(col("value")))
 
-  /** The exact cross-row accumulation of [[picoReturn]] back to a double
-    * return (decimal(38,0) so near-bound rows can't wrap a long). */
-  private def picoSum(pico: Column): Column =
-    (sum(pico.cast(org.apache.spark.sql.types.DecimalType(38, 0)))
-      .cast("double") / 1e12)
+  /** The exact cross-row sum of [[picoReturn]] as a double return. */
+  private def picoSum(pico: Column): Column = Pico.back(decSum(pico))
 
   /** Per-date portfolio return: the cross-sid sum of the melt's `Return`
     * rows. Summed as integer picos (×1e12, exact in a long for |r| ≤
@@ -307,8 +305,7 @@ object Performance {
       .where(isRet || isNE)
       .groupBy(col("sid"))
       .agg(
-        sum(when(isRet, picoReturn).cast(
-          org.apache.spark.sql.types.DecimalType(38, 0))).as("__p"),
+        decSum(when(isRet, picoReturn)).as("__p"),
         sum(when(isNE && col("value") =!= 0, 1L).otherwise(0L)).as("days_held"))
     val total = Window.rowsBetween(
       Window.unboundedPreceding, Window.unboundedFollowing)
@@ -316,7 +313,7 @@ object Performance {
       .withColumn("__t", sum(col("__p")).over(total))
       .select(
         col("sid"),
-        round(col("__p").cast("double") / 1e12, 6).as("contribution"),
+        round(Pico.back(col("__p")), 6).as("contribution"),
         col("days_held"),
         round(when(col("__t") =!= 0,
           col("__p").cast("double") / col("__t").cast("double")), 6).as("share"))
@@ -362,9 +359,7 @@ object Performance {
         max(col(dateCol)).as("exit_date"),
         count(lit(1)).as("n_days"),
         max(when(col("__sgn") > 0, "long").otherwise("short")).as("side"),
-        (sum(col("__fwd").cast(
-          org.apache.spark.sql.types.DecimalType(38, 0)))
-          .cast("double") / 1e12).as("__r"))
+        Pico.back(decSum(col("__fwd"))).as("__r"))
       .select(
         col("sid"), col("trip"), col("entry_date"), col("exit_date"),
         col("n_days"), col("side"), round(col("__r"), 6).as("trip_return"))
@@ -385,9 +380,7 @@ object Performance {
       .groupBy(trunc(col(dateCol), "month").as("month"))
       .agg(
         count(lit(1)).as("n_days"),
-        (sum(when(g =!= 0, round(log(abs(g)) * 1e12).cast("long")).otherwise(0L)
-          .cast(org.apache.spark.sql.types.DecimalType(38, 0)))
-          .cast("double") / 1e12).as("__lnsum"),
+        Pico.back(decSum(when(g =!= 0, Pico.long(log(abs(g)))).otherwise(0L))).as("__lnsum"),
         sum(when(g < 0, 1L).otherwise(0L)).as("__negs"),
         sum(when(g === 0, 1L).otherwise(0L)).as("__zeros"))
       .select(
@@ -465,11 +458,10 @@ object Performance {
         count(lit(1)).as("n_days"),
         round(max(col("__v")), 6).as(s"var_$tag"),
         round(
-          sum(when(col("return") <= col("__v"),
-            round(col("return") * 1e12).cast("long"))
-            .cast(org.apache.spark.sql.types.DecimalType(38, 0)))
+          decSum(when(col("return") <= col("__v"),
+            Pico.long(col("return"))))
             .cast("double") /
-            sum(when(col("return") <= col("__v"), 1L).otherwise(0L)) / 1e12,
+            sum(when(col("return") <= col("__v"), 1L).otherwise(0L)) / Pico.factor,
           6).as(s"cvar_$tag"))
   }
 
@@ -601,10 +593,9 @@ object Performance {
       results: DataFrame,
       dateCol: String = "date",
       periodsPerYear: Int = 252): DataFrame = {
-    val dec = "decimal(38,0)"
     val ann = math.sqrt(periodsPerYear.toDouble)
     dailyReturns(results, dateCol)
-      .select(round(col("return") * 1e12).cast(dec).as("__p"))
+      .select(Pico.dec(col("return")).as("__p"))
       .agg(
         count(lit(1)).as("n_days"),
         sum(col("__p")).as("__s"),
@@ -613,7 +604,7 @@ object Performance {
         val n = col("n_days").cast("double")
         val mup = col("__s").cast("double") / n
         val sgp = sqrt(greatest(
-          (col("n_days").cast(dec) * col("__ss") - col("__s") * col("__s"))
+          (col("n_days").cast(Dec) * col("__ss") - col("__s") * col("__s"))
             .cast("double") / (n * (col("n_days") - 1).cast("double")),
           lit(0.0)))
         val srD = mup / sgp
@@ -636,17 +627,16 @@ object Performance {
   def kellyFraction(
       results: DataFrame,
       dateCol: String = "date"): DataFrame = {
-    val dec = "decimal(38,0)"
     dailyReturns(results, dateCol)
-      .select(round(col("return") * 1e12).cast(dec).as("__p"))
+      .select(Pico.dec(col("return")).as("__p"))
       .agg(
         count(lit(1)).as("n_days"),
         sum(col("__p")).as("__s"),
         sum(col("__p") * col("__p")).as("__ss"))
       .select(Seq(col("n_days")) ++ {
         val n = col("n_days").cast("double")
-        val mu = col("__s").cast("double") / n / 1e12
-        val vr = (col("n_days").cast(dec) * col("__ss") -
+        val mu = col("__s").cast("double") / n / Pico.factor
+        val vr = (col("n_days").cast(Dec) * col("__ss") -
           col("__s") * col("__s")).cast("double") /
           (n * (col("n_days") - 1).cast("double")) / 1e24
         val ok = col("n_days") >= 2 && vr > 0
@@ -666,17 +656,15 @@ object Performance {
     * ratio (6dp). Flat-benchmark days (b = 0) belong to neither side.
     * Null when a side has no days or a zero benchmark sum. */
   def captureRatios(results: DataFrame, dateCol: String = "date"): DataFrame = {
-    val dec = "decimal(38,0)"
-    def pico(c: Column) = round(c * 1e12).cast(dec)
     benchmarkJoined(results, dateCol)
       .select(col("return").as("__r"), col("bench_return").as("__b"))
       .agg(
         sum(when(col("__b") > 0, 1L).otherwise(0L)).as("n_up"),
-        sum(when(col("__b") > 0, pico(col("__r")))).as("__ru"),
-        sum(when(col("__b") > 0, pico(col("__b")))).as("__bu"),
+        sum(when(col("__b") > 0, Pico.dec(col("__r")))).as("__ru"),
+        sum(when(col("__b") > 0, Pico.dec(col("__b")))).as("__bu"),
         sum(when(col("__b") < 0, 1L).otherwise(0L)).as("n_down"),
-        sum(when(col("__b") < 0, pico(col("__r")))).as("__rd"),
-        sum(when(col("__b") < 0, pico(col("__b")))).as("__bd"))
+        sum(when(col("__b") < 0, Pico.dec(col("__r")))).as("__rd"),
+        sum(when(col("__b") < 0, Pico.dec(col("__b")))).as("__bd"))
       .select(
         col("n_up"), col("n_down"),
         (round(when(col("n_up") > 0 && col("__bu") =!= 0,
@@ -760,7 +748,7 @@ object Performance {
               "risk parity undefined for a flat book")
       }
     }
-    val ivq = vols.map(v => math.round(1e6 / v))
+    val ivq = vols.map(v => math.round(Micro.factor / v))
     val total = ivq.sum.toDouble
     val weights = ivq.map(_ / total)
     val perStrat = strategies.indices.map(i =>
@@ -819,19 +807,16 @@ object Performance {
       results: DataFrame,
       threshold: Double = 0.0,
       dateCol: String = "date"): DataFrame = {
-    val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     val r = col("return")
     dailyReturns(results, dateCol)
       .agg(
         count(lit(1)).as("n_days"),
         sum(when(r > threshold, 1L).otherwise(0L)).as("n_above"),
         sum(when(r < threshold, 1L).otherwise(0L)).as("n_below"),
-        sum(when(r > threshold,
-          round((r - threshold) * 1e12).cast("long")).otherwise(0L)
-          .cast(dec)).as("__g"),
-        sum(when(r < threshold,
-          round((lit(threshold) - r) * 1e12).cast("long")).otherwise(0L)
-          .cast(dec)).as("__l"))
+        decSum(when(r > threshold,
+          Pico.long(r - threshold)).otherwise(0L)).as("__g"),
+        decSum(when(r < threshold,
+          Pico.long(lit(threshold) - r)).otherwise(0L)).as("__l"))
       .select(
         col("n_days"), col("n_above"), col("n_below"),
         round(when(col("__l") =!= 0,
@@ -855,25 +840,23 @@ object Performance {
       results: DataFrame,
       dateCol: String = "date",
       periodsPerYear: Int = 252): DataFrame = {
-    val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    val ddMicro = round(round(
-      when(col("__peak") =!= 0, col("__cum") / col("__peak") - 1), 6) * 1e6)
-      .cast("long")
+    val ddMicro = Micro.long(round(
+      when(col("__peak") =!= 0, col("__cum") / col("__peak") - 1), 6))
     withCumFactor(dailyReturns(results, dateCol), dateCol)
       .withColumn("__ddu", ddMicro)
       .agg(
         count(lit(1)).as("n_days"),
         count(col("__ddu")).as("__nd"),
         max_by(col("__cum"), col(dateCol)).as("__end"),
-        sum(col("__ddu").cast(dec) * col("__ddu").cast(dec)).as("__sq"))
+        sum(col("__ddu").cast(Dec) * col("__ddu").cast(Dec)).as("__sq"))
       .select(
         col("n_days"),
-        round(sqrt(col("__sq").cast("double") / col("__nd")) / 1e6, 6)
+        round(sqrt(col("__sq").cast("double") / col("__nd")) / Micro.factor, 6)
           .as("ulcer_index"),
         round(when(col("__sq") > 0 && col("__end") > 0,
           (pow(col("__end"),
             lit(periodsPerYear.toDouble) / col("n_days")) - 1) /
-            (sqrt(col("__sq").cast("double") / col("__nd")) / 1e6)), 6)
+            (sqrt(col("__sq").cast("double") / col("__nd")) / Micro.factor)), 6)
           .as("martin_ratio"))
   }
 
@@ -976,8 +959,7 @@ object Performance {
       .groupBy(col(dateCol))
       // null AbsExposure (the first date's undefined lag position)
       // counts as zero leverage, not a null gross
-      .agg((sum(coalesce(round(col("value") * 1e6).cast("long"), lit(0L)))
-        .cast("double") / 1e6).as("__g"))
+      .agg(Micro.back(sum(coalesce(Micro.long(col("value")), lit(0L)))).as("__g"))
       .withColumn("days",
         coalesce(datediff(col(dateCol), lag(col(dateCol), 1).over(w)),
           lit(1)).cast("long"))
@@ -1038,18 +1020,17 @@ object Performance {
     * One bounded hash agg over the per-date series (≤ 7 output rows).
     * Output (day_of_week, n_days, mean_return, hit_rate). */
   def seasonality(results: DataFrame, dateCol: String = "date"): DataFrame = {
-    val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     dailyReturns(results, dateCol)
       .groupBy((weekday(col(dateCol)) + 1).cast("long").as("day_of_week"))
       .agg(
         count(lit(1)).as("n_days"),
-        sum(round(col("return") * 1e12).cast("long").cast(dec)).as("__s"),
+        decSum(Pico.long(col("return"))).as("__s"),
         sum(when(col("return") > 0, 1L).otherwise(0L)).as("__w"))
       .select(
         col("day_of_week"), col("n_days"),
-        (round(col("__s").cast("double") / col("n_days")) / 1e12 + 0.0)
+        (Pico.mean(col("__s"), col("n_days")) + 0.0)
           .as("mean_return"),
-        (round(col("__w").cast("double") * 1e6 / col("n_days")) / 1e6)
+        (Micro.ratio(col("__w"), col("n_days")) / Micro.factor)
           .as("hit_rate"))
   }
 
@@ -1063,8 +1044,7 @@ object Performance {
     * hhi 0 and a null effective_n. ONE hash aggregation over the melt
     * — the [[dailyReturns]] shape. */
   def concentration(results: DataFrame, dateCol: String = "date"): DataFrame = {
-    val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    val wMicro = round(col("value") * 1e6).cast("long").cast(dec)
+    val wMicro = Micro.long(col("value")).cast(Dec)
     results
       .where(col("field") === "AbsWeight")
       .groupBy(col(dateCol))
@@ -1073,8 +1053,8 @@ object Performance {
         sum(wMicro * wMicro).as("__s"))
       .select(
         col(dateCol), col("n_positions"),
-        round(col("__s").cast("double") / 1e12, 6).as("hhi"),
-        round(when(col("__s") > 0, lit(1e12) / col("__s").cast("double")), 6)
+        round(Pico.back(col("__s")), 6).as("hhi"),
+        round(when(col("__s") > 0, lit(Pico.factor) / col("__s").cast("double")), 6)
           .as("effective_n"))
   }
 
@@ -1089,16 +1069,15 @@ object Performance {
     * 6dp rounding. Null skew/kurt for a flat series (m₂ = 0). One
     * bounded hash agg. Output (n_days, mean, skewness, excess_kurtosis). */
   def momentStats(results: DataFrame, dateCol: String = "date"): DataFrame = {
-    val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     val r = col("return")
     dailyReturns(results, dateCol)
       .agg(
         count(lit(1)).as("n_days"),
-        sum(round(r * 1e12).cast("long").cast(dec)).as("__s1"),
+        decSum(Pico.long(r)).as("__s1"),
         avg(r * r).as("__a2"),
         avg(r * r * r).as("__a3"),
         avg(r * r * r * r).as("__a4"))
-      .withColumn("__mu", col("__s1").cast("double") / 1e12 / col("n_days"))
+      .withColumn("__mu", Pico.back(col("__s1")) / col("n_days"))
       .withColumn("__m2", col("__a2") - col("__mu") * col("__mu"))
       .withColumn("__m3",
         col("__a3") - lit(3) * col("__mu") * col("__a2") +

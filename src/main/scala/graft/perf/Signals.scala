@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 
 import graft.panel.Panel
 import graft.panel.Panel.Keys
+import graft.Exact.{Dec, Micro, Pico, decSum}
 
 /** Pre-backtest signal evaluation — the alphalens-style questions a user
   * asks of `prices_to_signals` output BEFORE committing to a full
@@ -70,10 +71,9 @@ object Signals {
       signal: Column,
       fwd: Column)(implicit k: Keys): DataFrame = {
     val both = df.where(signal.isNotNull && fwd.isNotNull)
-    val dec = "decimal(38,0)"
     val ranked = both
-      .withColumn("__rx", rank2x(signal).cast(dec))
-      .withColumn("__ry", rank2x(fwd).cast(dec))
+      .withColumn("__rx", rank2x(signal).cast(Dec))
+      .withColumn("__ry", rank2x(fwd).cast(Dec))
     ranked
       .groupBy(k.slotCols.map(col): _*)
       .agg(
@@ -85,7 +85,7 @@ object Signals {
         sum(col("__rx") * col("__ry")).as("__sxy"))
       .select(
         (k.slotCols.map(col) :+ col("n") :+ {
-          val n = col("n").cast(dec)
+          val n = col("n").cast(Dec)
           val covN = n * col("__sxy") - col("__sx") * col("__sy")
           val vxN = n * col("__sxx") - col("__sx") * col("__sx")
           val vyN = n * col("__syy") - col("__sy") * col("__sy")
@@ -122,7 +122,6 @@ object Signals {
       priceCol: String = "close")(implicit k: Keys): DataFrame = {
     require(horizons.nonEmpty, "horizons must be non-empty")
     require(horizons.distinct == horizons, s"duplicate horizons: $horizons")
-    val dec = "decimal(38,0)"
     val perH = horizons.map { h =>
       infoCoefficient(
         withForwardReturn(df, h, priceCol), signal, col("fwd_return"))
@@ -132,10 +131,10 @@ object Signals {
       .groupBy(col("horizon"))
       .agg(
         count(col("ic")).as("n_dates"),
-        sum(round(col("ic") * 1e6).cast(dec)).as("__s"))
+        sum(Micro.dec(col("ic"))).as("__s"))
       .select(
         col("horizon"), col("n_dates"),
-        (round(col("__s").cast("double") / col("n_dates")) / 1e6 + 0.0)
+        (Micro.mean(col("__s"), col("n_dates")) + 0.0)
           .as("mean_ic"))
   }
 
@@ -177,12 +176,11 @@ object Signals {
       dateCol: String = "date"): DataFrame = {
     require(b >= 2, s"need at least 2 replicas: $b")
     require(alpha > 0 && alpha < 1, s"alpha must be in (0, 1): $alpha")
-    val dec = "decimal(38,0)"
     val spark = ic.sparkSession
     val reps = spark.range(b).select(col("id").as("__b"))
     val base = ic.where(col(icCol).isNotNull)
       .select(col(dateCol).as("__d"),
-        round(col(icCol) * 1e6).cast("long").as("__m"))
+        Micro.long(col(icCol)).as("__m"))
       .checkpointed(eager = false) // feeds the resample AND the plain mean
     val u = graft.text.Sampling.hashUnit(
       concat_ws("|", col("__b"), col("__d")), seed)
@@ -193,10 +191,10 @@ object Signals {
       .crossJoin(broadcast(reps))
       .withColumn("__w", w.cast("long"))
       .groupBy(col("__b"))
-      .agg(sum((col("__w") * col("__m")).cast(dec)).as("__s"),
+      .agg(decSum(col("__w") * col("__m")).as("__s"),
         sum(col("__w")).as("__n"))
       .where(col("__n") > 0)
-      .select((round(col("__s").cast("double") / col("__n")) / 1e6)
+      .select(Micro.mean(col("__s"), col("__n"))
         .as("__mean"))
     val ci = means.agg(
       count(lit(1)).as("n_boot"),
@@ -204,7 +202,7 @@ object Signals {
       round(percentile(col("__mean"), lit(1 - alpha / 2)), 6).as("ci_hi"))
     val overall = base.agg(
       count(lit(1)).as("n_dates"),
-      (round(sum(col("__m").cast(dec)).cast("double") / count(lit(1))) / 1e6)
+      Micro.mean(decSum(col("__m")), count(lit(1)))
         .as("mean_ic"))
     ci.crossJoin(broadcast(overall))
       .select(col("n_boot"), col("n_dates"), col("mean_ic"),
@@ -212,13 +210,12 @@ object Signals {
   }
 
   def icSummary(ic: DataFrame, icCol: String = "ic"): DataFrame = {
-    val dec = "decimal(38,0)"
-    val m = round(col(icCol) * 1e6).cast(dec)
+    val m = Micro.dec(col(icCol))
     val n = col("n_dates").cast("double")
     val s = col("__s").cast("double"); val ss = col("__ss").cast("double")
-    val mean = s / n / 1e6
+    val mean = s / n / Micro.factor
     // sample variance: (Σx²·n − (Σx)²)/(n(n−1)) at micro scale
-    val std = sqrt((ss * n - s * s) / (n * (n - 1))) / 1e6
+    val std = sqrt((ss * n - s * s) / (n * (n - 1))) / Micro.factor
     ic.agg(
         count(col(icCol)).as("n_dates"),
         sum(m).as("__s"),
@@ -251,10 +248,9 @@ object Signals {
       icCol: String = "ic",
       dateCol: String = "date"): DataFrame = {
     require(lags >= 1, s"lags must be >= 1: $lags")
-    val dec = "decimal(38,0)"
     val w = Window.orderBy(col(dateCol))
     val base = ic.where(col(icCol).isNotNull)
-      .withColumn("__m", round(col(icCol) * 1e6).cast("long"))
+      .withColumn("__m", Micro.long(col(icCol)))
     // demeaning needs the global mean — exact integer ratio via a
     // bounded one-row broadcast (the series is post-aggregation-sized)
     val tot = base.agg(count(lit(1)).as("__n"), sum(col("__m")).as("__sm"))
@@ -266,23 +262,23 @@ object Signals {
           .over(w).as(s"__d$l")): _*)
     val aggs =
       Seq(count(lit(1)).as("n_dates"),
-        sum(col("__d").cast(dec) * col("__d").cast(dec)).as("__g0")) ++
+        sum(col("__d").cast(Dec) * col("__d").cast(Dec)).as("__g0")) ++
         (1 to lags).map(l =>
-          sum(col("__d").cast(dec) * col(s"__d$l").cast(dec)).as(s"__g$l"))
+          sum(col("__d").cast(Dec) * col(s"__d$l").cast(Dec)).as(s"__g$l"))
     lagged.agg(aggs.head, aggs.tail: _*)
       .crossJoin(broadcast(tot))
       .select(Seq(col("n_dates")) ++ {
         val n = col("n_dates").cast("double")
         val scale = col("__n").cast("double") // deviations carry ×n
-        val mean = col("__sm").cast("double") / n / 1e6
+        val mean = col("__sm").cast("double") / n / Micro.factor
         // γ_l = Σ d_t·d_{t−l} / n, in (micro·n)² units
         def gamma(l: Int) =
           (if (l == 0) col("__g0") else col(s"__g$l")).cast("double") / n
         val lrv = (1 to lags).foldLeft(gamma(0)) { case (acc, l) =>
           acc + lit(2.0 * (1.0 - l.toDouble / (lags + 1))) * gamma(l)
         }
-        val sd0 = sqrt(gamma(0) / n) / scale / 1e6 // IID se of the mean
-        val sdNw = sqrt(lrv / n) / scale / 1e6
+        val sd0 = sqrt(gamma(0) / n) / scale / Micro.factor // IID se of the mean
+        val sdNw = sqrt(lrv / n) / scale / Micro.factor
         val ok = col("n_dates") >= (lags + 2)
         Seq(
           (round(when(col("n_dates") > 0, mean), 6) + 0.0).as("mean_ic"),
@@ -312,13 +308,13 @@ object Signals {
     require(q >= 2, s"need at least 2 quantile bins: $q")
     df.where(signal.isNotNull && fwd.isNotNull)
       .withColumn("__bin", Panel.quantileBin(signal, q, tiebreak))
-      .withColumn("__fp", round(fwd * 1e12).cast("decimal(38,0)"))
+      .withColumn("__fp", Pico.dec(fwd))
       // long bin: Spark's ntile is INT, most SQL engines' is BIGINT —
       // emit the wider type so results compare schema-identical
       .groupBy((k.slotCols.map(col) :+ col("__bin").cast("long").as("bin")): _*)
       .agg(count(lit(1)).as("n"), sum(col("__fp")).as("__s"))
       .withColumn("mean_fwd",
-        round(col("__s").cast("double") / col("n") / 1e12, 6) + 0.0)
+        round(col("__s").cast("double") / col("n") / Pico.factor, 6) + 0.0)
       .drop("__s")
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ParameterError
+import graft.Exact.Micro
 
 /** Ranking-quality metrics — the evaluation harness for the retrieval
   * stack ([[Similarity]] ANN variants, BM25): recall@k, MRR, nDCG@k of
@@ -39,7 +40,7 @@ object RankEval {
     val q = col(queryIdCol)
     // micro-quantized gain of a 1-based rank/position column
     def gainMicro(pos: org.apache.spark.sql.Column) =
-      round(lit(1e6) / log2(pos.cast("double") + 1), 0).cast("long")
+      Micro.inv(log2(pos.cast("double") + 1)).cast("long")
 
     val relCounts = relevant.groupBy(q).agg(count(lit(1)).as("n_rel"))
     val hits = ranked.where(col(rankCol) <= k)

@@ -7,6 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.ParameterError
+import graft.Exact.{Dec, Micro, Pico, decSum}
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (`array<float>`).
@@ -299,14 +300,14 @@ object Similarity {
         .select(col("cell_id"), posexplode(col(vecCol)).as(Seq("__d", "__x")))
         .groupBy(col("cell_id"), col("__d"))
         .agg(
-          sum(round(col("__x").cast("double") * 1e6, 0).cast("long")).as("__s"),
+          sum(Micro.long(col("__x").cast("double"))).as("__s"),
           count(lit(1)).as("__n"))
         .groupBy(col("cell_id"))
         .agg(array_sort(collect_list(struct(col("__d"), col("__s"), col("__n"))))
           .as("__a"))
         .select(col("cell_id"),
           transform(col("__a"),
-            e => e.getField("__s").cast("double") / e.getField("__n") / 1e6)
+            e => e.getField("__s").cast("double") / e.getField("__n") / Micro.factor)
             .as("centroid"))
       centroids = centroids
         .select(col("cell_id"), col("centroid").as("__prev"))
@@ -617,18 +618,17 @@ object Similarity {
     * a bounded fold over the embedding width. Output one row
     * (n, n_dims, mean_sq_norm, centroid_sq_norm, diversity), 6dp. */
   def diversity(vecs: DataFrame, vecCol: String = "embedding"): DataFrame = {
-    val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    val q = round(col("__x").cast("double") * 1e6).cast("long")
+    val q = Micro.long(col("__x").cast("double"))
     val perDim = vecs
       .select(posexplode(col(vecCol)).as(Seq("__d", "__x")))
       .groupBy(col("__d"))
       .agg(
         count(lit(1)).as("__n"),
-        sum(q.cast(dec)).as("__s"),
-        sum((q.cast(dec) * q.cast(dec))).as("__ss"))
-    val meanSq = col("__ss").cast("double") / col("__n") / 1e12
-    val cSq = (col("__s").cast("double") / col("__n") / 1e6) *
-      (col("__s").cast("double") / col("__n") / 1e6)
+        decSum(q).as("__s"),
+        sum((q.cast(Dec) * q.cast(Dec))).as("__ss"))
+    val meanSq = col("__ss").cast("double") / col("__n") / Pico.factor
+    val cSq = (col("__s").cast("double") / col("__n") / Micro.factor) *
+      (col("__s").cast("double") / col("__n") / Micro.factor)
     perDim
       .agg(
         max(col("__n")).as("n"),
@@ -664,13 +664,13 @@ object Similarity {
       .groupBy(col("__d"))
       .agg(
         sum(when(col("__t") === 1,
-          round(col("__x").cast("double") * 1e6).cast("long"))).as("__sa"),
+          Micro.long(col("__x").cast("double")))).as("__sa"),
         sum(when(col("__t") === 1, 1L).otherwise(0L)).as("__na"),
         sum(when(col("__t") === 0,
-          round(col("__x").cast("double") * 1e6).cast("long"))).as("__sb"),
+          Micro.long(col("__x").cast("double")))).as("__sb"),
         sum(when(col("__t") === 0, 1L).otherwise(0L)).as("__nb"))
-    val ca = col("__sa").cast("double") / col("__na") / 1e6
-    val cb = col("__sb").cast("double") / col("__nb") / 1e6
+    val ca = col("__sa").cast("double") / col("__na") / Micro.factor
+    val cb = col("__sb").cast("double") / col("__nb") / Micro.factor
     perDim
       .agg(
         count(lit(1)).as("n_dims"),

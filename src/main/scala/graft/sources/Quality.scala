@@ -1,5 +1,7 @@
 package graft.sources
 
+import graft.Exact.{Micro, Pico}
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -463,13 +465,12 @@ object Quality {
     val w = Window.partitionBy(g: _*)
     perValue
       .withColumn("__n", sum(col("__c")).over(w))
-      .withColumn("__t", round(
-        -(col("__c").cast("double") / col("__n"))
-          * log(col("__c").cast("double") / col("__n")) * 1e6).cast("long"))
+      .withColumn("__t", Micro.long(-(col("__c").cast("double") / col("__n"))
+          * log(col("__c").cast("double") / col("__n"))))
       .groupBy(g: _*)
       .agg(max(col("__n")).as("class_size"),
         count(lit(1)).as("distinct_l"),
-        round(exp(sum(col("__t")).cast("double") / 1e6), 6).as("entropy_l"))
+        round(exp(Micro.back(sum(col("__t")))), 6).as("entropy_l"))
       .withColumn("at_risk", when(col("distinct_l") < l, 1).otherwise(0))
   }
 
@@ -519,7 +520,7 @@ object Quality {
     *
     * Exactness: observed counts are exact; the 9 expected
     * probabilities are ln-based transcendentals, micro-quantized at
-    * 1e12 BEFORE use (the house discipline — engines' ln agree far
+    * 1e12 BEFORE use (the `graft.Exact` discipline — engines' ln agree far
     * beyond 1e-12 on 9 fixed constants, and the constants are
     * scale-independent, so a green hash at one SF is green at all).
     * χ² term = (n − E)²/E with E = p_d·N, one fixed IEEE shape, 6dp.
@@ -533,10 +534,9 @@ object Quality {
       .groupBy(col("digit"))
       .agg(count(lit(1)).as("n"))
     val tot = sum(col("n")).over(Window.partitionBy()) // ≤ 9-row frame
-    val expQ = round(
-      log((col("digit").cast("double") + 1.0) / col("digit").cast("double"))
-        / log(lit(10.0)) * 1e12).cast("long")
-    val eN = col("__expq").cast("double") / 1e12 * col("__tot").cast("double")
+    val expQ = Pico.long(log((col("digit").cast("double") + 1.0) / col("digit").cast("double"))
+        / log(lit(10.0)))
+    val eN = Pico.back(col("__expq")) * col("__tot").cast("double")
     digits
       .withColumn("__tot", tot)
       .withColumn("__expq", expQ)
@@ -544,7 +544,7 @@ object Quality {
         col("digit"), col("n"),
         round(col("n").cast("double") / col("__tot").cast("double"), 6)
           .as("obs_p"),
-        round(col("__expq").cast("double") / 1e12, 6).as("exp_p"),
+        round(Pico.back(col("__expq")), 6).as("exp_p"),
         round((col("n").cast("double") - eN) * (col("n").cast("double") - eN)
           / eN, 6).as("chi2_term"))
   }

@@ -7,6 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{ParameterError, Parallelism}
+import graft.Exact.{Micro, decSum}
 
 /** Hashed n-gram text classification — the fastText-shaped quality /
   * domain classifier of LLM curation pipelines (Joulin et al. 2016
@@ -91,8 +92,7 @@ object Classifier {
     // bounded: ≤ labels × buckets rows; feeds the score join AND the
     // per-label totals below
     val model = nbModel(labeled, labelCol, textCol, buckets)
-      .withColumn("__m", round(log(col("cnt").cast("double") + 1.0) * 1e6, 0)
-        .cast("long"))
+      .withColumn("__m", Micro.long(log(col("cnt").cast("double") + 1.0)))
       .checkpointed(eager = true)
     // per-label constants: feature total T_l (from the model — exact),
     // doc-count prior ln(n_l / N)
@@ -142,7 +142,7 @@ object Classifier {
       .select(
         col(idCol),
         col("label"),
-        (col("__S").cast("double") / 1e6 -
+        (Micro.back(col("__S")) -
           col("__n").cast("double") * col("__lnTB") + col("__prior"))
           .as("__score"))
     val w = Window.partitionBy(col(idCol))
@@ -246,12 +246,11 @@ object Classifier {
       }
       val resid = z.select(
         col(idCol),
-        round((lit(1.0) / (lit(1.0) + exp(-(col("__zm").cast("double") / lit(1e6))))
-          - col("__y").cast("double")) * 1e6, 0).cast("long").as("__rm"))
+        Micro.long(lit(1.0) / (lit(1.0) + exp(-Micro.back(col("__zm"))))
+          - col("__y").cast("double")).as("__rm"))
       val grad = fx.join(resid, idCol)
         .groupBy(col("bucket"))
-        .agg(sum((col("__rm") * col("__x"))
-          .cast(org.apache.spark.sql.types.DecimalType(38, 0)))
+        .agg(decSum(col("__rm") * col("__x"))
           .cast("long").as("__g"))
       val next = (w match {
         case None => grad.withColumn("__wm", lit(0L))
@@ -263,14 +262,14 @@ object Classifier {
         col("bucket"),
         (col("__wm") - round(lit(learningRate) *
           (coalesce(col("__g"), lit(0L)).cast("double") / lit(n) +
-            lit(l2) * col("__wm").cast("double") / lit(1e6)), 0)
+            lit(l2) * col("__wm").cast("double") / lit(Micro.factor)), 0)
           .cast("long")).as("__wm"))
       // bounded (≤ buckets+1 rows): eager checkpoint truncates the
       // per-iteration lineage growth and feeds the next broadcast
       w = Some(next.checkpointed(eager = true, keepAqe = true)) // tiny round state
     }
     w.get.select(col("bucket"),
-      (col("__wm").cast("double") / 1e6).as("weight"))
+      Micro.back(col("__wm")).as("weight"))
   }
 
   /** Score `docs` with a [[logregTrain]] weight frame: `(id, prob)` —
@@ -283,14 +282,14 @@ object Classifier {
       textCol: String = "text",
       buckets: Int = 4096): DataFrame = {
     val wm = model.select(col("bucket"),
-      round(col("weight") * 1e6, 0).cast("long").as("__wm"))
+      Micro.long(col("weight")).as("__wm"))
     featureCounts(docs, idCol, textCol, buckets)
       .join(broadcast(wm), Seq("bucket"), "left")
       .groupBy(col(idCol))
       .agg(sum(coalesce(col("__wm"), lit(0L)) * col("__x")).as("__zm"))
       .select(col(idCol),
         round(lit(1.0) /
-          (lit(1.0) + exp(-(col("__zm").cast("double") / lit(1e6)))), 6)
+          (lit(1.0) + exp(-Micro.back(col("__zm")))), 6)
           .as("prob"))
   }
 
@@ -323,7 +322,7 @@ object Classifier {
       buckets: Int): DataFrame = {
     val m = model
       .withColumn("__m",
-        round(log(col("cnt").cast("double") + 1.0) * 1e6, 0).cast("long"))
+        Micro.long(log(col("cnt").cast("double") + 1.0)))
       .checkpointed(eager = true) // bounded: tags × labels × buckets
     val totals = m.groupBy("__tag", "label").agg(sum(col("cnt")).as("__T"))
     val stats = totals
@@ -364,7 +363,7 @@ object Classifier {
         acc + f.getField("x") *
           element_at(col("__ma"), (f.getField("b") + 1L).cast("int"))))
       .select(col(idCol), col("__tag"), col("label"),
-        (col("__S").cast("double") / 1e6 -
+        (Micro.back(col("__S")) -
           col("__n").cast("double") * col("__lnTB") + col("__prior"))
           .as("__score"))
     val w = Window.partitionBy(col(idCol), col("__tag"))

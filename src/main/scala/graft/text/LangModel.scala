@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.ParameterError
+import graft.Exact.{Dec, Micro, Pico}
 
 /** N-gram language-model scoring for corpus quality filtering:
   *
@@ -79,13 +80,12 @@ object LangModel {
       .select(col(idCol), explode(TextAnalysis.normWords(col(textCol))).as("__token"))
       .where(col("__token") =!= "")
     val lnTV = log((col("__T") + col("__V")).cast("double"))
-    val ce = lnTV - col("__S").cast("double") / 1e6 / col("n_tokens")
+    val ce = lnTV - Micro.back(col("__S")) / col("n_tokens")
     toks
       .join(if (broadcastVocab) broadcast(counts) else counts, Seq("__token"), "left")
       // micro-nat integer per token: exact unordered summation
       .withColumn("__m",
-        round(log(coalesce(col("__cnt"), lit(0L)).cast("double") + 1.0) * 1e6, 0)
-          .cast("long"))
+        Micro.long(log(coalesce(col("__cnt"), lit(0L)).cast("double") + 1.0)))
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_tokens"), sum(col("__m")).as("__S"))
       .crossJoin(broadcast(stats))
@@ -173,9 +173,8 @@ object LangModel {
     val table = tCnt.join(rCnt, Seq("__b"), "full_outer")
       .select(
         col("__b"),
-        round((log(coalesce(col("__ct"), lit(0L)).cast("double") + 1.0) -
-          log(coalesce(col("__cr"), lit(0L)).cast("double") + 1.0)) * 1e6, 0)
-          .cast("long").as("__m"))
+        Micro.long(log(coalesce(col("__ct"), lit(0L)).cast("double") + 1.0) -
+          log(coalesce(col("__cr"), lit(0L)).cast("double") + 1.0)).as("__m"))
     val totals = tCnt.agg(sum(col("__ct")).as("__Tt"))
       .crossJoin(rCnt.agg(sum(col("__cr")).as("__Tr")))
     // w = S/n + ln((Tr + B) / (Tt + B)): the per-feature varying part is
@@ -192,7 +191,7 @@ object LangModel {
       .select(
         col(idCol),
         col("n_features"),
-        round(col("__S").cast("double") / 1e6 / col("n_features") + shift, 6)
+        round(Micro.back(col("__S")) / col("n_features") + shift, 6)
           .as("log_weight"))
   }
 
@@ -221,7 +220,6 @@ object LangModel {
       a: DataFrame,
       b: DataFrame,
       textCol: String = "text"): DataFrame = {
-    val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     val joined = unigramCounts(a, textCol).withColumnRenamed("__cnt", "__ca")
       .join(unigramCounts(b, textCol).withColumnRenamed("__cnt", "__cb"),
         Seq("__token"), "full_outer")
@@ -238,7 +236,7 @@ object LangModel {
     val q = (col("__cb") + 1).cast("double") /
       (col("__Nb") + col("__V")).cast("double")
     val m = (p + q) / 2
-    def pico(c: Column): Column = round(c * 1e12).cast("long").cast(dec)
+    def pico(c: Column): Column = Pico.long(c).cast(Dec)
     joined
       .crossJoin(broadcast(stats))
       .agg(
@@ -250,8 +248,8 @@ object LangModel {
         sum(pico(lit(0.5) * (p * log(p / m) + q * log(q / m)))).as("__js"))
       .select(
         col("vocab_size"), col("n_tokens_a"), col("n_tokens_b"),
-        round(col("__kab").cast("double") / 1e12, 6).as("kl_ab"),
-        round(col("__kba").cast("double") / 1e12, 6).as("kl_ba"),
-        round(col("__js").cast("double") / 1e12, 6).as("js"))
+        round(Pico.back(col("__kab")), 6).as("kl_ab"),
+        round(Pico.back(col("__kba")), 6).as("kl_ba"),
+        round(Pico.back(col("__js")), 6).as("js"))
   }
 }

@@ -7,6 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.ParameterError
+import graft.Exact.Pico
 
 /** RAKE keyword extraction (Rose et al. 2010) — corpus-level keyphrase
   * mining with zero linguistic machinery: candidate phrases are the
@@ -75,8 +76,7 @@ object Rake {
       .groupBy(col("__w"))
       .agg(count(lit(1)).as("__freq"), sum(col("__len")).as("__deg"))
       .select(col("__w"),
-        round(col("__deg").cast("double") / col("__freq").cast("double")
-          * 1e12).cast("long").as("__swq"))
+        Pico.long(col("__deg").cast("double") / col("__freq").cast("double")).as("__swq"))
     tokens
       .join(wordScores, Seq("__w")) // word-keyed equi-join, no broadcast:
       // the vocabulary is data-driven, not dimension-bounded
@@ -89,7 +89,7 @@ object Rake {
       .groupBy(col("phrase"))
       .agg(count(lit(1)).as("n_occurrences"), max(col("__sq")).as("__sq"))
       .select(col("phrase"), col("n_occurrences"),
-        round(col("__sq").cast("double") / 1e12, 6).as("score"))
+        round(Pico.back(col("__sq")), 6).as("score"))
       .orderBy(col("score").desc, col("phrase"))
       .limit(topK)
   }

@@ -7,6 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.ParameterError
+import graft.Exact.Pico
 
 /** BM25 keyword retrieval over a document corpus (Robertson-Spärck
   * Jones probabilistic model — the lexical baseline every RAG /
@@ -183,13 +184,13 @@ object Retrieval {
     val keyCols = partitionCols :+ docCol
     val terms = rankings.map(_.select(
       (keyCols.map(col) :+
-        round(lit(1e12) / (lit(kRrf) + col(rankCol))).cast("long").as("__t")): _*))
+        Pico.inv(lit(kRrf) + col(rankCol)).cast("long").as("__t")): _*))
     val w = Window.partitionBy(partitionCols.map(col): _*)
       .orderBy(col("__s").desc, col(docCol))
     terms.reduce(_ unionByName _)
       .groupBy(keyCols.map(col): _*)
       .agg(sum(col("__t")).as("__s"), count(lit(1)).as("n_lists"))
-      .withColumn("rrf_score", col("__s").cast("double") / 1e12)
+      .withColumn("rrf_score", Pico.back(col("__s")))
       .withColumn("rank", row_number().over(w))
       .where(col("rank") <= topK)
       .drop("__s")

@@ -7,6 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.ParameterError
+import graft.Exact.Micro
 
 /** Deterministic sampling and splitting for training-data pipelines.
   *
@@ -435,7 +436,7 @@ object Sampling {
     var cells = df
       .groupBy(col(rowDim).as("row_val"), col(colDim).as("col_val"))
       .agg(count(lit(1)).as("n"))
-      .withColumn("__m", col("n") * 1000000L)
+      .withColumn("__m", col("n") * Micro.unit)
       .checkpointed(eager = false) // each pass re-reads the last
     val dims = cells.agg(
       sum(col("n")).as("__N"),
@@ -460,9 +461,9 @@ object Sampling {
       .crossJoin(broadcast(dims))
       .select(
         col("row_val"), col("col_val"), col("n"),
-        round(col("__m").cast("double") / 1e6
+        round(Micro.back(col("__m"))
           / col("n").cast("double"), 6).as("weight"),
-        round(col("__m").cast("double") / 1e6
+        round(Micro.back(col("__m"))
           / col("__N").cast("double"), 6).as("fitted_share"))
   }
 
@@ -504,8 +505,7 @@ object Sampling {
       .groupBy(col("__s").as("word"))
       .agg(count(lit(1)).as("__f"))
       .withColumn("__wq",
-        round(sqrt(col("__f").cast("double") * sqrt(col("__f").cast("double")))
-          * 1e6).cast("long"))
+        Micro.long(sqrt(col("__f").cast("double") * sqrt(col("__f").cast("double")))))
     // two-level prefix scan over the vocabulary (r9): "vocab-bounded"
     // is CARDINALITY-bounded, not range-bounded — a web-scale corpus
     // grows its unigram vocabulary with the data (typos, URLs, code),

@@ -1,5 +1,7 @@
 package graft.text
 
+import graft.Exact.Micro
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -468,13 +470,13 @@ object TextAnalysis {
       .groupBy(col(idCol))
       .agg(
         sum(col("__n")).as("n_chars"),
-        sum(round(log(col("__n").cast("double")) * 1e6, 0).cast("long") *
+        sum(Micro.long(log(col("__n").cast("double"))) *
           col("__n")).as("__s"))
       .select(
         col(idCol),
         col("n_chars"),
         round(
           log(col("n_chars").cast("double")) -
-            col("__s").cast("double") / 1e6 / col("n_chars"), 6)
+            Micro.back(col("__s")) / col("n_chars"), 6)
           .as("entropy"))
 }

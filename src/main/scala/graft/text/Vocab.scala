@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.ParameterError
+import graft.Exact.Pico
 
 /** Vocabulary construction and out-of-vocabulary measurement — the
   * tokenizer-prep stage of a training pipeline (fix a top-V word list
@@ -250,8 +251,8 @@ object Vocab {
           ((col("__N") - col("__nt")) * col("__nc")).cast("double")))
       .otherwise(0.0)
     grid
-      .select(col("word"), round((t1 + t0) * 1e12).cast("long").as("__q"))
+      .select(col("word"), Pico.long(t1 + t0).as("__q"))
       .groupBy(col("word"))
-      .agg(round(sum(col("__q")).cast("double") / 1e12, 6).as("mi"))
+      .agg(round(Pico.back(sum(col("__q"))), 6).as("mi"))
   }
 }

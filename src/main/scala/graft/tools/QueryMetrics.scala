@@ -51,7 +51,7 @@ final class QueryMetrics private (spark: SparkSession) {
       QueryMetrics.this.synchronized { jobStarts += e.time }
     override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
       QueryMetrics.this.synchronized {
-        stageNames(e.stageInfo.stageId) = e.stageInfo.name
+        stageNames(e.stageInfo.stageId) = QueryMetrics.stageName(e.stageInfo)
       }
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
       QueryMetrics.this.synchronized { stages += 1 }
@@ -135,6 +135,15 @@ final class QueryMetrics private (spark: SparkSession) {
 }
 
 object QueryMetrics {
+
+  /** A stage's name in the record: the operation scope of its last RDD
+    * that has one (`Exchange`, `WholeStageCodegen (3)`, `Scan parquet
+    * …`), else Spark's stage name. That name is the call site that
+    * created the stage's RDD, which for every AQE query stage is the
+    * async planner's `CompletableFuture` frame. */
+  private[tools] def stageName(info: StageInfo): String =
+    info.rddInfos.sortBy(-_.id).iterator.flatMap(Bridge.scopeName)
+      .nextOption().getOrElse(info.name)
 
   /** A recorder listening on `spark` until [[QueryMetrics.detach]]. */
   def attach(spark: SparkSession): QueryMetrics = {

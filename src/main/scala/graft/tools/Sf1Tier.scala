@@ -97,7 +97,7 @@ object Sf1Tier {
   def synthesize(spark: SparkSession, src: String, dst: String): Unit = {
     val done = Paths.get(dst, "_DONE")
     if (Files.exists(done)) return
-    def t(name: String) = spark.read.parquet(s"$src/$name.parquet")
+    def t(name: String) = graft.Queries.t(spark, src, name)
     def w(name: String, df: DataFrame): Unit = {
       df.write.mode("overwrite").parquet(s"$dst/$name.parquet")
       println(s"[sf1tier] wrote $name")

@@ -9,6 +9,7 @@ import graft.panel.Panel
 import graft.panel.Panel.Keys
 import graft.pipeline.Strategy
 import graft.{GraftError, ParameterError}
+import graft.Exact.Pico
 
 /** Live-trading order generation — reference `Moonshot.trade()`
   * (strategies/base.py:1572-1806, lifecycle SURVEY §3.2).
@@ -486,7 +487,7 @@ object Trade {
     // remaining fraction AFTER slice j (j = 0 → 1.0, j = N → 0.0)
     val frac: Int => Double = j =>
       math.rint(math.sinh(kappaT * (n - j).toDouble / n) /
-        math.sinh(kappaT) * 1e12) / 1e12
+        math.sinh(kappaT) * Pico.factor) / Pico.factor
     def remaining(j: Int) =
       round(col("totalQuantity") * lit(frac(j))).cast("long")
     val slices = array(times.zipWithIndex.map { case (t, i) =>

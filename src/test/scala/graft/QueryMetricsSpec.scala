@@ -50,6 +50,14 @@ class QueryMetricsSpec extends SparkSpec {
       .foreach(k => assert(json.contains("\"" + k + "\":"), s"$k in $json"))
   }
 
+  test("the longest task's stage is named by its operator, not by the " +
+    "async planner's call site") {
+    timed("q1_agg", "w1_lag", "j1_broadcast_join").foreach { case (n, q) =>
+      val stage = q.record.get.longestTaskStage.get
+      assert(!stage.contains("CompletableFuture"), s"$n: $stage")
+    }
+  }
+
   test("the session record names the scratch dir, the /dev/shm gate, " +
     "the coalesce floor and the cores") {
     val json = QueryMetrics.sessionJson(spark)
